@@ -894,8 +894,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_fingerprint": _q_fingerprint,
         "p16_code_detect": _q_code_detect,
         # new mid-round 6 — never driver-checked (placed inside the
-        # 50-row window; evicts three r5-green text_* rows to the tail,
-        # where tests/test_oracle_tail.py keeps checking them)
+        # 50-row window; evicts four r5-green text_* rows, the
+        # text_tfidf_topterms..text_top_ngrams block, to the tail, where
+        # tests/test_oracle_tail.py keeps checking them)
         "dedup_lines_global": _q_dedup_lines_global,
         "curate_mixture_weights": _q_mixture_weights,
         "text_redact_pii": _q_redact_pii,

@@ -46,12 +46,12 @@ def run_resumable(
     max_batches: int | None = None,
     run_id: str | None = None,
     input_snapshot_id: str = "",
-    arrow: bool = False,
 ) -> dict:
     """Process all pending buckets; returns a summary dict.
 
-    ``max_batches`` exists for tests (simulate a killed run by stopping
-    after a prefix of batches).
+    ``max_batches`` stops after a prefix of batches: the tests use it to
+    simulate a killed run, and perfbench's ``resume_store`` workload to
+    stop half way before resuming.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     done = completed_buckets(spark, store)
@@ -68,7 +68,7 @@ def run_resumable(
     ran = 0
     for group in groups:
         batch_docs = docs_b.filter(F.col("bucket").isin(group))
-        out = extract(batch_docs.select("doc_id", "spans"), arrow=arrow)
+        out = extract(batch_docs.select("doc_id", "spans"))
         # Persist the batch once: the sink write and the metrics agg both
         # consume the cached rows.  (A per-batch read-back of the whole
         # extractions table is O(batches) full scans, and IcebergStore's
@@ -92,8 +92,7 @@ def run_resumable(
             # buckets (partition-pruned read-back), vs task_count = what was
             # computed.  NULL = store can't verify cheaply (IcebergStore:
             # transactional MERGE; snapshot metrics are the evidence there).
-            landed = store.landed_per_bucket(spark, group) if hasattr(
-                store, "landed_per_bucket") else None
+            landed = store.landed_per_bucket(spark, group)
             if landed is not None:
                 all_rows = all_rows.join(landed, "bucket", "left").fillna(
                     0, ["landed_task_count"]

@@ -195,9 +195,10 @@ G7_HEAD_SKIP = 25          # old/taskseparation.py:50
 # NOT the earliest match position across patterns.  When a text contains
 # both "3 (A)" early and "Oppgave 2" later (both past char 25), the split
 # position is Oppgave's, because the oppgave pattern has priority.  Every
-# engine (Spark rules.g7_match_pos, pyref.g7_match_pos,
-# duckdb_oracle.sql_g7_mpos, merge._merge_doc) folds over this tuple in
-# order, so the priority semantics are shared by construction.
+# engine (Spark rules.g7_match_pos, pyref.g7_match_pos — which the
+# applyInPandas stage merge._merge_doc runs — and duckdb_oracle.sql_g7_mpos)
+# folds over this tuple in order, so the priority semantics are shared by
+# construction.
 G7_TASK_HEAD_PATTERNS = (
     r"(?i)oppgave\s*[0-9]+",        # taskseparation.py:45
     r"(?i)oppg[åÅ]ve\s*[0-9]+",     # taskseparation.py:46

@@ -13,8 +13,10 @@ implemented over a parquet directory layout with identical semantics:
                                            per-bucket idempotent upsert)
   <root>/checkpoints/*.parquet            (append-only lineage/metrics log)
 
-``iceberg_available`` probes the catalog so the Iceberg path lights up when a
-cluster provides the runtime (spark-submit --packages org.apache.iceberg:...).
+A cluster that provides the runtime (spark-submit --packages
+org.apache.iceberg:...) and configures an Iceberg catalog has the caller
+construct ``IcebergStore`` instead of ``ParquetStore``; both implement the
+same store interface.
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .schema import EXTRACTIONS_SCHEMA
+
 EXTRACTIONS = "extractions"
 CHECKPOINTS = "checkpoints"
 
@@ -30,29 +34,8 @@ CHECKPOINTS = "checkpoints"
 # ALTER TABLE ADD COLUMNS reconciliation: a store created by an earlier
 # (narrower) release is widened in place instead of failing the first write.
 EXTRACTIONS_COLUMNS: list[tuple[str, str]] = [
-    ("doc_id", "string"),
-    ("subject", "string"),
-    ("exam_version", "string"),
-    ("source_subject_code", "string"),
-    ("task_number", "string"),
-    ("points", "int"),
-    ("topic", "string"),
-    ("task_text", "string"),
-    ("task_text_html", "string"),
-    ("was_merged", "boolean"),
-    ("spans", "array<struct<kind:string,text:string,media_ref:string,offset:int>>"),
+    (f.name, f.dataType.simpleString()) for f in EXTRACTIONS_SCHEMA.fields
 ]
-
-
-def iceberg_available(spark: SparkSession, catalog: str = "ocr") -> bool:
-    try:
-        spark.conf.get(f"spark.sql.catalog.{catalog}")
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
 
 
 class ParquetStore:
@@ -190,8 +173,3 @@ class IcebergStore:
         full = f"{self.ns}.{CHECKPOINTS}"
         return spark.table(full) if spark.catalog.tableExists(full) else None
 
-
-def get_store(spark: SparkSession, root: str):
-    if iceberg_available(spark):
-        return IcebergStore(spark)
-    return ParquetStore(root)

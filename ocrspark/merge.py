@@ -11,34 +11,19 @@ exactly the one place SURVEY.md section 2.10 sanctions ``applyInPandas``.
 
 The rebuild applies it at the *task-text* level as an optional
 post-segmentation repair pass: input one row per (doc_id, task_number,
-task_text), groups = one document, vectorized pandas inside (regex via
-pandas .str, a single bounded Python loop over the ~K tasks of a doc, never
-over spans or docs).
+task_text), groups = one document, and each group runs the spec walk
+``pyref.g7_merge`` — a bounded Python loop over the ~K tasks of a doc, never
+over spans or docs.
 """
 
 from __future__ import annotations
-
-import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import config as C
-
-MIN_VALID_CHARS = C.G7_MIN_VALID_CHARS
-HEAD_SKIP = C.G7_HEAD_SKIP
-TASK_HEAD_PATTERNS = [re.compile(p) for p in C.G7_TASK_HEAD_PATTERNS]
-
-
-def _head_pos(text: str) -> int:
-    """First-pattern-in-priority-order match position (pyref.g7_match_pos)."""
-    for pat in TASK_HEAD_PATTERNS:
-        m = pat.search(text[HEAD_SKIP:])
-        if m:
-            return m.start() + HEAD_SKIP
-    return 0
+from . import pyref
 
 MERGED_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -50,19 +35,8 @@ MERGED_SCHEMA = T.StructType([
 
 def _merge_doc(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf.sort_values("task_order").reset_index(drop=True)
-    texts = pdf["task_text"].fillna("").tolist()
-    merged = [False] * len(texts)
-    # late heading-match position per task (vectorized probe, loop over K
-    # tasks only — K ~ 16, bounded by the doc's task count)
-    match_pos = [_head_pos(t) for t in texts]
-    for j in range(1, len(texts)):
-        if len(texts[j]) < MIN_VALID_CHARS and match_pos[j - 1] != 0:
-            split = match_pos[j - 1]
-            tail = texts[j - 1][split:]
-            texts[j - 1] = texts[j - 1][:split] + texts[j]
-            texts[j] = tail
-            merged[j] = merged[j - 1] = True
-            match_pos[j - 1] = _head_pos(texts[j - 1])
+    # the spec walk itself (pyref.g7_merge), once per doc over its K tasks
+    texts, merged = pyref.g7_merge(pdf["task_text"].fillna("").tolist())
     pdf["task_text"] = texts
     pdf["was_merged"] = merged
     return pdf[["doc_id", "task_number", "task_text", "was_merged"]]

@@ -188,34 +188,11 @@ def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float = 0.5) -> D
 
 
 def minhash_dedup(docs: DataFrame, text_col: str = "text",
-                  threshold: float = 0.5,
-                  reuse_intermediates: bool | None = None) -> DataFrame:
-    """Full near-dup pipeline: shingle -> minhash -> band join -> verify.
-
-    ``reuse_intermediates`` (r7): the shingle table feeds FIVE consumers
-    (signature agg; band-cap sizes + join-back via the signatures;
-    verify's s1/s2/counts) and the signature table four — Catalyst plans
-    each consumer's lineage independently, so one invocation scans the
-    corpus 8x (plan-counted) and re-shingles it per scan.  With reuse on,
-    a lazy
-    ``localCheckpoint`` materializes each shared table once per invocation
-    (inside the timed query — nothing survives across runs; blocks are
-    freed by the ContextCleaner when the result is dropped).  Default OFF:
-    at bench scale (5k docs) the recomputes are cheap concurrent stages
-    and the materialization barrier measured SLOWER (4.1-6.3 s vs
-    3.8-4.6 s); at cluster scale, where one corpus scan costs hours, set
-    ``OCRSPARK_REUSE_INTERMEDIATES=1`` — results are identical either way
-    (same data, computed once vs many times)."""
-    if reuse_intermediates is None:
-        import os
-        reuse_intermediates = bool(os.environ.get("OCRSPARK_REUSE_INTERMEDIATES"))
+                  threshold: float = 0.5) -> DataFrame:
+    """Full near-dup pipeline: shingle -> minhash -> band join -> verify."""
+    # Shingles feed 5 consumers, signatures 4: 8 corpus scans per call.
     sh = shingles(docs, text_col)
-    if reuse_intermediates:
-        sh = sh.localCheckpoint(eager=False)
-        sig = minhash_signatures(sh).localCheckpoint(eager=False)
-    else:
-        sig = minhash_signatures(sh)
-    pairs = lsh_candidate_pairs(sig)
+    pairs = lsh_candidate_pairs(minhash_signatures(sh))
     return jaccard_verify(pairs, sh, threshold)
 
 
@@ -243,16 +220,8 @@ def ngram_jaccard_dedup(docs: DataFrame, text_col: str = "text",
     corpus-hot shingle map-side instead of shuffling every occurrence to
     one task.
     """
-    # PERF (r7): same shared-subtree economics as minhash_dedup — the
-    # shingle table feeds the df cap (sizes + join-back) and verify's three
-    # consumers (~5 re-shingling scans per invocation).  Reuse via
-    # localCheckpoint is opt-in for cluster scale (see minhash_dedup's
-    # reuse_intermediates note); at bench scale the barrier measured slower
-    # than the concurrent recomputes, so the default stays recompute.
-    import os as _os
+    # Shingles feed the df cap and verify's 3 consumers: ~5 scans per call.
     sh = shingles(docs, text_col)
-    if _os.environ.get("OCRSPARK_REUSE_INTERMEDIATES"):
-        sh = sh.localCheckpoint(eager=False)
     rare = cap_by_key(sh, ["shingle"], max_df, min_n=2).select(
         "doc_id", "shingle"
     )

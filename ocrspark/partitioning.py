@@ -1,17 +1,17 @@
-"""Skew-aware partitioning helpers (north star: "salted repartitioning on
-doc_id to absorb skew from oversized exam PDFs").
+"""Partitioning helpers: output buckets and co-located bucketed tables.
 
-Where skew can bite, and the mitigation used:
+Skew: the pipeline's one exchange is ``hashpartitioning(doc_id)`` for the
+sessionization window, which needs each whole doc in order (running max /
+cumsum), so a fat doc rides its one window partition — a 100k-span doc is
+~10 MB, bounded like the reference's per-doc Python lists — and AQE
+partition coalescing absorbs the residual imbalance.  Stage 1 is narrow
+and runs in the input splits.  Salting doc_id is not used: a salted
+repartition after the explode would add a second exchange in front of the
+``hash(doc_id)`` window.
 
-* stage-1 narrow work (explode + recovery + rule columns): a fat doc's spans
-  all sit in whatever input split held the doc.  ``salted_repartition``
-  spreads them over ``salt`` sub-keys — safe because stage 1 is per-span.
-* the sessionization window shuffles on doc_id — inherently per-doc (the
-  running-max/cumsum needs the whole doc in order).  A 100k-span doc is
-  ~10 MB in one partition: bounded, same whole-document state the reference
-  holds in Python lists.  AQE handles residual partition imbalance.
-* output bucketing: ``with_bucket`` adds the Iceberg-style
-  ``bucket(N, doc_id)`` partition column used for checkpointed writes.
+* ``with_bucket``/``bucket_of``: the Iceberg-style ``bucket(N, doc_id)``
+  partition column used for checkpointed writes.
+* ``write_bucketed``: bucketed+sorted tables for shuffle-free joins.
 """
 
 from __future__ import annotations
@@ -20,13 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_BUCKETS
-
-
-def salted_repartition(flat: DataFrame, partitions: int, salt: int = 16) -> DataFrame:
-    """Spread per-span narrow work evenly, breaking fat-doc locality."""
-    return flat.repartition(
-        partitions, F.col("doc_id"), F.pmod(F.xxhash64("offset"), F.lit(salt))
-    )
 
 
 def bucket_of(col, buckets: int = DEFAULT_BUCKETS):

@@ -20,12 +20,9 @@ from . import config as C
 
 
 def recover_text(col: Column) -> Column:
-    """Native twin of stage-1 OCR recovery (pyref.recover_text).
-
-    Guarded: control/unicode-ws chars and stutter runs are rare, so one
-    presence scan replaces two alloc-producing rewrites on clean spans
-    (regexp_replace always allocates, matching or not).
-    """
+    """Native twin of stage-1 OCR recovery (pyref.recover_text): null to
+    "", drop control chars, unicode whitespace to a space, collapse stutter
+    runs — three unconditional ``regexp_replace`` passes."""
     c = F.coalesce(col, F.lit(""))
     c = F.regexp_replace(c, C.CONTROL_CHARS_RE, "")
     c = F.regexp_replace(c, C.UNICODE_WS_RE, " ")
@@ -248,17 +245,6 @@ def merge_subject_codes(codes: Column) -> Column:
         _merge,
     )
     return F.coalesce(folded, F.lit("UNKNOWN"))
-
-
-def extract_subject(doc_text: Column) -> Column:
-    return merge_subject_codes(subject_codes(doc_text))
-
-
-def extract_source_code(doc_text: Column) -> Column:
-    """First observed subject code, pre-merge (exams.json
-    source_subject_code; pyref._doc_source_code)."""
-    first = F.regexp_extract(doc_text, C.SUBJECT_CODE_RE, 1)
-    return F.when(first != "", first).otherwise(F.lit("UNKNOWN"))
 
 
 def parse_subject_codes(raw: Column) -> Column:

@@ -1,7 +1,8 @@
 """Explicit schemas (the reference's implicit dict-shape, made static).
 
-Input shape is authoritative from BASELINE.json ``input_hint``; output and
-checkpoint shapes follow SURVEY.md section 1.2.
+Input shape is authoritative from BASELINE.json ``input_hint``; the output
+shape follows SURVEY.md section 1.2.  (Checkpoint rows are built by
+``checkpoint.run_resumable``.)
 """
 
 from pyspark.sql import types as T
@@ -39,14 +40,4 @@ EXTRACTIONS_SCHEMA = T.StructType([
     T.StructField("task_text_html", T.StringType(), True),  # P13 template
     T.StructField("was_merged", T.BooleanType(), True),     # G7 touched text
     T.StructField("spans", T.ArrayType(SPAN_STRUCT, False), False),
-])
-
-CHECKPOINTS_SCHEMA = T.StructType([
-    T.StructField("run_id", T.StringType(), False),
-    T.StructField("bucket", T.IntegerType(), False),
-    T.StructField("doc_count", T.LongType(), False),
-    T.StructField("task_count", T.LongType(), False),
-    T.StructField("span_count", T.LongType(), False),
-    T.StructField("input_snapshot_id", T.StringType(), True),
-    T.StructField("completed_at", T.TimestampType(), False),
 ])

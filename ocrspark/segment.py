@@ -266,13 +266,20 @@ def _empty_int_array() -> Column:
     return F.array().cast("array<int>")
 
 
-def g7_merged_texts(orig: Column, mpos: Column | None = None) -> Column:
+def _g7_trigger(orig: Column, mpos: Column, j: Column) -> Column:
+    """Task *j* is short and task *j-1* has a late heading (pyref.g7_merge)."""
+    return (F.length(F.get(orig, j)) < C.G7_MIN_VALID_CHARS) & (
+        F.get(mpos, j - 1) != 0
+    )
+
+
+def g7_merged_texts(orig: Column, mpos: Column) -> Column:
     """G7 forward-merge as a pure catalyst fold (pyref.g7_merge).
 
     ``orig``: array<string> of the surviving tasks' original raw texts in
     task-number order; ``mpos``: the per-task late-heading positions
-    (computed from ``orig`` when omitted).  Triggers (validity + heading
-    position) are pure functions of the ORIGINAL texts
+    (``rules.g7_match_pos`` of each ``orig`` element).  Triggers (validity +
+    heading position) are pure functions of the ORIGINAL texts
     (old/taskseparation.py:33-53 computes both up front); only the text
     splits walk sequentially, so the whole repair is one ``aggregate`` over
     indices — no UDF, no extra exchange.  (The sanctioned ``applyInPandas``
@@ -288,15 +295,10 @@ def g7_merged_texts(orig: Column, mpos: Column | None = None) -> Column:
     NB: ``sequence(a, b)`` descends when a > b, so empty/singleton arrays are
     guarded explicitly.
     """
-    if mpos is None:
-        mpos = F.transform(orig, rules.g7_match_pos)
     n = F.size(orig)
     seq = F.when(n >= 2, F.sequence(F.lit(1), n - 1)).otherwise(_empty_int_array())
 
     def step(acc: Column, j: Column) -> Column:
-        trig = (
-            F.length(F.get(orig, j)) < C.G7_MIN_VALID_CHARS
-        ) & (F.get(mpos, j - 1) != 0)
         head = F.get(acc, j - 1)
         split = F.get(mpos, j - 1)
         updated = F.transform(
@@ -307,25 +309,18 @@ def g7_merged_texts(orig: Column, mpos: Column | None = None) -> Column:
             .when(i == j, head.substr(split + 1, F.length(head)))
             .otherwise(e),
         )
-        return F.when(trig, updated).otherwise(acc)
+        return F.when(_g7_trigger(orig, mpos, j), updated).otherwise(acc)
 
     return F.aggregate(seq, orig, step)
 
 
-def g7_merged_flags(orig: Column, mpos: Column | None = None) -> Column:
+def g7_merged_flags(orig: Column, mpos: Column) -> Column:
     """was_merged flags: task i touched iff trigger(i) or trigger(i+1).
     Same bound-column contract as g7_merged_texts."""
-    if mpos is None:
-        mpos = F.transform(orig, rules.g7_match_pos)
     n = F.size(orig)
 
     def trig_at(j: Column) -> Column:
-        return F.coalesce(
-            (j >= 1)
-            & (F.length(F.get(orig, j)) < C.G7_MIN_VALID_CHARS)
-            & (F.get(mpos, j - 1) != 0),
-            F.lit(False),
-        )
+        return F.coalesce((j >= 1) & _g7_trigger(orig, mpos, j), F.lit(False))
 
     idxs = F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(_empty_int_array())
     return F.transform(idxs, lambda i: trig_at(i) | trig_at(i + 1))

@@ -12,6 +12,31 @@ from ocrspark.session import get_spark  # noqa: E402
 FIXTURES = Path(__file__).parent / "fixtures"
 
 
+def plan_node_names(jplan) -> list[str]:
+    """``nodeName()`` of every node of a JVM physical plan, walking into
+    adaptive plans (``AdaptiveSparkPlanExec.executedPlan()``) and query
+    stages, so plan-shape checks count tree nodes, not rendered text."""
+    names, stack = [], [jplan]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            names.append(node.nodeName())
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+@pytest.fixture(scope="session")
+def plan_nodes():
+    """df -> node names of its executed physical plan."""
+    return lambda df: plan_node_names(df._jdf.queryExecution().executedPlan())
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("OCRSPARK_MASTER", "local[4]")

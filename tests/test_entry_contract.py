@@ -1,5 +1,6 @@
 """Driver-contract sanity: entry/queries/oracle_sql shape invariants."""
 
+import hashlib
 import sys
 from pathlib import Path
 
@@ -8,6 +9,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as E  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# sha256 over the queries() names in order plus every oracle_sql() key and
+# text.  A refactor must leave it unchanged; a change that deliberately
+# re-oracles a query updates it and says so.
+CONTRACT_SHA256 = "6cd8746ea3bca1c956f237bb8fe653fb3ee50c400357862691761390c45a9f01"
 
 
 def test_entry_smoke(spark):
@@ -24,6 +30,19 @@ def test_queries_oracle_alignment():
     # oracled in round 3; real_decode stays the documented codec seam)
     assert set(q) - set(o) == set()
     assert len(q) >= 20
+
+
+def test_driver_contract_hash():
+    h = hashlib.sha256()
+    for name in E.queries():
+        h.update(name.encode() + b"\0")
+    h.update(b"\1")
+    oracle = E.oracle_sql()
+    for key in sorted(oracle):
+        # the SQL embeds the absolute fixture path; hash it checkout-free
+        sql = oracle[key].replace(str(E.REPO), "<REPO>")
+        h.update(key.encode() + b"\0" + sql.encode() + b"\0")
+    assert h.hexdigest() == CONTRACT_SHA256
 
 
 def test_every_query_runs_small(spark):

@@ -36,9 +36,13 @@ def test_in_solution_single_sort_equals_per_task_window(spark):
     assert mismatch == 0
     # the corpus must actually exercise solution sections for this to bind
     assert got.filter(F.col("in_solution")).count() > 0
-    # and the plan must sort the span stream exactly once (the win itself)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Sort [") == 1, plan
+
+
+def test_sessionize_sorts_span_stream_once(spark, plan_nodes):
+    """The r7 sessionize win itself: one Sort over the span stream (the
+    (doc, offset) window order), counted by walking the executed plan."""
+    nodes = plan_nodes(sessionize(stage1(generate_docs(spark, 60, seed=7))))
+    assert nodes.count("Sort") == 1, nodes
 
 
 def test_cosine_prenorm_equals_per_pair_form(spark):

@@ -108,7 +108,7 @@ def test_subject_merge_spark(spark):
         "IMAA2012 IMAA2022 IMAG2012 IMAG2022",
         "ingen koder",
     ]
-    got = _col_eval(spark, rules.extract_subject(F.col("text")), texts)
+    got = _col_eval(spark, rules.merge_subject_codes(rules.subject_codes(F.col("text"))), texts)
     exp = [pyref._SUBJECT.findall(t) for t in texts]
     assert got == [pyref.merge_subject_codes(c) for c in exp]
     assert got == ["IFYX1001", "TDT4102", "IMAX20Y2", "UNKNOWN"]
