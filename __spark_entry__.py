@@ -432,8 +432,6 @@ STRATA_RATES = {"src0": 2500, "src3": 7500}  # bp; others keep all
 
 def _q_stratified_sample(spark, sf_dir):
     """Per-source deterministic rate sampling (domain rebalancing)."""
-    from ocrspark.ops import sampling
-
     return sampling.stratified_sample(_tbl(spark, sf_dir, "documents"),
                                       rates=STRATA_RATES)
 
@@ -441,22 +439,16 @@ def _q_stratified_sample(spark, sf_dir):
 def _q_source_rollup(spark, sf_dir):
     """Per-(source, lang) corpus triage: docs, dup involvement, tokens,
     mean quality."""
-    from ocrspark.ops import sampling
-
     return sampling.source_rollup(_tbl(spark, sf_dir, "documents"))
 
 
 def _q_curate_split(spark, sf_dir):
     """Deterministic hash-bucket train/val/test assignment."""
-    from ocrspark.ops import sampling
-
     return sampling.deterministic_split(_tbl(spark, sf_dir, "documents"))
 
 
 def _q_curate_pack(spark, sf_dir):
     """Concat-and-chunk token packing into fixed-budget shards."""
-    from ocrspark.ops import sampling
-
     docs = _tbl(spark, sf_dir, "documents").withColumn(
         "n_tokens", F.regexp_count(F.col("text"), F.lit(r"\S+"))
     )
@@ -479,8 +471,6 @@ def _q_dedup_components_star(spark, sf_dir):
 
 def _q_curate_decontaminate(spark, sf_dir):
     """Eval-split leakage report: verbatim 8-gram collisions vs train."""
-    from ocrspark.ops import sampling
-
     return sampling.decontaminate(_tbl(spark, sf_dir, "documents"))
 
 
@@ -518,8 +508,6 @@ def _q_dedup_lines_global(spark, sf_dir):
 
 def _q_mixture_weights(spark, sf_dir):
     """Temperature-scaled source mixture weights with UniMax epoch cap."""
-    from ocrspark.ops import sampling
-
     return sampling.mixture_weights(_tbl(spark, sf_dir, "documents"))
 
 
@@ -567,8 +555,6 @@ def _q_curate_corpus(spark, sf_dir):
     training-corpus keep-list as ONE declarative plan (each stage is the
     already-oracled operator; composition is three equi-joins and one
     anti-join on doc_id)."""
-    from ocrspark.ops import sampling
-
     docs = _tbl(spark, sf_dir, "documents")
     quality = (
         textstats.quality_score(docs)
@@ -1003,7 +989,14 @@ FROM ni"""
 
 _CANON = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
-_SHINGLE_CTES = """
+
+def _sql_gram(n: int) -> str:
+    """The word n-gram at 0-based offset i of token list ``ws`` (twin of
+    dedup._word_grams)."""
+    return " || ' ' || ".join(f"ws[i+{j}]" for j in range(1, n + 1))
+
+
+_SHINGLE_CTES = f"""
 WITH w AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws FROM documents
 ),
@@ -1011,7 +1004,7 @@ sh AS (
   SELECT doc_id, unnest(list_distinct(
     CASE WHEN len(ws) >= 3 THEN
       list_transform(generate_series(0, len(ws) - 3),
-                     i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])
+                     i -> {_sql_gram(3)})
     ELSE [] END)) AS shingle
   FROM w
 ),
@@ -1267,8 +1260,6 @@ def _sql_fingerprint() -> str:
 def _split_case_sql(bp_expr: str = "bp") -> str:
     """CASE expression derived from sampling.SPLITS — the Spark constant is
     the single source of truth for the split edges."""
-    from ocrspark.ops import sampling
-
     acc, whens = 0, []
     for name, width in sampling.SPLITS[:-1]:
         acc += width
@@ -1316,7 +1307,6 @@ FROM cum"""
 
 def _sql_decontaminate(n: int = 8, max_df: int = 64) -> str:
     """Twin of sampling.decontaminate (8-gram cross-split collisions)."""
-    gram = " || ' ' || ".join(f"ws[i+{j}]" for j in range(1, n + 1))
     return f"""
 WITH w AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws FROM documents
@@ -1324,7 +1314,7 @@ WITH w AS (
 sh8 AS (
   SELECT doc_id, unnest(list_distinct(
     CASE WHEN len(ws) >= {n} THEN
-      list_transform(generate_series(0, len(ws) - {n}), i -> {gram})
+      list_transform(generate_series(0, len(ws) - {n}), i -> {_sql_gram(n)})
     ELSE [] END)) AS shingle
   FROM w
 ),
@@ -1514,7 +1504,6 @@ def _sql_substring_runs_ctes(n: int = 8, max_df: int = 64,
     actual gram strings, mirroring the Spark op).  ``rel`` is the source
     relation carrying (doc_id, text) — parameterized so composites can
     run the chain over an upstream CTE's output."""
-    gram = " || ' ' || ".join(f"ws[i+{j}]" for j in range(1, n + 1))
     return f"""w AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
   FROM {rel}
@@ -1523,7 +1512,7 @@ gl AS (
   SELECT doc_id,
     CASE WHEN len(ws) >= {n} THEN
       list_transform(generate_series(0, len(ws) - {n}),
-                     i -> {{'i': i, 'g': {gram}}})
+                     i -> {{'i': i, 'g': {_sql_gram(n)}}})
     ELSE [] END AS gs
   FROM w
 ),
@@ -1804,7 +1793,6 @@ def _strip_parts(n: int = 3, k: int = 50,
     canonical word sequence contains a hot gram is dropped; kept lines
     reassemble in order.  Structural pieces so composites can chain the
     stripped corpus into downstream CTEs."""
-    gram = " || ' ' || ".join(f"ws[i+{j}]" for j in range(1, n + 1))
     ctes = f"""tw AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
   FROM {rel}
@@ -1812,7 +1800,7 @@ def _strip_parts(n: int = 3, k: int = 50,
 tg AS (
   SELECT doc_id, unnest(
     CASE WHEN len(ws) >= {n} THEN
-      list_transform(generate_series(0, len(ws) - {n}), i -> {gram})
+      list_transform(generate_series(0, len(ws) - {n}), i -> {_sql_gram(n)})
     ELSE [] END) AS gram
   FROM tw
 ),
@@ -1882,7 +1870,6 @@ LEFT JOIN kept kp ON kp.doc_id = st.doc_id"""
 
 def _sql_top_ngrams(n: int = 3, k: int = 50) -> str:
     """Twin of textstats.top_ngrams (global top-k, gram-ASC ties)."""
-    gram = " || ' ' || ".join(f"ws[i+{j}]" for j in range(1, n + 1))
     return f"""
 WITH w AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
@@ -1891,7 +1878,7 @@ WITH w AS (
 g AS (
   SELECT doc_id, unnest(
     CASE WHEN len(ws) >= {n} THEN
-      list_transform(generate_series(0, len(ws) - {n}), i -> {gram})
+      list_transform(generate_series(0, len(ws) - {n}), i -> {_sql_gram(n)})
     ELSE [] END) AS gram
   FROM w
 ),
@@ -1954,7 +1941,7 @@ FROM scored GROUP BY 1"""
 
 def _sql_gopher_quality() -> str:
     """Twin of textstats.gopher_quality (integer-scaled Gopher filters)."""
-    return r"""
+    return rf"""
 WITH w AS (
   SELECT doc_id, text,
          regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
@@ -1971,7 +1958,7 @@ base AS (
                / greatest(len(ws), 1)) AS BIGINT) AS symbol_word_bp,
     CASE WHEN len(ws) >= 2 THEN
       list_transform(generate_series(0, len(ws) - 2),
-                     i -> ws[i+1] || ' ' || ws[i+2])
+                     i -> {_sql_gram(2)})
     ELSE [] END AS grams
   FROM w
 ),
@@ -2063,45 +2050,76 @@ SELECT doc_id, CAST(rank AS INT) AS rank, term,
 FROM r WHERE rank <= {k}"""
 
 
-def _sql_cosine_topk() -> str:
-    dot = "list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * ce[i]::DOUBLE))"
-    nq = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))"
-    nc = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> ce[i]::DOUBLE * ce[i]::DOUBLE)))"
-    return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id % 25 = 0),
-c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
-p AS (
-  SELECT query_id, neighbor_id, round({dot} / ({nq} * {nc}), 9) AS sim9
-  FROM q, c WHERE query_id <> neighbor_id
-),
-r AS (
+def _sql_dot(a: str, b: str) -> str:
+    """Dot product of 64-dim list columns ``a``/``b`` (twin of
+    similarity._dot).  Built by interpolation, NOT str.replace on a
+    template: column refs like "c.cent" contain the substring "ce"."""
+    return (f"list_sum(list_transform(generate_series(1, 64), "
+            f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
+
+
+def _sql_norm(a: str) -> str:
+    return f"sqrt({_sql_dot(a, a)})"
+
+
+def _sql_cos9(a: str, b: str) -> str:
+    """9-dp cosine ranking key (twin of similarity._cos9)."""
+    return f"round({_sql_dot(a, b)} / ({_sql_norm(a)} * {_sql_norm(b)}), 9)"
+
+
+def _sql_sim_topk(k: int) -> str:
+    """Per-query top-k tail over ``p`` (query_id, neighbor_id, sim9) —
+    twin of similarity._sim_topk."""
+    return f"""r AS (
   SELECT *, row_number() OVER (PARTITION BY query_id
             ORDER BY sim9 DESC, neighbor_id ASC) AS rank
   FROM p
 )
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
        CAST(round(sim9 * 1e9) AS BIGINT) AS sim_e9
-FROM r WHERE rank <= 10"""
+FROM r WHERE rank <= {k}"""
 
 
-def _planes_expr(n_planes: int) -> str:
+def _sql_adc_topk(k: int) -> str:
+    """Per-query top-k tail over ADC ``pairs`` (query_id, neighbor_id, ad)
+    — twin of similarity._topk on adist_e9."""
+    return f"""r AS (
+  SELECT query_id, neighbor_id, CAST(ad AS BIGINT) AS adist_e9,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY ad ASC, neighbor_id ASC) AS rank
+  FROM pairs
+)
+SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, adist_e9
+FROM r WHERE rank <= {k}"""
+
+
+def _sql_cents(n_centroids: int) -> str:
+    """The lowest-vec_id centroid CTE (twin of similarity._default_cents)."""
+    return f"""cents AS (
+  SELECT vec_id AS cell_id, embedding AS cent FROM embeddings
+  ORDER BY vec_id LIMIT {n_centroids}
+)"""
+
+
+def _sql_cosine_topk() -> str:
+    return f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id % 25 = 0),
+c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
+p AS (
+  SELECT query_id, neighbor_id, {_sql_cos9('qe', 'ce')} AS sim9
+  FROM q, c WHERE query_id <> neighbor_id
+),
+{_sql_sim_topk(10)}"""
+
+
+def _sql_sign_key(planes) -> str:
+    """Hyperplane sign key over ``embedding``: bit j = 2^j when the j-th of
+    ``planes`` has a rounded dot >= 0 (twin of similarity._sign_keys)."""
     return " + ".join(
         f"CASE WHEN round(list_sum(list_transform(generate_series(1, 64), "
         f"i -> embedding[i]::DOUBLE * ((((i-1) * 2654435761 + {p * 40503 + 7919}) % 2001 - 1000)::DOUBLE))), 6) >= 0 "
-        f"THEN CAST({2**p} AS BIGINT) ELSE 0 END"
-        for p in range(n_planes)
-    )
-
-
-def _band_key_expr(band: int, planes_per_band: int) -> str:
-    """Band key from planes [band*r, (band+1)*r), bit j = 2^j (twin of
-    similarity.lsh_band_buckets)."""
-    return " + ".join(
-        f"CASE WHEN round(list_sum(list_transform(generate_series(1, 64), "
-        f"i -> embedding[i]::DOUBLE * ((((i-1) * 2654435761 + "
-        f"{(band * planes_per_band + j) * 40503 + 7919}) % 2001 - 1000)::DOUBLE))), 6) >= 0 "
         f"THEN CAST({2**j} AS BIGINT) ELSE 0 END"
-        for j in range(planes_per_band)
+        for j, p in enumerate(planes)
     )
 
 
@@ -2112,14 +2130,12 @@ def _near_dups_parts(threshold_e9: int) -> tuple[str, str]:
     SQL (ADVICE r4)."""
     # band keys as plain columns first: DuckDB 1.0 cannot bind a correlated
     # column inside a lambda under LATERAL UNNEST
+    r = similarity.PLANES_PER_BAND
     keys = ", ".join(
-        f"{_band_key_expr(b, similarity.PLANES_PER_BAND)} AS k{b}"
+        f"{_sql_sign_key(range(b * r, (b + 1) * r))} AS k{b}"
         for b in range(similarity.N_BANDS)
     )
     bands = ", ".join(f"[{b}, k{b}]" for b in range(similarity.N_BANDS))
-    dot = "list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * ce[i]::DOUBLE))"
-    nq = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))"
-    nc = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> ce[i]::DOUBLE * ce[i]::DOUBLE)))"
     ctes = f"""keys AS (
   SELECT vec_id, embedding, {keys} FROM embeddings
 ),
@@ -2129,8 +2145,8 @@ bands AS (
 ),
 p AS (
   SELECT a.vec_id AS id1, b.vec_id AS id2,
-    CAST(round(round({dot.replace('qe', 'a.embedding').replace('ce', 'b.embedding')} /
-      ({nq.replace('qe', 'a.embedding')} * {nc.replace('ce', 'b.embedding')}), 9) * 1e9) AS BIGINT) AS sim_e9
+    CAST(round(round({_sql_dot('a.embedding', 'b.embedding')} /
+      ({_sql_norm('a.embedding')} * {_sql_norm('b.embedding')}), 9) * 1e9) AS BIGINT) AS sim_e9
   FROM bands a JOIN bands b USING (band_id, band_key)
   WHERE a.vec_id < b.vec_id
 )"""
@@ -2147,74 +2163,55 @@ def _sql_embedding_near_dups(threshold_e9: int) -> str:
 
 
 def _sql_lsh_buckets() -> str:
-    return f"SELECT vec_id, {_planes_expr(similarity.N_PLANES)} AS bucket FROM embeddings"
+    return f"SELECT vec_id, {_sql_sign_key(range(similarity.N_PLANES))} AS bucket FROM embeddings"
 
 
 def _sql_lsh_search(k: int = 5, n_planes: int = 8) -> str:
-    dot = "list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * ce[i]::DOUBLE))"
-    nq = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))"
-    nc = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> ce[i]::DOUBLE * ce[i]::DOUBLE)))"
     return f"""
-WITH b AS (SELECT vec_id, embedding, {_planes_expr(n_planes)} AS bucket FROM embeddings),
+WITH b AS (SELECT vec_id, embedding, {_sql_sign_key(range(n_planes))} AS bucket FROM embeddings),
 q AS (SELECT vec_id AS query_id, embedding AS qe, bucket FROM b WHERE vec_id % 25 = 0),
 c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bucket FROM b),
 p AS (
-  SELECT query_id, neighbor_id, round({dot} / ({nq} * {nc}), 9) AS sim9
+  SELECT query_id, neighbor_id, {_sql_cos9('qe', 'ce')} AS sim9
   FROM q JOIN c USING (bucket) WHERE query_id <> neighbor_id
 ),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY sim9 DESC, neighbor_id ASC) AS rank
-  FROM p
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       CAST(round(sim9 * 1e9) AS BIGINT) AS sim_e9
-FROM r WHERE rank <= {k}"""
+{_sql_sim_topk(k)}"""
+
+
+def _sql_ivf_rerank(asg: str, a: str, n_probe: int, k: int) -> str:
+    """IVF tail from the cell-assignment CTE ``asg`` (aliased ``a``, crank
+    per vector): nearest-cell inverted lists, n_probe probes per fixture
+    query, exact cosine rerank, sim top-k."""
+    return f"""lists AS (
+  SELECT {a}.vec_id AS neighbor_id, {a}.cell_id, e.embedding AS ce
+  FROM {asg} {a} JOIN embeddings e ON e.vec_id = {a}.vec_id
+  WHERE {a}.crank = 1
+),
+probes AS (
+  SELECT {a}.vec_id AS query_id, {a}.cell_id, e.embedding AS qe
+  FROM {asg} {a} JOIN embeddings e ON e.vec_id = {a}.vec_id
+  WHERE {a}.crank <= {n_probe} AND {a}.vec_id % 25 = 0
+),
+p AS (
+  SELECT query_id, neighbor_id, {_sql_cos9('qe', 'ce')} AS sim9
+  FROM probes JOIN lists USING (cell_id)
+  WHERE query_id <> neighbor_id
+),
+{_sql_sim_topk(k)}"""
 
 
 def _sql_ivf_topk(k: int = 10, n_centroids: int = 16, n_probe: int = 2) -> str:
     """Twin of similarity.ivf_topk: lowest-vec_id centroids, nearest-cell
     inverted lists, n_probe cell scan, exact cosine rerank."""
-    dot = "list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * ce[i]::DOUBLE))"
-    nq = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))"
-    nc = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> ce[i]::DOUBLE * ce[i]::DOUBLE)))"
-    cdot = dot.replace("qe", "e.embedding").replace("ce", "c.cent")
-    cnq = nq.replace("qe", "e.embedding")
-    cnc = nc.replace("ce", "c.cent")
     return f"""
-WITH cents AS (
-  SELECT vec_id AS cell_id, embedding AS cent FROM embeddings
-  ORDER BY vec_id LIMIT {n_centroids}
-),
+WITH {_sql_cents(n_centroids)},
 ranked AS (
   SELECT e.vec_id, c.cell_id,
          row_number() OVER (PARTITION BY e.vec_id
-           ORDER BY round({cdot} / ({cnq} * {cnc}), 9) DESC, c.cell_id ASC) AS crank
+           ORDER BY {_sql_cos9('e.embedding', 'c.cent')} DESC, c.cell_id ASC) AS crank
   FROM embeddings e CROSS JOIN cents c
 ),
-lists AS (
-  SELECT r.vec_id AS neighbor_id, r.cell_id, e.embedding AS ce
-  FROM ranked r JOIN embeddings e ON e.vec_id = r.vec_id
-  WHERE r.crank = 1
-),
-probes AS (
-  SELECT r.vec_id AS query_id, r.cell_id, e.embedding AS qe
-  FROM ranked r JOIN embeddings e ON e.vec_id = r.vec_id
-  WHERE r.crank <= {n_probe} AND r.vec_id % 25 = 0
-),
-p AS (
-  SELECT query_id, neighbor_id, round({dot} / ({nq} * {nc}), 9) AS sim9
-  FROM probes JOIN lists USING (cell_id)
-  WHERE query_id <> neighbor_id
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY sim9 DESC, neighbor_id ASC) AS rank
-  FROM p
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       CAST(round(sim9 * 1e9) AS BIGINT) AS sim_e9
-FROM r WHERE rank <= {k}"""
+{_sql_ivf_rerank("ranked", "r", n_probe, k)}"""
 
 
 def _sql_ivf_topk_two_level(k: int = 10, n_centroids: int = 16,
@@ -2224,26 +2221,8 @@ def _sql_ivf_topk_two_level(k: int = 10, n_centroids: int = 16,
     lowest-id group leaders (isqrt(n_centroids)), centroid->group by
     nearest leader, vector scans its probe_groups closest groups' cells,
     crank within the scanned subset, then the usual list/probe rerank."""
-    dot = "list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * ce[i]::DOUBLE))"
-    nq = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))"
-    nc = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> ce[i]::DOUBLE * ce[i]::DOUBLE)))"
-
-    def cos(a: str, b: str) -> str:
-        # built by interpolation, NOT str.replace on a template: column
-        # refs like "c.cent" contain the substring "ce" and would corrupt
-        d = (f"list_sum(list_transform(generate_series(1, 64), "
-             f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
-        na = (f"sqrt(list_sum(list_transform(generate_series(1, 64), "
-              f"i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE)))")
-        nb = (f"sqrt(list_sum(list_transform(generate_series(1, 64), "
-              f"i -> {b}[i]::DOUBLE * {b}[i]::DOUBLE)))")
-        return f"round({d} / ({na} * {nb}), 9)"
-
     return f"""
-WITH cents AS (
-  SELECT vec_id AS cell_id, embedding AS cent FROM embeddings
-  ORDER BY vec_id LIMIT {n_centroids}
-),
+WITH {_sql_cents(n_centroids)},
 leaders AS (
   SELECT cell_id AS group_id, cent AS gcent FROM cents
   ORDER BY cell_id LIMIT {n_groups}
@@ -2251,7 +2230,7 @@ leaders AS (
 cgrank AS (
   SELECT c.cell_id, c.cent, l.group_id,
          row_number() OVER (PARTITION BY c.cell_id
-           ORDER BY {cos('c.cent', 'l.gcent')} DESC, l.group_id ASC) AS grank
+           ORDER BY {_sql_cos9('c.cent', 'l.gcent')} DESC, l.group_id ASC) AS grank
   FROM cents c CROSS JOIN leaders l
 ),
 cent_groups AS (
@@ -2260,7 +2239,7 @@ cent_groups AS (
 vgrank AS (
   SELECT e.vec_id, e.embedding, l.group_id,
          row_number() OVER (PARTITION BY e.vec_id
-           ORDER BY {cos('e.embedding', 'l.gcent')} DESC, l.group_id ASC)
+           ORDER BY {_sql_cos9('e.embedding', 'l.gcent')} DESC, l.group_id ASC)
            AS vgrank
   FROM embeddings e CROSS JOIN leaders l
 ),
@@ -2270,7 +2249,7 @@ vec_groups AS (
 ),
 scored AS (
   SELECT v.vec_id, c.cell_id,
-         {cos('v.embedding', 'c.cent')} AS csim
+         {_sql_cos9('v.embedding', 'c.cent')} AS csim
   FROM vec_groups v JOIN cent_groups c USING (group_id)
 ),
 asg AS (
@@ -2278,29 +2257,7 @@ asg AS (
             ORDER BY csim DESC, cell_id ASC) AS crank
   FROM scored
 ),
-lists AS (
-  SELECT a.vec_id AS neighbor_id, a.cell_id, e.embedding AS ce
-  FROM asg a JOIN embeddings e ON e.vec_id = a.vec_id
-  WHERE a.crank = 1
-),
-probes AS (
-  SELECT a.vec_id AS query_id, a.cell_id, e.embedding AS qe
-  FROM asg a JOIN embeddings e ON e.vec_id = a.vec_id
-  WHERE a.crank <= {n_probe} AND a.vec_id % 25 = 0
-),
-p AS (
-  SELECT query_id, neighbor_id, round({dot} / ({nq} * {nc}), 9) AS sim9
-  FROM probes JOIN lists USING (cell_id)
-  WHERE query_id <> neighbor_id
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY sim9 DESC, neighbor_id ASC) AS rank
-  FROM p
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       CAST(round(sim9 * 1e9) AS BIGINT) AS sim_e9
-FROM r WHERE rank <= {k}"""
+{_sql_ivf_rerank("asg", "a", n_probe, k)}"""
 
 
 def _pq_ctes(m: int = 8, ksub: int = 16, query_mod: int = 25) -> str:
@@ -2361,35 +2318,19 @@ pairs AS (
   WHERE q.query_id <> c.vec_id
   GROUP BY 1, 2
 ),
-r AS (
-  SELECT query_id, neighbor_id, CAST(ad AS BIGINT) AS adist_e9,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY ad ASC, neighbor_id ASC) AS rank
-  FROM pairs
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, adist_e9
-FROM r WHERE rank <= {k}"""
+{_sql_adc_topk(k)}"""
 
 
 def _sql_ivfpq_topk(k: int = 10, n_centroids: int = 16,
                     n_probe: int = 2) -> str:
     """Twin of similarity.ivfpq_topk: cosine-IVF cell pruning + ADC over
     PQ codes within the probed lists."""
-    cdot = ("list_sum(list_transform(generate_series(1, 64), "
-            "i -> e.embedding[i]::DOUBLE * c.cent[i]::DOUBLE))")
-    cnq = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))")
-    cnc = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> c.cent[i]::DOUBLE * c.cent[i]::DOUBLE)))")
     return f"""{_pq_ctes()},
-cents AS (
-  SELECT vec_id AS cell_id, embedding AS cent FROM embeddings
-  ORDER BY vec_id LIMIT {n_centroids}
-),
+{_sql_cents(n_centroids)},
 cranked AS (
   SELECT e.vec_id, c.cell_id,
          row_number() OVER (PARTITION BY e.vec_id
-           ORDER BY round({cdot} / ({cnq} * {cnc}), 9) DESC,
+           ORDER BY {_sql_cos9('e.embedding', 'c.cent')} DESC,
                     c.cell_id ASC) AS crank
   FROM embeddings e CROSS JOIN cents c
 ),
@@ -2410,24 +2351,14 @@ pairs AS (
               AND q.sub_id = c.sub_id AND q.code = c.code
   GROUP BY 1, 2
 ),
-r AS (
-  SELECT query_id, neighbor_id, CAST(ad AS BIGINT) AS adist_e9,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY ad ASC, neighbor_id ASC) AS rank
-  FROM pairs
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, adist_e9
-FROM r WHERE rank <= {k}"""
+{_sql_adc_topk(k)}"""
 
 
 def _sql_lsh_search_multiprobe(k: int = 5, n_planes: int = 8) -> str:
     """Twin of similarity.lsh_search_multiprobe (self + hamming-1 probes)."""
-    dot = "list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * ce[i]::DOUBLE))"
-    nq = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))"
-    nc = "sqrt(list_sum(list_transform(generate_series(1, 64), i -> ce[i]::DOUBLE * ce[i]::DOUBLE)))"
     probes = ", ".join(["bucket"] + [f"xor(bucket, {2**p})" for p in range(n_planes)])
     return f"""
-WITH b AS (SELECT vec_id, embedding, {_planes_expr(n_planes)} AS bucket FROM embeddings),
+WITH b AS (SELECT vec_id, embedding, {_sql_sign_key(range(n_planes))} AS bucket FROM embeddings),
 q AS (
   SELECT vec_id AS query_id, embedding AS qe, u.pb AS bucket
   FROM b, LATERAL UNNEST([{probes}]) AS u(pb)
@@ -2435,17 +2366,10 @@ q AS (
 ),
 c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bucket FROM b),
 p AS (
-  SELECT query_id, neighbor_id, round({dot} / ({nq} * {nc}), 9) AS sim9
+  SELECT query_id, neighbor_id, {_sql_cos9('qe', 'ce')} AS sim9
   FROM q JOIN c USING (bucket) WHERE query_id <> neighbor_id
 ),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY sim9 DESC, neighbor_id ASC) AS rank
-  FROM p
-)
-SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-       CAST(round(sim9 * 1e9) AS BIGINT) AS sim_e9
-FROM r WHERE rank <= {k}"""
+{_sql_sim_topk(k)}"""
 
 
 def _sql_semantic_dedup(threshold_e9: int = 400_000_000) -> str:

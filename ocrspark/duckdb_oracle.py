@@ -2,7 +2,10 @@
 
 Renders plain ANSI-ish SQL strings that DuckDB can run over the same parquet
 fixtures the Spark queries read, implementing *exactly* the semantics of
-``ocrspark.pyref`` (differentially tested in tests/test_duckdb_oracle.py).
+``ocrspark.pyref``.  Checked by ``tests/driver_mimic.py`` (every
+``oracle_sql()`` twin vs its Spark query), ``tests/test_oracle_tail.py``
+(the same comparison for the ``queries()`` entries past the first 50) and
+``tests/test_merge.py`` (``sql_g7_mpos`` vs the pyref head-pattern walk).
 
 Portability notes (RE2 vs Java/Python regex) are centralized in config.py;
 the only non-portable rule — de-stutter, needing a backreference — is outside

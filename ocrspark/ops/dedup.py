@@ -25,7 +25,21 @@ SIMHASH_BITS = 32
 
 
 def _words(text_col):
+    """The canonical word tokens: lowercased ``[a-z0-9]+`` runs."""
     return F.regexp_extract_all(F.lower(text_col), F.lit(r"[a-z0-9]+"), 0)
+
+
+def _word_grams(words, n: int):
+    """Word n-grams of a token array, each joined by single spaces, in
+    order; empty when there are fewer than ``n`` words (guard:
+    F.sequence(0, k) DESCENDS for k < 0)."""
+    return F.when(
+        F.size(words) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - n),
+            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def cap_by_key(df: DataFrame, keys: list[str], max_n: int,
@@ -81,16 +95,7 @@ def exact_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles with a 48-bit md5-prefix integer hash."""
-    words = _words(F.col(text_col))
-    # guard: F.sequence(0, k) DESCENDS for k < 0, so short docs get an
-    # explicit empty gram list
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _word_grams(_words(F.col(text_col)), n)
     out = docs.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
     return out.withColumn(
         "h", F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10).cast("long")
@@ -273,14 +278,7 @@ def _gram_occurrences(docs: DataFrame, text_col: str, n: int,
     pair runs AND within-doc self runs).  ``h`` is the 48-bit md5-prefix
     join key; ``gram`` rides along (post-cap volume only) for the
     verbatim verification downstream joins apply."""
-    words = _words(F.col(text_col))
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _word_grams(_words(F.col(text_col)), n)
     occ = docs.select(
         "doc_id", F.posexplode(grams).alias("i", "gram")
     ).withColumn(

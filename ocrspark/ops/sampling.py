@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _word_grams, _words, canonical_fp, cap_by_key, shingles
+
 SPLITS = [("train", 9800), ("val", 100), ("test", 100)]  # basis points
 PACK_BUCKETS = 64  # fixture/oracle default; pass n_buckets=None to scale
 PACK_BUDGET = 8192  # tokens per shard
@@ -144,8 +146,6 @@ def source_rollup(docs: DataFrame, strata_cols=("source", "lang"),
     + join-back (partial-aggregated) and one groupBy(strata) — no
     corpus-hot key beyond fp, which the exact-dup op already handles.
     """
-    from .dedup import canonical_fp
-
     keyed = docs.select(
         *strata_cols, "doc_id",
         canonical_fp(F.col(text_col)).alias("fp"),
@@ -190,8 +190,6 @@ def decontaminate(docs: DataFrame, text_col: str = "text",
     Split assignment is the deterministic hash split, so the report is
     reproducible by construction.
     """
-    from .dedup import cap_by_key, shingles
-
     split = deterministic_split(docs)
     sh = (
         shingles(docs, text_col, n)
@@ -218,15 +216,8 @@ DSIR_BUCKETS = 8192
 
 def _uni_bigrams(text_expr):
     """Lowercased word unigrams + bigrams — DSIR's hashed feature stream."""
-    words = F.regexp_extract_all(F.lower(text_expr), F.lit(r"[a-z0-9]+"), 0)
-    bi = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.array_join(F.slice(words, i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(words, bi)
+    words = _words(text_expr)
+    return F.concat(words, _word_grams(words, 2))
 
 
 def _gram_bucket(n_buckets: int):

@@ -1,18 +1,35 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (vec_id, embedding array<float>).
 
-* ``cosine_topk`` — brute-force exact top-k: the correctness baseline.
-  Query side is small (filtered) and broadcast; candidate side streams.
-  Ranking keys are rounded (1e-9) with id tiebreaks so Spark and the DuckDB
-  oracle rank identically despite float summation differences.
-* ``lsh_buckets`` — the scale path: deterministic hyperplane signs bucket
-  vectors so neighbor search only probes one bucket (plus neighbors at
-  query time).  Hyperplane weights are integer pseudo-random (hash-mixed),
-  portable across engines.
+Families (each scale path is checked against an exact baseline):
+
+* Exact: ``cosine_topk`` — broadcast query side x candidates, the recall
+  baseline, its query side capped in-plan at ``max_queries``.
+* Hyperplane LSH: ``lsh_buckets`` (one sign-pattern bucket per vector),
+  ``lsh_search`` (same-bucket rerank), ``lsh_search_multiprobe`` (+ every
+  hamming-1 bucket), ``lsh_band_buckets`` (OR-of-ANDs bands).  Hyperplane
+  weights are integer pseudo-random (hash-mixed), portable across engines.
+* Near-duplicates: ``embedding_near_dups`` (band candidates -> exact cosine
+  verify; ``exact=True`` is the all-pairs recall baseline) and
+  ``semantic_dedup`` (those pairs -> connected components).
+* IVF: ``ivf_assignments`` (flat) / ``ivf_assignments_two_level`` coarse
+  cells, ``ivf_topk`` (n_probe cell scan + cosine rerank),
+  ``ivf_kmeans_centroids`` (Spark-ML quantizer for ``cents=``).
+* PQ/ADC: ``pq_codebooks`` / ``pq_kmeans_codebooks`` (for ``books=``),
+  ``pq_codes``, ``pq_topk`` (ADC over codes) and ``ivfpq_topk`` (IVF cell
+  pruning + ADC).
+
+Shared building blocks, one implementation each: ``_dot``/``_norm`` folds,
+``_cos9`` (the 9-dp cosine ranking key, norms hoisted per vector),
+``_topk``/``_sim_topk`` (per-query ranked tail), ``_sign_keys`` (hyperplane
+sign keys), ``_coarse_assignments`` (IVF build-pass dispatch), ``_l2_e9`` and
+``_adc_table`` (integer ADC distances).  Ranking keys are rounded (1e-9) with
+id tiebreaks so Spark and the DuckDB oracle rank identically despite float
+summation differences.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 N_PLANES = 12
@@ -39,6 +56,29 @@ def _norm(a):
 # expression tree costs more in codegen than the interpreted fold costs in
 # evaluation.  The win that stands is hoisting the per-VECTOR norms out of
 # the per-PAIR expression (below) — the folds stay.
+
+
+def _cos9(a: str, b: str, na: str, nb: str):
+    """Cosine of array columns ``a``/``b`` from their hoisted norm columns
+    ``na``/``nb``, rounded to 9 dp — the ranking key every engine agrees on."""
+    return F.round(_dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 9)
+
+
+def _topk(pairs: DataFrame, k: int, order, out) -> DataFrame:
+    """Per-query top-k tail: (query_id, rank, neighbor_id, ``out``), ranked
+    by ``order`` with neighbor_id ASC breaking ties."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", out)
+    )
+
+
+def _sim_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """``_topk`` over cosine ``sim9`` (DESC), emitted as int64 ``sim_e9``."""
+    return _topk(pairs, k, F.col("sim9").desc(),
+                 F.round(F.col("sim9") * 1e9).cast("long").alias("sim_e9"))
 
 
 MAX_QUERIES = 65536  # broadcast-side hard cap (vectors, not bytes)
@@ -89,8 +129,6 @@ def cosine_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
     at ``max_queries`` by an in-plan runtime assert — a corpus-scale query
     set fails loudly instead of OOMing the broadcast.
     """
-    from pyspark.sql import Window
-
     if queries is None:
         queries = emb.filter(F.col("vec_id") % query_mod == 0)
     q = queries.select(
@@ -106,19 +144,13 @@ def cosine_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
     q = q.withColumn("qn", _norm(F.col("qe")))
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"),
                    _norm(F.col("embedding")).alias("cn"))
-    sim = F.round(_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 9)
     pairs = (
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim9"))
+        .select("query_id", "neighbor_id",
+                _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim9").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round(F.col("sim9") * 1e9).cast("long").alias("sim_e9"))
-    )
+    return _sim_topk(pairs, k)
 
 
 def lsh_search(emb: DataFrame, k: int = 5, query_mod: int = 25,
@@ -137,8 +169,6 @@ def lsh_search(emb: DataFrame, k: int = 5, query_mod: int = 25,
     planes).  The ``vec_id % query_mod`` default is the driver-oracle
     fixture cohort, not a shape production callers should inherit.
     """
-    from pyspark.sql import Window
-
     b = lsh_buckets(emb, n_planes)
     e = emb.join(b, "vec_id")
     if queries is None:
@@ -157,23 +187,13 @@ def lsh_search(emb: DataFrame, k: int = 5, query_mod: int = 25,
     c = e.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), "bucket"
     ).withColumn("cn", _norm(F.col("ce")))
-    sim = F.round(
-        _dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 9
-    )
     pairs = (
         q.join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim9"))
+        .select("query_id", "neighbor_id",
+                _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim9").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round(F.col("sim9") * 1e9).cast("long").alias("sim_e9"))
-    )
+    return _sim_topk(pairs, k)
 
 
 def lsh_search_multiprobe(emb: DataFrame, k: int = 5, query_mod: int = 25,
@@ -192,8 +212,6 @@ def lsh_search_multiprobe(emb: DataFrame, k: int = 5, query_mod: int = 25,
     ``queries`` overrides the fixture ``vec_id % query_mod`` cohort with
     an explicit (vec_id, embedding) query DataFrame (see ``lsh_search``).
     """
-    from pyspark.sql import Window
-
     b = lsh_buckets(emb, n_planes)
     e = emb.join(b, "vec_id")
     probes = F.array(
@@ -216,23 +234,13 @@ def lsh_search_multiprobe(emb: DataFrame, k: int = 5, query_mod: int = 25,
         "bucket",
     ).withColumn("cn", _norm(F.col("ce")))
     # per-vector norms hoisted out of the per-pair rerank (r7; float-exact)
-    sim = F.round(
-        _dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 9
-    )
     pairs = (
         q.join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim9"))
+        .select("query_id", "neighbor_id",
+                _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim9").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round(F.col("sim9") * 1e9).cast("long").alias("sim_e9"))
-    )
+    return _sim_topk(pairs, k)
 
 
 N_BANDS = 8
@@ -248,29 +256,12 @@ def lsh_band_buckets(emb: DataFrame, n_bands: int = N_BANDS,
     (the OR-of-ANDs recall curve, same construction as MinHash bands).  With
     8 bands x 4 planes, recall at cos>=0.8 is ~98%; at cos>=0.4 ~75%.
     """
-    with_idx = F.zip_with(
-        F.col("embedding"),
-        F.sequence(F.lit(0), F.lit(DIM - 1)),
-        lambda x, i: F.struct(x.cast("double").alias("x"), i.alias("i")),
-    )
-
-    def _dot_for(p: int):
-        return F.aggregate(
-            with_idx,
-            F.lit(0.0),
-            lambda acc, s: acc + s["x"] * _plane_weight(p, s["i"]).cast("double"),
-        )
-
-    bands = []
-    for b in range(n_bands):
-        key = None
-        for j in range(planes_per_band):
-            dot_p = _dot_for(b * planes_per_band + j)
-            bit = F.when(
-                F.round(dot_p, 6) >= 0, F.lit(2 ** j).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-            key = bit if key is None else (key + bit)
-        bands.append(F.struct(F.lit(b).alias("band_id"), key.alias("band_key")))
+    keys = _sign_keys([
+        range(b * planes_per_band, (b + 1) * planes_per_band)
+        for b in range(n_bands)
+    ])
+    bands = [F.struct(F.lit(b).alias("band_id"), key.alias("band_key"))
+             for b, key in enumerate(keys)]
     return emb.select(
         "vec_id", F.explode(F.array(*bands)).alias("b")
     ).select("vec_id", F.col("b.band_id").alias("band_id"),
@@ -292,9 +283,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
     for engine-exact comparison.
     """
     # per-vector norms hoisted out of the per-pair verify (r7; float-exact)
-    sim = F.round(
-        _dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 9
-    )
+    sim = _cos9("qe", "ce", "qn", "cn")
     if exact:
         a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("qe"),
                        _norm(F.col("embedding")).alias("qn"))
@@ -391,8 +380,6 @@ def ivf_assignments(emb: DataFrame, n_centroids: int = N_CENTROIDS,
     table against a single narrow corpus scan; crank ranks cells per
     vector (ties broken by cell_id so engines agree).
     """
-    from pyspark.sql import Window
-
     if cents is None:
         cents = _default_cents(emb, n_centroids)
     # per-vector/per-centroid norms hoisted below the broadcast scoring
@@ -400,10 +387,7 @@ def ivf_assignments(emb: DataFrame, n_centroids: int = N_CENTROIDS,
     # (r7; float-exact — the hoisted expression is unchanged)
     e = emb.withColumn("vn", _norm(F.col("embedding")))
     cn = cents.withColumn("cn", _norm(F.col("cent")))
-    csim = F.round(
-        _dot(F.col("embedding"), F.col("cent"))
-        / (F.col("vn") * F.col("cn")), 9
-    )
+    csim = _cos9("embedding", "cent", "vn", "cn")
     scored = e.crossJoin(F.broadcast(cn)).select(
         "vec_id", "cell_id", csim.alias("csim")
     )
@@ -442,8 +426,6 @@ def ivf_assignments_two_level(emb: DataFrame,
     """
     import math
 
-    from pyspark.sql import Window
-
     if cents is None:
         cents = _default_cents(emb, n_centroids)
     if n_groups is None:
@@ -457,10 +439,7 @@ def ivf_assignments_two_level(emb: DataFrame,
                 F.col("cent").alias("gcent"),
                 F.col("cn").alias("gn"))
     )
-    gsim = F.round(
-        _dot(F.col("cent"), F.col("gcent"))
-        / (F.col("cn") * F.col("gn")), 9
-    )
+    gsim = _cos9("cent", "gcent", "cn", "gn")
     wg = Window.partitionBy("cell_id").orderBy(
         F.col("gsim").desc(), F.col("group_id").asc()
     )
@@ -471,10 +450,7 @@ def ivf_assignments_two_level(emb: DataFrame,
         .filter(F.col("grank") == 1)
         .select("group_id", "cell_id", "cent", "cn")
     )
-    vgsim = F.round(
-        _dot(F.col("embedding"), F.col("gcent"))
-        / (F.col("vn") * F.col("gn")), 9
-    )
+    vgsim = _cos9("embedding", "gcent", "vn", "gn")
     wv = Window.partitionBy("vec_id").orderBy(
         F.col("vgsim").desc(), F.col("group_id").asc()
     )
@@ -486,10 +462,7 @@ def ivf_assignments_two_level(emb: DataFrame,
         .filter(F.col("vgrank") <= probe_groups)
         .select("vec_id", "embedding", "vn", "group_id")
     )
-    csim = F.round(
-        _dot(F.col("embedding"), F.col("cent"))
-        / (F.col("vn") * F.col("cn")), 9
-    )
+    csim = _cos9("embedding", "cent", "vn", "cn")
     scored = vec_groups.join(cent_groups, "group_id").select(
         "vec_id", "cell_id", csim.alias("csim")
     )
@@ -497,6 +470,20 @@ def ivf_assignments_two_level(emb: DataFrame,
         F.col("csim").desc(), F.col("cell_id").asc()
     )
     return scored.withColumn("crank", F.row_number().over(w))
+
+
+def _coarse_assignments(emb: DataFrame, n_centroids: int,
+                        cents: DataFrame | None, two_level: bool,
+                        probe_groups: int) -> tuple[DataFrame, DataFrame]:
+    """(assignments, centroid table) of the IVF build pass: ``cents`` or the
+    lowest-id stand-in, scored flat or two-level.  The centroid table comes
+    back so a query cohort is scored against the same cells."""
+    if cents is None:
+        cents = _default_cents(emb, n_centroids)
+    if two_level:
+        return ivf_assignments_two_level(emb, n_centroids, cents=cents,
+                                         probe_groups=probe_groups), cents
+    return ivf_assignments(emb, n_centroids, cents=cents), cents
 
 
 def _default_cents(emb: DataFrame, n_centroids: int) -> DataFrame:
@@ -535,15 +522,8 @@ def ivf_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
     two-level).  The ``vec_id % query_mod`` default is the driver-oracle
     fixture cohort.
     """
-    from pyspark.sql import Window
-
-    if cents is None:
-        cents = _default_cents(emb, n_centroids)
-    if two_level:
-        asg = ivf_assignments_two_level(emb, n_centroids, cents=cents,
-                                        probe_groups=probe_groups)
-    else:
-        asg = ivf_assignments(emb, n_centroids, cents=cents)
+    asg, cents = _coarse_assignments(emb, n_centroids, cents, two_level,
+                                     probe_groups)
     lists = (
         asg.filter(F.col("crank") == 1)
         .select(F.col("vec_id").alias("neighbor_id"), "cell_id")
@@ -579,23 +559,13 @@ def ivf_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
             )
         )
     # per-vector norms hoisted out of the per-pair rerank (r7; float-exact)
-    sim = F.round(
-        _dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 9
-    )
     pairs = (
         probes.join(lists, "cell_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim9"))
+        .select("query_id", "neighbor_id",
+                _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim9").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round(F.col("sim9") * 1e9).cast("long").alias("sim_e9"))
-    )
+    return _sim_topk(pairs, k)
 
 
 PQ_M = 8       # subspaces (64-dim -> 8 x 8-dim subvectors)
@@ -630,6 +600,20 @@ def _subvectors(df: DataFrame, vec_col: str, m: int, d_sub: int,
     )
 
 
+def _adc_table(queries: DataFrame, books: DataFrame, m: int) -> DataFrame:
+    """ADC query-distance table (query_id, sub_id, code, d): every query
+    subvector's int64 e9 squared-L2 to each codebook entry of its subspace
+    (|Q|*m*ksub rows — the side ``pq_topk``/``ivfpq_topk`` broadcast)."""
+    qsubs = _subvectors(
+        queries.select(F.col("vec_id").alias("query_id"), "embedding"),
+        "embedding", m, DIM // m, "subvec",
+    )
+    return qsubs.join(F.broadcast(books), "sub_id").select(
+        "query_id", "sub_id", "code",
+        _l2_e9(F.col("subvec"), F.col("subcent")).alias("d"),
+    )
+
+
 def pq_codebooks(emb: DataFrame, m: int = PQ_M,
                  ksub: int = PQ_KSUB) -> DataFrame:
     """Product-quantization codebooks: (sub_id, code, subcent).
@@ -640,8 +624,6 @@ def pq_codebooks(emb: DataFrame, m: int = PQ_M,
     oracle-exact); a per-subspace k-means fit slots in by swapping the
     returned table.  m*ksub rows total — always broadcastable.
     """
-    from pyspark.sql import Window
-
     d_sub = DIM // m
     w = Window.orderBy("vec_id")
     base = (
@@ -744,8 +726,6 @@ def pq_codes(emb: DataFrame, books: DataFrame | None = None,
     One narrow scan x broadcast of the m*ksub codebook; the per-(vec, sub)
     argmin is a bounded ksub-row window.
     """
-    from pyspark.sql import Window
-
     d_sub = DIM // m
     if books is None:
         books = pq_codebooks(emb, m, ksub)
@@ -789,36 +769,19 @@ def pq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
     DataFrame; ``vec_id % query_mod`` is the driver-oracle fixture
     default.
     """
-    from pyspark.sql import Window
-
-    d_sub = DIM // m
     if books is None:
         books = pq_codebooks(emb, m, ksub)
     codes = pq_codes(emb, books, m, ksub)
     if queries is None:
         queries = emb.filter(F.col("vec_id") % query_mod == 0)
-    qsubs = _subvectors(
-        queries.select(F.col("vec_id").alias("query_id"), "embedding"),
-        "embedding", m, d_sub, "subvec",
-    )
-    qdist = qsubs.join(F.broadcast(books), "sub_id").select(
-        "query_id", "sub_id", "code",
-        _l2_e9(F.col("subvec"), F.col("subcent")).alias("d"),
-    )
+    qdist = _adc_table(queries, books, m)
     pairs = (
         codes.join(F.broadcast(qdist), ["sub_id", "code"])
         .filter(F.col("query_id") != F.col("vec_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d").alias("adist_e9"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_e9").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adist_e9")
-    )
+    return _topk(pairs, k, F.col("adist_e9").asc(), "adist_e9")
 
 
 TWO_LEVEL_AUTO_CENTROIDS = 1024  # n_centroids >= this -> hierarchical build
@@ -858,17 +821,10 @@ def ivfpq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
     (query_id, sub_id, code) join still parallelizes (query_id in the
     key), at shuffle cost.
     """
-    from pyspark.sql import Window
-
     if two_level is None:
         two_level = n_centroids >= TWO_LEVEL_AUTO_CENTROIDS
-    if cents is None:
-        cents = _default_cents(emb, n_centroids)
-    if two_level:
-        asg = ivf_assignments_two_level(emb, n_centroids, cents=cents,
-                                        probe_groups=probe_groups)
-    else:
-        asg = ivf_assignments(emb, n_centroids, cents=cents)
+    asg, cents = _coarse_assignments(emb, n_centroids, cents, two_level,
+                                     probe_groups)
     books = pq_codebooks(emb, m, ksub)
     codes = pq_codes(emb, books, m, ksub)
     lists = asg.filter(F.col("crank") == 1).select(
@@ -884,15 +840,7 @@ def ivfpq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
         probes = qasg.filter(F.col("crank") <= n_probe).select(
             F.col("vec_id").alias("query_id"), "cell_id"
         )
-    d_sub = DIM // m
-    qsubs = _subvectors(
-        queries.select(F.col("vec_id").alias("query_id"), "embedding"),
-        "embedding", m, d_sub, "subvec",
-    )
-    qdist = qsubs.join(F.broadcast(books), "sub_id").select(
-        "query_id", "sub_id", "code",
-        _l2_e9(F.col("subvec"), F.col("subcent")).alias("d"),
-    )
+    qdist = _adc_table(queries, books, m)
     cand = (
         probes.join(lists, "cell_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -905,14 +853,7 @@ def ivfpq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adist_e9"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_e9").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adist_e9")
-    )
+    return _topk(pairs, k, F.col("adist_e9").asc(), "adist_e9")
 
 
 def _plane_weight(plane: int, dim_idx):
@@ -920,30 +861,39 @@ def _plane_weight(plane: int, dim_idx):
     return (dim_idx * 2654435761 + F.lit(plane * 40503 + 7919)) % 2001 - 1000
 
 
-def lsh_buckets(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
-    """Random-hyperplane LSH bucket per vector (sign pattern -> int bucket).
-
-    dot_p = sum_i w(p, i) * x_i with integer weights; sign decided on the
-    rounded value so engines agree at the boundary.
-    """
+def _sign_keys(plane_groups) -> list:
+    """One hyperplane sign key per group of plane indices over the
+    ``embedding`` column: bit j of a key is set when the group's j-th plane
+    has dot_p >= 0.  dot_p = sum_i w(p, i) * x_i with integer weights; sign
+    decided on the rounded value so engines agree at the boundary.  Every
+    plane folds the same indexed view of the embedding."""
     with_idx = F.zip_with(
         F.col("embedding"),
         F.sequence(F.lit(0), F.lit(DIM - 1)),
         lambda x, i: F.struct(x.cast("double").alias("x"), i.alias("i")),
     )
-    def _dot_for(p: int):
-        # closure (not a default arg: Spark counts lambda params strictly)
-        return F.aggregate(
-            with_idx,
-            F.lit(0.0),
-            lambda acc, s: acc + s["x"] * _plane_weight(p, s["i"]).cast("double"),
-        )
+    keys = []
+    for planes in plane_groups:
+        key = None
+        for j, p in enumerate(planes):
+            # F.aggregate calls the lambda at once, so the closure over the
+            # loop's p is safe (a default arg is not: Spark counts lambda
+            # params strictly)
+            dot_p = F.aggregate(
+                with_idx,
+                F.lit(0.0),
+                lambda acc, s: acc + s["x"] * _plane_weight(p, s["i"]).cast("double"),
+            )
+            bit = F.when(F.round(dot_p, 6) >= 0, F.lit(2 ** j).cast("long")).otherwise(
+                F.lit(0).cast("long")
+            )
+            key = bit if key is None else (key + bit)
+        keys.append(key)
+    return keys
 
-    bucket = None
-    for p in range(n_planes):
-        dot_p = _dot_for(p)
-        bit = F.when(F.round(dot_p, 6) >= 0, F.lit(2 ** p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bit if bucket is None else (bucket + bit)
+
+def lsh_buckets(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
+    """Random-hyperplane LSH bucket per vector (sign pattern -> int bucket,
+    see ``_sign_keys``)."""
+    bucket = _sign_keys([range(n_planes)])[0]
     return emb.select("vec_id", bucket.alias("bucket"))

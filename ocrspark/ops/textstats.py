@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _word_grams, _words, canonical_fp
+
 # n-gram/stopword heuristics: tiny fixed lexica, ASCII-only patterns.
 EN_STOPWORDS = r"\b(the|and|of|to|in|is|for|with|on|that|this|a)\b"
 NO_STOPWORDS = r"\b(og|i|det|som|en|er|på|av|til|for|med|den)\b"
@@ -104,8 +106,6 @@ def code_detect(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Canonical-text fingerprint: md5 of lowercased whitespace-squeezed text
     (exact-dup key; md5 is bit-identical across engines)."""
-    from .dedup import canonical_fp
-
     return docs.select("doc_id", canonical_fp(F.col(text_col)).alias("fp"))
 
 
@@ -223,14 +223,7 @@ def top_ngrams(docs: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    words = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"[a-z0-9]+"), 0)
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _word_grams(_words(F.col(text_col)), n)
     counts = (
         docs.select("doc_id", F.explode(grams).alias("gram"))
         .groupBy("gram")
@@ -331,7 +324,7 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     both partial-aggregated, keyed by doc so no corpus-hot key exists —
     joined back on doc_id.
     """
-    words = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"[a-z0-9]+"), 0)
+    words = _words(F.col(text_col))
     n_words = F.size(words)
     total_chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
@@ -348,13 +341,7 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.floor(sym_hits * 10000 / F.greatest(n_words, F.lit(1)))
         .cast("long").alias("symbol_word_bp"),
     )
-    grams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
-            lambda i: F.array_join(F.slice(words, i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _word_grams(words, 2)
     gcounts = (
         docs.select("doc_id", F.explode(grams).alias("gram"))
         .groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
@@ -397,9 +384,7 @@ def tfidf_topterms(docs: DataFrame, text_col: str = "text",
 
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"[a-z0-9]+"), 0)
-        ).alias("term"),
+        F.explode(_words(F.col(text_col))).alias("term"),
     )
     tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -519,7 +504,7 @@ def repetition_ngram_stats(docs: DataFrame,
     """
     from pyspark.sql import Window
 
-    words = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"[a-z0-9]+"), 0)
+    words = _words(F.col(text_col))
     total_chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
@@ -670,9 +655,7 @@ def c4_line_filters(docs: DataFrame, text_col: str = "text",
     def keep(x):
         t = F.rtrim(x)
         punct = F.substring(t, -1, 1).isin(*C4_TERMINALS)
-        enough = F.size(
-            F.regexp_extract_all(F.lower(x), F.lit(r"[a-z0-9]+"), 0)
-        ) >= min_words
+        enough = F.size(_words(x)) >= min_words
         black = reduce(or_, [F.lower(x).contains(b) for b in blacklist])
         return punct & enough & ~black
 

@@ -10,7 +10,10 @@ It is NOT a port of the reference (the reference delegates segmentation and
 field extraction to an LLM); it encodes the deterministic rule pack of
 ``ocrspark.config``, whose provenance is documented there.
 
-Never used in the hot path — driver-side, test-only code.
+Off the hot path with one exception: the ``applyInPandas`` G7 stage
+(``merge._merge_doc``, the ``g7_merge_arrow`` query) runs ``g7_merge`` once
+per document inside its grouped Python workers.  Everything else here is
+driver-side, test-only code.
 """
 
 from __future__ import annotations

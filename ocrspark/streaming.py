@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .config import DEFAULT_BUCKETS
 from .pipeline import extract
 from .schema import DOCS_SCHEMA
 
@@ -224,14 +225,11 @@ def landed_anti_join(keyed: DataFrame, landed: DataFrame,
     return keyed.join(keys, "fp", "left_anti")
 
 
-LANDED_BUCKETS = 16  # partitioning.DEFAULT_BUCKETS; the history-scale knob
-
-
 def dedup_ingest(spark: SparkSession, input_dir: str, out_dir: str | None,
                  checkpoint_dir: str, schema: str,
                  max_files_per_trigger: int = 64,
                  landed_table: str | None = None,
-                 landed_buckets: int = LANDED_BUCKETS):
+                 landed_buckets: int = DEFAULT_BUCKETS):
     """FULL-history streaming dedup: survivors of each micro-batch are the
     docs whose canonical fingerprint has never landed.
 

@@ -14,8 +14,10 @@ FIXTURES = Path(__file__).parent / "fixtures"
 
 def plan_node_names(jplan) -> list[str]:
     """``nodeName()`` of every node of a JVM physical plan, walking into
-    adaptive plans (``AdaptiveSparkPlanExec.executedPlan()``) and query
-    stages, so plan-shape checks count tree nodes, not rendered text."""
+    adaptive plans (``AdaptiveSparkPlanExec.executedPlan()``), query
+    stages and inner children (subquery plans, the cached plan under an
+    ``InMemoryTableScan``): every node the rendered plan text shows, so
+    plan-shape checks count tree nodes, not text."""
     names, stack = [], [jplan]
     while stack:
         node = stack.pop()
@@ -26,8 +28,8 @@ def plan_node_names(jplan) -> list[str]:
             stack.append(node.plan())
         else:
             names.append(node.nodeName())
-            kids = node.children()
-            stack.extend(kids.apply(i) for i in range(kids.size()))
+            for kids in (node.children(), node.innerChildren()):
+                stack.extend(kids.apply(i) for i in range(kids.size()))
     return names
 
 

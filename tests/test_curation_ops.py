@@ -119,30 +119,35 @@ def test_mixture_weights_differential(spark):
 
 
 def _plan(df) -> str:
+    """Rendered executed plan, for partial-aggregate facts only (node types
+    are checked with the ``plan_nodes`` walker)."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_curation_ops_plan_shapes(spark):
+def test_curation_ops_plan_shapes(spark, plan_nodes):
     """Scale-shape lint for the three ops: redaction is one shuffle-free
     codegen project; the line-dedup keeper is a partial-aggregated
     groupBy (hot lines collapse map-side), NEVER a window over the raw
     line key (AQE cannot split one hot key for a window); mixture
     weights carry no window and no corpus-keyed join."""
     docs = _lines_fixture(spark).withColumn("source", F.lit("s"))
-    p_redact = _plan(textstats.redact_pii(docs))
-    assert "Exchange" not in p_redact, p_redact
-    assert "BatchEvalPython" not in p_redact and "Arrow" not in p_redact
+    n_redact = plan_nodes(textstats.redact_pii(docs))
+    assert not any("Exchange" in n for n in n_redact), n_redact
+    assert "BatchEvalPython" not in n_redact, n_redact
+    assert not any("Arrow" in n for n in n_redact), n_redact
 
-    p_lines = _plan(dedup.line_dedup_keep_first(docs))
-    assert "Window" not in p_lines, p_lines
-    assert "partial_min" in p_lines, p_lines
+    # text below: partial_min/count/sum are aggregate functions, not nodes
+    lines = dedup.line_dedup_keep_first(docs)
+    assert "Window" not in plan_nodes(lines), plan_nodes(lines)
+    assert "partial_min" in _plan(lines), _plan(lines)
 
-    p_mix = _plan(sampling.mixture_weights(docs))
-    assert "Window" not in p_mix, p_mix
+    mix = sampling.mixture_weights(docs)
+    assert "Window" not in plan_nodes(mix), plan_nodes(mix)
+    p_mix = _plan(mix)
     assert "partial_count" in p_mix or "partial_sum" in p_mix, p_mix
 
-    p_c4 = _plan(textstats.c4_line_filters(docs))
-    assert "Exchange" not in p_c4, p_c4
+    n_c4 = plan_nodes(textstats.c4_line_filters(docs))
+    assert not any("Exchange" in n for n in n_c4), n_c4
 
 
 def test_line_dedup_corpus_hot_line(spark):

@@ -16,37 +16,42 @@ from ocrspark.pipeline import extract
 
 
 def _plan(df) -> str:
+    """Rendered executed plan, for expression-level facts only (partial
+    aggregate functions, partitioning arguments, Python UDF expressions,
+    codegen ids); node types are checked with the ``plan_nodes`` walker."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_single_exchange_native(spark):
+def test_single_exchange_native(spark, plan_nodes):
     docs = generate_docs(spark, 10, seed=1)
-    plan = _plan(extract(docs, arrow=False))
+    df = extract(docs, arrow=False)
+    # one data exchange; AQE may add nothing else
+    assert plan_nodes(df).count("Exchange") == 1, plan_nodes(df)
+    # text: the partitioning key is an argument of the node, not a node
+    plan = _plan(df)
     exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    # one data exchange on doc_id; AQE may add nothing else
-    assert len(exchanges) == 1, f"expected 1 exchange, got {exchanges}\n{plan}"
-    assert "doc_id" in exchanges[0]
+    assert len(exchanges) == 1 and "doc_id" in exchanges[0], plan
 
 
-def test_no_python_in_native_plan(spark):
+def test_no_python_in_native_plan(spark, plan_nodes):
     docs = generate_docs(spark, 10, seed=1)
-    # generator itself is ArrowEval (test data); strip its scan side by
-    # checking only operators above the first project of the pipeline.
-    plan = _plan(extract(docs, arrow=False))
+    df = extract(docs, arrow=False)
+    nodes = plan_nodes(df)
     # the only Python stage allowed is the corpus generator's mapInPandas
-    assert plan.count("MapInPandas") <= 1
-    assert "BatchEvalPython" not in plan
-    assert "PythonUDF" not in plan
+    assert nodes.count("MapInPandas") <= 1, nodes
+    assert "BatchEvalPython" not in nodes, nodes
+    # text: a PythonUDF is an expression inside a node, not a node
+    assert "PythonUDF" not in _plan(df)
 
 
-def test_no_cartesian_or_nested_loop(spark):
+def test_no_cartesian_or_nested_loop(spark, plan_nodes):
     docs = generate_docs(spark, 10, seed=1)
-    plan = _plan(extract(docs, arrow=False))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    nodes = plan_nodes(extract(docs, arrow=False))
+    assert "CartesianProduct" not in nodes
+    assert "BroadcastNestedLoopJoin" not in nodes
 
 
-def test_scaled_similarity_paths_are_equi_joins(spark):
+def test_scaled_similarity_paths_are_equi_joins(spark, plan_nodes):
     """The dedup/ANN scale paths must never plan a cartesian/nested-loop
     join: banded-LSH near-dups, bucketed ANN search, and the capped MinHash
     candidate join are all equi-joins.  (cosine_topk and the exact=True
@@ -72,18 +77,18 @@ def test_scaled_similarity_paths_are_equi_joins(spark):
         dedup.simhash_near_dups(docs),
         dedup.ngram_jaccard_dedup(docs, threshold=0.2),
     ]:
-        plan = _plan(df)
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
+        nodes = plan_nodes(df)
+        assert "CartesianProduct" not in nodes, nodes
+        assert "BroadcastNestedLoopJoin" not in nodes, nodes
     # IVF: the ONLY nested-loop join allowed is the centroid scoring pass,
     # whose broadcast side is the n_centroids-row table (bounded by
     # construction).  Catalyst inlines the shared `asg` subplan into both
     # its consumers (inverted lists + query probes), so that one bounded
     # join appears twice; the list/probe joins themselves are equi-joins
     # (SortMergeJoin/BroadcastHashJoin), asserted by the cap below.
-    plan = _plan(similarity.ivf_topk(emb, n_centroids=4))
-    assert "CartesianProduct" not in plan, plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 2, plan
+    nodes = plan_nodes(similarity.ivf_topk(emb, n_centroids=4))
+    assert "CartesianProduct" not in nodes, nodes
+    assert nodes.count("BroadcastNestedLoopJoin") <= 2, nodes
 
 
 def test_ngram_jaccard_matches_uncapped_ground_truth(spark):
@@ -106,7 +111,7 @@ def test_ngram_jaccard_matches_uncapped_ground_truth(spark):
     assert len(exhaustive) > 0
 
 
-def test_round4_ops_plan_shapes(spark):
+def test_round4_ops_plan_shapes(spark, plan_nodes):
     """Plan contracts for the round-4 curation ops: stratified_sample is
     a pure row function (ZERO Exchange — broadcast rate lookup only);
     substring_dup_spans and the others never plan a cartesian/nested-loop
@@ -119,25 +124,26 @@ def test_round4_ops_plan_shapes(spark):
           f"more content here to gram") for i in range(40)],
         "doc_id int, source string, lang string, text string",
     )
-    plan = _plan(sampling.stratified_sample(docs, rates={"s0": 2500}))
+    nodes = plan_nodes(sampling.stratified_sample(docs, rates={"s0": 2500}))
     # no data SHUFFLE: the only exchange is the broadcast of the tiny
     # rates table (a BroadcastHashJoin lookup, constant per row)
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
+    assert "Exchange" not in nodes, nodes
+    assert "BroadcastHashJoin" in nodes, nodes
     for df in [
         dedup.substring_dup_spans(docs),
         textstats.gopher_quality(docs),
         textstats.top_ngrams(docs, k=5),
         sampling.source_rollup(docs),
     ]:
-        p = _plan(df)
-        assert "CartesianProduct" not in p, p
-        assert "BroadcastNestedLoopJoin" not in p, p
-    # gopher's 2-gram mass pass is partial-aggregated (map-side combine)
+        nodes = plan_nodes(df)
+        assert "CartesianProduct" not in nodes, nodes
+        assert "BroadcastNestedLoopJoin" not in nodes, nodes
+    # gopher's 2-gram mass pass is partial-aggregated (map-side combine);
+    # text: partial_count is an aggregate function, not a node
     assert "partial_count" in _plan(textstats.gopher_quality(docs))
 
 
-def test_hotkey_caps_use_partial_agg_not_window(spark):
+def test_hotkey_caps_use_partial_agg_not_window(spark, plan_nodes):
     """The df/bucket caps must be skew-safe IN THEMSELVES: sizes computed
     by groupBy (HashAggregate with partial_count before the exchange, so a
     hot key collapses map-side) and joined back — never by a count window
@@ -157,9 +163,9 @@ def test_hotkey_caps_use_partial_agg_not_window(spark):
         dedup.simhash_near_dups(docs),
         sampling.decontaminate(docs),
     ]:
-        plan = _plan(df)
-        assert "Window" not in plan, plan
-        assert "partial_count" in plan, plan
+        assert "Window" not in plan_nodes(df), plan_nodes(df)
+        # text: partial_count is an aggregate function, not a node
+        assert "partial_count" in _plan(df), _plan(df)
 
 
 def test_cap_by_key_equals_window_form(spark):
@@ -227,7 +233,7 @@ def test_embedding_near_dups_recall(spark):
     assert len(banded) / len(exact) >= 0.5  # OR-of-ANDs recall at cos>=0.4
 
 
-def test_bucketed_join_is_exchange_free(spark):
+def test_bucketed_join_is_exchange_free(spark, plan_nodes):
     """Co-located join contract: two tables bucketed by the join key with
     equal bucket counts sort-merge-join with NO Exchange on either side —
     the write-once/join-free-forever path for repeated pipeline runs."""
@@ -248,9 +254,9 @@ def test_bucketed_join_is_exchange_free(spark):
             spark.table("bkt_a").hint("merge")
             .join(spark.table("bkt_b").hint("merge"), "doc_id")
         )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
+        nodes = plan_nodes(joined)
+        assert "SortMergeJoin" in nodes, nodes
+        assert not any("Exchange" in n for n in nodes), nodes
         assert joined.count() == 500
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_a")
@@ -472,10 +478,57 @@ def test_simhash_blocks_exact_for_low_hamming(spark):
     assert got == brute and len(brute) > 0
 
 
+def test_plan_nodes_sees_every_asserted_node(spark, plan_nodes):
+    """The node checks in this file can fail: on a small plan built to
+    contain it, each node type asserted here is reported by the walker
+    (through adaptive plans, query stages, subqueries and cached plans),
+    and a bare scan has none."""
+    from pyspark.sql import Window
+
+    a = spark.range(20).withColumnRenamed("id", "k")
+    b = spark.range(20).withColumnRenamed("id", "j")
+    b.createOrReplaceTempView("plan_nodes_b")
+    cases = {
+        "CartesianProduct": a.hint("shuffle_replicate_nl").crossJoin(b),
+        "BroadcastNestedLoopJoin": a.join(F.broadcast(b), a.k < b.j),
+        "SortMergeJoin": a.hint("merge").join(b, a.k == b.j),
+        "BroadcastHashJoin": a.join(F.broadcast(b), a.k == b.j),
+        "BroadcastExchange": a.join(F.broadcast(b), a.k == b.j),
+        "Exchange": a.repartition(3, "k"),
+        "Subquery": a.select(
+            "k", F.expr("(SELECT max(j) FROM plan_nodes_b)").alias("m")),
+        "Window": a.withColumn("r", F.row_number().over(Window.orderBy("k"))),
+        "TakeOrderedAndProject": a.orderBy("k").limit(3),
+        "MapInPandas": a.mapInPandas(lambda it: it, a.schema),
+        "BatchEvalPython": a.select(F.udf(lambda x: x, "long")("k")),
+        "ArrowEvalPython": a.select(F.pandas_udf(lambda s: s, "long")("k")),
+    }
+    bare = plan_nodes(a)
+    for name, df in cases.items():
+        assert name not in bare, bare
+        assert name in plan_nodes(df), (name, plan_nodes(df))
+    # the bare-"Exchange" checks match by substring: any exchange fails
+    # them, broadcast ones and those inside a subquery included
+    for name in ("BroadcastExchange", "Subquery"):
+        assert any("Exchange" in n for n in plan_nodes(cases[name]))
+    assert not any("Exchange" in n for n in bare), bare
+    cached = a.repartition(3, "k").cache()
+    try:
+        cached.count()
+        nodes = plan_nodes(cached.filter("k > 3"))
+        assert "InMemoryTableScan" in nodes, nodes
+        # the cached plan under the scan is walked too
+        assert "Exchange" in nodes, nodes
+    finally:
+        cached.unpersist()
+        spark.catalog.dropTempView("plan_nodes_b")
+
+
 def test_whole_stage_codegen_present(spark):
     docs = generate_docs(spark, 10, seed=1)
     df = extract(docs, arrow=False)
     df.collect()  # finalize AQE so codegen ids ("*(n)") appear
+    # text: the "*(n)" codegen id is a rendering marker, not a node
     plan = _plan(df)
     assert plan.count("*(") > 0
 
@@ -560,7 +613,7 @@ def test_media_decode_arrow_batch_cap(spark):
     assert {v[2] for v in got.values()} == {16 * k for k in range(1, 6)}
 
 
-def test_pq_adc_properties(spark):
+def test_pq_adc_properties(spark, plan_nodes):
     """PQ/ADC contracts: (a) codebook-source vectors self-code exactly
     (distance 0 at their own entry); (b) ADC recall@10 vs brute-force L2
     clears 5x the random floor even with the un-learned lowest-id
@@ -584,8 +637,7 @@ def test_pq_adc_properties(spark):
         ((float(np.sum((V[q] - V[c]) ** 2)), c) for c in ids if c != q)
     )[:10]} for q in qs}
     pq = similarity.pq_topk(emb, k=10)
-    plan = _plan(pq)
-    assert "CartesianProduct" not in plan, plan
+    assert "CartesianProduct" not in plan_nodes(pq), plan_nodes(pq)
     got_rows = pq.collect()
     got = {}
     ranks = {}
@@ -652,7 +704,7 @@ def test_substring_dedup_keep_cleans_corpus(spark):
     assert dedup.substring_dup_spans(cleaned).count() == 0
 
 
-def test_ppl_model_bounded_on_wide_charset(spark):
+def test_ppl_model_bounded_on_wide_charset(spark, plan_nodes):
     """The broadcast LM must be top-V by construction, not by charset
     luck: a wide-charset (CJK-like) corpus keeps the model <= max_vocab
     rows, and scoring still works with dropped grams at the smoothed
@@ -671,8 +723,9 @@ def test_ppl_model_bounded_on_wide_charset(spark):
     # the top-V cap is a TakeOrdered whose single final merge sees at
     # most PPL_MERGE_PARTS x V rows by construction: the aggregated
     # counts are re-hashed into exactly that many partitions first
+    assert "TakeOrderedAndProject" in plan_nodes(model), plan_nodes(model)
+    # text: the partition key and count are arguments of the Exchange node
     p = _plan(model)
-    assert "TakeOrderedAndProject" in p, p
     assert f"hashpartitioning(g#" in p and f", {textstats.PPL_MERGE_PARTS})" in p, p
     # far more distinct grams exist than the cap admits
     uncapped = textstats.ppl_trigram_model(docs, max_vocab=1 << 20)
@@ -771,7 +824,7 @@ def test_ann_explicit_query_cohort(spark):
     assert {r.query_id for r in out} <= {r.vec_id for r in qs2.collect()}
 
 
-def test_round5_ops_plan_shapes(spark):
+def test_round5_ops_plan_shapes(spark, plan_nodes):
     """Plan contracts for the round-5 cleaning ops: substring keep stays
     a capped equi-join chain (partial-agg cap, no cartesian); the
     boilerplate strip's only corpus-side join is the bounded 1-row
@@ -784,14 +837,15 @@ def test_round5_ops_plan_shapes(spark):
                    f"{i % 7} more content lines here") for i in range(40)],
         "doc_id string, text string",
     )
-    p = _plan(dedup.substring_dedup_keep(docs))
-    assert "CartesianProduct" not in p, p
-    assert "partial_count" in p, p
-    p2 = _plan(textstats.strip_boilerplate_lines(docs))
-    assert "CartesianProduct" not in p2, p2
+    keep = dedup.substring_dedup_keep(docs)
+    assert "CartesianProduct" not in plan_nodes(keep), plan_nodes(keep)
+    # text: partial_count is an aggregate function, not a node
+    assert "partial_count" in _plan(keep), _plan(keep)
+    nodes = plan_nodes(textstats.strip_boilerplate_lines(docs))
+    assert "CartesianProduct" not in nodes, nodes
     # the 1-row folded strip list is the ONLY nested-loop join (bounded
     # by construction); the corpus side joins on no key whatsoever
-    assert p2.count("BroadcastNestedLoopJoin") <= 1, p2
+    assert nodes.count("BroadcastNestedLoopJoin") <= 1, nodes
 
 
 def test_substring_self_spans(spark):
@@ -929,7 +983,7 @@ def test_substring_keep_hot_span_cap_exemption(spark):
                for i in range(1, 9))
 
 
-def test_pq_kmeans_codebooks(spark):
+def test_pq_kmeans_codebooks(spark, plan_nodes):
     """The KMeans codebooks slot into the PQ family via books= with the
     same contract as the deterministic stand-in, and trained codebooks
     must not degrade ADC quality vs the stand-in (they should improve
@@ -946,9 +1000,8 @@ def test_pq_kmeans_codebooks(spark):
         emb, similarity.PQ_M, similarity.PQ_KSUB * 1000)
     try:
         subs.count()
-        p = subs.filter(F.col("sub_id") == 0)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert "InMemoryTableScan" in p, p
+        nodes = plan_nodes(subs.filter(F.col("sub_id") == 0))
+        assert "InMemoryTableScan" in nodes, nodes
     finally:
         subs.unpersist()
     # degenerate data (fewer distinct subvectors than codes) fails loud
