@@ -78,6 +78,13 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _on(table: str, op, **kw) -> Callable[[SparkSession, str], DataFrame]:
+    """The query that applies ``op(**kw)`` to one sf table."""
+    def q(spark, sf_dir):
+        return op(_tbl(spark, sf_dir, table), **kw)
+    return q
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction on the small fixture (smoke: rows > 0)."""
     return extract(_docs(spark, "entry")).select(
@@ -207,44 +214,8 @@ def _q_html(spark, sf_dir):
     )
 
 
-def _q_dedup_exact(spark, sf_dir):
-    return dedup.exact_groups(_tbl(spark, sf_dir, "documents"))
-
-
 def _q_minhash_sigs(spark, sf_dir):
     return dedup.minhash_signatures(dedup.shingles(_tbl(spark, sf_dir, "documents")))
-
-
-def _q_minhash_pairs(spark, sf_dir):
-    return dedup.minhash_dedup(_tbl(spark, sf_dir, "documents"), threshold=0.2)
-
-
-def _q_simhash(spark, sf_dir):
-    return dedup.simhash(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_simhash_pairs(spark, sf_dir):
-    return dedup.simhash_near_dups(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_lang_id(spark, sf_dir):
-    return textstats.lang_id(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_quality(spark, sf_dir):
-    return textstats.quality_score(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_tokens(spark, sf_dir):
-    return textstats.token_stats(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_fingerprint(spark, sf_dir):
-    return textstats.fingerprint(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_code_detect(spark, sf_dir):
-    return textstats.code_detect(_tbl(spark, sf_dir, "documents"))
 
 
 def _q_topic_enum(spark, sf_dir):
@@ -293,158 +264,7 @@ def _q_topic_enum_subject(spark, sf_dir):
     )
 
 
-def _q_cosine_topk(spark, sf_dir):
-    return similarity.cosine_topk(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_lsh_buckets(spark, sf_dir):
-    return similarity.lsh_buckets(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_lsh_search(spark, sf_dir):
-    return similarity.lsh_search(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_lsh_search_multiprobe(spark, sf_dir):
-    return similarity.lsh_search_multiprobe(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_embedding_near_dups(spark, sf_dir):
-    return similarity.embedding_near_dups(_tbl(spark, sf_dir, "embeddings"),
-                                          threshold=0.4)
-
-
-def _q_ngram_jaccard(spark, sf_dir):
-    """Sketch-free n-gram Jaccard dedup (rare-shingle candidate join)."""
-    return dedup.ngram_jaccard_dedup(_tbl(spark, sf_dir, "documents"),
-                                     threshold=0.2)
-
-
-def _q_ivf_topk(spark, sf_dir):
-    """IVF ANN: deterministic coarse cells -> inverted lists -> n_probe scan."""
-    return similarity.ivf_topk(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_ivf_topk_two_level(spark, sf_dir):
-    """IVF ANN with the O(n*sqrt(k)) hierarchical coarse assignment (the
-    build-pass scale path): leaders -> probe_groups groups -> cell scan."""
-    return similarity.ivf_topk(_tbl(spark, sf_dir, "embeddings"),
-                               two_level=True)
-
-
-def _q_pq_codes(spark, sf_dir):
-    """PQ compressed index: per-(vector, subspace) nearest codebook code."""
-    return similarity.pq_codes(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_pq_topk(spark, sf_dir):
-    """ADC top-k over PQ codes (the PQ half of IVF-PQ)."""
-    return similarity.pq_topk(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-shaped: embedding near-dup pairs -> components -> keeper."""
-    return similarity.semantic_dedup(_tbl(spark, sf_dir, "embeddings"),
-                                     threshold=0.4)
-
-
-def _q_ivfpq_topk(spark, sf_dir):
-    """IVF-PQ: coarse-cell pruning + ADC code scoring — the canonical
-    10^12-vector ANN index shape."""
-    return similarity.ivfpq_topk(_tbl(spark, sf_dir, "embeddings"))
-
-
-def _q_tfidf_topterms(spark, sf_dir):
-    """Top-5 tf-idf keywords per document (corpus-curation surface)."""
-    return textstats.tfidf_topterms(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_substring_spans(spark, sf_dir):
-    """Exact-substring duplication report (Lee et al.-style): maximal
-    verbatim shared word spans per doc pair via diagonal run chaining."""
-    return dedup.substring_dup_spans(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_substring_self(spark, sf_dir):
-    """Within-doc exact repeats (Lee et al. self half); n=3/min_run=3 on
-    the fixture corpus so the island chaining is exercised with nonzero
-    output (op defaults stay 8/8)."""
-    return dedup.substring_self_spans(
-        _tbl(spark, sf_dir, "documents"), n=3, min_run_tokens=3)
-
-
-def _q_substring_keep(spark, sf_dir):
-    """Exact-substring dedup OUTPUT (Lee et al.): cleaned corpus with
-    all-but-first occurrence of each >=8-token shared span dropped."""
-    return dedup.substring_dedup_keep(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_substring_keep_self(spark, sf_dir):
-    """Full ExactSubstr cleaning: cross-doc keep-first AND within-doc
-    later-copy drops in one pass (n=3/min_run=3 so both halves fire on
-    the fixture corpus; op defaults stay 8/8 cross-only)."""
-    return dedup.substring_dedup_keep(
-        _tbl(spark, sf_dir, "documents"), n=3, min_run_tokens=3,
-        include_self=True)
-
-
-def _q_substring_keep_text(spark, sf_dir):
-    """ExactSubstr cleaning in the ORIGINAL text domain (the artifact
-    Lee et al.'s tool emits): dropped spans' character ranges cut from
-    the raw text, byte-identical outside drops — casing, punctuation,
-    whitespace, line structure preserved (n=3/min_run=3/include_self so
-    both halves fire on the fixture corpus)."""
-    return dedup.substring_dedup_keep(
-        _tbl(spark, sf_dir, "documents"), n=3, min_run_tokens=3,
-        include_self=True, original_text=True)
-
-
-def _q_top_ngrams(spark, sf_dir):
-    """Corpus-wide top 3-grams (boilerplate mining for strip lists)."""
-    return textstats.top_ngrams(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_strip_boilerplate(spark, sf_dir):
-    """Line-level boilerplate strip driven by the mined top-3-gram list
-    (the consumer of text_top_ngrams' strip list)."""
-    return textstats.strip_boilerplate_lines(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_ppl_proxy(spark, sf_dir):
-    """CCNet-style perplexity proxy: char-trigram LM on the train split,
-    mean NLL per doc (integer-scaled)."""
-    return textstats.ppl_proxy(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_gopher_quality(spark, sf_dir):
-    """Gopher/C4 repetition + shape filters (dup-2gram mass, mean word
-    length, symbol ratio) with the standard pass thresholds."""
-    return textstats.gopher_quality(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_lang_confusion(spark, sf_dir):
-    """Lang-ID confusion matrix against the labeled lang column."""
-    return textstats.lang_id_eval(_tbl(spark, sf_dir, "documents"))
-
-
 STRATA_RATES = {"src0": 2500, "src3": 7500}  # bp; others keep all
-
-
-def _q_stratified_sample(spark, sf_dir):
-    """Per-source deterministic rate sampling (domain rebalancing)."""
-    return sampling.stratified_sample(_tbl(spark, sf_dir, "documents"),
-                                      rates=STRATA_RATES)
-
-
-def _q_source_rollup(spark, sf_dir):
-    """Per-(source, lang) corpus triage: docs, dup involvement, tokens,
-    mean quality."""
-    return sampling.source_rollup(_tbl(spark, sf_dir, "documents"))
-
-
-def _q_curate_split(spark, sf_dir):
-    """Deterministic hash-bucket train/val/test assignment."""
-    return sampling.deterministic_split(_tbl(spark, sf_dir, "documents"))
 
 
 def _q_curate_pack(spark, sf_dir):
@@ -467,11 +287,6 @@ def _q_dedup_components_star(spark, sf_dir):
     pairs = dedup.ngram_jaccard_dedup(_tbl(spark, sf_dir, "documents"),
                                       threshold=0.2).select("doc1", "doc2")
     return dedup.components_star(pairs)
-
-
-def _q_curate_decontaminate(spark, sf_dir):
-    """Eval-split leakage report: verbatim 8-gram collisions vs train."""
-    return sampling.decontaminate(_tbl(spark, sf_dir, "documents"))
 
 
 def _q_dedup_lines_global(spark, sf_dir):
@@ -506,11 +321,6 @@ def _q_dedup_lines_global(spark, sf_dir):
     return dedup.line_dedup_keep_first(a.unionByName(b))
 
 
-def _q_mixture_weights(spark, sf_dir):
-    """Temperature-scaled source mixture weights with UniMax epoch cap."""
-    return sampling.mixture_weights(_tbl(spark, sf_dir, "documents"))
-
-
 def _q_redact_pii(spark, sf_dir):
     """PII redaction over deterministically planted addresses: every third
     doc gets a synthetic email + IPv4 + '+'-format phone prefix derived
@@ -530,11 +340,12 @@ def _q_redact_pii(spark, sf_dir):
 
 
 def _q_c4_line_filter(spark, sf_dir):
-    """C4 rule-based line filters over planted multi-line docs: every doc
-    gets appended lines exercising each predicate (kept sentence, short
-    line, blacklist line, unpunctuated line), and every 7th doc gets a
-    curly-brace line that drops the whole doc — the fixture's single-line
-    punctuation-free word streams alone would exercise nothing."""
+    """C4-style rule-based line filters over planted multi-line docs:
+    every doc gets appended lines exercising each predicate (kept
+    sentence, short line, blacklist line, unpunctuated line), and every
+    7th doc gets a curly-brace line that drops the whole doc — the
+    fixture's single-line punctuation-free word streams alone would
+    exercise nothing."""
     docs = _tbl(spark, sf_dir, "documents")
     planted = F.concat(
         F.col("text"), F.lit("."),
@@ -803,12 +614,6 @@ def _q_repetition_lines(spark, sf_dir):
     return textstats.repetition_stats(lined)
 
 
-def _q_repetition_ngrams(spark, sf_dir):
-    """Gopher word-n-gram repetition battery: top-2/3/4-gram char mass +
-    duplicated-5..10-gram char mass, basis points, one explode pass."""
-    return textstats.repetition_ngram_stats(_tbl(spark, sf_dir, "documents"))
-
-
 QG_MIN_QUALITY_BP = 5000  # quality_score floor for the composite gate
 
 
@@ -845,55 +650,51 @@ def _q_dsir_importance(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING CONTRACT: the driver's correctness harness evaluates the
-    # FIRST 50 entries only (observed in r4: 59 entries -> 50 rows).  So
-    # entries that have never (or least recently) had a driver oracle row
-    # lead: new-this-round ops first, then the 14 rows that fell outside
-    # the r5 window (each driver-green in BOTH r3 and r4 and re-verified
-    # by the r5 judge via tests/driver_mimic.py), then the r5-green 50.
-    # The tail — the rows that rotate OUT of this round's window — is
-    # chosen from ops green in the MOST RECENT driver round (r5) and
-    # additionally pinned by pytest; see README "Driver-oracle rotation"
-    # for the per-row evidence.  With r6's front block green, every
-    # queries() entry has a driver oracle row within the r5+r6 cycle.
+    # The order is part of the driver contract: the driver's correctness
+    # harness checks the first 50 entries against oracle_sql(), and
+    # tests/test_oracle_tail.py checks every entry after the 50th the same
+    # way on each pytest run.
+    # n=3, min_run_tokens=3 (op defaults 8/8): on the fixture corpus the
+    # self spans are nonzero and both ExactSubstr halves fire.
+    exact_substr = {"n": 3, "min_run_tokens": 3}
     return {
-        # new in round 6 — never driver-checked
         "text_repetition_lines": _q_repetition_lines,
-        "text_repetition_ngrams": _q_repetition_ngrams,
+        "text_repetition_ngrams": _on("documents", textstats.repetition_ngram_stats),
         "curate_dsir_importance": _q_dsir_importance,
         "curate_quality_gate": _q_quality_gate,
-        "dedup_substring_keep_text": _q_substring_keep_text,
+        "dedup_substring_keep_text": _on(
+            "documents", dedup.substring_dedup_keep, **exact_substr,
+            include_self=True, original_text=True),
         "curate_clean_corpus_text": _q_curate_clean_text,
-        # r5 rotation tail — driver-dark in r5, green in r3+r4
         "pipeline_extract_tasks_arrow": _q_tasks_arrow,
         "t2_t5_normalize_math": _q_normalize,
         "p12_strip_admin": _q_strip_admin,
         "dedup_minhash_signatures": _q_minhash_sigs,
         "g7_merge_arrow": _q_g7_arrow,
         "dedup_components_star": _q_dedup_components_star,
-        "ann_lsh_search_multiprobe": _q_lsh_search_multiprobe,
-        "ann_lsh_buckets": _q_lsh_buckets,
-        "dedup_simhash": _q_simhash,
-        "text_lang_id": _q_lang_id,
-        "text_quality_score": _q_quality,
-        "text_token_stats": _q_tokens,
-        "text_fingerprint": _q_fingerprint,
-        "p16_code_detect": _q_code_detect,
-        # new mid-round 6 — never driver-checked (placed inside the
-        # 50-row window; evicts four r5-green text_* rows, the
-        # text_tfidf_topterms..text_top_ngrams block, to the tail, where
-        # tests/test_oracle_tail.py keeps checking them)
+        "ann_lsh_search_multiprobe": _on(
+            "embeddings", similarity.lsh_search_multiprobe),
+        "ann_lsh_buckets": _on("embeddings", similarity.lsh_buckets),
+        "dedup_simhash": _on("documents", dedup.simhash),
+        "text_lang_id": _on("documents", textstats.lang_id),
+        "text_quality_score": _on("documents", textstats.quality_score),
+        "text_token_stats": _on("documents", textstats.token_stats),
+        "text_fingerprint": _on("documents", textstats.fingerprint),
+        "p16_code_detect": _on("documents", textstats.code_detect),
         "dedup_lines_global": _q_dedup_lines_global,
-        "curate_mixture_weights": _q_mixture_weights,
+        "curate_mixture_weights": _on("documents", sampling.mixture_weights),
         "text_redact_pii": _q_redact_pii,
         "text_c4_line_filter": _q_c4_line_filter,
-        # green in r5 (driver rows 1-50 of CORRECTNESS_r05.json)
-        "dedup_substring_keep": _q_substring_keep,
-        "dedup_substring_self": _q_substring_self,
-        "dedup_substring_keep_self": _q_substring_keep_self,
-        "text_strip_boilerplate": _q_strip_boilerplate,
+        "dedup_substring_keep": _on("documents", dedup.substring_dedup_keep),
+        "dedup_substring_self": _on(
+            "documents", dedup.substring_self_spans, **exact_substr),
+        "dedup_substring_keep_self": _on(
+            "documents", dedup.substring_dedup_keep, **exact_substr,
+            include_self=True),
+        "text_strip_boilerplate": _on("documents", textstats.strip_boilerplate_lines),
         "curate_clean_corpus": _q_curate_clean,
-        "dedup_semantic": _q_semantic_dedup,
+        # 0.4: the 0.95 default finds no pair among the fixture embeddings
+        "dedup_semantic": _on("embeddings", similarity.semantic_dedup, threshold=0.4),
         "s7_catalog_json": _q_catalog_json,
         "w2_sessionize_events": _q_sessionize_events,
         "w1_windowed_event_counts": _q_windowed_counts,
@@ -911,38 +712,44 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "p13_format_html": _q_html,
         "j2_alias_resolution": _q_alias,
         "j6_expected_alignment": _q_expected,
-        "dedup_exact_groups": _q_dedup_exact,
-        "dedup_minhash_pairs": _q_minhash_pairs,
-        "dedup_simhash_pairs": _q_simhash_pairs,
-        "text_tfidf_topterms": _q_tfidf_topterms,
-        "text_gopher_quality": _q_gopher_quality,
-        "text_lang_confusion": _q_lang_confusion,
-        "text_top_ngrams": _q_top_ngrams,
-        "text_ppl_proxy": _q_ppl_proxy,
-        "dedup_substring_spans": _q_substring_spans,
-        "curate_stratified_sample": _q_stratified_sample,
-        "curate_source_rollup": _q_source_rollup,
-        # --- rotation tail (entries 51+ of 66): rows below may fall
-        # outside the driver's 50-row window this round.  Every one was
-        # driver-green in r5 (CORRECTNESS_r05.json rows 1-50, the most
-        # recent window) and is additionally exercised by pytest +
-        # driver_mimic.py each round.
-        "curate_split": _q_curate_split,
+        "dedup_exact_groups": _on("documents", dedup.exact_groups),
+        # 0.2 (op default 0.5): the fixtures at sf0.001-sf0.1 give the same
+        # pairs either way, all at jaccard >= 0.8
+        "dedup_minhash_pairs": _on("documents", dedup.minhash_dedup, threshold=0.2),
+        "dedup_simhash_pairs": _on("documents", dedup.simhash_near_dups),
+        "text_tfidf_topterms": _on("documents", textstats.tfidf_topterms),
+        "text_gopher_quality": _on("documents", textstats.gopher_quality),
+        "text_lang_confusion": _on("documents", textstats.lang_id_eval),
+        "text_top_ngrams": _on("documents", textstats.top_ngrams),
+        "text_ppl_proxy": _on("documents", textstats.ppl_proxy),
+        "dedup_substring_spans": _on("documents", dedup.substring_dup_spans),
+        "curate_stratified_sample": _on(
+            "documents", sampling.stratified_sample, rates=STRATA_RATES),
+        "curate_source_rollup": _on("documents", sampling.source_rollup),
+        # entries 51+: checked by tests/test_oracle_tail.py
+        "curate_split": _on("documents", sampling.deterministic_split),
         "curate_pack_shards": _q_curate_pack,
         "curate_corpus": _q_curate_corpus,
-        "curate_decontaminate": _q_curate_decontaminate,
+        "curate_decontaminate": _on("documents", sampling.decontaminate),
         "j3_topic_enum": _q_topic_enum,
         "j3_topic_enum_subject": _q_topic_enum_subject,
-        "ann_cosine_topk": _q_cosine_topk,
-        "ann_lsh_search": _q_lsh_search,
-        "dedup_embedding_cosine": _q_embedding_near_dups,
-        "dedup_ngram_jaccard": _q_ngram_jaccard,
+        "ann_cosine_topk": _on("embeddings", similarity.cosine_topk),
+        "ann_lsh_search": _on("embeddings", similarity.lsh_search),
+        # 0.4: as dedup_semantic
+        "dedup_embedding_cosine": _on(
+            "embeddings", similarity.embedding_near_dups, threshold=0.4),
+        # 0.2: as dedup_minhash_pairs
+        "dedup_ngram_jaccard": _on(
+            "documents", dedup.ngram_jaccard_dedup, threshold=0.2),
         "dedup_components": _q_dedup_components,
-        "ann_ivf_topk": _q_ivf_topk,
-        "ann_ivf_topk_two_level": _q_ivf_topk_two_level,
-        "ann_pq_codes": _q_pq_codes,
-        "ann_pq_topk": _q_pq_topk,
-        "ann_ivfpq_topk": _q_ivfpq_topk,
+        "ann_ivf_topk": _on("embeddings", similarity.ivf_topk),
+        # the O(n*sqrt(k)) hierarchical coarse assignment, the build-pass
+        # scale path: leaders -> probe_groups groups -> cell scan
+        "ann_ivf_topk_two_level": _on(
+            "embeddings", similarity.ivf_topk, two_level=True),
+        "ann_pq_codes": _on("embeddings", similarity.pq_codes),
+        "ann_pq_topk": _on("embeddings", similarity.pq_topk),
+        "ann_ivfpq_topk": _on("embeddings", similarity.ivfpq_topk),
     }
 
 
@@ -987,7 +794,17 @@ SELECT doc_id, task_number, media_ref, seq,
 FROM ni"""
 
 
-_CANON = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+_CANON = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"  # twin of dedup._canon
+
+
+def _sql_words(col: str = "text") -> str:
+    """The word tokens of ``col`` (twin of dedup._words)."""
+    return f"regexp_extract_all(lower({col}), '[a-z0-9]+')"
+
+
+def _sql_h48(expr: str) -> str:
+    """48-bit integer hash of ``expr`` (twin of dedup._h48)."""
+    return f"CAST(('0x' || substr(md5({expr}), 1, 12)) AS BIGINT)"
 
 
 def _sql_gram(n: int) -> str:
@@ -996,9 +813,17 @@ def _sql_gram(n: int) -> str:
     return " || ' ' || ".join(f"ws[i+{j}]" for j in range(1, n + 1))
 
 
+def _sql_grams(n: int) -> str:
+    """The word n-gram list of token list ``ws``, empty below ``n`` words
+    (twin of dedup._word_grams)."""
+    return f"""CASE WHEN len(ws) >= {n} THEN
+      list_transform(generate_series(0, len(ws) - {n}), i -> {_sql_gram(n)})
+    ELSE [] END"""
+
+
 _SHINGLE_CTES = f"""
 WITH w AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws FROM documents
+  SELECT doc_id, {_sql_words()} AS ws FROM documents
 ),
 sh AS (
   SELECT doc_id, unnest(list_distinct(
@@ -1010,7 +835,7 @@ sh AS (
 ),
 shh AS (
   SELECT doc_id, shingle,
-         CAST(('0x' || substr(md5(shingle), 1, 12)) AS BIGINT) AS h
+         {_sql_h48('shingle')} AS h
   FROM sh
 )"""
 
@@ -1035,6 +860,23 @@ capped AS (
 )"""
 
 
+_SQL_JACCARD_BP = "floor(n_inter * 10000 / (c1.n + c2.n - n_inter))"
+
+
+def _sql_verify_ctes(cand: str) -> str:
+    """``inter`` (shared shingles per candidate pair of relation ``cand``)
+    and ``counts`` (shingles per doc) over ``shh`` — twin of
+    dedup.jaccard_verify; join them into ``_SQL_JACCARD_BP``."""
+    return f"""inter AS (
+  SELECT p.doc1, p.doc2, count(*) AS n_inter
+  FROM {cand} p
+  JOIN shh s1 ON s1.doc_id = p.doc1
+  JOIN shh s2 ON s2.doc_id = p.doc2 AND s2.shingle = s1.shingle
+  GROUP BY p.doc1, p.doc2
+),
+counts AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id)"""
+
+
 def _sql_minhash_sigs() -> str:
     return _sql_minhash_core() + "\nSELECT doc_id, band_id, band_key FROM bands"
 
@@ -1046,18 +888,11 @@ pairs AS (
   FROM capped a JOIN capped b USING (band_id, band_key)
   WHERE a.doc_id < b.doc_id
 ),
-inter AS (
-  SELECT p.doc1, p.doc2, count(*) AS n_inter
-  FROM pairs p
-  JOIN shh s1 ON s1.doc_id = p.doc1
-  JOIN shh s2 ON s2.doc_id = p.doc2 AND s2.shingle = s1.shingle
-  GROUP BY p.doc1, p.doc2
-),
-counts AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id)
+{_sql_verify_ctes("pairs")}
 SELECT doc1, doc2,
-  CAST(floor(n_inter * 10000 / (c1.n + c2.n - n_inter)) AS BIGINT) AS jaccard_bp
+  CAST({_SQL_JACCARD_BP} AS BIGINT) AS jaccard_bp
 FROM inter JOIN counts c1 ON c1.doc_id = doc1 JOIN counts c2 ON c2.doc_id = doc2
-WHERE floor(n_inter * 10000 / (c1.n + c2.n - n_inter)) >= 2000"""
+WHERE {_SQL_JACCARD_BP} >= 2000"""
 
 
 def _pair_ctes(threshold_bp: int = 2000) -> str:
@@ -1075,19 +910,12 @@ cand AS (
   FROM rare a JOIN rare b USING (shingle)
   WHERE a.doc_id < b.doc_id
 ),
-inter AS (
-  SELECT p.doc1, p.doc2, count(*) AS n_inter
-  FROM cand p
-  JOIN shh s1 ON s1.doc_id = p.doc1
-  JOIN shh s2 ON s2.doc_id = p.doc2 AND s2.shingle = s1.shingle
-  GROUP BY p.doc1, p.doc2
-),
-counts AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
+{_sql_verify_ctes("cand")},
 pairs AS (
   SELECT doc1, doc2,
-    CAST(floor(n_inter * 10000 / (c1.n + c2.n - n_inter)) AS BIGINT) AS jaccard_bp
+    CAST({_SQL_JACCARD_BP} AS BIGINT) AS jaccard_bp
   FROM inter JOIN counts c1 ON c1.doc_id = doc1 JOIN counts c2 ON c2.doc_id = doc2
-  WHERE floor(n_inter * 10000 / (c1.n + c2.n - n_inter)) >= {threshold_bp}
+  WHERE {_SQL_JACCARD_BP} >= {threshold_bp}
 )"""
 
 
@@ -1148,10 +976,7 @@ qual AS (
   ) WHERE quality_bp >= 5000
 ),
 dropped AS (SELECT node AS doc_id FROM labels WHERE node <> lab),
-sp AS (
-  SELECT doc_id, {_split_case_sql(_BP_SQL)} AS split
-  FROM documents
-)
+{_SQL_SPLIT_CTE}
 SELECT d.doc_id, sp.split
 FROM documents d
 JOIN keep_exact USING (doc_id)
@@ -1172,7 +997,7 @@ def _sql_simhash() -> str:
     )
     return f"""
 WITH w AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
+  SELECT doc_id, unnest({_sql_words()}) AS word
   FROM documents
 ),
 wh AS (
@@ -1213,14 +1038,16 @@ _NO = textstats.NO_STOPWORDS
 
 
 def _sql_lang_id() -> str:
+    en = f"len(regexp_extract_all(lower(text), '{_EN}'))"
+    no = f"len(regexp_extract_all(lower(text), '{_NO}'))"
     return f"""
 SELECT doc_id,
-  len(regexp_extract_all(lower(text), '{_EN}')) AS en_hits,
-  len(regexp_extract_all(lower(text), '{_NO}')) AS no_hits,
-  CASE WHEN len(regexp_extract_all(lower(text), '{_EN}'))
-          > len(regexp_extract_all(lower(text), '{_NO}')) THEN 'en'
-       WHEN len(regexp_extract_all(lower(text), '{_NO}'))
-          > len(regexp_extract_all(lower(text), '{_EN}')) THEN 'no'
+  {en} AS en_hits,
+  {no} AS no_hits,
+  CASE WHEN {en}
+          > {no} THEN 'en'
+       WHEN {no}
+          > {en} THEN 'no'
        ELSE 'unknown' END AS pred_lang
 FROM documents"""
 
@@ -1268,7 +1095,11 @@ def _split_case_sql(bp_expr: str = "bp") -> str:
             + f" ELSE '{sampling.SPLITS[-1][0]}' END")
 
 
-_BP_SQL = "CAST(('0x' || substr(md5(doc_id::VARCHAR), 1, 12)) AS BIGINT) % 10000"
+_BP_SQL = f"{_sql_h48('doc_id::VARCHAR')} % 10000"
+_SQL_SPLIT_CTE = f"""sp AS (
+  SELECT doc_id, {_split_case_sql(_BP_SQL)} AS split
+  FROM documents
+)"""
 
 
 def _sql_curate_split() -> str:
@@ -1287,7 +1118,7 @@ def _sql_curate_pack(n_buckets: int = 64, budget: int = 8192) -> str:
     return f"""
 WITH base AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(doc_id::VARCHAR), 1, 12)) AS BIGINT) AS h,
+         {_sql_h48('doc_id::VARCHAR')} AS h,
          len(regexp_extract_all(text, '\\S+'))::BIGINT AS t
   FROM documents
 ),
@@ -1309,24 +1140,19 @@ def _sql_decontaminate(n: int = 8, max_df: int = 64) -> str:
     """Twin of sampling.decontaminate (8-gram cross-split collisions)."""
     return f"""
 WITH w AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws FROM documents
+  SELECT doc_id, {_sql_words()} AS ws FROM documents
 ),
 sh8 AS (
   SELECT doc_id, unnest(list_distinct(
-    CASE WHEN len(ws) >= {n} THEN
-      list_transform(generate_series(0, len(ws) - {n}), i -> {_sql_gram(n)})
-    ELSE [] END)) AS shingle
+    {_sql_grams(n)})) AS shingle
   FROM w
 ),
 shh8 AS (
   SELECT DISTINCT doc_id,
-         CAST(('0x' || substr(md5(shingle), 1, 12)) AS BIGINT) AS h
+         {_sql_h48('shingle')} AS h
   FROM sh8
 ),
-sp AS (
-  SELECT doc_id, {_split_case_sql(_BP_SQL)} AS split
-  FROM documents
-),
+{_SQL_SPLIT_CTE},
 j AS (SELECT doc_id, h, split FROM shh8 JOIN sp USING (doc_id)),
 capped AS (
   SELECT * FROM j QUALIFY count(*) OVER (PARTITION BY h) <= {max_df}
@@ -1342,7 +1168,7 @@ def _sql_lines_global() -> str:
     two-shard multi-line corpus as _q_dedup_lines_global: group by the
     canonical token stream of each line, keep only the first occurrence
     in (doc_id, line_no) order, blank-canonical lines always kept."""
-    return """
+    return f"""
 WITH a AS (
   SELECT doc_id % 100 AS gid,
          string_agg(text, chr(10) ORDER BY doc_id) AS text
@@ -1362,13 +1188,13 @@ l AS (
   SELECT doc_id, u.s.i AS line_no, u.s.line AS line
   FROM (SELECT doc_id,
           list_transform(generate_series(1, len(lines)),
-                         i -> {'i': CAST(i - 1 AS BIGINT),
-                               'line': lines[i]}) AS ls
+                         i -> {{'i': CAST(i - 1 AS BIGINT),
+                               'line': lines[i]}}) AS ls
         FROM lx), LATERAL UNNEST(ls) AS u(s)
 ),
 ck AS (
   SELECT doc_id, line_no, line,
-         array_to_string(regexp_extract_all(lower(line), '[a-z0-9]+'),
+         array_to_string({_sql_words('line')},
                          ' ') AS ckey
   FROM l
 ),
@@ -1464,8 +1290,8 @@ FROM s2"""
 def _sql_c4_line_filter() -> str:
     """Twin of textstats.c4_line_filters over the same planted lines."""
     black = " OR ".join(f"contains(lower(x), '{b}')"
-                        for b in ("lorem ipsum", "javascript", "cookie",
-                                  "privacy policy", "terms of use"))
+                        for b in textstats.C4_BLACKLIST)
+    terminals = ", ".join(f"'{t}'" for t in textstats.C4_TERMINALS)
     return f"""
 WITH src AS (
   SELECT doc_id,
@@ -1482,8 +1308,8 @@ lx AS (SELECT doc_id, text, string_split(text, chr(10)) AS lines FROM src),
 f AS (
   SELECT doc_id, text, lines,
     list_filter(lines, x ->
-      right(rtrim(x), 1) IN ('.', '!', '?', '"')
-      AND len(regexp_extract_all(lower(x), '[a-z0-9]+')) >= 5
+      right(rtrim(x), 1) IN ({terminals})
+      AND len({_sql_words('x')}) >= {textstats.C4_MIN_WORDS}
       AND NOT ({black})) AS keptl
   FROM lx
 )
@@ -1505,7 +1331,7 @@ def _sql_substring_runs_ctes(n: int = 8, max_df: int = 64,
     relation carrying (doc_id, text) — parameterized so composites can
     run the chain over an upstream CTE's output."""
     return f"""w AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+  SELECT doc_id, {_sql_words()} AS ws
   FROM {rel}
 ),
 gl AS (
@@ -1518,7 +1344,7 @@ gl AS (
 ),
 occ AS (
   SELECT doc_id, u.g.i AS i, u.g.g AS g,
-         CAST(('0x' || substr(md5(u.g.g), 1, 12)) AS BIGINT) AS h
+         {_sql_h48('u.g.g')} AS h
   FROM gl, LATERAL UNNEST(gl.gs) AS u(g)
 ),
 capped AS (
@@ -1653,35 +1479,25 @@ kept AS (
 )"""
 
 
-def _sql_substring_keep(n: int = 8, max_df: int = 64,
-                        min_run: int = 8) -> str:
+# the drop statistics of the ExactSubstr keep twins (w, per_doc p)
+_SQL_KEEP_STATS = """CAST(len(w.ws) AS BIGINT) AS n_tokens,
+       CAST(coalesce(p.n_spans_dropped, 0) AS BIGINT) AS n_spans_dropped,
+       CAST(coalesce(p.n_tokens_dropped, 0) AS BIGINT) AS n_tokens_dropped,"""
+
+
+def _sql_substring_keep(n: int = 8, max_df: int = 64, min_run: int = 8,
+                        include_self: bool = False) -> str:
     """Twin of dedup.substring_dedup_keep: drop the higher doc's word
     range for every >=min_run shared span (keep-first), merge
     overlapping/adjacent drop intervals per doc, rebuild kept_text from
     the surviving canonical tokens (token rebuild via unnest+string_agg —
-    set-equivalent to Spark's array-level filter)."""
+    set-equivalent to Spark's array-level filter).  ``include_self``
+    also drops within-doc later copies: both ExactSubstr halves, merged
+    and removed in one pass."""
     return f"""
-WITH {_substring_keep_ctes(n, max_df, min_run)}
+WITH {_substring_keep_ctes(n, max_df, min_run, include_self=include_self)}
 SELECT w.doc_id,
-       CAST(len(w.ws) AS BIGINT) AS n_tokens,
-       CAST(coalesce(p.n_spans_dropped, 0) AS BIGINT) AS n_spans_dropped,
-       CAST(coalesce(p.n_tokens_dropped, 0) AS BIGINT) AS n_tokens_dropped,
-       coalesce(k.kept_text, '') AS kept_text
-FROM w LEFT JOIN per_doc p USING (doc_id)
-LEFT JOIN kept k ON k.doc_id = w.doc_id"""
-
-
-def _sql_substring_keep_self(n: int = 3, max_df: int = 64,
-                             min_run: int = 3) -> str:
-    """Twin of substring_dedup_keep(include_self=True): BOTH ExactSubstr
-    halves — cross-doc keep-first drops unioned with within-doc
-    later-copy drops — merged and removed in one pass."""
-    return f"""
-WITH {_substring_keep_ctes(n, max_df, min_run, include_self=True)}
-SELECT w.doc_id,
-       CAST(len(w.ws) AS BIGINT) AS n_tokens,
-       CAST(coalesce(p.n_spans_dropped, 0) AS BIGINT) AS n_spans_dropped,
-       CAST(coalesce(p.n_tokens_dropped, 0) AS BIGINT) AS n_tokens_dropped,
+       {_SQL_KEEP_STATS}
        coalesce(k.kept_text, '') AS kept_text
 FROM w LEFT JOIN per_doc p USING (doc_id)
 LEFT JOIN kept k ON k.doc_id = w.doc_id"""
@@ -1729,60 +1545,23 @@ keptt AS (
 )"""
 
 
-def _substring_keep_text_select(rel: str = "documents") -> str:
-    """Final SELECT over ``_substring_keep_text_ctes``: untouched docs
-    pass their raw text through; touched docs take the reassembled
-    segments (empty string when every segment dropped)."""
-    return f"""SELECT d.doc_id,
-       CAST(len(w.ws) AS BIGINT) AS n_tokens,
-       CAST(coalesce(p.n_spans_dropped, 0) AS BIGINT) AS n_spans_dropped,
-       CAST(coalesce(p.n_tokens_dropped, 0) AS BIGINT) AS n_tokens_dropped,
+def _sql_substring_keep_text(n: int = 3, max_df: int = 64,
+                             min_run: int = 3) -> str:
+    """Twin of dedup.substring_dedup_keep(original_text=True,
+    include_self=True): cleaned corpus with dropped spans' CHARACTER
+    ranges cut from the raw text, byte-identical outside drops.
+    Untouched docs pass their raw text through; touched docs take the
+    reassembled segments (empty string when every segment dropped)."""
+    return f"""
+WITH {_substring_keep_text_ctes(n, max_df, min_run, include_self=True)}
+SELECT d.doc_id,
+       {_SQL_KEEP_STATS}
        CASE WHEN p.doc_id IS NULL THEN d.text
             ELSE coalesce(k.kept_text, '') END AS kept_text
-FROM {rel} d
+FROM documents d
 JOIN w ON w.doc_id = d.doc_id
 LEFT JOIN per_doc p ON p.doc_id = d.doc_id
 LEFT JOIN keptt k ON k.doc_id = d.doc_id"""
-
-
-def _sql_substring_keep_text(n: int = 3, max_df: int = 64,
-                             min_run: int = 3,
-                             include_self: bool = True) -> str:
-    """Twin of dedup.substring_dedup_keep(original_text=True): cleaned
-    corpus with dropped spans' CHARACTER ranges cut from the raw text,
-    byte-identical outside drops (both ExactSubstr halves by default)."""
-    return f"""
-WITH {_substring_keep_text_ctes(n, max_df, min_run,
-                                include_self=include_self)}
-{_substring_keep_text_select()}"""
-
-
-def _sql_curate_clean_text(n_gram: int = 3, k_hot: int = 50, n: int = 8,
-                           max_df: int = 64, min_run: int = 8) -> str:
-    """Twin of the curate_clean_text composite: boilerplate line strip,
-    then ORIGINAL-TEXT exact-substring keep-first dedup over the
-    stripped corpus — the training-ready cleaned-text artifact (line
-    structure, casing, punctuation preserved outside drops)."""
-    sctes, sfinal = _strip_parts(n_gram, k_hot)
-    keep_ctes = _substring_keep_text_ctes(
-        n, max_df, min_run,
-        rel="(SELECT doc_id, kept_text AS text FROM stripped)")
-    return f"""
-WITH {sctes},
-stripped AS (
-  {sfinal}
-),
-{keep_ctes}
-SELECT st.doc_id, st.n_lines, st.n_lines_kept,
-       CAST(len(w.ws) AS BIGINT) AS n_tokens,
-       CAST(coalesce(p.n_spans_dropped, 0) AS BIGINT) AS n_spans_dropped,
-       CAST(coalesce(p.n_tokens_dropped, 0) AS BIGINT) AS n_tokens_dropped,
-       CASE WHEN p.doc_id IS NULL THEN st.kept_text
-            ELSE coalesce(kp.kept_text, '') END AS kept_text
-FROM stripped st
-JOIN w ON w.doc_id = st.doc_id
-LEFT JOIN per_doc p ON p.doc_id = st.doc_id
-LEFT JOIN keptt kp ON kp.doc_id = st.doc_id"""
 
 
 def _strip_parts(n: int = 3, k: int = 50,
@@ -1794,14 +1573,12 @@ def _strip_parts(n: int = 3, k: int = 50,
     reassemble in order.  Structural pieces so composites can chain the
     stripped corpus into downstream CTEs."""
     ctes = f"""tw AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+  SELECT doc_id, {_sql_words()} AS ws
   FROM {rel}
 ),
 tg AS (
   SELECT doc_id, unnest(
-    CASE WHEN len(ws) >= {n} THEN
-      list_transform(generate_series(0, len(ws) - {n}), i -> {_sql_gram(n)})
-    ELSE [] END) AS gram
+    {_sql_grams(n)}) AS gram
   FROM tw
 ),
 tc AS (SELECT gram, count(*) AS n_occ FROM tg GROUP BY 1),
@@ -1843,14 +1620,25 @@ def _sql_strip_boilerplate(n: int = 3, k: int = 50) -> str:
 
 
 def _sql_curate_clean(n_gram: int = 3, k_hot: int = 50, n: int = 8,
-                      max_df: int = 64, min_run: int = 8) -> str:
-    """Twin of the curate_clean composite: boilerplate line strip, then
+                      max_df: int = 64, min_run: int = 8,
+                      original_text: bool = False) -> str:
+    """Twin of the curate_clean composites: boilerplate line strip, then
     exact-substring keep-first dedup over the STRIPPED corpus — the
-    text-cleaning half of a curation pipeline as one statement."""
+    text-cleaning half of a curation pipeline as one statement.  Kept
+    text is rebuilt from the surviving canonical tokens, or with
+    ``original_text`` cut from the stripped text by character range (the
+    training-ready artifact: line structure, casing, punctuation
+    preserved outside drops)."""
     sctes, sfinal = _strip_parts(n_gram, k_hot)
-    keep_ctes = _substring_keep_ctes(
-        n, max_df, min_run, rel="(SELECT doc_id, kept_text AS text FROM stripped)"
-    )
+    rel = "(SELECT doc_id, kept_text AS text FROM stripped)"
+    if original_text:
+        keep_ctes = _substring_keep_text_ctes(n, max_df, min_run, rel=rel)
+        kept_text = ("CASE WHEN p.doc_id IS NULL THEN st.kept_text\n"
+                     "            ELSE coalesce(kp.kept_text, '') END")
+        kept = "keptt"
+    else:
+        keep_ctes = _substring_keep_ctes(n, max_df, min_run, rel=rel)
+        kept_text, kept = "coalesce(kp.kept_text, '')", "kept"
     return f"""
 WITH {sctes},
 stripped AS (
@@ -1858,28 +1646,24 @@ stripped AS (
 ),
 {keep_ctes}
 SELECT st.doc_id, st.n_lines, st.n_lines_kept,
-       CAST(len(w.ws) AS BIGINT) AS n_tokens,
-       CAST(coalesce(p.n_spans_dropped, 0) AS BIGINT) AS n_spans_dropped,
-       CAST(coalesce(p.n_tokens_dropped, 0) AS BIGINT) AS n_tokens_dropped,
-       coalesce(kp.kept_text, '') AS kept_text
+       {_SQL_KEEP_STATS}
+       {kept_text} AS kept_text
 FROM stripped st
 JOIN w ON w.doc_id = st.doc_id
 LEFT JOIN per_doc p ON p.doc_id = st.doc_id
-LEFT JOIN kept kp ON kp.doc_id = st.doc_id"""
+LEFT JOIN {kept} kp ON kp.doc_id = st.doc_id"""
 
 
 def _sql_top_ngrams(n: int = 3, k: int = 50) -> str:
     """Twin of textstats.top_ngrams (global top-k, gram-ASC ties)."""
     return f"""
 WITH w AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+  SELECT doc_id, {_sql_words()} AS ws
   FROM documents
 ),
 g AS (
   SELECT doc_id, unnest(
-    CASE WHEN len(ws) >= {n} THEN
-      list_transform(generate_series(0, len(ws) - {n}), i -> {_sql_gram(n)})
-    ELSE [] END) AS gram
+    {_sql_grams(n)}) AS gram
   FROM w
 ),
 c AS (
@@ -1901,7 +1685,7 @@ def _sql_ppl_proxy(max_vocab: int = textstats.PPL_MAX_VOCAB) -> str:
     return f"""
 WITH d AS (
   SELECT doc_id,
-         lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
+         {_CANON} AS t
   FROM documents
 ),
 g AS (
@@ -1912,10 +1696,7 @@ g AS (
     ELSE [] END) AS g
   FROM d
 ),
-sp AS (
-  SELECT doc_id, {_split_case_sql(_BP_SQL)} AS split
-  FROM documents
-),
+{_SQL_SPLIT_CTE},
 model0 AS (
   SELECT g.g, count(*) AS c
   FROM g JOIN sp USING (doc_id)
@@ -1944,7 +1725,7 @@ def _sql_gopher_quality() -> str:
     return rf"""
 WITH w AS (
   SELECT doc_id, text,
-         regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+         {_sql_words()} AS ws
   FROM documents
 ),
 base AS (
@@ -2029,7 +1810,7 @@ def _sql_tfidf_topterms(k: int = 5) -> str:
     """Twin of textstats.tfidf_topterms (ln idf, 9-dp rounding)."""
     return f"""
 WITH words AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+  SELECT doc_id, unnest({_sql_words()}) AS term
   FROM documents
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM words GROUP BY doc_id, term),
@@ -2496,7 +2277,7 @@ def _sql_repetition_lines() -> str:
     para_ctes = unit_ctes("para", r"\n{2,}")
     return f"""
 WITH w AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+  SELECT doc_id, {_sql_words()} AS ws
   FROM documents
 ),
 lined AS (
@@ -2562,7 +2343,7 @@ def _sql_repetition_ngrams() -> str:
            for n in textstats.REP_DUP_NS])
     return f"""
 WITH w AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+  SELECT doc_id, {_sql_words()} AS ws
   FROM documents
 ),
 tot AS (
@@ -2615,14 +2396,14 @@ def _sql_dsir_importance(n_buckets: int = sampling.DSIR_BUCKETS) -> str:
     grams = ("list_concat(ws, CASE WHEN len(ws) >= 2 THEN "
              "list_transform(generate_series(0, len(ws) - 2), "
              "i -> ws[i + 1] || ' ' || ws[i + 2]) ELSE [] END)")
-    bucket = f"CAST(('0x' || substr(md5(g), 1, 12)) AS BIGINT) % {n_buckets}"
+    bucket = f"{_sql_h48('g')} % {n_buckets}"
     return f"""
 WITH rawd AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+  SELECT doc_id, {_sql_words()} AS ws
   FROM documents
 ),
 tgtd AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
+  SELECT doc_id, {_sql_words()} AS ws
   FROM documents WHERE lang = 'en'
 ),
 rg AS (SELECT doc_id, unnest({grams}) AS g FROM rawd),
@@ -2702,9 +2483,10 @@ def oracle_sql() -> dict[str, str]:
         "text_redact_pii": _sql_redact_pii(),
         "text_c4_line_filter": _sql_c4_line_filter(),
         "dedup_substring_self": _sql_substring_self(),
-        "dedup_substring_keep_self": _sql_substring_keep_self(),
+        "dedup_substring_keep_self": _sql_substring_keep(
+            3, min_run=3, include_self=True),
         "dedup_substring_keep_text": _sql_substring_keep_text(),
-        "curate_clean_corpus_text": _sql_curate_clean_text(),
+        "curate_clean_corpus_text": _sql_curate_clean(original_text=True),
         "text_repetition_lines": _sql_repetition_lines(),
         "text_repetition_ngrams": _sql_repetition_ngrams(),
         "curate_dsir_importance": _sql_dsir_importance(),

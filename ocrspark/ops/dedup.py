@@ -5,6 +5,14 @@ candidates come from LSH band buckets (pairs only within a bucket), then an
 exact Jaccard verify on the candidates.  All hashing is md5-prefix based so
 the DuckDB oracle reproduces results bit-for-bit.
 
+Cross-engine primitives: ``_h48`` is the one 48-bit md5-prefix integer hash
+and ``_words`` the one word tokenizer (with ``_word_grams`` the one n-gram
+builder and ``_canon`` the one canonical text) of the curation ops here, in
+``textstats`` and in ``sampling``; only SimHash keeps its own 32-bit word
+hash.  Each has one DuckDB twin in ``__spark_entry__`` (``_sql_h48``,
+``_sql_words``, ``_sql_grams``, ``_CANON``), and ``tests/test_primitives.py``
+checks that each pair agrees.
+
 MinHash constants: 8 permutations (a_j * h + b_j) mod p over 48-bit shingle
 hashes; p = 2^31-1 keeps products < 2^63 (no bigint overflow under ANSI).
 Bands: 4 bands x 2 rows — near-dup probability curve suited to jaccard>=0.5.
@@ -12,7 +20,7 @@ Bands: 4 bands x 2 rows — near-dup probability curve suited to jaccard>=0.5.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 P = 2_147_483_647  # 2^31 - 1
@@ -27,6 +35,16 @@ SIMHASH_BITS = 32
 def _words(text_col):
     """The canonical word tokens: lowercased ``[a-z0-9]+`` runs."""
     return F.regexp_extract_all(F.lower(text_col), F.lit(r"[a-z0-9]+"), 0)
+
+
+def _h48(col):
+    """48-bit integer hash: the first 12 hex digits of md5(col)."""
+    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
+
+
+def _canon(text_col):
+    """Canonical text: lowercased, whitespace runs squeezed, trimmed."""
+    return F.lower(F.trim(F.regexp_replace(text_col, r"\s+", " ")))
 
 
 def _word_grams(words, n: int):
@@ -81,7 +99,7 @@ def canonical_fp(text_col):
     ``exact_groups``, ``textstats.fingerprint`` and
     ``streaming.dedup_stream`` so the batch and ingestion dedup keys can
     never silently diverge."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(text_col, r"\s+", " "))))
+    return F.md5(_canon(text_col))
 
 
 def exact_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -97,9 +115,7 @@ def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles with a 48-bit md5-prefix integer hash."""
     grams = _word_grams(_words(F.col(text_col)), n)
     out = docs.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
-    return out.withColumn(
-        "h", F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10).cast("long")
-    )
+    return out.withColumn("h", _h48("shingle"))
 
 
 def minhash_signatures(sh: DataFrame) -> DataFrame:
@@ -133,9 +149,8 @@ def lsh_candidate_pairs(signatures: DataFrame,
     Hot-bucket cap: a band key shared by a boilerplate-heavy cluster (common
     in web corpora) makes the within-bucket self-join quadratic — one
     million-doc bucket is O(10^12) pairs.  Buckets larger than ``max_bucket``
-    are EXCLUDED from the pair join (the cap is explicit, not silent: use
-    ``oversized_buckets`` to route them to exact-group handling, which is
-    what a boilerplate cluster actually needs).  Sizes come from
+    are EXCLUDED from the pair join (the cap is explicit, not silent: a
+    boilerplate cluster is the job of ``exact_groups``).  Sizes come from
     ``cap_by_key`` (groupBy partial agg + join-back), so the capping pass
     itself cannot straggle on the hot bucket it is dropping.
     """
@@ -147,18 +162,6 @@ def lsh_candidate_pairs(signatures: DataFrame,
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
         .distinct()
-    )
-
-
-def oversized_buckets(signatures: DataFrame,
-                      max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """Band buckets excluded by the hot-bucket cap (observability + routing:
-    members of these buckets are near-identical boilerplate at real corpus
-    scale — handle via ``exact_groups`` instead of pairwise comparison)."""
-    return (
-        signatures.groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
     )
 
 
@@ -281,9 +284,7 @@ def _gram_occurrences(docs: DataFrame, text_col: str, n: int,
     grams = _word_grams(_words(F.col(text_col)), n)
     occ = docs.select(
         "doc_id", F.posexplode(grams).alias("i", "gram")
-    ).withColumn(
-        "h", F.conv(F.substring(F.md5("gram"), 1, 12), 16, 10).cast("long")
-    )
+    ).withColumn("h", _h48("gram"))
     return cap_by_key(occ, ["h"], max_df)
 
 
@@ -292,8 +293,6 @@ def _chain_runs(coll: DataFrame, keys: list[str], n: int) -> DataFrame:
     consecutive collision positions ``i`` within one ``keys`` group
     (pair+diagonal, or doc+offset) become one run of count + n - 1
     tokens, with min_i/max_i for span recovery."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(*keys).orderBy("i")
     return (
         coll.withColumn("grp", F.col("i") - F.row_number().over(w))
@@ -378,8 +377,6 @@ def _merged_drop_intervals(docs: DataFrame, text_col: str, n: int,
     within-doc later-copy ranges); overlapping/adjacent word-index ranges
     are merged into maximal intervals via the two-window gap-and-island
     pass (see the load-bearing ``distinct()`` comment)."""
-    from pyspark.sql import Window
-
     runs = _substring_runs(docs, text_col, n, max_df)
     drops = runs.filter(F.col("run_tokens") >= min_run_tokens).select(
         F.col("doc2").alias("doc_id"),
@@ -540,8 +537,6 @@ def _remove_spans_original(docs: DataFrame, text_col: str,
     bound as the interval merge itself.  Reassembly is one doc-keyed
     collect_list of (position, segment), sorted in-array.
     """
-    from pyspark.sql import Window
-
     base = docs.select("doc_id", F.col(text_col).alias("_text"),
                        _words(F.col(text_col)).alias("ws"))
     joined = base.join(per_doc, "doc_id", "left")

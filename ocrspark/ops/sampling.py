@@ -8,10 +8,10 @@ dependence.  All ops are single-scan (split) or one-shuffle (packing).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _word_grams, _words, canonical_fp, cap_by_key, shingles
+from .dedup import _h48, _word_grams, _words, canonical_fp, cap_by_key, shingles
 
 SPLITS = [("train", 9800), ("val", 100), ("test", 100)]  # basis points
 PACK_BUCKETS = 64  # fixture/oracle default; pass n_buckets=None to scale
@@ -21,25 +21,22 @@ PACK_TARGET_DOCS_PER_BUCKET = 262_144  # auto mode: ~256k docs/bucket
 
 def _hash_bp(key_col):
     """Stable basis-point bucket in [0, 10000) from md5 of the key."""
-    return F.conv(F.substring(F.md5(key_col.cast("string")), 1, 12), 16, 10)\
-        .cast("long") % 10000
+    return _h48(key_col.cast("string")) % 10000
 
 
-def deterministic_split(docs: DataFrame, key_col: str = "doc_id",
-                        splits=None) -> DataFrame:
+def deterministic_split(docs: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """(key, split) train/val/test assignment by hash basis points.
 
     Unlike ``df.sample``/``randomSplit`` (partition-order- and
     seed-plumbing-dependent), the assignment is a pure function of the
     key: stable under repartitioning, resumable, and auditable.  Split
-    sizes are basis points summing to 10000.
+    sizes are ``SPLITS`` basis points, which the DuckDB twin reads too.
     """
-    splits = splits or SPLITS
-    assert sum(bp for _, bp in splits) == 10000
+    assert sum(bp for _, bp in SPLITS) == 10000
     bp = _hash_bp(F.col(key_col))
     edge = 0
     expr = None
-    for name, width in splits:
+    for name, width in SPLITS:
         edge += width
         cond = bp < edge
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
@@ -73,14 +70,11 @@ def pack_shards(docs: DataFrame, key_col: str = "doc_id",
     """
     import math
 
-    from pyspark.sql import Window
-
     if n_buckets is None:
         n_docs = docs.agg(F.count(F.lit(1))).first()[0]
         n_buckets = max(1, math.ceil(n_docs / PACK_TARGET_DOCS_PER_BUCKET))
 
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 12), 16, 10)\
-        .cast("long")
+    h = _h48(F.col(key_col).cast("string"))
     base = docs.select(
         F.col(key_col), (h % n_buckets).alias("pack_bucket"),
         h.alias("order_h"), F.col(tokens_col).cast("long").alias("t"),
@@ -221,10 +215,7 @@ def _uni_bigrams(text_expr):
 
 
 def _gram_bucket(n_buckets: int):
-    return (
-        F.conv(F.substring(F.md5(F.col("g")), 1, 12), 16, 10).cast("long")
-        % n_buckets
-    )
+    return _h48(F.col("g")) % n_buckets
 
 
 def dsir_importance(docs: DataFrame, target: DataFrame,
@@ -283,12 +274,8 @@ def dsir_importance(docs: DataFrame, target: DataFrame,
         .select("b", F.round(llr * 1e9).cast("long").alias("llr_e9"))
     )
 
-    h6 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":gumbel"))),
-            1, 12,
-        ), 16, 10,
-    ).cast("long") % 1_000_000
+    h6 = _h48(F.concat(F.col(key_col).cast("string"), F.lit(":gumbel"))) \
+        % 1_000_000
     u = (h6.cast("double") + F.lit(0.5)) / F.lit(1_000_000.0)
     gumbel_e9 = F.round(F.round(-F.log(F.round(-F.log(u), 9)), 9) * 1e9) \
         .cast("long")

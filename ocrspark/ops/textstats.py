@@ -13,10 +13,10 @@ one genuine array (the subword estimate folds over the actual words).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _word_grams, _words, canonical_fp
+from .dedup import _canon, _word_grams, _words, canonical_fp
 
 # n-gram/stopword heuristics: tiny fixed lexica, ASCII-only patterns.
 EN_STOPWORDS = r"\b(the|and|of|to|in|is|for|with|on|that|this|a)\b"
@@ -113,6 +113,19 @@ PPL_MAX_VOCAB = 1 << 18  # broadcast LM hard bound (rows)
 PPL_MERGE_PARTS = 64     # top-V merge fan-in bound (partitions)
 
 
+def _char_trigrams(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, g): every char trigram of the canonical text, in order."""
+    base = docs.select("doc_id", _canon(F.col(text_col)).alias("t"))
+    return base.select(
+        "doc_id",
+        F.explode(F.expr(
+            "CASE WHEN length(t) >= 3 THEN "
+            "transform(sequence(1, length(t) - 2), i -> substring(t, i, 3)) "
+            "ELSE array() END"
+        )).alias("g"),
+    )
+
+
 def ppl_trigram_model(docs: DataFrame, text_col: str = "text",
                       max_vocab: int = PPL_MAX_VOCAB) -> DataFrame:
     """The char-trigram LM behind ``ppl_proxy``: (g, c) counts over the
@@ -141,16 +154,7 @@ def ppl_trigram_model(docs: DataFrame, text_col: str = "text",
     """
     from .sampling import deterministic_split
 
-    canon = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    base = docs.select("doc_id", canon.alias("t"))
-    grams = base.select(
-        "doc_id",
-        F.explode(F.expr(
-            "CASE WHEN length(t) >= 3 THEN "
-            "transform(sequence(1, length(t) - 2), i -> substring(t, i, 3)) "
-            "ELSE array() END"
-        )).alias("g"),
-    )
+    grams = _char_trigrams(docs, text_col)
     train = deterministic_split(docs).filter(F.col("split") == "train") \
         .select("doc_id")
     counts = grams.join(train, "doc_id").groupBy("g").agg(
@@ -183,16 +187,7 @@ def ppl_proxy(docs: DataFrame, text_col: str = "text",
     grams) take the smoothed floor 1/(N+V).  Docs with fewer than 3
     chars have no grams and are absent from the output.
     """
-    canon = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    base = docs.select("doc_id", canon.alias("t"))
-    grams = base.select(
-        "doc_id",
-        F.explode(F.expr(
-            "CASE WHEN length(t) >= 3 THEN "
-            "transform(sequence(1, length(t) - 2), i -> substring(t, i, 3)) "
-            "ELSE array() END"
-        )).alias("g"),
-    )
+    grams = _char_trigrams(docs, text_col)
     model = ppl_trigram_model(docs, text_col, max_vocab)
     stats = model.agg(F.sum("c").alias("N"), F.count(F.lit(1)).alias("V"))
     logp9 = F.round(
@@ -221,8 +216,6 @@ def top_ngrams(docs: DataFrame, text_col: str = "text",
     TakeOrdered, never a full sort of the vocabulary.  Ties break on gram
     ASC so engines rank identically.
     """
-    from pyspark.sql import Window
-
     grams = _word_grams(_words(F.col(text_col)), n)
     counts = (
         docs.select("doc_id", F.explode(grams).alias("gram"))
@@ -380,8 +373,6 @@ def tfidf_topterms(docs: DataFrame, text_col: str = "text",
     term ASC.  Two shuffles (doc-term tf, term df) + one broadcast — the
     df side is |vocabulary|, which AQE handles; nothing is quadratic.
     """
-    from pyspark.sql import Window
-
     words = docs.select(
         "doc_id",
         F.explode(_words(F.col(text_col))).alias("term"),
@@ -502,8 +493,6 @@ def repetition_ngram_stats(docs: DataFrame,
     repetition census (2.x top-mass, 5..10 dup-mass; line/paragraph
     signals live in ``repetition_stats``).
     """
-    from pyspark.sql import Window
-
     words = _words(F.col(text_col))
     total_chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
@@ -630,19 +619,21 @@ C4_BLACKLIST = ("lorem ipsum", "javascript", "cookie", "privacy policy",
 C4_TERMINALS = (".", "!", "?", '"')
 
 
-def c4_line_filters(docs: DataFrame, text_col: str = "text",
-                    min_words: int = C4_MIN_WORDS,
-                    blacklist=C4_BLACKLIST) -> DataFrame:
-    """C4's rule-based line/document cleaning (Raffel et al. 2020 §2.2):
-    (doc_id, n_lines, n_lines_kept, doc_pass, kept_text).  A line
-    survives iff it ends in terminal punctuation, carries at least
-    ``min_words`` words, and contains no blacklist phrase (lorem ipsum /
-    javascript / cookie / policy boilerplate); a document containing a
-    curly brace is dropped wholesale (C4's code heuristic: doc_pass = 0,
-    zero lines kept).  The RULE-based complement of the two
+def c4_line_filters(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """C4-style rule-based line/document cleaning (after Raffel et al.
+    2020 §2.2): (doc_id, n_lines, n_lines_kept, doc_pass, kept_text).  A
+    line survives iff it ends in one of ``C4_TERMINALS``, carries at least
+    ``C4_MIN_WORDS`` words, and contains no ``C4_BLACKLIST`` phrase; a
+    document containing a curly brace is dropped wholesale (C4's code
+    heuristic: doc_pass = 0, zero lines kept).  The DuckDB twin reads the
+    same three constants.  The RULE-based complement of the two
     frequency-based line cleaners (``strip_boilerplate_lines`` strips
     mined hot grams; ``dedup.line_dedup_keep_first`` strips later copies)
     — C4 applies this pass before any dedup.
+
+    Deviations from C4: "lorem ipsum" drops the line, not the page; the
+    bare word "cookie" is matched, not C4's cookie/policy phrases; there
+    is no 3-sentence page minimum; there is no bad-words list.
 
     Scale shape: a single row-local array filter over split lines — no
     shuffle, no join, no corpus state; the per-line predicate is k
@@ -655,8 +646,8 @@ def c4_line_filters(docs: DataFrame, text_col: str = "text",
     def keep(x):
         t = F.rtrim(x)
         punct = F.substring(t, -1, 1).isin(*C4_TERMINALS)
-        enough = F.size(_words(x)) >= min_words
-        black = reduce(or_, [F.lower(x).contains(b) for b in blacklist])
+        enough = F.size(_words(x)) >= C4_MIN_WORDS
+        black = reduce(or_, [F.lower(x).contains(b) for b in C4_BLACKLIST])
         return punct & enough & ~black
 
     lines = F.split(F.col(text_col), "\n")
