@@ -34,6 +34,7 @@ if str(REPO) not in sys.path:
 from ocrspark import duckdb_oracle as O  # noqa: E402
 from ocrspark import rules  # noqa: E402
 from ocrspark.ops import dedup, media, sampling, similarity, textstats  # noqa: E402
+from ocrspark.overrides import resolve_aliases  # noqa: E402
 from ocrspark.pipeline import extract  # noqa: E402
 from ocrspark.segment import sessionize  # noqa: E402
 from ocrspark.stage1 import stage1  # noqa: E402
@@ -188,7 +189,7 @@ def _q_alias(spark, sf_dir):
     alias = spark.createDataFrame(
         ALIAS_TABLE, "alias_code string, canonical string"
     )
-    out = extract(_docs(spark), alias=alias)
+    out = resolve_aliases(extract(_docs(spark)), alias)
     return out.groupBy("subject").agg(F.count(F.lit(1)).alias("n_tasks"))
 
 
@@ -270,8 +271,7 @@ STRATA_RATES = {"src0": 2500, "src3": 7500}  # bp; others keep all
 def _q_curate_pack(spark, sf_dir):
     """Concat-and-chunk token packing into fixed-budget shards."""
     docs = _tbl(spark, sf_dir, "documents").withColumn(
-        "n_tokens", F.regexp_count(F.col("text"), F.lit(r"\S+"))
-    )
+        "n_tokens", dedup._n_tokens(F.col("text")))
     return sampling.pack_shards(docs)
 
 
@@ -392,34 +392,17 @@ def _q_curate_corpus(spark, sf_dir):
     )
 
 
-def _q_curate_clean(spark, sf_dir):
+def _curate_clean(docs, original_text=False):
     """Text-cleaning composite: boilerplate line strip -> exact-substring
     keep-first dedup over the STRIPPED corpus, as one plan (both stages
-    individually oracled; this pins their composition)."""
-    docs = _tbl(spark, sf_dir, "documents")
-    stripped = textstats.strip_boilerplate_lines(docs)
-    cleaned = dedup.substring_dedup_keep(
-        stripped.select("doc_id", F.col("kept_text").alias("text"))
-    )
-    return (
-        stripped.select("doc_id", "n_lines", "n_lines_kept")
-        .join(cleaned, "doc_id")
-        .select("doc_id", "n_lines", "n_lines_kept", "n_tokens",
-                "n_spans_dropped", "n_tokens_dropped", "kept_text")
-    )
-
-
-def _q_curate_clean_text(spark, sf_dir):
-    """Training-ready cleaning composite in the ORIGINAL text domain:
-    boilerplate line strip (lines preserved verbatim) -> exact-substring
-    keep-first dedup with char-range removal over the stripped corpus —
-    the cleaned-text artifact a pipeline would actually feed to
-    training, as one plan."""
-    docs = _tbl(spark, sf_dir, "documents")
+    individually oracled; this pins their composition).  With
+    ``original_text`` the dedup cuts character ranges from the stripped
+    lines instead of rebuilding canonical tokens: the training-ready
+    artifact."""
     stripped = textstats.strip_boilerplate_lines(docs)
     cleaned = dedup.substring_dedup_keep(
         stripped.select("doc_id", F.col("kept_text").alias("text")),
-        original_text=True,
+        original_text=original_text,
     )
     return (
         stripped.select("doc_id", "n_lines", "n_lines_kept")
@@ -598,7 +581,7 @@ def _q_repetition_lines(spark, sf_dir):
     applies the identical transform; duplicate lines then occur naturally
     from the small vocabulary, making the oracle row discriminative."""
     docs = _tbl(spark, sf_dir, "documents")
-    ws = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"[a-z0-9]+"), 0)
+    ws = dedup._words(F.col("text"))
     k, p = REP_LINE_WORDS, REP_PARA_LINES
     lines = F.when(
         F.size(ws) >= 1,
@@ -665,7 +648,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_substring_keep_text": _on(
             "documents", dedup.substring_dedup_keep, **exact_substr,
             include_self=True, original_text=True),
-        "curate_clean_corpus_text": _q_curate_clean_text,
+        "curate_clean_corpus_text": _on("documents", _curate_clean,
+                                        original_text=True),
         "pipeline_extract_tasks_arrow": _q_tasks_arrow,
         "t2_t5_normalize_math": _q_normalize,
         "p12_strip_admin": _q_strip_admin,
@@ -692,7 +676,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "documents", dedup.substring_dedup_keep, **exact_substr,
             include_self=True),
         "text_strip_boilerplate": _on("documents", textstats.strip_boilerplate_lines),
-        "curate_clean_corpus": _q_curate_clean,
+        "curate_clean_corpus": _on("documents", _curate_clean),
         # 0.4: the 0.95 default finds no pair among the fixture embeddings
         "dedup_semantic": _on("embeddings", similarity.semantic_dedup, threshold=0.4),
         "s7_catalog_json": _q_catalog_json,
@@ -794,12 +778,29 @@ SELECT doc_id, task_number, media_ref, seq,
 FROM ni"""
 
 
-_CANON = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"  # twin of dedup._canon
+def _sql_fold(col: str) -> str:
+    """The case fold of ``col`` (twin of dedup._fold)."""
+    return f"replace(lower(replace({col}, '\u0130', 'I')), '\u03c2', '\u03c3')"
+
+
+# twin of dedup._canon
+_CANON = _sql_fold(f"trim(regexp_replace(text, '[{dedup.WHITESPACE}]+', ' ', 'g'))")
+
+
+def _sql_n_tokens(col: str = "text") -> str:
+    """Number of whitespace-delimited tokens (twin of dedup._n_tokens)."""
+    return f"len(regexp_extract_all({col}, '{dedup.TOKEN}'))"
 
 
 def _sql_words(col: str = "text") -> str:
     """The word tokens of ``col`` (twin of dedup._words)."""
-    return f"regexp_extract_all(lower({col}), '[a-z0-9]+')"
+    return f"regexp_extract_all({_sql_fold(col)}, '[a-z0-9]+')"
+
+
+def _sql_ws(name: str = "w", rel: str = "documents") -> str:
+    """CTE ``name``(doc_id, ws): the word tokens of each doc read by
+    ``FROM {rel}``."""
+    return f"{name} AS (SELECT doc_id, {_sql_words()} AS ws FROM {rel})"
 
 
 def _sql_h48(expr: str) -> str:
@@ -822,15 +823,9 @@ def _sql_grams(n: int) -> str:
 
 
 _SHINGLE_CTES = f"""
-WITH w AS (
-  SELECT doc_id, {_sql_words()} AS ws FROM documents
-),
+WITH {_sql_ws()},
 sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    CASE WHEN len(ws) >= 3 THEN
-      list_transform(generate_series(0, len(ws) - 3),
-                     i -> {_sql_gram(3)})
-    ELSE [] END)) AS shingle
+  SELECT doc_id, unnest(list_distinct({_sql_grams(3)})) AS shingle
   FROM w
 ),
 shh AS (
@@ -925,37 +920,46 @@ def _sql_ngram_jaccard() -> str:
             + "\nSELECT doc1, doc2, jaccard_bp FROM pairs")
 
 
-def _components_ctes() -> str:
-    """CTE chain: shingles -> verified pairs -> recursive reachability
-    -> labels (node, lab=min reachable doc_id).  Recursive UNION dedups
-    rows, so cycles terminate."""
-    shingle_ctes = _SHINGLE_CTES.replace("WITH w AS", "WITH RECURSIVE w AS")
-    return f"""{shingle_ctes}{_pair_ctes()},
-edges AS (
-  SELECT doc1 AS a, doc2 AS b FROM pairs
-  UNION SELECT doc2, doc1 FROM pairs
+def _components_parts(pairs: str, a: str, b: str,
+                      node: str) -> tuple[str, str]:
+    """(cte_chain, final_select) for the connected-components twin of
+    dedup.components over relation ``pairs`` with id columns ``a`` and
+    ``b``: recursive reachability -> ``labels`` (node, lab = min
+    reachable id) -> ``sizes``; the final select names the node column
+    ``node``.  Recursive UNION dedups rows, so cycles terminate; the
+    statement needs WITH RECURSIVE (``O._recursive``)."""
+    ctes = f"""edges AS (
+  SELECT {a} AS a, {b} AS b FROM {pairs}
+  UNION SELECT {b}, {a} FROM {pairs}
 ),
 reach(node, lab) AS (
   SELECT a, a FROM edges
   UNION
   SELECT e.b, r.lab FROM reach r JOIN edges e ON e.a = r.node
 ),
-labels AS (SELECT node, min(lab) AS lab FROM reach GROUP BY node)"""
+labels AS (SELECT node, min(lab) AS lab FROM reach GROUP BY node),
+sizes AS (SELECT lab, count(*) AS cluster_size FROM labels GROUP BY lab)"""
+    final = (f"SELECT node AS {node}, labels.lab AS rep_id, cluster_size\n"
+             "FROM labels JOIN sizes USING (lab)")
+    return ctes, final
+
+
+_JACCARD_COMPONENTS = _components_parts("pairs", "doc1", "doc2", "doc_id")
 
 
 def _sql_dedup_components() -> str:
     """Twin of dedup.components over the ngram-jaccard pairs."""
-    return f"""{_components_ctes()},
-sizes AS (SELECT lab, count(*) AS cluster_size FROM labels GROUP BY lab)
-SELECT node AS doc_id, labels.lab AS rep_id, cluster_size
-FROM labels JOIN sizes USING (lab)"""
+    ctes, final = _JACCARD_COMPONENTS
+    return O._recursive(f"{_SHINGLE_CTES}{_pair_ctes()},\n{ctes}\n{final}")
 
 
 def _sql_curate_corpus() -> str:
     """Twin of the end-to-end curation composite: quality gate AND
     exact-dup keeper AND NOT near-dup non-representative, with the split
     assignment joined on."""
-    return f"""{_components_ctes()},
+    components, _ = _JACCARD_COMPONENTS
+    return O._recursive(f"""{_SHINGLE_CTES}{_pair_ctes()},
+{components},
 canon AS (SELECT doc_id, md5({_CANON}) AS fp FROM documents),
 keep_exact AS (
   SELECT doc_id FROM (
@@ -963,17 +967,8 @@ keep_exact AS (
   ) WHERE doc_id = keeper
 ),
 qual AS (
-  SELECT doc_id FROM (
-    SELECT doc_id,
-      CAST(round((
-        CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.4 ELSE 0.0 END
-        + CASE WHEN len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE
-               / greatest(length(text), 1) < 0.2 THEN 0.3 ELSE 0.0 END
-        + least(len(regexp_extract_all(lower(text), '{_EN}'))::DOUBLE
-               / greatest(len(regexp_extract_all(text, '\\S+')), 1) * 3.0, 0.3)
-      ) * 10000) AS BIGINT) AS quality_bp
-    FROM documents
-  ) WHERE quality_bp >= 5000
+  SELECT doc_id FROM ({_sql_quality().strip()})
+  WHERE quality_bp >= 5000
 ),
 dropped AS (SELECT node AS doc_id FROM labels WHERE node <> lab),
 {_SQL_SPLIT_CTE}
@@ -983,7 +978,7 @@ JOIN keep_exact USING (doc_id)
 JOIN qual USING (doc_id)
 JOIN sp USING (doc_id)
 LEFT JOIN dropped dr ON dr.doc_id = d.doc_id
-WHERE dr.doc_id IS NULL"""
+WHERE dr.doc_id IS NULL""")
 
 
 def _sql_simhash() -> str:
@@ -1001,7 +996,7 @@ WITH w AS (
   FROM documents
 ),
 wh AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(word), 1, 8)) AS BIGINT) AS h FROM w
+  SELECT doc_id, {_sql_h48('word')} AS h FROM w
 ),
 agg AS (SELECT doc_id, {sums} FROM wh GROUP BY doc_id)
 SELECT doc_id, {bits} AS simhash FROM agg"""
@@ -1038,8 +1033,8 @@ _NO = textstats.NO_STOPWORDS
 
 
 def _sql_lang_id() -> str:
-    en = f"len(regexp_extract_all(lower(text), '{_EN}'))"
-    no = f"len(regexp_extract_all(lower(text), '{_NO}'))"
+    en = f"len(regexp_extract_all({_sql_fold('text')}, '{_EN}'))"
+    no = f"len(regexp_extract_all({_sql_fold('text')}, '{_NO}'))"
     return f"""
 SELECT doc_id,
   {en} AS en_hits,
@@ -1057,9 +1052,9 @@ def _sql_quality() -> str:
 WITH b AS (
   SELECT doc_id,
     length(text) AS n_chars,
-    len(regexp_extract_all(text, '\\S+')) AS n_words,
-    len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
-    len(regexp_extract_all(lower(text), '{_EN}')) AS n_stop
+    {_sql_n_tokens()} AS n_words,
+    len(regexp_extract_all(text, '{textstats.PUNCT_RE}')) AS n_punct,
+    len(regexp_extract_all({_sql_fold('text')}, '{_EN}')) AS n_stop
   FROM documents
 )
 SELECT doc_id, n_chars, n_words, n_punct,
@@ -1072,10 +1067,10 @@ FROM b"""
 
 
 def _sql_tokens() -> str:
-    return """
+    return f"""
 SELECT doc_id,
-  len(regexp_extract_all(text, '\\S+')) AS n_tokens,
-  CAST(coalesce(list_sum(list_transform(regexp_extract_all(text, '\\S+'),
+  {_sql_n_tokens()} AS n_tokens,
+  CAST(coalesce(list_sum(list_transform(regexp_extract_all(text, '{dedup.TOKEN}'),
        w -> (length(w) + 3) // 4)), 0) AS BIGINT) AS n_subword_est
 FROM documents"""
 
@@ -1119,7 +1114,7 @@ def _sql_curate_pack(n_buckets: int = 64, budget: int = 8192) -> str:
 WITH base AS (
   SELECT doc_id,
          {_sql_h48('doc_id::VARCHAR')} AS h,
-         len(regexp_extract_all(text, '\\S+'))::BIGINT AS t
+         {_sql_n_tokens()}::BIGINT AS t
   FROM documents
 ),
 cum AS (
@@ -1139,9 +1134,7 @@ FROM cum"""
 def _sql_decontaminate(n: int = 8, max_df: int = 64) -> str:
     """Twin of sampling.decontaminate (8-gram cross-split collisions)."""
     return f"""
-WITH w AS (
-  SELECT doc_id, {_sql_words()} AS ws FROM documents
-),
+WITH {_sql_ws()},
 sh8 AS (
   SELECT doc_id, unnest(list_distinct(
     {_sql_grams(n)})) AS shingle
@@ -1225,11 +1218,15 @@ def _sql_mixture_weights(alpha: str = "0.50", cap: int = 400) -> str:
     return f"""
 WITH per AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(regexp_extract_all(text, '\\S+'))) AS BIGINT)
-           AS total_tokens
+         CAST(sum({_sql_n_tokens()}) AS BIGINT) AS total_tokens
   FROM documents GROUP BY 1
 ),
-tot AS (SELECT CAST(sum(total_tokens) AS BIGINT) AS t_all FROM per),
+tot AS (
+  -- a corpus without tokens fails, as Spark's division by zero does
+  SELECT CASE WHEN t_all = 0 THEN error('mixture_weights: no tokens')
+              ELSE t_all END AS t_all
+  FROM (SELECT CAST(sum(total_tokens) AS BIGINT) AS t_all FROM per)
+),
 w AS (
   SELECT per.*, t_all,
          CAST(round(pow(total_tokens::DOUBLE / t_all::DOUBLE, {alpha})
@@ -1289,7 +1286,7 @@ FROM s2"""
 
 def _sql_c4_line_filter() -> str:
     """Twin of textstats.c4_line_filters over the same planted lines."""
-    black = " OR ".join(f"contains(lower(x), '{b}')"
+    black = " OR ".join(f"contains({_sql_fold('x')}, '{b}')"
                         for b in textstats.C4_BLACKLIST)
     terminals = ", ".join(f"'{t}'" for t in textstats.C4_TERMINALS)
     return f"""
@@ -1330,10 +1327,7 @@ def _sql_substring_runs_ctes(n: int = 8, max_df: int = 64,
     actual gram strings, mirroring the Spark op).  ``rel`` is the source
     relation carrying (doc_id, text) — parameterized so composites can
     run the chain over an upstream CTE's output."""
-    return f"""w AS (
-  SELECT doc_id, {_sql_words()} AS ws
-  FROM {rel}
-),
+    return f"""{_sql_ws(rel=rel)},
 gl AS (
   SELECT doc_id,
     CASE WHEN len(ws) >= {n} THEN
@@ -1572,10 +1566,7 @@ def _strip_parts(n: int = 3, k: int = 50,
     canonical word sequence contains a hot gram is dropped; kept lines
     reassemble in order.  Structural pieces so composites can chain the
     stripped corpus into downstream CTEs."""
-    ctes = f"""tw AS (
-  SELECT doc_id, {_sql_words()} AS ws
-  FROM {rel}
-),
+    ctes = f"""{_sql_ws("tw", rel)},
 tg AS (
   SELECT doc_id, unnest(
     {_sql_grams(n)}) AS gram
@@ -1595,9 +1586,7 @@ ln AS (
 ),
 nl AS (
   SELECT doc_id, i, line,
-         ' ' || array_to_string(regexp_extract_all(lower(line),
-                                                   '[a-z0-9]+'), ' ')
-             || ' ' AS nrm
+         ' ' || array_to_string({_sql_words('line')}, ' ') || ' ' AS nrm
   FROM ln
 ),
 m AS (
@@ -1657,10 +1646,7 @@ LEFT JOIN {kept} kp ON kp.doc_id = st.doc_id"""
 def _sql_top_ngrams(n: int = 3, k: int = 50) -> str:
     """Twin of textstats.top_ngrams (global top-k, gram-ASC ties)."""
     return f"""
-WITH w AS (
-  SELECT doc_id, {_sql_words()} AS ws
-  FROM documents
-),
+WITH {_sql_ws()},
 g AS (
   SELECT doc_id, unnest(
     {_sql_grams(n)}) AS gram
@@ -1737,10 +1723,7 @@ base AS (
                / greatest(len(ws), 1)) AS BIGINT) AS dup_word_bp,
     CAST(floor(len(regexp_extract_all(text, '#|\.\.\.')) * 10000.0
                / greatest(len(ws), 1)) AS BIGINT) AS symbol_word_bp,
-    CASE WHEN len(ws) >= 2 THEN
-      list_transform(generate_series(0, len(ws) - 2),
-                     i -> {_sql_gram(2)})
-    ELSE [] END AS grams
+    {_sql_grams(2)} AS grams
   FROM w
 ),
 g AS (
@@ -1793,7 +1776,7 @@ def _sql_source_rollup() -> str:
     return f"""
 WITH k AS (
   SELECT source, lang, doc_id, md5({_CANON}) AS fp,
-         len(regexp_extract_all(text, '\\S+'))::BIGINT AS n_tokens
+         {_sql_n_tokens()}::BIGINT AS n_tokens
   FROM documents
 ),
 s AS (SELECT fp, count(*) AS fpn FROM k GROUP BY 1),
@@ -1926,8 +1909,7 @@ bands AS (
 ),
 p AS (
   SELECT a.vec_id AS id1, b.vec_id AS id2,
-    CAST(round(round({_sql_dot('a.embedding', 'b.embedding')} /
-      ({_sql_norm('a.embedding')} * {_sql_norm('b.embedding')}), 9) * 1e9) AS BIGINT) AS sim_e9
+    CAST(round({_sql_cos9('a.embedding', 'b.embedding')} * 1e9) AS BIGINT) AS sim_e9
   FROM bands a JOIN bands b USING (band_id, band_key)
   WHERE a.vec_id < b.vec_id
 )"""
@@ -2158,23 +2140,13 @@ def _sql_semantic_dedup(threshold_e9: int = 400_000_000) -> str:
     feeding the recursive-reachability components twin — composed from
     ``_near_dups_parts``' structural pieces, not string surgery."""
     ctes, final = _near_dups_parts(threshold_e9)
+    cctes, cfinal = _components_parts("spairs", "id1", "id2", "vec_id")
     return O._recursive(f"""WITH {ctes},
 spairs AS (
   {final}
 ),
-edges AS (
-  SELECT id1 AS a, id2 AS b FROM spairs
-  UNION SELECT id2, id1 FROM spairs
-),
-reach(node, lab) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT e.b, r.lab FROM reach r JOIN edges e ON e.a = r.node
-),
-labels AS (SELECT node, min(lab) AS lab FROM reach GROUP BY node),
-sizes AS (SELECT lab, count(*) AS cluster_size FROM labels GROUP BY lab)
-SELECT node AS vec_id, labels.lab AS rep_id, cluster_size
-FROM labels JOIN sizes USING (lab)""")
+{cctes}
+{cfinal}""")
 
 
 def _sql_topic_enum() -> str:
@@ -2276,10 +2248,7 @@ def _sql_repetition_lines() -> str:
     line_ctes = unit_ctes("line", r"\n")
     para_ctes = unit_ctes("para", r"\n{2,}")
     return f"""
-WITH w AS (
-  SELECT doc_id, {_sql_words()} AS ws
-  FROM documents
-),
+WITH {_sql_ws()},
 lined AS (
   SELECT doc_id, array_to_string(
     CASE WHEN len(ws) >= 1 THEN
@@ -2342,10 +2311,7 @@ def _sql_repetition_ngrams() -> str:
         + [f"coalesce(dup{n}_char_bp, 0) <= {textstats.REP_DUP_MAX_BP[n]}"
            for n in textstats.REP_DUP_NS])
     return f"""
-WITH w AS (
-  SELECT doc_id, {_sql_words()} AS ws
-  FROM documents
-),
+WITH {_sql_ws()},
 tot AS (
   SELECT doc_id, ws,
     CAST(coalesce(list_sum(list_transform(ws, x -> length(x))), 0)
@@ -2393,19 +2359,11 @@ JOIN ({_sql_quality()}) q ON g.doc_id = q.doc_id"""
 def _sql_dsir_importance(n_buckets: int = sampling.DSIR_BUCKETS) -> str:
     """Twin of sampling.dsir_importance with target = lang='en' docs
     (int64-scaled per-bucket log-ratios summed per doc, hash-Gumbel)."""
-    grams = ("list_concat(ws, CASE WHEN len(ws) >= 2 THEN "
-             "list_transform(generate_series(0, len(ws) - 2), "
-             "i -> ws[i + 1] || ' ' || ws[i + 2]) ELSE [] END)")
+    grams = f"list_concat(ws, {_sql_grams(2)})"
     bucket = f"{_sql_h48('g')} % {n_buckets}"
     return f"""
-WITH rawd AS (
-  SELECT doc_id, {_sql_words()} AS ws
-  FROM documents
-),
-tgtd AS (
-  SELECT doc_id, {_sql_words()} AS ws
-  FROM documents WHERE lang = 'en'
-),
+WITH {_sql_ws("rawd")},
+{_sql_ws("tgtd", "documents WHERE lang = 'en'")},
 rg AS (SELECT doc_id, unnest({grams}) AS g FROM rawd),
 tg AS (SELECT doc_id, unnest({grams}) AS g FROM tgtd),
 rb AS (SELECT doc_id, {bucket} AS b FROM rg),
@@ -2424,8 +2382,8 @@ model AS (
 SELECT rb.doc_id, count(*) AS n_grams,
   CAST(sum(m.llr_e9) AS BIGINT) AS dsir_score_e9,
   CAST(round(round(-ln(round(-ln(
-    ((CAST(('0x' || substr(md5(rb.doc_id::VARCHAR || ':gumbel'), 1, 12))
-       AS BIGINT) % 1000000) + 0.5) / 1000000.0), 9)), 9) * 1e9)
+    (({_sql_h48("rb.doc_id::VARCHAR || ':gumbel'")} % 1000000) + 0.5)
+    / 1000000.0), 9)), 9) * 1e9)
     AS BIGINT) AS gumbel_e9
 FROM rb JOIN model m USING (b)
 GROUP BY 1"""

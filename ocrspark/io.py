@@ -38,6 +38,29 @@ EXTRACTIONS_COLUMNS: list[tuple[str, str]] = [
 ]
 
 
+def _dir_has_files(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` exists and contains at least one DATA file — the
+    ONLY condition under which history (landed rows, checkpoints) is
+    assumed.  Any other read problem (corrupt footer, transient FS error,
+    permissions) must fail the read instead of passing for "no history":
+    a resume would silently redo landed work, a streaming micro-batch
+    would re-append duplicates.
+
+    Only ``*.parquet`` files count: a zero-row first write leaves a
+    ``_SUCCESS`` marker and no parts, and treating that as history would
+    poison every later read with an unreadable (schema-less) table."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return False
+    it = fs.listFiles(hpath, True)
+    while it.hasNext():
+        if it.next().getPath().getName().endswith(".parquet"):
+            return True
+    return False
+
+
 class ParquetStore:
     """Parquet-directory tables with per-bucket idempotent overwrite."""
 
@@ -66,14 +89,13 @@ class ParquetStore:
 
     def read_checkpoints(self, spark: SparkSession) -> DataFrame | None:
         path = self._path(CHECKPOINTS)
-        try:
-            # mergeSchema: a resumed run may append part files with newer
-            # checkpoint columns (e.g. landed_task_count) next to files
-            # from an older release; without the union schema the read
-            # nondeterministically picks one footer's schema
-            return spark.read.option("mergeSchema", "true").parquet(path)
-        except Exception:
+        if not _dir_has_files(spark, path):
             return None
+        # mergeSchema: a resumed run may append part files with newer
+        # checkpoint columns (e.g. landed_task_count) next to files from an
+        # older release; without the union schema the read picks one
+        # footer's schema.  Reading every footer fails on a corrupt part.
+        return spark.read.option("mergeSchema", "true").parquet(path)
 
     def landed_per_bucket(self, spark: SparkSession, buckets) -> DataFrame | None:
         """Durable row count per bucket for the just-written buckets.
@@ -81,12 +103,12 @@ class ParquetStore:
         `bucket` is a physical partition column here, so the scan is
         partition-pruned to exactly the buckets written by this batch —
         O(batch output), not a table scan.  Lets the checkpoint record what
-        LANDED, not just what was computed."""
-        try:
-            df = self.read_extractions(spark)
-        except Exception:
+        LANDED, not just what was computed.  None when the table holds no
+        data file yet (a batch without output rows)."""
+        if not _dir_has_files(spark, self._path(EXTRACTIONS)):
             return None
         from pyspark.sql import functions as F
+        df = self.read_extractions(spark)
         return (
             df.filter(F.col("bucket").isin(list(buckets)))
             .groupBy("bucket")

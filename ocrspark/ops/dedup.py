@@ -8,10 +8,12 @@ the DuckDB oracle reproduces results bit-for-bit.
 Cross-engine primitives: ``_h48`` is the one 48-bit md5-prefix integer hash
 and ``_words`` the one word tokenizer (with ``_word_grams`` the one n-gram
 builder and ``_canon`` the one canonical text) of the curation ops here, in
-``textstats`` and in ``sampling``; only SimHash keeps its own 32-bit word
-hash.  Each has one DuckDB twin in ``__spark_entry__`` (``_sql_h48``,
-``_sql_words``, ``_sql_grams``, ``_CANON``), and ``tests/test_primitives.py``
-checks that each pair agrees.
+``textstats`` and in ``sampling``.  Both engines are built from the one
+whitespace class ``WHITESPACE`` (Java's ``\\s`` written out, see
+``_n_tokens``) and the one case fold ``_fold``.  Each has one DuckDB twin in
+``__spark_entry__`` (``_sql_h48``, ``_sql_words``, ``_sql_grams``,
+``_CANON``, ``_sql_n_tokens``, ``_sql_fold``), and
+``tests/test_primitives.py`` checks that each pair agrees.
 
 MinHash constants: 8 permutations (a_j * h + b_j) mod p over 48-bit shingle
 hashes; p = 2^31-1 keeps products < 2^63 (no bigint overflow under ANSI).
@@ -32,9 +34,28 @@ ROWS_PER_BAND = 2
 SIMHASH_BITS = 32
 
 
+# Java's \s, spelled out: RE2's \s lacks U+000B.  Used inside [] classes.
+WHITESPACE = r"\t\n\x0B\f\r "
+TOKEN = f"[^{WHITESPACE}]+"  # a whitespace-delimited token
+
+
+def _fold(col):
+    """The case fold: ``lower`` with U+0130 mapped to I first (Spark's
+    lower gives i + U+0307, DuckDB's i) and final sigma to sigma after
+    (Spark applies the final-sigma rule, DuckDB does not).  Letters that
+    DuckDB 1.0's case tables lack (U+2C2F and ~70 more) still differ."""
+    return F.replace(F.lower(F.replace(col, F.lit("\u0130"), F.lit("I"))),
+                     F.lit("\u03c2"), F.lit("\u03c3"))
+
+
+def _n_tokens(col):
+    """Number of whitespace-delimited tokens (a codegen'd counter)."""
+    return F.regexp_count(col, F.lit(TOKEN))
+
+
 def _words(text_col):
-    """The canonical word tokens: lowercased ``[a-z0-9]+`` runs."""
-    return F.regexp_extract_all(F.lower(text_col), F.lit(r"[a-z0-9]+"), 0)
+    """The canonical word tokens: case-folded ``[a-z0-9]+`` runs."""
+    return F.regexp_extract_all(_fold(text_col), F.lit(r"[a-z0-9]+"), 0)
 
 
 def _h48(col):
@@ -43,8 +64,8 @@ def _h48(col):
 
 
 def _canon(text_col):
-    """Canonical text: lowercased, whitespace runs squeezed, trimmed."""
-    return F.lower(F.trim(F.regexp_replace(text_col, r"\s+", " ")))
+    """Canonical text: case-folded, whitespace runs squeezed, trimmed."""
+    return _fold(F.trim(F.regexp_replace(text_col, f"[{WHITESPACE}]+", " ")))
 
 
 def _word_grams(words, n: int):
@@ -93,7 +114,7 @@ def cap_by_key(df: DataFrame, keys: list[str], max_n: int,
 
 
 def canonical_fp(text_col):
-    """THE exact-dup key: md5 of lowercased whitespace-squeezed text.
+    """THE exact-dup key: md5 of case-folded whitespace-squeezed text.
 
     Single source of truth for the canonicalization — shared by
     ``exact_groups``, ``textstats.fingerprint`` and
@@ -445,7 +466,7 @@ def substring_dedup_keep(docs: DataFrame, text_col: str = "text",
     intervals before removal.
 
     ``kept_text`` domain: with the default ``original_text=False`` it is
-    the doc's canonical word sequence (lowercased ``[a-z0-9]+`` tokens —
+    the doc's canonical word sequence (case-folded ``[a-z0-9]+`` tokens —
     the token domain the runs are detected in) with dropped intervals
     removed.  With ``original_text=True`` it is the ORIGINAL text with
     the dropped spans' character ranges removed — casing, punctuation,
@@ -456,7 +477,7 @@ def substring_dedup_keep(docs: DataFrame, text_col: str = "text",
     inside the range go with it; boundary separators survive.  Token k
     of the canonical stream is located as the k-th ``[a-zA-Z0-9]+`` match
     of the original text (exact for ASCII, the corpus domain; exotic
-    Unicode case-mappings that lower() into ASCII alnum — e.g. U+212A —
+    Unicode case-mappings that fold into ASCII alnum — e.g. U+212A —
     could misalign the two streams and are out of contract).
 
     ``include_self=True`` additionally drops within-document repeats
@@ -952,7 +973,8 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text",
 
 
 def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """32-bit SimHash over word hashes (per-bit majority vote).
+    """32-bit SimHash: per-bit majority vote over the low 32 bits of each
+    word's ``_h48``.
 
     Computed as 32 conditional aggregates over exploded words — one shuffle,
     no per-row Python.
@@ -960,7 +982,7 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     words = docs.select(
         "doc_id",
         F.explode(_words(F.col(text_col))).alias("w"),
-    ).withColumn("h", F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long"))
+    ).withColumn("h", _h48("w"))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)

@@ -11,7 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _h48, _word_grams, _words, canonical_fp, cap_by_key, shingles
+from .dedup import (
+    _h48, _n_tokens, _word_grams, _words, canonical_fp, cap_by_key, shingles,
+)
 
 SPLITS = [("train", 9800), ("val", 100), ("test", 100)]  # basis points
 PACK_BUCKETS = 64  # fixture/oracle default; pass n_buckets=None to scale
@@ -143,8 +145,7 @@ def source_rollup(docs: DataFrame, strata_cols=("source", "lang"),
     keyed = docs.select(
         *strata_cols, "doc_id",
         canonical_fp(F.col(text_col)).alias("fp"),
-        F.regexp_count(F.col(text_col), F.lit(r"\S+")).cast("long")
-        .alias("n_tokens"),
+        _n_tokens(F.col(text_col)).cast("long").alias("n_tokens"),
     )
     from .textstats import quality_score
 
@@ -329,8 +330,7 @@ def mixture_weights(docs: DataFrame, strata_col: str = "source",
     alpha = F.lit(alpha_e2).cast("double") / 100.0
     per = docs.groupBy(strata_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.regexp_count(F.col(text_col), F.lit(r"\S+")).cast("long"))
-        .alias("total_tokens"),
+        F.sum(_n_tokens(F.col(text_col)).cast("long")).alias("total_tokens"),
     )
     tot = per.agg(F.sum("total_tokens").alias("t_all"))
     p = F.col("total_tokens").cast("double") / F.col("t_all").cast("double")

@@ -16,18 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _canon, _word_grams, _words, canonical_fp
+from .dedup import (
+    TOKEN, WHITESPACE, _canon, _fold, _n_tokens, _word_grams, _words,
+    canonical_fp,
+)
 
 # n-gram/stopword heuristics: tiny fixed lexica, ASCII-only patterns.
 EN_STOPWORDS = r"\b(the|and|of|to|in|is|for|with|on|that|this|a)\b"
 NO_STOPWORDS = r"\b(og|i|det|som|en|er|på|av|til|for|med|den)\b"
-WORD_RE = r"[A-Za-z]+"
-PUNCT_RE = r"[^A-Za-z0-9\s]"
+PUNCT_RE = f"[^A-Za-z0-9{WHITESPACE}]"
 
 
 def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-ratio language ID (en vs no vs unknown)."""
-    t = F.lower(F.col(text_col))
+    t = _fold(F.col(text_col))
     en = F.regexp_count(t, F.lit(EN_STOPWORDS))
     no = F.regexp_count(t, F.lit(NO_STOPWORDS))
     pred = (
@@ -47,9 +49,9 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     t = F.col(text_col)
     n_chars = F.length(t)
-    n_words = F.regexp_count(t, F.lit(r"\S+"))
+    n_words = _n_tokens(t)
     n_punct = F.regexp_count(t, F.lit(PUNCT_RE))
-    n_stop = F.regexp_count(F.lower(t), F.lit(EN_STOPWORDS))
+    n_stop = F.regexp_count(_fold(t), F.lit(EN_STOPWORDS))
     len_ok = (n_chars >= 100) & (n_chars <= 20000)
     punct_ratio = n_punct.cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
     stop_ratio = n_stop.cast("double") / F.greatest(n_words, F.lit(1)).cast("double")
@@ -70,7 +72,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokens + a BPE-ish subword estimate (ceil(len/4) per word,
     exact integer arithmetic)."""
-    words = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), 0)
+    words = F.regexp_extract_all(F.col(text_col), F.lit(TOKEN), 0)
     subwords = F.aggregate(
         words,
         F.lit(0).cast("long"),
@@ -104,7 +106,7 @@ def code_detect(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Canonical-text fingerprint: md5 of lowercased whitespace-squeezed text
+    """Canonical-text fingerprint: md5 of case-folded whitespace-squeezed text
     (exact-dup key; md5 is bit-identical across engines)."""
     return docs.select("doc_id", canonical_fp(F.col(text_col)).alias("fp"))
 
@@ -268,15 +270,14 @@ def strip_boilerplate_lines(docs: DataFrame, text_col: str = "text",
     # subexpressions out of HOF lambdas — inlining the regex tokenization
     # inside the exists() probe would re-run it k times per line), then
     # probe the k grams against the precomputed padded string
-    kept = F.expr(
-        "transform(filter("
-        "  transform(lines, x -> struct(x AS line,"
-        "    concat(' ', array_join(regexp_extract_all(lower(x),"
-        "    '[a-z0-9]+', 0), ' '), ' ') AS nrm)),"
-        "  s -> NOT exists(hot_grams, g -> contains(s.nrm,"
-        "    concat(' ', g, ' ')))"
-        "), s -> s.line)"
-    )
+    pad = F.lit(" ")
+    normed = F.transform("lines", lambda x: F.struct(
+        x.alias("line"),
+        F.concat(pad, F.array_join(_words(x), " "), pad).alias("nrm")))
+    kept = F.transform(
+        F.filter(normed, lambda s: ~F.exists(
+            "hot_grams", lambda g: s["nrm"].contains(F.concat(pad, g, pad)))),
+        lambda s: s["line"])
     return base.select(
         "doc_id",
         F.size("lines").cast("long").alias("n_lines"),
@@ -647,7 +648,7 @@ def c4_line_filters(docs: DataFrame, text_col: str = "text") -> DataFrame:
         t = F.rtrim(x)
         punct = F.substring(t, -1, 1).isin(*C4_TERMINALS)
         enough = F.size(_words(x)) >= C4_MIN_WORDS
-        black = reduce(or_, [F.lower(x).contains(b) for b in C4_BLACKLIST])
+        black = reduce(or_, [_fold(x).contains(b) for b in C4_BLACKLIST])
         return punct & enough & ~black
 
     lines = F.split(F.col(text_col), "\n")

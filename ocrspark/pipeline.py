@@ -13,24 +13,15 @@ from .segment import segment
 from .stage1 import stage1
 
 
-def extract(docs: DataFrame, arrow: bool = False, merge: bool = True,
-            expected: DataFrame | None = None,
-            alias: DataFrame | None = None,
-            subject_overrides: DataFrame | None = None) -> DataFrame:
+def extract(docs: DataFrame, arrow: bool = False,
+            expected: DataFrame | None = None) -> DataFrame:
     """docs(doc_id, spans) -> extractions(doc_id, subject, exam_version,
     source_subject_code, task_number, points, topic, task_text,
     task_text_html, was_merged, spans).
 
-    ``merge`` toggles the G7 short-task repair (default on).  Optional small
-    broadcast inputs: ``expected`` (doc_id, expected_tasks) J6 alignment;
-    ``alias`` (alias_code, canonical) J2 resolution; ``subject_overrides``
-    (doc_id, subject_override) S6 manual override."""
+    ``arrow`` runs stage1 as the Arrow twin; ``expected`` (doc_id,
+    expected_tasks) is the optional small broadcast input for J6
+    alignment.  Alias resolution and subject overrides compose on the
+    output (``overrides``)."""
     flat = stage1(docs, arrow=arrow)
-    out = assemble(segment(flat, merge=merge, expected=expected))
-    if alias is not None:
-        from .overrides import resolve_aliases
-        out = resolve_aliases(out, alias)
-    if subject_overrides is not None:
-        from .overrides import apply_subject_overrides
-        out = apply_subject_overrides(out, subject_overrides)
-    return out
+    return assemble(segment(flat, expected=expected))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_BUCKETS
+from .io import _dir_has_files
 from .pipeline import extract
 from .schema import DOCS_SCHEMA
 
@@ -185,28 +186,6 @@ def dedup_stream(docs: DataFrame, ts_col: str = "ingested_at",
         return keyed.withWatermark(ts_col, watermark)\
             .dropDuplicatesWithinWatermark(["fp"])
     return keyed.dropDuplicates(["fp"])
-
-
-def _dir_has_files(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` exists and contains at least one DATA file — the
-    ONLY condition under which landed history is assumed.  Any other read
-    problem (corrupt footer, transient FS error, permissions) must fail
-    the micro-batch so the streaming checkpoint retries it, instead of
-    silently re-appending duplicates.
-
-    Only ``*.parquet`` files count: a zero-survivor first batch leaves a
-    ``_SUCCESS`` marker and no parts, and treating that as history would
-    poison every later batch with an unreadable (schema-less) corpus."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return False
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
-    return False
 
 
 def landed_anti_join(keyed: DataFrame, landed: DataFrame,

@@ -118,6 +118,29 @@ def test_mixture_weights_differential(spark):
     assert expected(50, 200)["B"][3:] == (200, 1)
 
 
+def test_mixture_weights_zero_tokens_fails_in_both_engines(spark):
+    """A corpus without a single token has no shares: the Spark op fails
+    on its division by zero, and its DuckDB twin fails the same way."""
+    import duckdb
+    import pytest
+
+    import __spark_entry__ as E
+
+    rows = [(1, "", "A"), (2, " \t", "A"), (3, "", "B")]
+    docs = spark.createDataFrame(rows, "doc_id int, text string, source string")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        sampling.mixture_weights(docs).collect()
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents "
+                    "(doc_id INTEGER, text VARCHAR, source VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+        with pytest.raises(duckdb.Error, match="no tokens"):
+            con.sql(E._sql_mixture_weights()).fetchall()
+    finally:
+        con.close()
+
+
 def _plan(df) -> str:
     """Rendered executed plan, for partial-aggregate facts only (node types
     are checked with the ``plan_nodes`` walker)."""

@@ -161,13 +161,13 @@ def test_g7_span_contract(spark):
     the spans column is byte-identical — spans always carry the pre-merge
     marker-based segmentation, and post-merge texts are exactly
     pyref.g7_merge(pre-merge texts)."""
-    from ocrspark.pipeline import extract
+    from ocrspark.assemble import assemble
 
     docs = generate_docs(spark, 60, seed=21)
-    on = extract(docs, merge=True).select(
+    on = assemble(segment(stage1(docs), merge=True)).select(
         "doc_id", "task_number", "task_text", "was_merged",
         F.to_json("spans").alias("sj")).collect()
-    off = extract(docs, merge=False).select(
+    off = assemble(segment(stage1(docs), merge=False)).select(
         "doc_id", "task_number", "task_text",
         F.to_json("spans").alias("sj")).collect()
     on_by_key = {(r.doc_id, r.task_number): r for r in on}

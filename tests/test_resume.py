@@ -71,6 +71,37 @@ def test_checkpoint_lineage_and_metrics(spark, tmp_path):
     assert sum(r.doc_count for r in rows) == ext.select("doc_id").distinct().count()
 
 
+def test_corrupt_checkpoint_fails_loudly(spark, tmp_path):
+    """An unreadable checkpoint part is a fault, not "no checkpoints":
+    resuming must raise instead of silently re-running landed batches.
+    A fresh store still resumes from nothing."""
+    import pytest
+
+    docs = generate_docs(spark, 20, seed=7)
+    store = ParquetStore(str(tmp_path / "store"))
+    assert store.read_checkpoints(spark) is None
+    r = run_resumable(spark, docs, store, buckets=4, batches=2)
+    assert r["batches_run"] == 2
+    part = sorted((tmp_path / "store" / "checkpoints").glob("*.parquet"))[0]
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_resumable(spark, docs, store, buckets=4, batches=2)
+
+
+def test_batch_without_output_still_checkpoints(spark, tmp_path):
+    """A first batch that lands no row leaves no data file to read back:
+    its buckets are checkpointed with an unverified (NULL) landed count."""
+    docs = generate_docs(spark, 4, seed=8).withColumn(
+        "spans", F.slice("spans", 1, 0))
+    store = ParquetStore(str(tmp_path / "store"))
+    r = run_resumable(spark, docs, store, buckets=2, batches=1)
+    assert r["batches_run"] == 1
+    rows = store.read_checkpoints(spark).collect()
+    assert {row.bucket for row in rows} == {0, 1}
+    assert all(row.task_count == 0 and row.landed_task_count is None
+               for row in rows)
+
+
 def _iceberg_jar():
     import glob
     import os
