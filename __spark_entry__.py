@@ -438,9 +438,9 @@ def _q_sessionize_events(spark, sf_dir):
 
 
 def _q_windowed_counts(spark, sf_dir):
-    """Tumbling-window event counts (streaming.windowed_event_counts shape,
-    exact-distinct variant so the DuckDB oracle matches; NTZ-formatted
-    window start avoids timezone coupling)."""
+    """Tumbling-window event counts per event_type (exact distinct users
+    so the DuckDB oracle matches; NTZ-formatted window start avoids
+    timezone coupling)."""
     e = _tbl(spark, sf_dir, "events")
     win = F.window(F.col("ts"), "1 hour")
     return e.groupBy(win.alias("win"), "event_type").agg(

@@ -49,10 +49,13 @@ def sessionize(flat: DataFrame) -> DataFrame:
     (a marker row increments task_seq at its own row, so the current task
     began at the last marker offset; a solution start belongs to the
     current task iff it came after that marker — or any solution start at
-    all while still in the pre-marker task 0).  Offsets are unique per
-    doc and marker/solution patterns are mutually exclusive, so ties
-    cannot occur.  Equivalence to the original per-task window form is
-    pinned by test_in_solution_single_sort_equals_per_task_window."""
+    all while still in the pre-marker task 0).  Marker/solution patterns
+    are mutually exclusive, and offsets are ASSUMED unique per doc (the
+    generated corpus holds this; nothing checks it): with duplicate
+    offsets the window order on ties is arbitrary and the result diverges
+    from pyref's stable sort (ROADMAP direction 2).  Equivalence to the
+    original per-task window form is pinned by
+    test_in_solution_single_sort_equals_per_task_window."""
     w_doc = Window.partitionBy("doc_id").orderBy("offset")
     prior = w_doc.rowsBetween(Window.unboundedPreceding, -1)
     cand = rules.marker_candidate_number(F.col("kind"), F.col("text"))

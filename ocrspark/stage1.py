@@ -12,7 +12,9 @@ Two interchangeable implementations with identical semantics:
   shape; also where a real binary-PDF parse would live),
 * ``recover_native`` — pure catalyst expressions (JVM codegen, no Python
   worker round-trip).  The pipeline defaults to native for throughput; the
-  Arrow stage is exercised by tests and selectable via ``arrow=True``.
+  Arrow stage is selected with ``arrow=True``, and the declared query
+  ``pipeline_extract_tasks_arrow`` and the ``bench.py`` row
+  ``extract_arrow_stage1`` keep it in use.
 
 Both are narrow (no shuffle).
 """

@@ -1,15 +1,17 @@
-"""Structured Streaming surface.
+"""Streaming ingestion dedup (SURVEY.md section 2.11).
 
 The extraction engine itself is batch (the reference is a batch job per
 document; resumability is checkpointed batch, SURVEY.md section 2.10).  The
-streaming module covers the ingestion side a live corpus would need:
+one streaming operator the survey names is ingestion dedup, in its two
+shapes, both keyed on the canonical-text fingerprint of
+``ops.dedup.canonical_fp``:
 
-* ``stream_extract`` — the SAME extraction pipeline bound to a file-source
-  stream of span-table parquet: Structured Streaming replays the identical
-  logical plan per micro-batch (foreachBatch), reusing the batch writer, so
-  the batch/streaming split costs no second implementation.
-* ``windowed_event_counts`` — watermarked sliding-window aggregation over an
-  event stream (late-data handling demo on the driver's `events` shape).
+* ``dedup_stream`` — bounded state: ``dropDuplicatesWithinWatermark``
+  drops a duplicate that arrives within the watermark horizon of its
+  first copy.
+* ``dedup_ingest`` — full history: each micro-batch is anti-joined
+  (``landed_anti_join``) against the landed corpus itself, so the output
+  is the state.
 
 Both run under ``trigger(availableNow=True)`` in tests (bounded drain).
 """
@@ -21,147 +23,6 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_BUCKETS
 from .io import _dir_has_files
-from .pipeline import extract
-from .schema import DOCS_SCHEMA
-
-
-def stream_extract(spark: SparkSession, input_dir: str, out_dir: str,
-                   checkpoint_dir: str):
-    """File-source streaming extraction: each micro-batch of new doc files
-    runs the batch pipeline and appends to the output parquet."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        extract(batch_df).write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-SESSION_GAP_MS = 1_800_000  # 30 min, same as the batch sessionization
-
-
-def sessionize_stream(events: DataFrame, gap_ms: int = SESSION_GAP_MS,
-                      late_policy: str = "clamp"):
-    """Custom stateful streaming operator: per-user session numbering via
-    ``applyInPandasWithState`` (the sanctioned stateful-UDF surface).
-
-    State per user = (last event ms, running session counter); each
-    micro-batch's events extend the numbering exactly like the batch
-    ``w2`` sessionization (gap > 30 min opens a new session).  The batch
-    inside the group is vectorized numpy (no per-row Python loop).
-
-    Out-of-order input is OBSERVABLE, never silently misnumbered: an event
-    arriving in a later micro-batch with ms < state.last_ms is late, flagged
-    ``is_late`` in the output, and handled per ``late_policy``:
-
-    * ``"clamp"`` (default): the late event's time is clamped to the state
-      floor, so it joins the session that was active at state.last_ms and
-      the state never regresses (the pre-fix behavior regressed last_ms,
-      corrupting subsequent gap computation).
-    * ``"drop"``: late events are dead-lettered — emitted with
-      ``session_seq = -1`` and excluded from numbering and state.
-
-    Events that arrive in the correct micro-batch are never late (within a
-    batch the group is sorted here); production pairs this with a
-    watermark-delayed source to bound how late an event can be.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    if late_policy not in ("clamp", "drop"):
-        raise ValueError(f"late_policy must be clamp|drop, got {late_policy!r}")
-
-    out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ms", T.LongType()),
-        T.StructField("session_seq", T.LongType()),
-        T.StructField("is_late", T.BooleanType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("last_ms", T.LongType()),
-        T.StructField("seq", T.LongType()),
-    ])
-
-    def fn(key, pdfs, state: GroupState):
-        last_ms, seq = state.get if state.exists else (None, 0)
-        rows = pd.concat(list(pdfs)).sort_values(["ms", "event_id"])
-        ms = rows["ms"].to_numpy()
-        if not len(ms):
-            return
-        floor = last_ms  # None on first sight of the user
-        late = ms < floor if floor is not None else np.zeros(len(ms), bool)
-        min_sentinel = np.iinfo(np.int64).min // 2
-
-        def _number(xs, first_is_new_user):
-            prev = np.concatenate(
-                [[floor if floor is not None else min_sentinel], xs[:-1]]
-            )
-            new = (xs - prev) > gap_ms
-            if first_is_new_user:
-                new[0] = True
-            return seq + np.cumsum(new.astype(np.int64))
-
-        if late_policy == "drop":
-            keep = ~late
-            seqs = np.full(len(ms), -1, dtype=np.int64)
-            ms_k = ms[keep]
-            if len(ms_k):
-                seqs_k = _number(ms_k, floor is None)
-                state.update((int(ms_k[-1]), int(seqs_k[-1])))
-                seqs[keep] = seqs_k
-        else:  # clamp: late events join the session active at the floor
-            ms_eff = np.maximum(ms, floor) if floor is not None else ms
-            seqs = _number(ms_eff, floor is None)
-            state.update((int(ms_eff[-1]), int(seqs[-1])))
-        yield pd.DataFrame({
-            "user_id": np.int64(key[0]),
-            "event_id": rows["event_id"].to_numpy(),
-            "ms": ms,
-            "session_seq": seqs,
-            "is_late": late,
-        })
-
-    prepared = events.select(
-        F.col("user_id").cast("long"),
-        F.col("event_id").cast("long"),
-        F.unix_millis(F.col("ts").cast("timestamp_ltz")).alias("ms"),
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def windowed_event_counts(events: DataFrame, window: str = "10 minutes",
-                          slide: str | None = None,
-                          watermark: str = "30 minutes") -> DataFrame:
-    """Watermarked (sliding) window counts per event_type.
-
-    ``events`` may be a streaming DataFrame (readStream) or batch — the same
-    expression works for both (batch ignores the watermark).
-    """
-    # cast first, watermark second, and reference the *watermarked* column
-    # bare inside window() — any further cast strips the event-time tag
-    df = events.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-        "ts", watermark
-    )
-    ts = F.col("ts")
-    w = F.window(ts, window, slide) if slide else F.window(ts, window)
-    return df.groupBy(w.alias("win"), "event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.approx_count_distinct("user_id").alias("approx_users"),
-    )
 
 
 def dedup_stream(docs: DataFrame, ts_col: str = "ingested_at",

@@ -24,8 +24,12 @@ scaling, not who happened to win the floating-thread lottery — leaving
 shared memory bandwidth as the only cross-executor channel, exactly the
 channel a multi-NODE cluster does not share (judge r5 stretch item).
 
+Every JVM runs ``scripts/scaling_job.py`` (the job ``run_scaling.py``
+times), given its shard as ``shard n_shards``.
+
 Usage: python scripts/multi_executor_bench.py [n_docs] [cores_per_exec] [pin]
-Prints one JSON line; appends a section to BENCH/BASELINE.md.
+Builds dist/ocrspark.zip, prints one JSON line, appends a section to
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -36,8 +40,10 @@ import sys
 import time
 from pathlib import Path
 
+from run_scaling import build_zip
+
 REPO = Path(__file__).resolve().parents[1]
-JOB = REPO / "scripts" / "shard_job.py"
+JOB = REPO / "scripts" / "scaling_job.py"
 
 
 def submit(cores: int, n_docs: int, shard: int, n_shards: int,
@@ -82,10 +88,15 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     cores = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     pin = len(sys.argv) > 3 and sys.argv[3] == "pin"
+    build_zip()
     best1 = best4 = None
     for _ in range(2):  # interleaved repeats, keep best (noisy host)
+        # unsharded wave first: it alone writes the corpus cache, which the
+        # four concurrent shard jobs then only read (no write race)
         r1 = run_wave(cores, n_docs, [(0, 1)], pin=pin)
         r4 = run_wave(cores, n_docs, [(k, 4) for k in range(4)], pin=pin)
+        assert (r4["n_docs"], r4["n_spans"]) == (r1["n_docs"], r1["n_spans"]), \
+            ("shards do not partition the corpus", r1, r4)
         if best1 is None or r1["wall_sec"] < best1["wall_sec"]:
             best1 = r1
         if best4 is None or r4["wall_sec"] < best4["wall_sec"]:
@@ -115,11 +126,14 @@ def main() -> None:
 The cluster-faithful measurement: executors are separate JVMs.  One
 spark-submit over the full {n_docs}-doc corpus vs four concurrent
 spark-submits over disjoint hash quarters (separate heaps/GC, shared host
-CPUs) — the makespan of the wave is the 4N wall.  Best of 2 interleaved
-repeats; includes per-job JVM startup+warmup (disadvantaging the 4N wave,
-i.e. this efficiency is conservative).  Wall = makespan of the TIMED
-region across the wave's jobs (JVM startup excluded — a cluster amortizes
-it; `wave_sec` including startup is shown in the JSON).
+CPUs) — the makespan of the wave is the 4N wall.  Every job is
+`scripts/scaling_job.py`, the same job `run_scaling.py` times, with the
+same protocol: an untimed JIT warmup, then the best of `TIMED_RUNS`
+in-JVM timed runs (the JVM's own CPU time alongside).  Wall = makespan of
+the jobs' TIMED regions across the wave (JVM startup and warmup excluded —
+a cluster amortizes them; `wave_sec` including both is shown in the JSON).
+Best of 2 interleaved repeats of the two waves; the shards' summed docs
+and spans equal the 1-executor run's (checked).
 
 | setup | total docs | wall s (makespan) | docs/sec |
 |---|---|---|---|

@@ -1,11 +1,13 @@
 #!/usr/bin/env python
 """Scaling-efficiency evidence run (north rule: >=0.8 between N and 4N).
 
-Builds dist/ocrspark.zip, runs the extraction job via spark-submit
---py-files at local[8] (N) and local[32] (4N) on the identical cached
-corpus, and writes the results table to BENCH/BASELINE.md.
+Builds dist/ocrspark.zip, runs the extraction job (scripts/scaling_job.py)
+via spark-submit --py-files at each parallelism level on the identical
+cached corpus, and prints one JSON line.  With the default levels
+(local[4]/local[16] and local[8]/local[32] N/4N pairs) it also writes the
+results table to BENCH/BASELINE.md.
 
-Usage: python scripts/run_scaling.py [n_docs]
+Usage: python scripts/run_scaling.py [n_docs] [levels, e.g. 1,4]
 """
 
 from __future__ import annotations

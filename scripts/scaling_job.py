@@ -1,8 +1,16 @@
 #!/usr/bin/env python
-"""The spark-submit job used for the N vs 4N scaling evidence.
+"""The spark-submit job behind both N vs 4N scaling harnesses.
 
 Reads the cached deterministic corpus (generating it on first use), runs the
 full extraction pipeline with an aggregate sink, prints one JSON line.
+``run_scaling.py`` runs it whole at each thread level;
+``multi_executor_bench.py`` runs one copy per executor JVM, each over a
+disjoint hash shard of the corpus.
+
+Usage: scaling_job.py [n_docs] [shard n_shards]
+  With ``shard n_shards`` the job keeps only the docs with
+  ``pmod(xxhash64(doc_id), n_shards) == shard`` (before the warmup) and
+  reports that shard's own doc count as ``n_docs``.
 
 Measurement discipline for a noisy shared-VM host:
   * one untimed warmup pass (JIT) on a 20% hash slice;
@@ -44,6 +52,7 @@ def _jvm_cpu_sec(spark) -> float:
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
+    shard, n_shards = (int(a) for a in sys.argv[2:4]) if len(sys.argv) > 3 else (0, 1)
     spark = SparkSession.builder.appName("ocrspark-scaling").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
@@ -55,6 +64,9 @@ def main() -> None:
         generate_docs(spark, n_docs, seed=42, fat_doc_rate=0.001,
                       partitions=128).write.mode("overwrite").parquet(str(cache))
     docs = spark.read.parquet(str(cache))
+    if n_shards > 1:
+        docs = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)) == shard)
+        n_docs = docs.count()
     # JIT warmup, untimed (a long-lived cluster job amortizes this to zero)
     warm = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(5)) == 0)
     extract(warm).agg(F.sum(F.size("spans")),

@@ -1,14 +1,19 @@
-"""Streaming (availableNow drain) + observe-metrics tests."""
+"""Streaming ingestion dedup (availableNow drain) + observe-metrics tests.
+
+Covers both ingestion dedup shapes of ``ocrspark.streaming``: the
+watermark-bounded ``dedup_stream`` (first-seen wins across micro-batches)
+and the full-history ``dedup_ingest`` (replay-safe, fail-loud on a corrupt
+landed corpus, and an O(batch) anti-join plan on the bucketed table),
+plus the ``metrics.observed`` end-of-pipeline counters.
+"""
 
 import os
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from ocrspark.corpus import generate_docs
 from ocrspark.metrics import observed
 from ocrspark.pipeline import extract
-from ocrspark.streaming import (sessionize_stream, stream_extract,
-                                windowed_event_counts)
 
 
 def test_observed_metrics(spark):
@@ -20,27 +25,6 @@ def test_observed_metrics(spark):
     assert m["docs"] <= 15 and m["docs"] > 0
     assert m["spans"] > m["tasks"]
     assert m["points_total"] > 0
-
-
-def test_stream_extract_matches_batch(spark, tmp_path):
-    docs = generate_docs(spark, 25, seed=11)
-    in_dir, out_dir, cp = (str(tmp_path / d) for d in ("in", "out", "cp"))
-    docs.write.parquet(in_dir)
-
-    q = stream_extract(spark, in_dir, out_dir, cp)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir).select(
-        "doc_id", "task_number", "points", F.to_json("spans").alias("sj"))
-    exp = extract(spark.read.parquet(in_dir)).select(
-        "doc_id", "task_number", "points", F.to_json("spans").alias("sj"))
-    assert got.count() == exp.count() > 0
-    assert got.exceptAll(exp).count() == 0
-
-    # resume: no new files -> drain produces nothing new
-    q2 = stream_extract(spark, in_dir, out_dir, cp)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == exp.count()
 
 
 def test_dedup_stream_first_seen_wins(spark, tmp_path):
@@ -223,131 +207,6 @@ def test_dedup_ingest_bucketed_landed(spark, tmp_path, plan_nodes):
         assert "LeftAnti" in plan, plan
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization across MULTIPLE micro-batches
-    (state carry-over) equals the batch window sessionization."""
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    e = events.select("user_id", "event_id", "ts").withColumn(
-        "ms", F.unix_millis(F.col("ts").cast("timestamp_ltz"))
-    )
-    med = e.agg(F.expr("percentile(ms, 0.5)")).first()[0]
-
-    in_dir = tmp_path / "sess_in"
-    in_dir.mkdir()
-    for i, part in enumerate([e.filter(F.col("ms") <= med),
-                              e.filter(F.col("ms") > med)]):
-        tmp = tmp_path / f"half{i}"
-        part.select("user_id", "event_id", "ts").coalesce(1).write.parquet(str(tmp))
-        src = next(p for p in tmp.iterdir() if p.name.endswith(".parquet"))
-        dst = in_dir / f"{i}.parquet"
-        src.rename(dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
-    schema = "user_id long, event_id long, ts timestamp"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(in_dir)))
-    q = (sessionize_stream(stream).writeStream.format("memory")
-         .queryName("sess_stream").outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = {(r.user_id, r.event_id): r.session_seq
-           for r in spark.table("sess_stream").collect()}
-
-    w = Window.partitionBy("user_id").orderBy("ms", "event_id")
-    new_s = F.when(
-        (F.col("ms") - F.lag("ms").over(w) > 1_800_000)
-        | F.lag("ms").over(w).isNull(), 1,
-    ).otherwise(0)
-    exp_df = e.withColumn(
-        "session_seq",
-        F.sum(new_s).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    exp = {(r.user_id, r.event_id): r.session_seq for r in exp_df.collect()}
-    assert len(got) == len(exp) > 0
-    assert got == exp
-
-
-def test_windowed_event_counts_batch(spark):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    out = windowed_event_counts(events, window="1 hour").collect()
-    assert len(out) > 0
-    assert sum(r.n_events for r in out) == events.count()
-
-
-def test_windowed_event_counts_streaming(spark, tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    in_dir = str(tmp_path / "ev")
-    events.write.parquet(in_dir)
-    stream = spark.readStream.schema(events.schema).parquet(in_dir)
-    agg = windowed_event_counts(stream, window="1 hour")
-    q = (agg.writeStream.format("memory").queryName("wincounts")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    # append mode only emits windows older than the watermark; with a bounded
-    # drain the final (max-ts) windows stay open — totals are a lower bound
-    got = spark.sql("select sum(n_events) s from wincounts").collect()[0].s
-    assert got is None or got <= events.count()
-
-
-def _drive_two_batches(spark, tmp_path, batches, name, **kw):
-    """Write each batch as one parquet file with increasing mtime, drain with
-    maxFilesPerTrigger=1 (one micro-batch per file), return output rows."""
-    import time
-
-    in_dir = tmp_path / f"{name}_in"
-    in_dir.mkdir()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "user_id long, event_id long, ts timestamp")
-        tmp = tmp_path / f"{name}_b{i}"
-        df.coalesce(1).write.parquet(str(tmp))
-        src = next(p for p in tmp.iterdir() if p.name.endswith(".parquet"))
-        dst = in_dir / f"{i}.parquet"
-        src.rename(dst)
-        os.utime(dst, (2_000_000 + i * 1000, 2_000_000 + i * 1000))
-    schema = "user_id long, event_id long, ts timestamp"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(in_dir)))
-    q = (sessionize_stream(stream, **kw).writeStream.format("memory")
-         .queryName(name).outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    return {r.event_id: r for r in spark.table(name).collect()}
-
-
-def test_sessionize_stream_late_events(spark, tmp_path):
-    """An event arriving in a LATER micro-batch with ms < state.last_ms must
-    be flagged, never silently misnumbered (the pre-fix behavior regressed
-    state.last_ms and folded the late event in with no trace)."""
-    from datetime import datetime, timezone
-
-    def t(minutes):
-        return datetime.fromtimestamp(minutes * 60, tz=timezone.utc)
-
-    # batch 0: events at minute 10 and 20 (one session);
-    # batch 1: LATE event at minute 5, then minute 60 (gap 40 > 30 -> new
-    # session) — all for user 1
-    batches = [
-        [(1, 100, t(10)), (1, 101, t(20))],
-        [(1, 102, t(5)), (1, 103, t(60))],
-    ]
-
-    # clamp: late event joins the session active at the state floor (seq 1),
-    # is_late=True; state does not regress so event 103 opens session 2
-    got = _drive_two_batches(spark, tmp_path, batches, "sess_clamp",
-                             late_policy="clamp")
-    assert {k: (v.session_seq, v.is_late) for k, v in got.items()} == {
-        100: (1, False), 101: (1, False), 102: (1, True), 103: (2, False),
-    }
-
-    # drop: late event dead-lettered with session_seq=-1, excluded from
-    # numbering and state
-    got = _drive_two_batches(spark, tmp_path, batches, "sess_drop",
-                             late_policy="drop")
-    assert {k: (v.session_seq, v.is_late) for k, v in got.items()} == {
-        100: (1, False), 101: (1, False), 102: (-1, True), 103: (2, False),
-    }
 
 
 def test_dedup_ingest_zero_survivor_first_batch(spark, tmp_path):
