@@ -49,16 +49,14 @@ CATALOG_MAX_TASKS_PER_EXAM = 50_000
 CATALOG_MAX_EXAMS_PER_SUBJECT = 10_000
 
 
-def exams_catalog(extractions: DataFrame,
-                  max_tasks_per_exam: int = CATALOG_MAX_TASKS_PER_EXAM,
-                  ) -> DataFrame:
+def exams_catalog(extractions: DataFrame) -> DataFrame:
     """extractions -> one row per (subject, exam_version) with ordered tasks,
     source_subject_code, and the exam's observed source codes / topics.
 
     Per-exam task volume is guarded BEFORE the nested row is built: a
     partial-agg ``groupBy.count`` (hot keys collapse map-side, the
     ``cap_by_key`` argument) feeds an in-plan ``raise_error`` when any
-    (subject, exam_version) exceeds ``max_tasks_per_exam`` — the giant
+    (subject, exam_version) exceeds ``CATALOG_MAX_TASKS_PER_EXAM`` — the giant
     collect_list row is never materialized.  The count join-back is
     null-safe so NULL keys group exactly like the aggregation's."""
     media_refs = F.transform(
@@ -89,12 +87,12 @@ def exams_catalog(extractions: DataFrame,
         .agg(F.count(F.lit(1)).alias("_n"))
         .select(
             F.when(
-                F.col("_n") > max_tasks_per_exam,
+                F.col("_n") > CATALOG_MAX_TASKS_PER_EXAM,
                 F.raise_error(F.concat(
                     F.lit("exams_catalog: (subject, exam_version)=("),
                     F.col("subject"), F.lit(", "), F.col("exam_version"),
                     F.lit(") has "), F.col("_n").cast("string"),
-                    F.lit(f" tasks > cap {max_tasks_per_exam}"),
+                    F.lit(f" tasks > cap {CATALOG_MAX_TASKS_PER_EXAM}"),
                 )).cast("string"),
             ).otherwise(F.col("subject")).alias("_g_subject"),
             F.col("exam_version").alias("_g_exam_version"),
@@ -122,9 +120,7 @@ def exams_catalog(extractions: DataFrame,
 
 
 def subjects_catalog(per_exam: DataFrame,
-                     ignored: DataFrame | None = None,
-                     max_exams_per_subject: int =
-                     CATALOG_MAX_EXAMS_PER_SUBJECT) -> DataFrame:
+                     ignored: DataFrame | None = None) -> DataFrame:
     """exams_catalog rows -> one row per subject (the exams.json outer
     value): alternate_codes, topics (minus ignored), ignored_topics, exams.
 
@@ -135,7 +131,8 @@ def subjects_catalog(per_exam: DataFrame,
     ALREADY-AGGREGATED row per (subject, exam_version), each bounded by
     ``exams_catalog``'s task cap, so the map entries — not their payload
     — are the skew axis here): a subject exceeding
-    ``max_exams_per_subject`` versions raises in-plan with the key named.
+    ``CATALOG_MAX_EXAMS_PER_SUBJECT`` versions raises in-plan with the key
+    named.
     """
     per_subject = per_exam.groupBy("subject").agg(
         F.array_sort(
@@ -170,12 +167,12 @@ def subjects_catalog(per_exam: DataFrame,
     per_subject = per_subject.withColumn(
         "exams",
         F.when(
-            F.size(F.map_keys(F.col("exams"))) > max_exams_per_subject,
+            F.size(F.map_keys(F.col("exams"))) > CATALOG_MAX_EXAMS_PER_SUBJECT,
             F.raise_error(F.concat(
                 F.lit("subjects_catalog: subject "), F.col("subject"),
                 F.lit(" has "),
                 F.size(F.map_keys(F.col("exams"))).cast("string"),
-                F.lit(f" exam versions > cap {max_exams_per_subject}"),
+                F.lit(f" exam versions > cap {CATALOG_MAX_EXAMS_PER_SUBJECT}"),
             )),
         ).otherwise(F.col("exams")),
     )

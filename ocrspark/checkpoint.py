@@ -3,15 +3,17 @@
 Replaces the reference's ``progress.json`` status lines
 (/root/reference/scripts/utils.py:22-66, polled by the GUI in
 app/App.cpp:460-586) with a durable checkpoint table: one row per completed
-doc-bucket carrying lineage (run id, input snapshot) and metrics (doc / task /
-span counts).
+doc-bucket carrying lineage (run id, input snapshot, the bucket count it was
+written under) and metrics (doc / task / span counts).
 
 Resume semantics: work is partitioned into ``buckets`` by hash(doc_id)
 (Iceberg ``bucket(N, doc_id)`` parity) and processed in ``batches`` groups of
 buckets.  Each batch is one Spark job: filter -> extract -> idempotent
 per-bucket overwrite -> checkpoint append.  On restart, completed buckets are
 anti-joined away and only pending buckets run; a re-run of a completed bucket
-is harmless (same deterministic output, dynamic-partition overwrite).
+is harmless (same deterministic output, dynamic-partition overwrite).  A
+bucket id names a doc set only under the count that wrote it, so a resume
+with a different ``buckets`` fails loudly.
 
 At cluster scale, batches bound the blast radius of a failure to one batch's
 work while keeping the job count low (buckets=1024, batches~32).
@@ -30,11 +32,28 @@ from .partitioning import with_bucket
 from .pipeline import extract
 
 
-def completed_buckets(spark: SparkSession, store) -> set[int]:
+def completed_buckets(spark: SparkSession, store, buckets: int) -> set[int]:
+    """Buckets the store's checkpoints record as done under ``buckets``.
+
+    Raises ValueError when a checkpoint row was written under another
+    bucket count: its bucket ids name other doc sets, so skipping them
+    would skip undone work and redo landed rows into other buckets.  A
+    NULL ``n_buckets`` comes from a release that did not record it and
+    is accepted as written under ``buckets``.
+    """
     cps = store.read_checkpoints(spark)
     if cps is None:
         return set()
-    return {r.bucket for r in cps.select("bucket").distinct().collect()}
+    if "n_buckets" not in cps.columns:
+        cps = cps.withColumn("n_buckets", F.lit(None).cast("int"))
+    rows = cps.select("bucket", "n_buckets").distinct().collect()
+    other = sorted({r.n_buckets for r in rows} - {None, buckets})
+    if other:
+        raise ValueError(
+            f"run_resumable: the store was checkpointed with buckets={other}, "
+            f"this run asks for buckets={buckets}; resume with the same "
+            "bucket count or start a fresh store")
+    return {r.bucket for r in rows}
 
 
 def run_resumable(
@@ -51,10 +70,14 @@ def run_resumable(
 
     ``max_batches`` stops after a prefix of batches: the tests use it to
     simulate a killed run, and perfbench's ``resume_store`` workload to
-    stop half way before resuming.
+    stop half way before resuming.  ``buckets`` must match the count the
+    store was checkpointed with (see ``completed_buckets``).
     """
+    if buckets < 1 or batches < 1:
+        raise ValueError(f"run_resumable: buckets={buckets} and "
+                         f"batches={batches} must both be >= 1")
     run_id = run_id or uuid.uuid4().hex[:12]
-    done = completed_buckets(spark, store)
+    done = completed_buckets(spark, store, buckets)
     pending = [b for b in range(buckets) if b not in done]
     if not pending:
         return {"run_id": run_id, "batches_run": 0, "buckets_done": sorted(done)}
@@ -110,6 +133,7 @@ def run_resumable(
                 F.col("landed_task_count").cast("long"),
                 F.lit(input_snapshot_id).alias("input_snapshot_id"),
                 F.current_timestamp().alias("completed_at"),
+                F.lit(buckets).alias("n_buckets"),
             )
             store.append_checkpoints(cp)
         finally:

@@ -222,11 +222,10 @@ def make_doc(seed: int, index: int, fat_doc_rate: float = 0.0,
     return doc_id, spans
 
 
-def _doc_batch(seed: int, idx: np.ndarray, fat_doc_rate: float,
-               portable: bool = False) -> pd.DataFrame:
+def _doc_batch(seed: int, idx: np.ndarray, fat_doc_rate: float) -> pd.DataFrame:
     rows = []
     for i in idx:
-        doc_id, spans = make_doc(seed, int(i), fat_doc_rate, portable)
+        doc_id, spans = make_doc(seed, int(i), fat_doc_rate)
         rows.append({
             "doc_id": doc_id,
             "spans": [
@@ -238,14 +237,14 @@ def _doc_batch(seed: int, idx: np.ndarray, fat_doc_rate: float,
 
 
 def generate_docs(spark, n_docs: int, seed: int = 42, fat_doc_rate: float = 0.0,
-                  partitions: int | None = None, portable: bool = False):
+                  partitions: int | None = None):
     """Distributed docs table: (doc_id, spans). No driver-side loop."""
     partitions = partitions or max(spark.sparkContext.defaultParallelism, 4)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield _doc_batch(seed, pdf["id"].to_numpy(), fat_doc_rate, portable)
+                yield _doc_batch(seed, pdf["id"].to_numpy(), fat_doc_rate)
 
     return (
         spark.range(0, n_docs, numPartitions=partitions)
@@ -254,8 +253,7 @@ def generate_docs(spark, n_docs: int, seed: int = 42, fat_doc_rate: float = 0.0,
 
 
 def expected_extractions(spark, n_docs: int, seed: int = 42,
-                         fat_doc_rate: float = 0.0, partitions: int | None = None,
-                         portable: bool = False):
+                         fat_doc_rate: float = 0.0, partitions: int | None = None):
     """Ground-truth extractions per the pyref spec (test oracle)."""
     partitions = partitions or max(spark.sparkContext.defaultParallelism, 4)
 
@@ -263,7 +261,7 @@ def expected_extractions(spark, n_docs: int, seed: int = 42,
         for pdf in batches:
             rows = []
             for i in pdf["id"].to_numpy():
-                doc_id, spans = make_doc(seed, int(i), fat_doc_rate, portable)
+                doc_id, spans = make_doc(seed, int(i), fat_doc_rate)
                 out = pyref.extract_doc(doc_id, spans)
                 for task in out.tasks:
                     rows.append({

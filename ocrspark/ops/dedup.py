@@ -123,18 +123,18 @@ def canonical_fp(text_col):
     return F.md5(_canon(text_col))
 
 
-def exact_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_groups(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by canonical-text md5 (hash groupBy)."""
     return (
-        docs.select(canonical_fp(F.col(text_col)).alias("fp"), "doc_id")
+        docs.select(canonical_fp(F.col("text")).alias("fp"), "doc_id")
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("dup_count"), F.min("doc_id").alias("keep_doc_id"))
     )
 
 
-def shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
+def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles with a 48-bit md5-prefix integer hash."""
-    grams = _word_grams(_words(F.col(text_col)), n)
+    grams = _word_grams(_words(F.col("text")), n)
     out = docs.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
     return out.withColumn("h", _h48("shingle"))
 
@@ -163,19 +163,18 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
 MAX_BUCKET = 256
 
 
-def lsh_candidate_pairs(signatures: DataFrame,
-                        max_bucket: int = MAX_BUCKET) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Self-join within (band_id, band_key) buckets; doc1 < doc2, distinct.
 
     Hot-bucket cap: a band key shared by a boilerplate-heavy cluster (common
     in web corpora) makes the within-bucket self-join quadratic — one
-    million-doc bucket is O(10^12) pairs.  Buckets larger than ``max_bucket``
+    million-doc bucket is O(10^12) pairs.  Buckets larger than ``MAX_BUCKET``
     are EXCLUDED from the pair join (the cap is explicit, not silent: a
     boilerplate cluster is the job of ``exact_groups``).  Sizes come from
     ``cap_by_key`` (groupBy partial agg + join-back), so the capping pass
     itself cannot straggle on the hot bucket it is dropping.
     """
-    kept = cap_by_key(signatures, ["band_id", "band_key"], max_bucket)
+    kept = cap_by_key(signatures, ["band_id", "band_key"], MAX_BUCKET)
     a = kept.alias("a")
     b = kept.alias("b")
     return (
@@ -186,7 +185,7 @@ def lsh_candidate_pairs(signatures: DataFrame,
     )
 
 
-def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float = 0.5) -> DataFrame:
+def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard on candidate pairs via shingle-set joins.
 
     Output keeps jaccard in integer basis points for exact comparison.
@@ -216,11 +215,10 @@ def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float = 0.5) -> D
     )
 
 
-def minhash_dedup(docs: DataFrame, text_col: str = "text",
-                  threshold: float = 0.5) -> DataFrame:
+def minhash_dedup(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> band join -> verify."""
     # Shingles feed 5 consumers, signatures 4: 8 corpus scans per call.
-    sh = shingles(docs, text_col)
+    sh = shingles(docs)
     pairs = lsh_candidate_pairs(minhash_signatures(sh))
     return jaccard_verify(pairs, sh, threshold)
 
@@ -228,19 +226,17 @@ def minhash_dedup(docs: DataFrame, text_col: str = "text",
 MAX_DF = 64
 
 
-def ngram_jaccard_dedup(docs: DataFrame, text_col: str = "text",
-                        threshold: float = 0.5,
-                        max_df: int = MAX_DF) -> DataFrame:
+def ngram_jaccard_dedup(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Sketch-free n-gram Jaccard near-dup pairs (rare-shingle filtering).
 
     The second classic candidate scheme next to MinHash banding: two docs
     are candidates iff they share at least one DISCRIMINATIVE shingle —
-    document frequency in [2, max_df].  Unlike MinHash (probabilistic
+    document frequency in [2, MAX_DF].  Unlike MinHash (probabilistic
     recall from 8 hashes), this finds EVERY pair sharing a rare shingle,
     at the cost of candidate volume growing with shingle co-occurrence.
 
     Scale shape: the df cap bounds the per-shingle self-join at
-    max_df^2 pairs (the same explicit hot-key policy as the band buckets
+    MAX_DF^2 pairs (the same explicit hot-key policy as the band buckets
     — ubiquitous boilerplate shingles carry no signal and are excluded;
     a pair is missed only if ALL its shared shingles are corpus-hot,
     which at jaccard>=0.5 means boilerplate best handled by
@@ -250,8 +246,8 @@ def ngram_jaccard_dedup(docs: DataFrame, text_col: str = "text",
     one task.
     """
     # Shingles feed the df cap and verify's 3 consumers: ~5 scans per call.
-    sh = shingles(docs, text_col)
-    rare = cap_by_key(sh, ["shingle"], max_df, min_n=2).select(
+    sh = shingles(docs)
+    rare = cap_by_key(sh, ["shingle"], MAX_DF, min_n=2).select(
         "doc_id", "shingle"
     )
     a = rare.select(F.col("doc_id").alias("doc1"), "shingle")
@@ -295,18 +291,17 @@ def _unpersist_tracked(spark_session, ids) -> None:
             r.unpersist(False)
 
 
-def _gram_occurrences(docs: DataFrame, text_col: str, n: int,
-                      max_df: int) -> DataFrame:
+def _gram_occurrences(docs: DataFrame, n: int) -> DataFrame:
     """Capped positional word n-gram occurrences: (doc_id, i, gram, h) —
     the shared candidate source of the exact-substring family (cross-doc
     pair runs AND within-doc self runs).  ``h`` is the 48-bit md5-prefix
     join key; ``gram`` rides along (post-cap volume only) for the
     verbatim verification downstream joins apply."""
-    grams = _word_grams(_words(F.col(text_col)), n)
+    grams = _word_grams(_words(F.col("text")), n)
     occ = docs.select(
         "doc_id", F.posexplode(grams).alias("i", "gram")
     ).withColumn("h", _h48("gram"))
-    return cap_by_key(occ, ["h"], max_df)
+    return cap_by_key(occ, ["h"], MAX_DF)
 
 
 def _chain_runs(coll: DataFrame, keys: list[str], n: int) -> DataFrame:
@@ -324,8 +319,7 @@ def _chain_runs(coll: DataFrame, keys: list[str], n: int) -> DataFrame:
     )
 
 
-def _substring_runs(docs: DataFrame, text_col: str, n: int,
-                    max_df: int) -> DataFrame:
+def _substring_runs(docs: DataFrame, n: int) -> DataFrame:
     """Maximal verbatim shared word runs between document pairs:
     (doc1, doc2, diag, run_tokens, min_i, max_i) — min_i/max_i are the
     run's first/last gram start positions in doc1 (doc2 positions follow
@@ -352,7 +346,7 @@ def _substring_runs(docs: DataFrame, text_col: str, n: int,
     join it guards.  The island window partitions by (pair, diagonal) —
     a key that cannot be corpus-hot after the cap.
     """
-    occ = _gram_occurrences(docs, text_col, n, max_df)
+    occ = _gram_occurrences(docs, n)
     a = occ.select(F.col("doc_id").alias("doc1"), F.col("i").alias("i"),
                    "h", "gram")
     b = occ.select(F.col("doc_id").alias("doc2"), F.col("i").alias("j"),
@@ -369,27 +363,28 @@ def _substring_runs(docs: DataFrame, text_col: str, n: int,
     return _chain_runs(coll, ["doc1", "doc2", "diag"], n)
 
 
-def substring_dup_spans(docs: DataFrame, text_col: str = "text",
-                        n: int = 8, max_df: int = MAX_DF,
-                        min_run_tokens: int = 8) -> DataFrame:
+SUBSTR_N = 8  # word n-gram width of the exact-substring runs
+SUBSTR_MIN_RUN_TOKENS = 8
+
+
+def substring_dup_spans(docs: DataFrame) -> DataFrame:
     """Exact-substring duplication between document pairs (the signal
     behind Lee et al. 2021's exact-substring dedup): (doc1, doc2, n_runs,
     max_run_tokens), where a run is a maximal verbatim shared word span
     (see ``_substring_runs`` for construction + scale shape; pairs are
-    kept when their longest run reaches ``min_run_tokens``).  The
+    kept when their longest run reaches ``SUBSTR_MIN_RUN_TOKENS``).  The
     cleaned-corpus twin is ``substring_dedup_keep``.
     """
-    runs = _substring_runs(docs, text_col, n, max_df)
+    runs = _substring_runs(docs, SUBSTR_N)
     return (
-        runs.filter(F.col("run_tokens") >= min_run_tokens)
+        runs.filter(F.col("run_tokens") >= SUBSTR_MIN_RUN_TOKENS)
         .groupBy("doc1", "doc2")
         .agg(F.count(F.lit(1)).alias("n_runs"),
              F.max("run_tokens").alias("max_run_tokens"))
     )
 
 
-def _merged_drop_intervals(docs: DataFrame, text_col: str, n: int,
-                           max_df: int, min_run_tokens: int,
+def _merged_drop_intervals(docs: DataFrame, n: int, min_run_tokens: int,
                            include_self: bool) -> DataFrame:
     """Per-doc merged drop intervals for the ExactSubstr keep ops:
     (doc_id, n_spans_dropped, n_tokens_dropped, drops: array<struct<s,e>>)
@@ -398,7 +393,7 @@ def _merged_drop_intervals(docs: DataFrame, text_col: str, n: int,
     within-doc later-copy ranges); overlapping/adjacent word-index ranges
     are merged into maximal intervals via the two-window gap-and-island
     pass (see the load-bearing ``distinct()`` comment)."""
-    runs = _substring_runs(docs, text_col, n, max_df)
+    runs = _substring_runs(docs, n)
     drops = runs.filter(F.col("run_tokens") >= min_run_tokens).select(
         F.col("doc2").alias("doc_id"),
         (F.col("min_i") - F.col("diag")).alias("s"),
@@ -406,7 +401,7 @@ def _merged_drop_intervals(docs: DataFrame, text_col: str, n: int,
     )
     if include_self:
         sdrops = (
-            _self_runs(docs, text_col, n, max_df)
+            _self_runs(docs, n)
             .filter(F.col("run_tokens") >= min_run_tokens)
             .select(
                 "doc_id",
@@ -450,9 +445,8 @@ def _merged_drop_intervals(docs: DataFrame, text_col: str, n: int,
     )
 
 
-def substring_dedup_keep(docs: DataFrame, text_col: str = "text",
-                         n: int = 8, max_df: int = MAX_DF,
-                         min_run_tokens: int = 8,
+def substring_dedup_keep(docs: DataFrame, n: int = SUBSTR_N,
+                         min_run_tokens: int = SUBSTR_MIN_RUN_TOKENS,
                          include_self: bool = False,
                          original_text: bool = False) -> DataFrame:
     """Exact-substring dedup OUTPUT (Lee et al. 2021): the cleaned corpus
@@ -488,14 +482,14 @@ def substring_dedup_keep(docs: DataFrame, text_col: str = "text",
     period.  With the default False, self-repeats are left to the
     statistical repetition filters (``textstats.gopher_quality``).
 
-    CAP EXEMPTION (by design): runs inherit ``max_df`` from
-    ``_gram_occurrences`` — a gram occurring at more than ``max_df``
+    CAP EXEMPTION (by design): runs inherit ``MAX_DF`` from
+    ``_gram_occurrences`` — a gram occurring at more than ``MAX_DF``
     positions corpus-wide never forms a run, so corpus-hot boilerplate
     spans are deliberately NOT cleaned here (the capped positional join
     is what makes the op scale).  Hot boilerplate is the job of
     ``textstats.strip_boilerplate_lines``; ``curate_clean_corpus`` chains
     the two in the right order (strip first, then ExactSubstr).  A
-    planted >max_df-hot span passing through unchanged is pinned by test.
+    planted >MAX_DF-hot span passing through unchanged is pinned by test.
 
     Scale shape: runs come from ``_substring_runs`` (capped verbatim
     positional join); interval merging is one window per (doc) — doc-keyed,
@@ -507,11 +501,10 @@ def substring_dedup_keep(docs: DataFrame, text_col: str = "text",
     docs pass through without being exploded.  A planted-duplicate corpus
     re-reports ZERO spans after this pass (tested).
     """
-    per_doc = _merged_drop_intervals(
-        docs, text_col, n, max_df, min_run_tokens, include_self)
+    per_doc = _merged_drop_intervals(docs, n, min_run_tokens, include_self)
     if original_text:
-        return _remove_spans_original(docs, text_col, per_doc)
-    base = docs.select("doc_id", _words(F.col(text_col)).alias("ws"))
+        return _remove_spans_original(docs, per_doc)
+    base = docs.select("doc_id", _words(F.col("text")).alias("ws"))
     out = base.join(per_doc, "doc_id", "left")
     kept = F.when(
         F.col("drops").isNull(), F.col("ws")
@@ -533,8 +526,7 @@ def substring_dedup_keep(docs: DataFrame, text_col: str = "text",
 SEG_PATTERN = r"[a-zA-Z0-9]+|[^a-zA-Z0-9]+"
 
 
-def _remove_spans_original(docs: DataFrame, text_col: str,
-                           per_doc: DataFrame) -> DataFrame:
+def _remove_spans_original(docs: DataFrame, per_doc: DataFrame) -> DataFrame:
     """Original-text-domain span removal for ``substring_dedup_keep``:
     cut the character ranges of the merged word-index drop intervals out
     of the raw text, byte-identical outside drops.
@@ -558,8 +550,8 @@ def _remove_spans_original(docs: DataFrame, text_col: str,
     bound as the interval merge itself.  Reassembly is one doc-keyed
     collect_list of (position, segment), sorted in-array.
     """
-    base = docs.select("doc_id", F.col(text_col).alias("_text"),
-                       _words(F.col(text_col)).alias("ws"))
+    base = docs.select("doc_id", F.col("text").alias("_text"),
+                       _words(F.col("text")).alias("ws"))
     joined = base.join(per_doc, "doc_id", "left")
     untouched = joined.filter(F.col("drops").isNull()).select(
         "doc_id",
@@ -613,14 +605,13 @@ def _remove_spans_original(docs: DataFrame, text_col: str,
     return untouched.unionByName(out_touched)
 
 
-def _self_runs(docs: DataFrame, text_col: str, n: int,
-               max_df: int) -> DataFrame:
+def _self_runs(docs: DataFrame, n: int) -> DataFrame:
     """Within-doc verbatim repeat runs: (doc_id, diag, run_tokens,
     min_i, max_i) — diag = j - i > 0 is the repeat offset; min_i/max_i
     are the EARLIER occurrence's gram positions (the later copy sits at
     i + diag).  Shares ``_gram_occurrences`` + ``_chain_runs`` with the
     cross-doc pair runs."""
-    occ = _gram_occurrences(docs, text_col, n, max_df)
+    occ = _gram_occurrences(docs, n)
     a = occ.select("doc_id", F.col("i").alias("i"), "h", "gram")
     b = occ.select("doc_id", F.col("i").alias("j"), "h",
                    F.col("gram").alias("gram2"))
@@ -633,9 +624,8 @@ def _self_runs(docs: DataFrame, text_col: str, n: int,
     return _chain_runs(coll, ["doc_id", "diag"], n)
 
 
-def substring_self_spans(docs: DataFrame, text_col: str = "text",
-                         n: int = 8, max_df: int = MAX_DF,
-                         min_run_tokens: int = 8) -> DataFrame:
+def substring_self_spans(docs: DataFrame, n: int = SUBSTR_N,
+                         min_run_tokens: int = SUBSTR_MIN_RUN_TOKENS) -> DataFrame:
     """Within-document exact repeats — the SELF half of Lee et al. 2021's
     ExactSubstr (their suffix-array pass finds duplicated spans anywhere,
     including inside one document: templated sections, copy-paste stutter,
@@ -655,7 +645,7 @@ def substring_self_spans(docs: DataFrame, text_col: str = "text",
     of corpus-hot grams, and the island window partitions by (doc,
     offset).  Verbatim-verified like the cross-doc runs.
     """
-    runs = _self_runs(docs, text_col, n, max_df)
+    runs = _self_runs(docs, n)
     return (
         runs.filter(F.col("run_tokens") >= min_run_tokens)
         .groupBy("doc_id")
@@ -664,7 +654,7 @@ def substring_self_spans(docs: DataFrame, text_col: str = "text",
     )
 
 
-def line_dedup_keep_first(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def line_dedup_keep_first(docs: DataFrame) -> DataFrame:
     """Corpus-GLOBAL exact line dedup, keep-first (the C4 §2.2 span-dedup
     policy at line granularity, Raffel et al. 2020): (doc_id, n_lines,
     n_lines_kept, kept_text) — every line whose canonical word sequence
@@ -698,7 +688,7 @@ def line_dedup_keep_first(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     lines = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("line_no", "line"),
     ).withColumn(
         "ckey",
         F.md5(F.array_join(_words(F.col("line")), " ")),
@@ -738,7 +728,11 @@ def line_dedup_keep_first(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+COMPONENTS_MAX_ITER = 25  # propagation rounds = graph diameter
+STAR_MAX_ITER = 30  # large-star/small-star rounds = O(log^2 n)
+
+
+def components(pairs: DataFrame) -> DataFrame:
     """Duplicate clusters from near-dup pairs: (doc_id, rep_id, cluster_size).
 
     The dedup pipeline's final step: connected components over the pair
@@ -756,7 +750,7 @@ def components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     row data.  localCheckpoint truncates lineage so plans stay constant
     per round; each round's blocks are freed once the next round has
     materialized and been convergence-checked (storage stays O(1) in
-    rounds, not O(max_iter)).
+    rounds, not O(COMPONENTS_MAX_ITER)).
     """
     spark = pairs.sparkSession
     edges, edge_ids = _tracked_local_ckpt(
@@ -771,7 +765,7 @@ def components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     new_ids: set[int] = set()
     changed = 1
     try:
-        for _ in range(max_iter):
+        for _ in range(COMPONENTS_MAX_ITER):
             neighbor = (
                 edges.join(labels, edges["a"] == labels["node"])
                 .select(F.col("b").alias("node"), "lab")
@@ -793,14 +787,14 @@ def components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
             if changed == 0:
                 break
         if changed != 0:
-            # NEVER return partial labels as if converged: a >max_iter-
+            # NEVER return partial labels as if converged: a longer-
             # diameter chain would silently split one component across
             # several rep_ids (under-dedup downstream).  Propagation rounds
             # = graph diameter; components_star needs O(log^2 n) rounds
             # regardless of diameter.
             raise RuntimeError(
-                f"components: no fixpoint after {max_iter} rounds — graph "
-                "diameter exceeds max_iter; raise max_iter or use "
+                f"components: no fixpoint after {COMPONENTS_MAX_ITER} rounds "
+                "— graph diameter exceeds COMPONENTS_MAX_ITER; use "
                 "components_star (logarithmic rounds)"
             )
     except BaseException:
@@ -858,7 +852,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
-def components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+def components_star(pairs: DataFrame) -> DataFrame:
     """Connected components via large-star/small-star alternation — the
     web-scale path (Kiveris et al., "Connected Components in MapReduce and
     Beyond": O(log^2 n) rounds vs. graph-diameter rounds for plain label
@@ -881,7 +875,7 @@ def components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
         # checkpoint, whose blocks are freed as soon as round 1 supersedes
         # it (inside the try so a failure here frees the edge blocks too)
         nodes, node_ids = _tracked_local_ckpt(_sym(e).select("u").distinct())
-        for _ in range(max_iter):
+        for _ in range(STAR_MAX_ITER):
             new_e, new_ids = _tracked_local_ckpt(_small_star(_large_star(e)))
             norm_old = e.select(F.greatest("u", "v").alias("u"),
                                 F.least("u", "v").alias("v")).distinct()
@@ -897,8 +891,8 @@ def components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
                 break
         if not stable:
             raise RuntimeError(
-                f"components_star: no edge-set fixpoint after {max_iter} "
-                "rounds (expected O(log^2 n)); raise max_iter"
+                f"components_star: no edge-set fixpoint after {STAR_MAX_ITER} "
+                "rounds (expected O(log^2 n))"
             )
     except BaseException:
         # same fail-path storage contract as ``components`` (ADVICE r4);
@@ -925,20 +919,18 @@ SIMHASH_BLOCKS = 4  # 4 x 8-bit blocks over the 32-bit simhash
 SIMHASH_MAX_HAMMING = 3  # pigeonhole: <=3 flipped bits leave >=1 block intact
 
 
-def simhash_near_dups(docs: DataFrame, text_col: str = "text",
-                      max_hamming: int = SIMHASH_MAX_HAMMING,
-                      max_bucket: int = MAX_BUCKET) -> DataFrame:
+def simhash_near_dups(docs: DataFrame) -> DataFrame:
     """SimHash near-duplicate pairs at scale shape (Charikar block trick).
 
     Candidates = pairs sharing at least one intact 8-bit block of the 32-bit
     simhash (equi-join on (block_id, block_val); exact for hamming <=
     SIMHASH_BLOCKS - 1 by pigeonhole) -> verify with bit_count(xor) <=
-    max_hamming.  Never all-pairs; hot block values (common in boilerplate
+    SIMHASH_MAX_HAMMING.  Never all-pairs; hot block values (common in boilerplate
     clusters) are capped like the MinHash bands (explicit, not silent —
     route oversized buckets to exact-group handling; ``cap_by_key`` keeps
     the capping pass itself skew-safe).
     """
-    sh = simhash(docs, text_col)
+    sh = simhash(docs)
     blocks = sh.select(
         "doc_id",
         "simhash",
@@ -955,7 +947,7 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text",
     ).select("doc_id", "simhash",
              F.col("b.block_id").alias("block_id"),
              F.col("b.block_val").alias("block_val"))
-    capped = cap_by_key(blocks, ["block_id", "block_val"], max_bucket)
+    capped = cap_by_key(blocks, ["block_id", "block_val"], MAX_BUCKET)
     a = capped.select(F.col("doc_id").alias("doc1"),
                       F.col("simhash").alias("sh1"), "block_id", "block_val")
     b = capped.select(F.col("doc_id").alias("doc2"),
@@ -967,12 +959,12 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text",
             "doc1", "doc2",
             F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))).alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """32-bit SimHash: per-bit majority vote over the low 32 bits of each
     word's ``_h48``.
 
@@ -981,7 +973,7 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     words = docs.select(
         "doc_id",
-        F.explode(_words(F.col(text_col))).alias("w"),
+        F.explode(_words(F.col("text"))).alias("w"),
     ).withColumn("h", _h48("w"))
     bit_sums = [
         F.sum(

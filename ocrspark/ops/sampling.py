@@ -16,9 +16,8 @@ from .dedup import (
 )
 
 SPLITS = [("train", 9800), ("val", 100), ("test", 100)]  # basis points
-PACK_BUCKETS = 64  # fixture/oracle default; pass n_buckets=None to scale
+PACK_BUCKETS = 64  # packing streams (part of the output contract)
 PACK_BUDGET = 8192  # tokens per shard
-PACK_TARGET_DOCS_PER_BUCKET = 262_144  # auto mode: ~256k docs/bucket
 
 
 def _hash_bp(key_col):
@@ -26,8 +25,8 @@ def _hash_bp(key_col):
     return _h48(key_col.cast("string")) % 10000
 
 
-def deterministic_split(docs: DataFrame, key_col: str = "doc_id") -> DataFrame:
-    """(key, split) train/val/test assignment by hash basis points.
+def deterministic_split(docs: DataFrame) -> DataFrame:
+    """(doc_id, split) train/val/test assignment by hash basis points.
 
     Unlike ``df.sample``/``randomSplit`` (partition-order- and
     seed-plumbing-dependent), the assignment is a pure function of the
@@ -35,27 +34,25 @@ def deterministic_split(docs: DataFrame, key_col: str = "doc_id") -> DataFrame:
     sizes are ``SPLITS`` basis points, which the DuckDB twin reads too.
     """
     assert sum(bp for _, bp in SPLITS) == 10000
-    bp = _hash_bp(F.col(key_col))
+    bp = _hash_bp(F.col("doc_id"))
     edge = 0
     expr = None
     for name, width in SPLITS:
         edge += width
         cond = bp < edge
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    return docs.select(key_col, expr.alias("split"))
+    return docs.select("doc_id", expr.alias("split"))
 
 
-def pack_shards(docs: DataFrame, key_col: str = "doc_id",
-                tokens_col: str = "n_tokens",
-                n_buckets: int | None = PACK_BUCKETS,
-                budget: int = PACK_BUDGET) -> DataFrame:
+def pack_shards(docs: DataFrame) -> DataFrame:
     """Concat-and-chunk sequence packing into fixed-token-budget shards.
 
-    (key, pack_bucket, shard_seq, offset_tokens): docs are hashed into
-    ``n_buckets`` independent packing streams (the scale unit — each
-    bucket packs in parallel; a single global order would serialize the
-    corpus through one partition), laid end to end in deterministic
-    key-hash order, and the token stream is cut every ``budget`` tokens —
+    (doc_id, pack_bucket, shard_seq, offset_tokens) from (doc_id,
+    n_tokens): docs are hashed into ``PACK_BUCKETS`` independent packing
+    streams (the scale unit — each bucket packs in parallel; a single
+    global order would serialize the corpus through one partition), laid
+    end to end in deterministic key-hash order, and the token stream is
+    cut every ``PACK_BUDGET`` tokens —
     the standard LLM-pretraining packing, where a document may span a
     shard boundary (consumers read on into shard_seq+1).  shard_seq is
     the shard holding the doc's FIRST token; offset_tokens its start
@@ -63,74 +60,57 @@ def pack_shards(docs: DataFrame, key_col: str = "doc_id",
     no sequential state, so the closed form is exact (greedy-with-burn
     packing would need a per-bucket fold and wastes tail capacity).
 
-    ``n_buckets`` is the parallelism knob AND part of the output contract
-    (assignments change with it, so pin it for reproducible corpora).
-    ``n_buckets=None`` derives it from corpus size —
-    ceil(n_docs / PACK_TARGET_DOCS_PER_BUCKET), one 1-row count — so a
-    10^12-doc corpus gets ~4M packing streams instead of a fixed 64-way
-    ceiling on the packing sort.
+    ``PACK_BUCKETS`` is the parallelism bound AND part of the output
+    contract: assignments change with it.
     """
-    import math
-
-    if n_buckets is None:
-        n_docs = docs.agg(F.count(F.lit(1))).first()[0]
-        n_buckets = max(1, math.ceil(n_docs / PACK_TARGET_DOCS_PER_BUCKET))
-
-    h = _h48(F.col(key_col).cast("string"))
+    h = _h48(F.col("doc_id").cast("string"))
     base = docs.select(
-        F.col(key_col), (h % n_buckets).alias("pack_bucket"),
-        h.alias("order_h"), F.col(tokens_col).cast("long").alias("t"),
+        F.col("doc_id"), (h % PACK_BUCKETS).alias("pack_bucket"),
+        h.alias("order_h"), F.col("n_tokens").cast("long").alias("t"),
     )
-    w = Window.partitionBy("pack_bucket").orderBy("order_h", key_col)
+    w = Window.partitionBy("pack_bucket").orderBy("order_h", "doc_id")
     cum_before = F.coalesce(
         F.sum("t").over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
     )
     return base.select(
-        key_col, "pack_bucket",
-        F.floor(cum_before / budget).cast("long").alias("shard_seq"),
-        (cum_before % budget).cast("long").alias("offset_tokens"),
+        "doc_id", "pack_bucket",
+        F.floor(cum_before / PACK_BUDGET).cast("long").alias("shard_seq"),
+        (cum_before % PACK_BUDGET).cast("long").alias("offset_tokens"),
     )
 
 
-def stratified_sample(docs: DataFrame, strata_col: str = "source",
-                      rates: DataFrame | dict | None = None,
-                      default_bp: int = 10000,
-                      key_col: str = "doc_id") -> DataFrame:
+def stratified_sample(docs: DataFrame, rates: dict[str, int]) -> DataFrame:
     """Per-stratum deterministic rate sampling — the C4/RefinedWeb "cap any
     single domain" rebalancing step, skew-free by construction.
 
-    A doc is kept iff hash_bp(key) < rate_bp(stratum): a pure function of
+    A doc is kept iff hash_bp(doc_id) < rate_bp(source): a pure function of
     the row (broadcast lookup of the tiny rates table + the same md5
     basis-point hash as ``deterministic_split``), so there is NO shuffle,
     no per-stratum sort, and a 10^11-doc stratum costs the same per row
     as a 10-doc one — unlike count-based per-stratum top-N, which needs a
     global rank per stratum (noted as the non-scale shape).  Strata
-    absent from ``rates`` fall back to ``default_bp`` (10000 = keep all).
+    absent from ``rates`` keep every doc (rate 10000).
     Rates are basis points in [0, 10000]; reproducible on any engine.
     """
-    if rates is None:
-        rates = {}
-    if isinstance(rates, dict):
-        # an empty dict must mean "every stratum at default_bp" — never a
-        # placeholder row (a real stratum named "" would get rate 0)
-        rates = docs.sparkSession.createDataFrame(
-            [(k, int(v)) for k, v in sorted(rates.items())],
-            f"{strata_col} string, rate_bp int",
-        )
-    bp = _hash_bp(F.col(key_col))
+    # an empty dict must mean "every stratum kept whole" — never a
+    # placeholder row (a real stratum named "" would get rate 0)
+    table = docs.sparkSession.createDataFrame(
+        [(k, int(v)) for k, v in sorted(rates.items())],
+        "source string, rate_bp int",
+    )
+    bp = _hash_bp(F.col("doc_id"))
     return (
-        docs.join(F.broadcast(rates), strata_col, "left")
+        docs.join(F.broadcast(table), "source", "left")
         .select(
-            key_col, strata_col,
+            "doc_id", "source",
             bp.alias("sample_bp"),
-            F.coalesce(F.col("rate_bp"), F.lit(default_bp)).alias("rate_bp"),
+            F.coalesce(F.col("rate_bp"), F.lit(10000)).alias("rate_bp"),
         )
         .withColumn("kept", (F.col("sample_bp") < F.col("rate_bp")).cast("int"))
     )
 
 
-def source_rollup(docs: DataFrame, strata_cols=("source", "lang"),
-                  text_col: str = "text") -> DataFrame:
+def source_rollup(docs: DataFrame) -> DataFrame:
     """Corpus-triage rollup per (source, lang): doc count, exact-duplicate
     involvement, token volume, mean quality — the table every curation
     pipeline starts its source review from.
@@ -143,9 +123,9 @@ def source_rollup(docs: DataFrame, strata_cols=("source", "lang"),
     corpus-hot key beyond fp, which the exact-dup op already handles.
     """
     keyed = docs.select(
-        *strata_cols, "doc_id",
-        canonical_fp(F.col(text_col)).alias("fp"),
-        _n_tokens(F.col(text_col)).cast("long").alias("n_tokens"),
+        "source", "lang", "doc_id",
+        canonical_fp(F.col("text")).alias("fp"),
+        _n_tokens(F.col("text")).cast("long").alias("n_tokens"),
     )
     from .textstats import quality_score
 
@@ -154,7 +134,7 @@ def source_rollup(docs: DataFrame, strata_cols=("source", "lang"),
     return (
         keyed.join(sizes, "fp")
         .join(q, "doc_id")
-        .groupBy(*strata_cols)
+        .groupBy("source", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum((F.col("fpn") > 1).cast("long")).alias("n_dup_involved"),
@@ -169,16 +149,14 @@ DECON_NGRAM = 8
 DECON_MAX_DF = 64
 
 
-def decontaminate(docs: DataFrame, text_col: str = "text",
-                  n: int = DECON_NGRAM,
-                  max_df: int = DECON_MAX_DF) -> DataFrame:
+def decontaminate(docs: DataFrame) -> DataFrame:
     """Train/test contamination report: (test_doc, train_doc, n_shared).
 
     The canonical eval-hygiene step: an eval ("test"/"val" split) document
-    sharing verbatim ``n``-gram spans with a training document signals
+    sharing verbatim ``DECON_NGRAM``-gram spans with a training document signals
     leakage.  Candidates come from an equi-join on the n-gram hash between
     the eval-side and train-side shingle sets — never all-pairs; grams
-    hotter than ``max_df`` documents carry no leakage signal (ubiquitous
+    hotter than ``DECON_MAX_DF`` documents carry no leakage signal (ubiquitous
     boilerplate) and are excluded by the same explicit df-cap policy as
     the dedup candidate joins (``cap_by_key``: groupBy partial agg +
     join-back, so the df pass itself cannot straggle on a hot gram).
@@ -187,12 +165,12 @@ def decontaminate(docs: DataFrame, text_col: str = "text",
     """
     split = deterministic_split(docs)
     sh = (
-        shingles(docs, text_col, n)
+        shingles(docs, DECON_NGRAM)
         .join(split, "doc_id")
         .select("doc_id", "split", "h")
         .distinct()
     )
-    capped = cap_by_key(sh, ["h"], max_df)
+    capped = cap_by_key(sh, ["h"], DECON_MAX_DF)
     ev = capped.filter(F.col("split") != "train").select(
         F.col("doc_id").alias("test_doc"), "h"
     )
@@ -215,21 +193,15 @@ def _uni_bigrams(text_expr):
     return F.concat(words, _word_grams(words, 2))
 
 
-def _gram_bucket(n_buckets: int):
-    return _h48(F.col("g")) % n_buckets
-
-
-def dsir_importance(docs: DataFrame, target: DataFrame,
-                    text_col: str = "text", key_col: str = "doc_id",
-                    n_buckets: int = DSIR_BUCKETS) -> DataFrame:
+def dsir_importance(docs: DataFrame, target: DataFrame) -> DataFrame:
     """DSIR-style hashed n-gram importance weights (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"):
-    per raw doc, (key, n_grams, dsir_score_e9, gumbel_e9).
+    per raw doc, (doc_id, n_grams, dsir_score_e9, gumbel_e9).
 
     ``dsir_score_e9`` is the doc's total log importance weight — the sum
     over its word uni+bigram occurrences of int64-scaled
     log(p_target(bucket) / p_raw(bucket)) under two add-one-smoothed
-    hashed bag-of-ngrams models (``n_buckets`` md5 buckets): one fitted
+    hashed bag-of-ngrams models (``DSIR_BUCKETS`` md5 buckets): one fitted
     on ``target`` (the distribution to select toward), one on ``docs``
     itself.  High score = target-like.  ``gumbel_e9`` is a deterministic
     hash-Gumbel perturbation (md5-derived uniform, two rounded lns) —
@@ -249,12 +221,12 @@ def dsir_importance(docs: DataFrame, target: DataFrame,
     The raw-side model join is inner-safe by construction (every scored
     bucket was counted in the raw fit).
     """
-    b = _gram_bucket(n_buckets)
+    b = _h48(F.col("g")) % DSIR_BUCKETS
     raw_b = docs.select(
-        F.col(key_col), F.explode(_uni_bigrams(F.col(text_col))).alias("g")
-    ).select(key_col, b.alias("b"))
+        F.col("doc_id"), F.explode(_uni_bigrams(F.col("text"))).alias("g")
+    ).select("doc_id", b.alias("b"))
     tgt_b = target.select(
-        F.explode(_uni_bigrams(F.col(text_col))).alias("g")
+        F.explode(_uni_bigrams(F.col("text"))).alias("g")
     ).select(b.alias("b"))
 
     cr = raw_b.groupBy("b").agg(F.count(F.lit(1)).alias("cr"))
@@ -264,9 +236,9 @@ def dsir_importance(docs: DataFrame, target: DataFrame,
 
     llr = F.round(
         F.log((F.coalesce(F.col("ct"), F.lit(0)) + 1).cast("double")
-              / (F.col("nt") + F.lit(n_buckets)).cast("double"))
+              / (F.col("nt") + F.lit(DSIR_BUCKETS)).cast("double"))
         - F.log((F.col("cr") + 1).cast("double")
-                / (F.col("nr") + F.lit(n_buckets)).cast("double")),
+                / (F.col("nr") + F.lit(DSIR_BUCKETS)).cast("double")),
         9,
     )
     model = (
@@ -275,7 +247,7 @@ def dsir_importance(docs: DataFrame, target: DataFrame,
         .select("b", F.round(llr * 1e9).cast("long").alias("llr_e9"))
     )
 
-    h6 = _h48(F.concat(F.col(key_col).cast("string"), F.lit(":gumbel"))) \
+    h6 = _h48(F.concat(F.col("doc_id").cast("string"), F.lit(":gumbel"))) \
         % 1_000_000
     u = (h6.cast("double") + F.lit(0.5)) / F.lit(1_000_000.0)
     gumbel_e9 = F.round(F.round(-F.log(F.round(-F.log(u), 9)), 9) * 1e9) \
@@ -283,7 +255,7 @@ def dsir_importance(docs: DataFrame, target: DataFrame,
 
     return (
         raw_b.join(F.broadcast(model), "b")
-        .groupBy(key_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum("llr_e9").cast("long").alias("dsir_score_e9"),
@@ -296,10 +268,7 @@ MIX_ALPHA_E2 = 50      # temperature exponent alpha = 0.50
 MIX_EPOCH_CAP_E2 = 400  # UniMax-style cap: <= 4.00 epochs of any source
 
 
-def mixture_weights(docs: DataFrame, strata_col: str = "source",
-                    text_col: str = "text",
-                    alpha_e2: int = MIX_ALPHA_E2,
-                    epoch_cap_e2: int = MIX_EPOCH_CAP_E2) -> DataFrame:
+def mixture_weights(docs: DataFrame) -> DataFrame:
     """Temperature-scaled source mixture weights with a UniMax epoch cap
     (Arivazhagan et al. 2019 temperature sampling; Chung et al. 2023
     UniMax): per stratum, (source, n_docs, total_tokens,
@@ -309,7 +278,7 @@ def mixture_weights(docs: DataFrame, strata_col: str = "source",
     natural token share p_s is flattened to q_s ∝ p_s^alpha (alpha < 1
     upweights low-resource sources), and ``epochs_e2`` = q_s / p_s is the
     implied repetition rate of source s under the mix — clamped at
-    ``epoch_cap_e2`` (UniMax's bound on how many epochs a small source
+    ``MIX_EPOCH_CAP_E2`` (UniMax's bound on how many epochs a small source
     may repeat) with ``capped`` flagging clamped rows.  Full UniMax
     water-filling redistributes the clamped surplus iteratively; that
     loop runs over the k-row aggregate (driver-side, k = #sources), so
@@ -327,10 +296,10 @@ def mixture_weights(docs: DataFrame, strata_col: str = "source",
     (token total, weight-mass total) — no corpus-sized shuffle beyond
     the single groupBy, no key that can straggle.
     """
-    alpha = F.lit(alpha_e2).cast("double") / 100.0
-    per = docs.groupBy(strata_col).agg(
+    alpha = F.lit(MIX_ALPHA_E2).cast("double") / 100.0
+    per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(_n_tokens(F.col(text_col)).cast("long")).alias("total_tokens"),
+        F.sum(_n_tokens(F.col("text")).cast("long")).alias("total_tokens"),
     )
     tot = per.agg(F.sum("total_tokens").alias("t_all"))
     p = F.col("total_tokens").cast("double") / F.col("t_all").cast("double")
@@ -344,13 +313,13 @@ def mixture_weights(docs: DataFrame, strata_col: str = "source",
     return (
         weighted.crossJoin(F.broadcast(wtot))
         .select(
-            strata_col,
+            "source",
             F.col("n_docs").cast("long").alias("n_docs"),
             F.col("total_tokens").cast("long").alias("total_tokens"),
             F.round(p * 1e9).cast("long").alias("natural_share_e9"),
             F.round(q * 1e9).cast("long").alias("temp_share_e9"),
-            F.least(epochs, F.lit(epoch_cap_e2).cast("long"))
+            F.least(epochs, F.lit(MIX_EPOCH_CAP_E2).cast("long"))
             .alias("epochs_e2"),
-            (epochs > epoch_cap_e2).cast("int").alias("capped"),
+            (epochs > MIX_EPOCH_CAP_E2).cast("int").alias("capped"),
         )
     )

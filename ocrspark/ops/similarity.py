@@ -3,25 +3,28 @@
 Families (each scale path is checked against an exact baseline):
 
 * Exact: ``cosine_topk`` — broadcast query side x candidates, the recall
-  baseline, its query side capped in-plan at ``max_queries``.
+  baseline, its query side capped in-plan at ``MAX_QUERIES``.
 * Hyperplane LSH: ``lsh_buckets`` (one sign-pattern bucket per vector),
   ``lsh_search`` (same-bucket rerank), ``lsh_search_multiprobe`` (+ every
   hamming-1 bucket), ``lsh_band_buckets`` (OR-of-ANDs bands).  Hyperplane
   weights are integer pseudo-random (hash-mixed), portable across engines.
 * Near-duplicates: ``embedding_near_dups`` (band candidates -> exact cosine
-  verify; ``exact=True`` is the all-pairs recall baseline) and
+  verify; ``_exact_near_dups`` is the all-pairs recall baseline) and
   ``semantic_dedup`` (those pairs -> connected components).
 * IVF: ``ivf_assignments`` (flat) / ``ivf_assignments_two_level`` coarse
-  cells, ``ivf_topk`` (n_probe cell scan + cosine rerank),
-  ``ivf_kmeans_centroids`` (Spark-ML quantizer for ``cents=``).
-* PQ/ADC: ``pq_codebooks`` / ``pq_kmeans_codebooks`` (for ``books=``),
-  ``pq_codes``, ``pq_topk`` (ADC over codes) and ``ivfpq_topk`` (IVF cell
-  pruning + ADC).
+  cells, ``ivf_topk`` (N_PROBE cell scan + cosine rerank).
+* PQ/ADC: ``pq_codebooks``, ``pq_codes``, ``pq_topk`` (ADC over codes) and
+  ``ivfpq_topk`` (IVF cell pruning + ADC).
+
+Every search serves the fixture query cohort ``vec_id % QUERY_MOD == 0``
+(the driver-oracle cohort) and keeps the top ``TOP_K`` (``LSH_TOP_K`` for
+the LSH pair) neighbors per query.  Quantizers are the deterministic
+lowest-vec_id stand-ins, so the DuckDB oracle reproduces every index.
 
 Shared building blocks, one implementation each: ``_dot``/``_norm`` folds,
 ``_cos9`` (the 9-dp cosine ranking key, norms hoisted per vector),
 ``_topk``/``_sim_topk`` (per-query ranked tail), ``_sign_keys`` (hyperplane
-sign keys), ``_coarse_assignments`` (IVF build-pass dispatch), ``_l2_e9`` and
+sign keys), ``_default_cents`` (IVF centroids), ``_l2_e9`` and
 ``_adc_table`` (integer ADC distances).  Ranking keys are rounded (1e-9) with
 id tiebreaks so Spark and the DuckDB oracle rank identically despite float
 summation differences.
@@ -34,6 +37,10 @@ from pyspark.sql import functions as F
 
 N_PLANES = 12
 DIM = 64
+QUERY_MOD = 25  # the fixture query cohort: vec_id % QUERY_MOD == 0
+TOP_K = 10
+LSH_TOP_K = 5
+LSH_SEARCH_PLANES = 8  # bucket bits of lsh_search / lsh_search_multiprobe
 
 
 def _dot(a, b):
@@ -84,12 +91,12 @@ def _sim_topk(pairs: DataFrame, k: int) -> DataFrame:
 MAX_QUERIES = 65536  # broadcast-side hard cap (vectors, not bytes)
 
 
-def _bounded_queries(q: DataFrame, max_queries: int) -> DataFrame:
-    """In-plan |Q| guard: assert the broadcast side is <= max_queries.
+def _bounded_queries(q: DataFrame) -> DataFrame:
+    """In-plan |Q| guard: assert the broadcast side is <= MAX_QUERIES.
 
     The check is part of the lazy plan (a filter whose predicate raises),
     not a driver-side ``count()``: a 1-row count aggregate of q is broadcast
-    back onto q and every row is gated on ``q_n <= max_queries``.  The
+    back onto q and every row is gated on ``q_n <= MAX_QUERIES``.  The
     predicate is deliberately NOT of the form ``assert_true(...) | true``
     (BooleanSimplification would fold the assert away); ``when/otherwise
     (raise_error)`` survives optimization because the branch condition
@@ -102,10 +109,12 @@ def _bounded_queries(q: DataFrame, max_queries: int) -> DataFrame:
     the scale default ``lsh_search`` has no such pass.
     """
     n = q.agg(F.count(F.lit(1)).alias("q_n"))
-    guard = F.when(F.col("q_n") <= F.lit(max_queries), F.lit(True)).otherwise(
+    # the message is part of the declared ann_cosine_topk plan: kept
+    # verbatim, so its advice predates the fixed query cohort
+    guard = F.when(F.col("q_n") <= F.lit(MAX_QUERIES), F.lit(True)).otherwise(
         F.raise_error(
             F.lit(
-                f"cosine_topk: query side exceeds max_queries={max_queries}; "
+                f"cosine_topk: query side exceeds max_queries={MAX_QUERIES}; "
                 "pass a smaller explicit `queries` DataFrame, raise "
                 "max_queries deliberately, or use lsh_search (the scale "
                 "default for corpus-sized query sets)"
@@ -115,26 +124,24 @@ def _bounded_queries(q: DataFrame, max_queries: int) -> DataFrame:
     return q.crossJoin(F.broadcast(n)).where(guard).drop("q_n")
 
 
-def cosine_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
-                queries: DataFrame | None = None,
-                max_queries: int = MAX_QUERIES) -> DataFrame:
+def _query_cohort(df: DataFrame) -> DataFrame:
+    """The fixture query cohort: rows with ``vec_id % QUERY_MOD == 0``."""
+    return df.filter(F.col("vec_id") % QUERY_MOD == 0)
+
+
+def cosine_topk(emb: DataFrame) -> DataFrame:
     """Exact top-k cosine neighbors — the CORRECTNESS BASELINE, not the
     scale default (that is ``lsh_search``).
 
-    Plan shape: broadcast(query) x candidates -> window top-k.  The
-    broadcast side must be genuinely bounded: pass an explicit small
-    ``queries`` DataFrame (vec_id, embedding); the default fixture
-    behavior (vec_id % query_mod == 0) grows with the corpus and exists
-    for the driver's oracle harness.  Either way the query side is capped
-    at ``max_queries`` by an in-plan runtime assert — a corpus-scale query
+    Plan shape: broadcast(query) x candidates -> window top-k.  The query
+    cohort grows with the corpus, so the broadcast side is capped at
+    ``MAX_QUERIES`` by an in-plan runtime assert — a corpus-scale query
     set fails loudly instead of OOMing the broadcast.
     """
-    if queries is None:
-        queries = emb.filter(F.col("vec_id") % query_mod == 0)
-    q = queries.select(
+    q = _query_cohort(emb).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    q = _bounded_queries(q, max_queries)
+    q = _bounded_queries(q)
     # PERF (r7): norms are a per-VECTOR quantity — compute them once per
     # side BEFORE the |Q| x |C| join instead of twice per pair (Catalyst
     # does not push partial expressions below a join).  The norm expression
@@ -150,37 +157,23 @@ def cosine_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
         .select("query_id", "neighbor_id",
                 _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    return _sim_topk(pairs, k)
+    return _sim_topk(pairs, TOP_K)
 
 
-def lsh_search(emb: DataFrame, k: int = 5, query_mod: int = 25,
-               n_planes: int = 8,
-               queries: DataFrame | None = None) -> DataFrame:
+def lsh_search(emb: DataFrame) -> DataFrame:
     """Bucketed ANN: LSH bucket join -> exact cosine rerank within bucket.
 
     The scale path: instead of |Q| x |C| pairs, only same-bucket pairs are
-    scored (expected |C| / 2^planes candidates per query).  Recall is
-    tunable via n_planes / multi-probe; correctness baseline is
-    ``cosine_topk``.
-
-    ``queries`` is the production query cohort: an explicit
-    (vec_id, embedding) DataFrame (need not be corpus rows — buckets are
-    recomputed from the query embeddings with the same deterministic
-    planes).  The ``vec_id % query_mod`` default is the driver-oracle
-    fixture cohort, not a shape production callers should inherit.
+    scored (expected |C| / 2^planes candidates per query, with
+    ``LSH_SEARCH_PLANES`` planes).  Recall is raised by multi-probe;
+    correctness baseline is ``cosine_topk``.
     """
-    b = lsh_buckets(emb, n_planes)
+    b = lsh_buckets(emb, LSH_SEARCH_PLANES)
     e = emb.join(b, "vec_id")
-    if queries is None:
-        q = e.filter(F.col("vec_id") % query_mod == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"), "bucket"
-        )
-    else:
-        q = queries.join(lsh_buckets(queries, n_planes), "vec_id").select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"), "bucket"
-        )
+    q = _query_cohort(e).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"), "bucket"
+    )
     # per-vector norms hoisted below the bucket join (r7; float-exact — see
     # cosine_topk)
     q = q.withColumn("qn", _norm(F.col("qe")))
@@ -193,37 +186,30 @@ def lsh_search(emb: DataFrame, k: int = 5, query_mod: int = 25,
         .select("query_id", "neighbor_id",
                 _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    return _sim_topk(pairs, k)
+    return _sim_topk(pairs, LSH_TOP_K)
 
 
-def lsh_search_multiprobe(emb: DataFrame, k: int = 5, query_mod: int = 25,
-                          n_planes: int = 8,
-                          queries: DataFrame | None = None) -> DataFrame:
+def lsh_search_multiprobe(emb: DataFrame) -> DataFrame:
     """Multi-probe bucketed ANN: each query also probes every bucket at
     hamming distance 1 from its own (flip one hyperplane sign), the
     standard recall knob for sign-LSH — vectors on the wrong side of ONE
-    plane are recovered at (n_planes+1)x candidate cost instead of
+    plane are recovered at (planes+1)x candidate cost instead of
     resorting to more tables.  Probe expansion is an explode on the query
     side only (candidate side unchanged), so the join stays an equi-join
     on bucket — and it cannot duplicate a pair: each candidate lives in
     exactly one bucket and a query's probe buckets are pairwise distinct,
     so no dedup pass precedes the rerank window.
     Recall baseline: ``cosine_topk``; single-probe: ``lsh_search``.
-    ``queries`` overrides the fixture ``vec_id % query_mod`` cohort with
-    an explicit (vec_id, embedding) query DataFrame (see ``lsh_search``).
     """
-    b = lsh_buckets(emb, n_planes)
+    b = lsh_buckets(emb, LSH_SEARCH_PLANES)
     e = emb.join(b, "vec_id")
     probes = F.array(
         F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(2 ** p)) for p in range(n_planes)],
+        *[F.col("bucket").bitwiseXOR(F.lit(2 ** p))
+          for p in range(LSH_SEARCH_PLANES)],
     )
-    if queries is None:
-        qbase = e.filter(F.col("vec_id") % query_mod == 0)
-    else:
-        qbase = queries.join(lsh_buckets(queries, n_planes), "vec_id")
     q = (
-        qbase
+        _query_cohort(e)
         .select(F.col("vec_id").alias("query_id"),
                 F.col("embedding").alias("qe"),
                 _norm(F.col("embedding")).alias("qn"),
@@ -240,15 +226,14 @@ def lsh_search_multiprobe(emb: DataFrame, k: int = 5, query_mod: int = 25,
         .select("query_id", "neighbor_id",
                 _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    return _sim_topk(pairs, k)
+    return _sim_topk(pairs, LSH_TOP_K)
 
 
 N_BANDS = 8
 PLANES_PER_BAND = 4
 
 
-def lsh_band_buckets(emb: DataFrame, n_bands: int = N_BANDS,
-                     planes_per_band: int = PLANES_PER_BAND) -> DataFrame:
+def lsh_band_buckets(emb: DataFrame) -> DataFrame:
     """Banded hyperplane LSH: (vec_id, band_id, band_key) rows.
 
     Band b uses planes [b*r, (b+1)*r) from the same deterministic weight
@@ -257,8 +242,8 @@ def lsh_band_buckets(emb: DataFrame, n_bands: int = N_BANDS,
     8 bands x 4 planes, recall at cos>=0.8 is ~98%; at cos>=0.4 ~75%.
     """
     keys = _sign_keys([
-        range(b * planes_per_band, (b + 1) * planes_per_band)
-        for b in range(n_bands)
+        range(b * PLANES_PER_BAND, (b + 1) * PLANES_PER_BAND)
+        for b in range(N_BANDS)
     ])
     bands = [F.struct(F.lit(b).alias("band_id"), key.alias("band_key"))
              for b, key in enumerate(keys)]
@@ -268,32 +253,27 @@ def lsh_band_buckets(emb: DataFrame, n_bands: int = N_BANDS,
              F.col("b.band_key").alias("band_key"))
 
 
-def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
-                        exact: bool = False) -> DataFrame:
+def _sim_e9_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id1, id2, sim_e9) of (id1, id2, qe, qn, ce, cn) pairs whose
+    integer (1e9-scaled) cosine reaches ``threshold``."""
+    sim = _cos9("qe", "ce", "qn", "cn")
+    return (
+        pairs.select("id1", "id2", F.round(sim * 1e9).cast("long").alias("sim_e9"))
+        .filter(F.col("sim_e9") >= int(threshold * 1e9))
+    )
+
+
+def embedding_near_dups(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup family, SURVEY-adjacent).
 
-    Default is the scale path: banded-LSH candidates (equi-join on
+    The scale path: banded-LSH candidates (equi-join on
     (band_id, band_key)) -> exact cosine verify -> threshold filter ->
     distinct.  Never all-pairs; candidate volume per band is |bucket|^2
     bounded by the hyperplane split, and verification is one narrow pass.
-
-    ``exact=True`` keeps the all-pairs non-equi form (physically a broadcast
-    nested-loop join) as the RECALL BASELINE — test/measurement only, O(n^2),
-    never the plan to run at corpus scale.  Integer (1e9-scaled) similarity
-    for engine-exact comparison.
+    The all-pairs recall baseline is ``_exact_near_dups``.  Integer
+    (1e9-scaled) similarity for engine-exact comparison.
     """
     # per-vector norms hoisted out of the per-pair verify (r7; float-exact)
-    sim = _cos9("qe", "ce", "qn", "cn")
-    if exact:
-        a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("qe"),
-                       _norm(F.col("embedding")).alias("qn"))
-        b = emb.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("ce"),
-                       _norm(F.col("embedding")).alias("cn"))
-        return (
-            a.join(b, F.col("id1") < F.col("id2"))
-            .select("id1", "id2", F.round(sim * 1e9).cast("long").alias("sim_e9"))
-            .filter(F.col("sim_e9") >= int(threshold * 1e9))
-        )
     bands = lsh_band_buckets(emb)
     e = emb.join(bands, "vec_id")
     a = e.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("qe"),
@@ -302,13 +282,19 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
     b = e.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("ce"),
                  _norm(F.col("embedding")).alias("cn"),
                  "band_id", "band_key")
-    return (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", F.round(sim * 1e9).cast("long").alias("sim_e9"))
-        .filter(F.col("sim_e9") >= int(threshold * 1e9))
-        .distinct()
-    )
+    pairs = a.join(b, ["band_id", "band_key"]).filter(F.col("id1") < F.col("id2"))
+    return _sim_e9_at_least(pairs, threshold).distinct()
+
+
+def _exact_near_dups(emb: DataFrame, threshold: float) -> DataFrame:
+    """The all-pairs non-equi form of ``embedding_near_dups`` (physically
+    a broadcast nested-loop join): its RECALL BASELINE — test/measurement
+    only, O(n^2), never the plan to run at corpus scale."""
+    a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("qe"),
+                   _norm(F.col("embedding")).alias("qn"))
+    b = emb.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("ce"),
+                   _norm(F.col("embedding")).alias("cn"))
+    return _sim_e9_at_least(a.join(b, F.col("id1") < F.col("id2")), threshold)
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -336,54 +322,33 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
 
 N_CENTROIDS = 16
 N_PROBE = 2
+PROBE_GROUPS = 2  # leader groups a vector descends into (two-level assign)
 
 
-def ivf_kmeans_centroids(emb: DataFrame, n_centroids: int = N_CENTROIDS,
-                         seed: int = 42) -> DataFrame:
-    """Spark-ML KMeans coarse quantizer: (cell_id, cent) for ``ivf_topk``.
-
-    The production-quality replacement for the deterministic lowest-id
-    stand-in — same output contract, so it slots into
-    ``ivf_assignments(cents=...)`` unchanged.  Not DuckDB-oracle
-    expressible (iterative ML fit); covered by a differential recall test
-    against the stand-in instead.  The fit itself is distributed
-    (kmeans|| init); only the n_centroids cluster centers come back to
-    the driver, and they return as a DataFrame so the scoring pass stays
-    a broadcast.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = emb.select(
-        "vec_id",
-        array_to_vector(F.col("embedding").cast("array<double>"))
-        .alias("features"),
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(vecs)
-    rows = [(i, [float(x) for x in c])
-            for i, c in enumerate(model.clusterCenters())]
-    return emb.sparkSession.createDataFrame(
-        rows, "cell_id int, cent array<float>"
+def _default_cents(emb: DataFrame) -> DataFrame:
+    """The IVF quantizer: (cell_id, cent) of the ``N_CENTROIDS``
+    lowest-vec_id vectors — a deterministic k-means stand-in chosen so the
+    DuckDB oracle reproduces the index bit-for-bit; the IVF plan shape
+    (assign -> invert -> probe) is the same whichever quantizer produces
+    the centroid table.  cell_id is the centroid's own vec_id."""
+    return (
+        emb.orderBy("vec_id").limit(N_CENTROIDS)
+        .select(F.col("vec_id").alias("cell_id"),
+                F.col("embedding").alias("cent"))
     )
 
 
-def ivf_assignments(emb: DataFrame, n_centroids: int = N_CENTROIDS,
-                    cents: DataFrame | None = None) -> DataFrame:
-    """Coarse-quantizer cell scores: (vec_id, cell_id, csim, crank).
+def ivf_assignments(emb: DataFrame) -> DataFrame:
+    """Coarse-quantizer cell scores: (vec_id, cell_id, csim, crank) against
+    every ``_default_cents`` centroid.
 
-    Centroids are the ``n_centroids`` lowest-vec_id vectors — a
-    deterministic k-means stand-in chosen so the DuckDB oracle reproduces
-    the index bit-for-bit; the IVF plan shape (assign -> invert -> probe)
-    is identical whichever quantizer produces the centroid table, and a
-    Spark-ML KMeans fit slots in by swapping ``cents``.  cell_id is the
-    centroid's own vec_id.  Scoring is a broadcast of the tiny centroid
-    table against a single narrow corpus scan; crank ranks cells per
-    vector (ties broken by cell_id so engines agree).
+    Scoring is a broadcast of the tiny centroid table against a single
+    narrow corpus scan; crank ranks cells per vector (ties broken by
+    cell_id so engines agree).
     """
-    if cents is None:
-        cents = _default_cents(emb, n_centroids)
+    cents = _default_cents(emb)
     # per-vector/per-centroid norms hoisted below the broadcast scoring
-    # join: norm(embedding) was recomputed n_centroids times per vector
+    # join: norm(embedding) was recomputed N_CENTROIDS times per vector
     # (r7; float-exact — the hoisted expression is unchanged)
     e = emb.withColumn("vn", _norm(F.col("embedding")))
     cn = cents.withColumn("cn", _norm(F.col("cent")))
@@ -397,24 +362,18 @@ def ivf_assignments(emb: DataFrame, n_centroids: int = N_CENTROIDS,
     return scored.withColumn("crank", F.row_number().over(w))
 
 
-def ivf_assignments_two_level(emb: DataFrame,
-                              n_centroids: int = N_CENTROIDS,
-                              cents: DataFrame | None = None,
-                              n_groups: int | None = None,
-                              probe_groups: int = 2) -> DataFrame:
+def ivf_assignments_two_level(emb: DataFrame) -> DataFrame:
     """Hierarchical coarse assignment — the build-pass scale path.
 
     The flat ``ivf_assignments`` scores every vector against every
-    centroid: O(n*k) dot products, which at the docstring's own
-    "n_centroids ~ sqrt(|C|)" regime (10^6 cells for 10^12 vectors) is
-    10^18 products in the build pass.  Standard IVF practice at that k is
-    a two-level assign: centroids are themselves grouped under
-    ``n_groups`` (default ceil(sqrt(k))) group leaders; a vector scores
-    the g leaders, descends into its ``probe_groups`` closest groups, and
-    scores only the ~k/g centroids there — O(n*(g + probe_groups*k/g)) =
+    centroid: O(n*k) dot products, which at the "k ~ sqrt(|C|)" regime
+    (10^6 cells for 10^12 vectors) is 10^18 products in the build pass.
+    Standard IVF practice at that k is a two-level assign: centroids are
+    themselves grouped under g = isqrt(k) group leaders; a vector scores
+    the g leaders, descends into its ``PROBE_GROUPS`` closest groups, and
+    scores only the ~k/g centroids there — O(n*(g + PROBE_GROUPS*k/g)) =
     O(n*sqrt(k)) per pass, at a small assignment-recall cost (the true
-    nearest centroid can live in an unprobed group; raise probe_groups to
-    trade cost for fidelity).
+    nearest centroid can live in an unprobed group).
 
     Same output contract as ``ivf_assignments`` ((vec_id, cell_id, csim,
     crank), crank within the scanned subset), so it slots into
@@ -426,13 +385,10 @@ def ivf_assignments_two_level(emb: DataFrame,
     """
     import math
 
-    if cents is None:
-        cents = _default_cents(emb, n_centroids)
-    if n_groups is None:
-        n_groups = max(1, math.isqrt(n_centroids))
+    n_groups = max(1, math.isqrt(N_CENTROIDS))
     # per-vector/centroid/leader norms hoisted out of all three scoring
     # passes (r7; float-exact — the hoisted expression is unchanged)
-    cents = cents.withColumn("cn", _norm(F.col("cent")))
+    cents = _default_cents(emb).withColumn("cn", _norm(F.col("cent")))
     leaders = (
         cents.orderBy("cell_id").limit(n_groups)
         .select(F.col("cell_id").alias("group_id"),
@@ -459,7 +415,7 @@ def ivf_assignments_two_level(emb: DataFrame,
         .crossJoin(F.broadcast(leaders))
         .select("vec_id", "embedding", "vn", "group_id", vgsim.alias("vgsim"))
         .withColumn("vgrank", F.row_number().over(wv))
-        .filter(F.col("vgrank") <= probe_groups)
+        .filter(F.col("vgrank") <= PROBE_GROUPS)
         .select("vec_id", "embedding", "vn", "group_id")
     )
     csim = _cos9("embedding", "cent", "vn", "cn")
@@ -472,58 +428,30 @@ def ivf_assignments_two_level(emb: DataFrame,
     return scored.withColumn("crank", F.row_number().over(w))
 
 
-def _coarse_assignments(emb: DataFrame, n_centroids: int,
-                        cents: DataFrame | None, two_level: bool,
-                        probe_groups: int) -> tuple[DataFrame, DataFrame]:
-    """(assignments, centroid table) of the IVF build pass: ``cents`` or the
-    lowest-id stand-in, scored flat or two-level.  The centroid table comes
-    back so a query cohort is scored against the same cells."""
-    if cents is None:
-        cents = _default_cents(emb, n_centroids)
-    if two_level:
-        return ivf_assignments_two_level(emb, n_centroids, cents=cents,
-                                         probe_groups=probe_groups), cents
-    return ivf_assignments(emb, n_centroids, cents=cents), cents
+def _probed_cells(asg: DataFrame) -> DataFrame:
+    """(query_id, cell_id): the ``N_PROBE`` closest cells of each query in
+    the fixture cohort."""
+    return asg.filter(
+        (F.col("vec_id") % QUERY_MOD == 0) & (F.col("crank") <= N_PROBE)
+    ).select(F.col("vec_id").alias("query_id"), "cell_id")
 
 
-def _default_cents(emb: DataFrame, n_centroids: int) -> DataFrame:
-    """The deterministic lowest-vec_id quantizer stand-in (oracle-exact);
-    swap for ``ivf_kmeans_centroids`` in production."""
-    return (
-        emb.orderBy("vec_id").limit(n_centroids)
-        .select(F.col("vec_id").alias("cell_id"),
-                F.col("embedding").alias("cent"))
-    )
-
-
-def ivf_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
-             n_centroids: int = N_CENTROIDS, n_probe: int = N_PROBE,
-             cents: DataFrame | None = None,
-             two_level: bool = False, probe_groups: int = 2,
-             queries: DataFrame | None = None) -> DataFrame:
-    """IVF top-k ANN: coarse cells -> inverted lists -> n_probe cell scan.
+def ivf_topk(emb: DataFrame, two_level: bool = False) -> DataFrame:
+    """IVF top-k ANN: coarse cells -> inverted lists -> N_PROBE cell scan.
 
     The IVF scale path next to ``lsh_search``: each vector lands in its
     nearest centroid's inverted list (one co-partitioned join to attach
-    embeddings), and a query scores only the lists of its ``n_probe``
-    closest cells — |C| * n_probe / n_centroids candidates per query
-    instead of |C|.  At real scale n_centroids ~ sqrt(|C|) and lists are
-    written partitioned by cell_id, so the probe join is partition-pruned;
-    recall is tuned by n_probe.  Correctness baseline: ``cosine_topk``.
+    embeddings), and a query scores only the lists of its ``N_PROBE``
+    closest cells — |C| * N_PROBE / N_CENTROIDS candidates per query
+    instead of |C|.  At real scale the centroid count grows as
+    ~sqrt(|C|) and lists are written partitioned by cell_id, so the probe
+    join is partition-pruned.  Correctness baseline: ``cosine_topk``.
 
     ``two_level=True`` swaps the O(n*k) flat coarse assignment for the
     O(n*sqrt(k)) hierarchical one (``ivf_assignments_two_level``) — the
-    build-pass default once n_centroids is corpus-scale.
-
-    ``queries`` is the production query cohort: an explicit
-    (vec_id, embedding) DataFrame, cell-assigned by FLAT scoring against
-    the same centroid table (the query side is bounded, so flat assign
-    is the right cost there even when the corpus build pass is
-    two-level).  The ``vec_id % query_mod`` default is the driver-oracle
-    fixture cohort.
+    build-pass default once the centroid count is corpus-scale.
     """
-    asg, cents = _coarse_assignments(emb, n_centroids, cents, two_level,
-                                     probe_groups)
+    asg = ivf_assignments_two_level(emb) if two_level else ivf_assignments(emb)
     lists = (
         asg.filter(F.col("crank") == 1)
         .select(F.col("vec_id").alias("neighbor_id"), "cell_id")
@@ -534,30 +462,13 @@ def ivf_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
             "neighbor_id",
         )
     )
-    if queries is None:
-        probes = (
-            asg.filter((F.col("vec_id") % query_mod == 0) & (F.col("crank") <= n_probe))
-            .select(F.col("vec_id").alias("query_id"), "cell_id")
-            .join(
-                emb.filter(F.col("vec_id") % query_mod == 0)
-                .select(F.col("vec_id").alias("query_id"),
-                        F.col("embedding").alias("qe"),
-                        _norm(F.col("embedding")).alias("qn")),
-                "query_id",
-            )
-        )
-    else:
-        qasg = ivf_assignments(queries, n_centroids, cents=cents)
-        probes = (
-            qasg.filter(F.col("crank") <= n_probe)
-            .select(F.col("vec_id").alias("query_id"), "cell_id")
-            .join(
-                queries.select(F.col("vec_id").alias("query_id"),
-                               F.col("embedding").alias("qe"),
-                               _norm(F.col("embedding")).alias("qn")),
-                "query_id",
-            )
-        )
+    probes = _probed_cells(asg).join(
+        _query_cohort(emb)
+        .select(F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qe"),
+                _norm(F.col("embedding")).alias("qn")),
+        "query_id",
+    )
     # per-vector norms hoisted out of the per-pair rerank (r7; float-exact)
     pairs = (
         probes.join(lists, "cell_id")
@@ -565,11 +476,12 @@ def ivf_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
         .select("query_id", "neighbor_id",
                 _cos9("qe", "ce", "qn", "cn").alias("sim9"))
     )
-    return _sim_topk(pairs, k)
+    return _sim_topk(pairs, TOP_K)
 
 
 PQ_M = 8       # subspaces (64-dim -> 8 x 8-dim subvectors)
 PQ_KSUB = 16   # codebook entries per subspace (codes fit 4 bits)
+PQ_DSUB = DIM // PQ_M
 
 
 def _l2_e9(a, b):
@@ -587,12 +499,12 @@ def _l2_e9(a, b):
     return F.round(F.round(sq, 9) * 1e9).cast("long")
 
 
-def _subvectors(df: DataFrame, vec_col: str, m: int, d_sub: int,
-                out_vec: str):
+def _subvectors(df: DataFrame, vec_col: str, out_vec: str):
+    """Explode ``vec_col`` into its ``PQ_M`` (sub_id, ``out_vec``) slices."""
     subs = F.array(*[
         F.struct(F.lit(s).alias("sub_id"),
-                 F.slice(F.col(vec_col), s * d_sub + 1, d_sub).alias(out_vec))
-        for s in range(m)
+                 F.slice(F.col(vec_col), s * PQ_DSUB + 1, PQ_DSUB).alias(out_vec))
+        for s in range(PQ_M)
     ])
     return df.select("*", F.explode(subs).alias("_b")).select(
         *[c for c in df.columns if c != vec_col],
@@ -600,13 +512,13 @@ def _subvectors(df: DataFrame, vec_col: str, m: int, d_sub: int,
     )
 
 
-def _adc_table(queries: DataFrame, books: DataFrame, m: int) -> DataFrame:
+def _adc_table(queries: DataFrame, books: DataFrame) -> DataFrame:
     """ADC query-distance table (query_id, sub_id, code, d): every query
     subvector's int64 e9 squared-L2 to each codebook entry of its subspace
     (|Q|*m*ksub rows — the side ``pq_topk``/``ivfpq_topk`` broadcast)."""
     qsubs = _subvectors(
         queries.select(F.col("vec_id").alias("query_id"), "embedding"),
-        "embedding", m, DIM // m, "subvec",
+        "embedding", "subvec",
     )
     return qsubs.join(F.broadcast(books), "sub_id").select(
         "query_id", "sub_id", "code",
@@ -614,123 +526,41 @@ def _adc_table(queries: DataFrame, books: DataFrame, m: int) -> DataFrame:
     )
 
 
-def pq_codebooks(emb: DataFrame, m: int = PQ_M,
-                 ksub: int = PQ_KSUB) -> DataFrame:
+def pq_codebooks(emb: DataFrame) -> DataFrame:
     """Product-quantization codebooks: (sub_id, code, subcent).
 
     Entry ``code`` of subspace ``sub_id`` is that subvector of the
     code-th lowest-vec_id vector — the same deterministic
     quantizer-stand-in policy as the IVF centroids (engine-portable,
-    oracle-exact); a per-subspace k-means fit slots in by swapping the
-    returned table.  m*ksub rows total — always broadcastable.
+    oracle-exact).  PQ_M*PQ_KSUB rows total — always broadcastable.
     """
-    d_sub = DIM // m
     w = Window.orderBy("vec_id")
     base = (
-        emb.orderBy("vec_id").limit(ksub)
+        emb.orderBy("vec_id").limit(PQ_KSUB)
         .withColumn("code", F.row_number().over(w) - 1)
         .select("code", "embedding")
     )
-    return _subvectors(base, "embedding", m, d_sub, "subcent").select(
+    return _subvectors(base, "embedding", "subcent").select(
         "sub_id", "code", "subcent"
     )
 
 
-def _pq_train_subvectors(emb: DataFrame, m: int, train_cap: int) -> DataFrame:
-    """Cached, deterministically-bounded subvector table feeding the m
-    per-subspace KMeans fits: the train slice is the ``train_cap``
-    lowest-md5(vec_id) vectors (a pure-hash deterministic sample — same
-    family as ``sampling.deterministic_split``, no RNG, no count pass),
-    exploded into (sub_id, features) and PERSISTED so the corpus parquet
-    is scanned ONCE — each of the m fits then filters the in-memory
-    table, not the source (plan-asserted: the filtered reads are
-    InMemoryTableScan).  Caller must unpersist."""
-    from pyspark.ml.functions import array_to_vector
-
-    d_sub = DIM // m
-    train = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(train_cap)
-    )
-    return (
-        _subvectors(train, "embedding", m, d_sub, "subvec")
-        .select("sub_id",
-                array_to_vector(F.col("subvec").cast("array<double>"))
-                .alias("features"))
-        .persist()
-    )
-
-
-def pq_kmeans_codebooks(emb: DataFrame, m: int = PQ_M,
-                        ksub: int = PQ_KSUB, seed: int = 42,
-                        train_cap: int | None = None) -> DataFrame:
-    """Per-subspace Spark-ML KMeans codebooks — the production-quality
-    quantizer behind PQ, replacing the deterministic lowest-vec_id
-    stand-in exactly as ``ivf_kmeans_centroids`` replaces the IVF one:
-    same output contract ((sub_id, code, subcent)), so it slots into
-    ``pq_codes``/``pq_topk``/``ivfpq_topk`` via ``books=`` unchanged.
-
-    Not DuckDB-oracle expressible (iterative ML fit); covered by a
-    differential test against the stand-in (codes stay well-formed,
-    ADC recall does not degrade).
-
-    Scale shape: PQ training needs only O(ksub * 1e3) points per
-    subspace, so the fits run on a deterministic bounded train slice —
-    default ``train_cap = ksub * 1000`` vectors (16k at the default
-    ksub=16), selected by md5(vec_id) order so the sample is stable
-    across runs and partitionings.  The sliced subvector table is
-    cached ONCE and shared by all m fits (``_pq_train_subvectors``);
-    the corpus is never re-scanned per subspace.  Each fit is a
-    distributed kmeans|| run over its cached subspace slice; only the
-    m*ksub cluster centers come back to the driver, returned as a
-    DataFrame so downstream scoring stays a broadcast.  Fails loud if
-    a fit returns fewer than ``ksub`` centers (degenerate data — e.g.
-    fewer distinct subvectors than codes) rather than emitting a
-    short codebook downstream ops would silently mis-score.
-    """
-    from pyspark.ml.clustering import KMeans
-
-    cap = train_cap if train_cap is not None else ksub * 1000
-    subs = _pq_train_subvectors(emb, m, cap)
-    try:
-        rows = []
-        for s in range(m):
-            vecs = subs.filter(F.col("sub_id") == s).select("features")
-            model = KMeans(k=ksub, seed=seed + s, maxIter=20).fit(vecs)
-            centers = model.clusterCenters()
-            if len(centers) != ksub:
-                raise ValueError(
-                    f"pq_kmeans_codebooks: subspace {s} produced "
-                    f"{len(centers)} centers, need {ksub} — train slice "
-                    f"has too few distinct subvectors (cap={cap}); "
-                    "lower ksub or raise train_cap")
-            rows.extend(
-                (s, c, [float(x) for x in cent])
-                for c, cent in enumerate(centers)
-            )
-    finally:
-        subs.unpersist()
-    return emb.sparkSession.createDataFrame(
-        rows, "sub_id int, code int, subcent array<float>"
-    )
-
-
-def pq_codes(emb: DataFrame, books: DataFrame | None = None,
-             m: int = PQ_M, ksub: int = PQ_KSUB) -> DataFrame:
+def pq_codes(emb: DataFrame) -> DataFrame:
     """PQ code assignment: (vec_id, sub_id, code) — each subvector mapped
-    to its nearest codebook entry (squared L2, code-ASC ties).
+    to its nearest ``pq_codebooks`` entry (squared L2, code-ASC ties).
 
     The compressed index of IVF-PQ: m codes of log2(ksub) bits replace
     d floats per vector (64x compression at 8x4 bits over 64 floats).
     One narrow scan x broadcast of the m*ksub codebook; the per-(vec, sub)
     argmin is a bounded ksub-row window.
     """
-    d_sub = DIM // m
-    if books is None:
-        books = pq_codebooks(emb, m, ksub)
-    subs = _subvectors(emb.select("vec_id", "embedding"),
-                       "embedding", m, d_sub, "subvec")
+    return _pq_codes(emb, pq_codebooks(emb))
+
+
+def _pq_codes(emb: DataFrame, books: DataFrame) -> DataFrame:
+    """``pq_codes`` against a codebook table the caller shares with its
+    ADC distance table."""
+    subs = _subvectors(emb.select("vec_id", "embedding"), "embedding", "subvec")
     scored = subs.join(F.broadcast(books), "sub_id").select(
         "vec_id", "sub_id", "code", _l2_e9(F.col("subvec"), F.col("subcent")).alias("d")
     )
@@ -744,10 +574,7 @@ def pq_codes(emb: DataFrame, books: DataFrame | None = None,
     )
 
 
-def pq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
-            m: int = PQ_M, ksub: int = PQ_KSUB,
-            books: DataFrame | None = None,
-            queries: DataFrame | None = None) -> DataFrame:
+def pq_topk(emb: DataFrame) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: (query_id, rank,
     neighbor_id, adist_e9) — approximate L2 neighbors scored WITHOUT
     touching candidate vectors, only their m small codes.
@@ -764,85 +591,48 @@ def pq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
     per-query distance table is what gets broadcast, and the bare join
     key (sub_id, code) has only m*ksub distinct values, so a corpus-sized
     query set has no good plan here at all; corpus x corpus similarity
-    belongs to the near-dup/LSH family, not ADC).  ``queries`` is the
-    production cohort — an explicit bounded (vec_id, embedding)
-    DataFrame; ``vec_id % query_mod`` is the driver-oracle fixture
-    default.
+    belongs to the near-dup/LSH family, not ADC).
     """
-    if books is None:
-        books = pq_codebooks(emb, m, ksub)
-    codes = pq_codes(emb, books, m, ksub)
-    if queries is None:
-        queries = emb.filter(F.col("vec_id") % query_mod == 0)
-    qdist = _adc_table(queries, books, m)
+    books = pq_codebooks(emb)
+    codes = _pq_codes(emb, books)
+    qdist = _adc_table(_query_cohort(emb), books)
     pairs = (
         codes.join(F.broadcast(qdist), ["sub_id", "code"])
         .filter(F.col("query_id") != F.col("vec_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d").alias("adist_e9"))
     )
-    return _topk(pairs, k, F.col("adist_e9").asc(), "adist_e9")
+    return _topk(pairs, TOP_K, F.col("adist_e9").asc(), "adist_e9")
 
 
-TWO_LEVEL_AUTO_CENTROIDS = 1024  # n_centroids >= this -> hierarchical build
-
-
-def ivfpq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
-               n_centroids: int = N_CENTROIDS, n_probe: int = N_PROBE,
-               m: int = PQ_M, ksub: int = PQ_KSUB,
-               two_level: bool | None = None, probe_groups: int = 2,
-               cents: DataFrame | None = None,
-               queries: DataFrame | None = None) -> DataFrame:
+def ivfpq_topk(emb: DataFrame) -> DataFrame:
     """IVF-PQ: the canonical corpus-scale ANN composition — coarse cells
-    prune candidates (probe ``n_probe`` inverted lists), ADC over PQ
+    prune candidates (probe ``N_PROBE`` inverted lists), ADC over PQ
     codes scores them without ever touching candidate vectors.
 
-    Per query: |C| * n_probe / n_centroids candidates, each scored by m
+    Per query: |C| * N_PROBE / N_CENTROIDS candidates, each scored by m
     integer table lookups — the index the full pipeline would serve from
     at 10^12 vectors (lists partition-pruned by cell_id, codes 64x
     smaller than raw floats).  Within-cell scoring is squared-L2 ADC
     (``pq_codebooks``/``pq_codes``), both already oracle-pinned.
     Recall baseline: ``cosine_topk``; uncompressed variant: ``ivf_topk``.
-
-    Coarse assignment: ``two_level=None`` (the default) picks the
-    build-pass strategy from n_centroids — flat O(n*k) scoring below
-    ``TWO_LEVEL_AUTO_CENTROIDS`` (where a k-row broadcast is cheap and
-    exact), the O(n*sqrt(k)) hierarchical ``ivf_assignments_two_level``
-    at or above it (the corpus-scale regime where flat assignment is the
-    build-pass killer: 10^6 cells x 10^12 vectors).  Pass True/False to
-    pin either path.
+    The coarse assignment is the flat ``ivf_assignments`` (a k-row
+    broadcast is cheap and exact at ``N_CENTROIDS`` cells).
 
     The query distance table is broadcast (|Q|*m*ksub rows) — the
-    bounded-query contract of ``pq_topk`` applies; ``queries`` is the
-    production cohort (explicit bounded (vec_id, embedding) DataFrame,
-    cell-assigned by flat scoring against the same centroids);
-    ``vec_id % query_mod`` is the driver-oracle fixture default.  With a
-    huge query cohort drop the broadcast hint and the
-    (query_id, sub_id, code) join still parallelizes (query_id in the
-    key), at shuffle cost.
+    bounded-query contract of ``pq_topk`` applies.  With a huge query
+    cohort drop the broadcast hint and the (query_id, sub_id, code) join
+    still parallelizes (query_id in the key), at shuffle cost.
     """
-    if two_level is None:
-        two_level = n_centroids >= TWO_LEVEL_AUTO_CENTROIDS
-    asg, cents = _coarse_assignments(emb, n_centroids, cents, two_level,
-                                     probe_groups)
-    books = pq_codebooks(emb, m, ksub)
-    codes = pq_codes(emb, books, m, ksub)
+    asg = ivf_assignments(emb)
+    books = pq_codebooks(emb)
+    codes = _pq_codes(emb, books)
     lists = asg.filter(F.col("crank") == 1).select(
         F.col("vec_id").alias("neighbor_id"), "cell_id"
     )
-    if queries is None:
-        probes = asg.filter(
-            (F.col("vec_id") % query_mod == 0) & (F.col("crank") <= n_probe)
-        ).select(F.col("vec_id").alias("query_id"), "cell_id")
-        queries = emb.filter(F.col("vec_id") % query_mod == 0)
-    else:
-        qasg = ivf_assignments(queries, n_centroids, cents=cents)
-        probes = qasg.filter(F.col("crank") <= n_probe).select(
-            F.col("vec_id").alias("query_id"), "cell_id"
-        )
-    qdist = _adc_table(queries, books, m)
+    qdist = _adc_table(_query_cohort(emb), books)
     cand = (
-        probes.join(lists, "cell_id")
+        _probed_cells(asg).join(lists, "cell_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
     )
@@ -853,7 +643,7 @@ def ivfpq_topk(emb: DataFrame, k: int = 10, query_mod: int = 25,
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adist_e9"))
     )
-    return _topk(pairs, k, F.col("adist_e9").asc(), "adist_e9")
+    return _topk(pairs, TOP_K, F.col("adist_e9").asc(), "adist_e9")
 
 
 def _plane_weight(plane: int, dim_idx):

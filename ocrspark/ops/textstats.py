@@ -27,9 +27,9 @@ NO_STOPWORDS = r"\b(og|i|det|som|en|er|på|av|til|for|med|den)\b"
 PUNCT_RE = f"[^A-Za-z0-9{WHITESPACE}]"
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-ratio language ID (en vs no vs unknown)."""
-    t = _fold(F.col(text_col))
+    t = _fold(F.col("text"))
     en = F.regexp_count(t, F.lit(EN_STOPWORDS))
     no = F.regexp_count(t, F.lit(NO_STOPWORDS))
     pred = (
@@ -42,12 +42,12 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality: length band + punctuation ratio + stopword ratio.
 
     Score scaled to integer basis points (x10000) for cross-engine hashing.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_words = _n_tokens(t)
     n_punct = F.regexp_count(t, F.lit(PUNCT_RE))
@@ -69,10 +69,10 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Whitespace tokens + a BPE-ish subword estimate (ceil(len/4) per word,
     exact integer arithmetic)."""
-    words = F.regexp_extract_all(F.col(text_col), F.lit(TOKEN), 0)
+    words = F.regexp_extract_all(F.col("text"), F.lit(TOKEN), 0)
     subwords = F.aggregate(
         words,
         F.lit(0).cast("long"),
@@ -95,9 +95,9 @@ CODE_TOKENS_RE = (
 CODE_MIN_HITS = 2
 
 
-def code_detect(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def code_detect(docs: DataFrame) -> DataFrame:
     """P16: code-token heuristic (figure keep/skip gate in the reference)."""
-    hits = F.regexp_count(F.col(text_col), F.lit(CODE_TOKENS_RE))
+    hits = F.regexp_count(F.col("text"), F.lit(CODE_TOKENS_RE))
     return docs.select(
         "doc_id",
         hits.alias("code_hits"),
@@ -105,19 +105,19 @@ def code_detect(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Canonical-text fingerprint: md5 of case-folded whitespace-squeezed text
     (exact-dup key; md5 is bit-identical across engines)."""
-    return docs.select("doc_id", canonical_fp(F.col(text_col)).alias("fp"))
+    return docs.select("doc_id", canonical_fp(F.col("text")).alias("fp"))
 
 
 PPL_MAX_VOCAB = 1 << 18  # broadcast LM hard bound (rows)
 PPL_MERGE_PARTS = 64     # top-V merge fan-in bound (partitions)
 
 
-def _char_trigrams(docs: DataFrame, text_col: str) -> DataFrame:
+def _char_trigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, g): every char trigram of the canonical text, in order."""
-    base = docs.select("doc_id", _canon(F.col(text_col)).alias("t"))
+    base = docs.select("doc_id", _canon(F.col("text")).alias("t"))
     return base.select(
         "doc_id",
         F.explode(F.expr(
@@ -128,10 +128,9 @@ def _char_trigrams(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def ppl_trigram_model(docs: DataFrame, text_col: str = "text",
-                      max_vocab: int = PPL_MAX_VOCAB) -> DataFrame:
+def ppl_trigram_model(docs: DataFrame) -> DataFrame:
     """The char-trigram LM behind ``ppl_proxy``: (g, c) counts over the
-    TRAIN split, capped to the ``max_vocab`` most frequent grams
+    TRAIN split, capped to the ``PPL_MAX_VOCAB`` most frequent grams
     (count DESC, gram ASC ties — deterministic, engine-portable).
 
     The cap is what makes the broadcast bound real on a MULTILINGUAL
@@ -156,7 +155,7 @@ def ppl_trigram_model(docs: DataFrame, text_col: str = "text",
     """
     from .sampling import deterministic_split
 
-    grams = _char_trigrams(docs, text_col)
+    grams = _char_trigrams(docs)
     train = deterministic_split(docs).filter(F.col("split") == "train") \
         .select("doc_id")
     counts = grams.join(train, "doc_id").groupBy("g").agg(
@@ -164,11 +163,10 @@ def ppl_trigram_model(docs: DataFrame, text_col: str = "text",
     )
     return counts.repartition(PPL_MERGE_PARTS, "g") \
         .orderBy(F.col("c").desc(), F.col("g").asc()) \
-        .limit(max_vocab)
+        .limit(PPL_MAX_VOCAB)
 
 
-def ppl_proxy(docs: DataFrame, text_col: str = "text",
-              max_vocab: int = PPL_MAX_VOCAB) -> DataFrame:
+def ppl_proxy(docs: DataFrame) -> DataFrame:
     """CCNet-style perplexity-proxy quality score: (doc_id, n_grams,
     avg_nll_e9) — each document's mean negative log-probability under a
     char-trigram language model fitted on the corpus's own TRAIN split
@@ -181,7 +179,7 @@ def ppl_proxy(docs: DataFrame, text_col: str = "text",
     BEFORE the per-doc sum (integer addition is order-independent —
     double summation across partitions is not), and the mean is integer
     floor-division.  Scale shape: the model is ``ppl_trigram_model`` —
-    hard-capped at ``max_vocab`` rows (top-V by train count), so the
+    hard-capped at ``PPL_MAX_VOCAB`` rows (top-V by train count), so the
     broadcast is bounded by construction even on a wide-charset corpus;
     its N/V normalizer a broadcast 1-row aggregate; scoring is one
     equi-join of the exploded grams against the broadcast model — no
@@ -189,8 +187,8 @@ def ppl_proxy(docs: DataFrame, text_col: str = "text",
     grams) take the smoothed floor 1/(N+V).  Docs with fewer than 3
     chars have no grams and are absent from the output.
     """
-    grams = _char_trigrams(docs, text_col)
-    model = ppl_trigram_model(docs, text_col, max_vocab)
+    grams = _char_trigrams(docs)
+    model = ppl_trigram_model(docs)
     stats = model.agg(F.sum("c").alias("N"), F.count(F.lit(1)).alias("V"))
     logp9 = F.round(
         F.log((F.coalesce(F.col("c"), F.lit(0)) + 1).cast("double")
@@ -207,10 +205,13 @@ def ppl_proxy(docs: DataFrame, text_col: str = "text",
     )
 
 
-def top_ngrams(docs: DataFrame, text_col: str = "text",
-               n: int = 3, k: int = 50) -> DataFrame:
-    """Corpus-wide most frequent word n-grams: (rank, gram, n_occurrences,
-    n_docs) — boilerplate mining (the grams the dedup caps drop are
+TOP_NGRAMS_N = 3
+TOP_NGRAMS_K = 50
+
+
+def top_ngrams(docs: DataFrame) -> DataFrame:
+    """Corpus-wide most frequent word n-grams (``TOP_NGRAMS_N`` words, the
+    ``TOP_NGRAMS_K`` most frequent): (rank, gram, n_occurrences, n_docs) — boilerplate mining (the grams the dedup caps drop are
     exactly the ones this surfaces for review/strip lists).
 
     One groupBy(gram) with partial aggregation (a corpus-hot gram
@@ -218,7 +219,7 @@ def top_ngrams(docs: DataFrame, text_col: str = "text",
     TakeOrdered, never a full sort of the vocabulary.  Ties break on gram
     ASC so engines rank identically.
     """
-    grams = _word_grams(_words(F.col(text_col)), n)
+    grams = _word_grams(_words(F.col("text")), TOP_NGRAMS_N)
     counts = (
         docs.select("doc_id", F.explode(grams).alias("gram"))
         .groupBy("gram")
@@ -228,43 +229,37 @@ def top_ngrams(docs: DataFrame, text_col: str = "text",
     w = Window.orderBy(F.col("n_occurrences").desc(), F.col("gram").asc())
     return (
         counts.orderBy(F.col("n_occurrences").desc(), F.col("gram").asc())
-        .limit(k)
+        .limit(TOP_NGRAMS_K)
         .withColumn("rank", F.row_number().over(w))
         .select("rank", "gram", "n_occurrences", "n_docs")
     )
 
 
-def strip_boilerplate_lines(docs: DataFrame, text_col: str = "text",
-                            n: int = 3, k: int = 50,
-                            hot: DataFrame | None = None) -> DataFrame:
+def strip_boilerplate_lines(docs: DataFrame) -> DataFrame:
     """Line-level boilerplate strip driven by ``top_ngrams``: (doc_id,
     n_lines, n_lines_kept, kept_text) — every line whose canonical word
-    sequence CONTAINS one of the corpus's ``k`` hottest word n-grams is
+    sequence CONTAINS one of the corpus's ``TOP_NGRAMS_K`` hottest word
+    n-grams is
     removed (cookie banners, nav bars, license footers: the lines the
     dedup caps keep meeting are exactly the ones this strips).  This is
     the consumer of the strip list ``top_ngrams`` mines.
-
-    ``hot`` overrides the mined list with an explicit (gram) DataFrame —
-    a reviewed/curated strip list, the production path once a human has
-    vetted the mined candidates.
 
     Matching is word-bounded: the line is canonicalized to its
     ``[a-z0-9]+`` tokens joined and padded with spaces, and a gram
     matches only as a whole-token subsequence (' g ' in ' w1 w2 ... ').
 
     Scale shape: the strip list is a k-row aggregate folded into ONE
-    array cell and broadcast (k bounded, like the KMeans centers) — the
+    array cell and broadcast (k bounded) — the
     per-doc pass is then an array-level filter over split lines with k
     ``contains`` probes per line, no join key on the corpus side, no
     corpus shuffle at all beyond the mining groupBy itself.  Line order
     is preserved; a corpus with no qualifying grams (shorter than n
     words) strips nothing.
     """
-    if hot is None:
-        hot = top_ngrams(docs, text_col, n=n, k=k).select("gram")
+    hot = top_ngrams(docs).select("gram")
     hot1 = hot.agg(F.collect_list("gram").alias("hot_grams"))
     base = docs.select(
-        "doc_id", F.split(F.col(text_col), "\n").alias("lines")
+        "doc_id", F.split(F.col("text"), "\n").alias("lines")
     ).crossJoin(F.broadcast(hot1))
     # normalize each line ONCE (Catalyst does not hoist loop-invariant
     # subexpressions out of HOF lambdas — inlining the regex tokenization
@@ -286,22 +281,21 @@ def strip_boilerplate_lines(docs: DataFrame, text_col: str = "text",
     )
 
 
-def lang_id_eval(docs: DataFrame, label_col: str = "lang",
-                 text_col: str = "text") -> DataFrame:
+def lang_id_eval(docs: DataFrame) -> DataFrame:
     """Confusion matrix of the n-gram lang-ID against labeled language:
     (lang, pred_lang, n_docs).  The evaluation surface a pipeline needs
     before trusting the classifier as a filter; one broadcast-free
     groupBy on the two label columns."""
-    preds = lang_id(docs, text_col).select("doc_id", "pred_lang")
+    preds = lang_id(docs).select("doc_id", "pred_lang")
     return (
-        docs.select("doc_id", F.col(label_col).alias("lang"))
+        docs.select("doc_id", F.col("lang").alias("lang"))
         .join(preds, "doc_id")
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
 
 
-def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_quality(docs: DataFrame) -> DataFrame:
     """Gopher/C4-style repetition + shape filters (Rae et al. 2021 §A1.1),
     integer-scaled for cross-engine hashing.
 
@@ -318,13 +312,13 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     both partial-aggregated, keyed by doc so no corpus-hot key exists —
     joined back on doc_id.
     """
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     n_words = F.size(words)
     total_chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
     n_distinct = F.size(F.array_distinct(words))
-    sym_hits = F.regexp_count(F.col(text_col), F.lit(r"#|\.\.\."))
+    sym_hits = F.regexp_count(F.col("text"), F.lit(r"#|\.\.\."))
     base = docs.select(
         "doc_id",
         n_words.cast("long").alias("n_words"),
@@ -363,9 +357,12 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("gopher_pass", passed.cast("int"))
 
 
-def tfidf_topterms(docs: DataFrame, text_col: str = "text",
-                   k: int = 5) -> DataFrame:
-    """Top-k tf-idf terms per document: (doc_id, rank, term, score_e9).
+TFIDF_K = 5
+
+
+def tfidf_topterms(docs: DataFrame) -> DataFrame:
+    """Top-``TFIDF_K`` tf-idf terms per document: (doc_id, rank, term,
+    score_e9).
 
     Keyword extraction for corpus curation: tf = per-doc term count,
     idf = ln((N+1)/(df+1)) with N pulled into the plan as a broadcast
@@ -376,7 +373,7 @@ def tfidf_topterms(docs: DataFrame, text_col: str = "text",
     """
     words = docs.select(
         "doc_id",
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(_words(F.col("text"))).alias("term"),
     )
     tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -394,13 +391,13 @@ def tfidf_topterms(docs: DataFrame, text_col: str = "text",
     w = Window.partitionBy("doc_id").orderBy(F.col("s9").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_K)
         .select("doc_id", "rank", "term",
                 F.round(F.col("s9") * 1e9).cast("long").alias("score_e9"))
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher line/paragraph repetition filters (Rae et al. 2021 §A1.1) —
     the four repetition signals ``gopher_quality``'s word/2-gram stats do
     NOT cover: per doc, the fraction of duplicate lines and paragraphs by
@@ -423,7 +420,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     def unit_stats(pattern: str, prefix: str) -> DataFrame:
         units = F.filter(
-            F.transform(F.split(F.col(text_col), pattern), lambda x: F.trim(x)),
+            F.transform(F.split(F.col("text"), pattern), lambda x: F.trim(x)),
             lambda x: x != "",
         )
         ex = docs.select("doc_id", F.explode(units).alias("u"))
@@ -464,8 +461,7 @@ REP_TOP_MAX_BP = {2: 2000, 3: 1800, 4: 1600}
 REP_DUP_MAX_BP = {5: 1500, 6: 1400, 7: 1300, 8: 1200, 9: 1100, 10: 1000}
 
 
-def repetition_ngram_stats(docs: DataFrame,
-                           text_col: str = "text") -> DataFrame:
+def repetition_ngram_stats(docs: DataFrame) -> DataFrame:
     """Gopher's word n-gram repetition battery (Rae et al. 2021 §A1.1):
     per doc, the character mass claimed by the TOP n-gram for n=2,3,4 and
     by ALL duplicated n-grams for n=5..10, in basis points of the doc's
@@ -494,7 +490,7 @@ def repetition_ngram_stats(docs: DataFrame,
     repetition census (2.x top-mass, 5..10 dup-mass; line/paragraph
     signals live in ``repetition_stats``).
     """
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     total_chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
@@ -581,7 +577,7 @@ PII_IPV4 = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 PII_PHONE = r"\+[0-9][0-9 \-]{5,}[0-9]"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """PII masking pass (the C4/CCNet-style scrub every distributed
     curation pipeline runs before release): (doc_id, n_emails, n_ips,
     n_phones, redacted_text) with emails -> '<EMAIL>', IPv4 literals ->
@@ -598,7 +594,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     whole-stage-codegen project, no shuffle, no UDF; at 10^12 docs this
     is scan-bound by construction.
     """
-    t0 = F.col(text_col)
+    t0 = F.col("text")
     n_em = F.regexp_count(t0, F.lit(PII_EMAIL))
     t1 = F.regexp_replace(t0, PII_EMAIL, "<EMAIL>")
     n_ip = F.regexp_count(t1, F.lit(PII_IPV4))
@@ -620,7 +616,7 @@ C4_BLACKLIST = ("lorem ipsum", "javascript", "cookie", "privacy policy",
 C4_TERMINALS = (".", "!", "?", '"')
 
 
-def c4_line_filters(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def c4_line_filters(docs: DataFrame) -> DataFrame:
     """C4-style rule-based line/document cleaning (after Raffel et al.
     2020 §2.2): (doc_id, n_lines, n_lines_kept, doc_pass, kept_text).  A
     line survives iff it ends in one of ``C4_TERMINALS``, carries at least
@@ -651,9 +647,9 @@ def c4_line_filters(docs: DataFrame, text_col: str = "text") -> DataFrame:
         black = reduce(or_, [_fold(x).contains(b) for b in C4_BLACKLIST])
         return punct & enough & ~black
 
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     kept = F.filter(lines, keep)
-    code_doc = F.col(text_col).contains("{")
+    code_doc = F.col("text").contains("{")
     return docs.select(
         "doc_id",
         F.size(lines).cast("long").alias("n_lines"),

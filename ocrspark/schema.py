@@ -11,7 +11,8 @@ SPAN_STRUCT = T.StructType([
     T.StructField("kind", T.StringType(), False),       # "text" | "image"
     T.StructField("text", T.StringType(), True),
     T.StructField("media_ref", T.StringType(), True),
-    T.StructField("offset", T.IntegerType(), False),    # dense document order
+    # document order; assumed unique per doc, and nothing checks it
+    T.StructField("offset", T.IntegerType(), False),
 ])
 
 DOCS_SCHEMA = T.StructType([

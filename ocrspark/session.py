@@ -44,8 +44,8 @@ def get_spark(app: str = "ocrspark", master: str | None = None,
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
-        # bucketed-table writes (partitioning.write_bucketed) go through the
-        # session catalog; keep the warehouse out of the repo tree
+        # bucketed-table writes (streaming.dedup_ingest's landed table) go
+        # through the session catalog; keep the warehouse out of the repo tree
         .config("spark.sql.warehouse.dir",
                 os.environ.get("OCRSPARK_WAREHOUSE", "/tmp/ocrspark_warehouse"))
     )

@@ -24,27 +24,29 @@ from pyspark.sql import functions as F
 from .config import DEFAULT_BUCKETS
 from .io import _dir_has_files
 
+WATERMARK = "1 hour"  # dedup_stream's state horizon on ``ingested_at``
+MAX_FILES_PER_TRIGGER = 64  # dedup_ingest's micro-batch size, in files
 
-def dedup_stream(docs: DataFrame, ts_col: str = "ingested_at",
-                 watermark: str = "1 hour") -> DataFrame:
+
+def dedup_stream(docs: DataFrame) -> DataFrame:
     """Streaming exact dedup: first-seen wins within the watermark horizon.
 
     The ingestion-side twin of ``ops.dedup.exact_groups``: the same
     canonical-text md5 key, deduped incrementally with
     ``dropDuplicatesWithinWatermark`` so state is BOUNDED — a duplicate
-    arriving within ``watermark`` of the first copy is dropped; state for
-    keys older than the horizon is evicted (at 100 TB/day the horizon is
-    the memory knob; full-history dedup belongs to the batch op over the
-    landed corpus).  Works on batch DataFrames too (falls back to plain
+    arriving within ``WATERMARK`` of its first copy's ``ingested_at`` is
+    dropped; state for keys older than the horizon is evicted (at 100
+    TB/day the horizon is the memory knob; full-history dedup belongs to
+    the batch op over the landed corpus).  Works on batch DataFrames too (falls back to plain
     dropDuplicates semantics on the key).
     """
     from .ops.dedup import canonical_fp
 
     keyed = docs.withColumn("fp", canonical_fp(F.col("text"))).withColumn(
-        ts_col, F.col(ts_col).cast("timestamp")
+        "ingested_at", F.col("ingested_at").cast("timestamp")
     )
     if keyed.isStreaming:
-        return keyed.withWatermark(ts_col, watermark)\
+        return keyed.withWatermark("ingested_at", WATERMARK)\
             .dropDuplicatesWithinWatermark(["fp"])
     return keyed.dropDuplicates(["fp"])
 
@@ -67,9 +69,7 @@ def landed_anti_join(keyed: DataFrame, landed: DataFrame,
 
 def dedup_ingest(spark: SparkSession, input_dir: str, out_dir: str | None,
                  checkpoint_dir: str, schema: str,
-                 max_files_per_trigger: int = 64,
-                 landed_table: str | None = None,
-                 landed_buckets: int = DEFAULT_BUCKETS):
+                 landed_table: str | None = None):
     """FULL-history streaming dedup: survivors of each micro-batch are the
     docs whose canonical fingerprint has never landed.
 
@@ -84,8 +84,8 @@ def dedup_ingest(spark: SparkSession, input_dir: str, out_dir: str | None,
     Landed side, two shapes:
 
     * ``landed_table`` set (the 100 TB path): the corpus is a Spark table
-      bucketed+sorted by fp (``partitioning.write_bucketed`` layout, one
-      append per batch).  The anti-join then shuffles ONLY the micro-batch
+      bucketed (``DEFAULT_BUCKETS`` buckets) and sorted by fp, appended
+      once per batch.  The anti-join then shuffles ONLY the micro-batch
       side — per-batch cost O(batch), independent of history size.
     * ``landed_table`` None: the corpus is ``out_dir`` parquet; each batch
       re-reads the fingerprint column of the full history (fine for small
@@ -105,7 +105,7 @@ def dedup_ingest(spark: SparkSession, input_dir: str, out_dir: str | None,
 
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
 
@@ -119,7 +119,7 @@ def dedup_ingest(spark: SparkSession, input_dir: str, out_dir: str | None,
                 keyed = landed_anti_join(keyed, ss.table(landed_table),
                                          bucketed=True)
             (keyed.write.mode("append").format("parquet")
-             .bucketBy(landed_buckets, "fp").sortBy("fp")
+             .bucketBy(DEFAULT_BUCKETS, "fp").sortBy("fp")
              .saveAsTable(landed_table))
         else:
             if _dir_has_files(ss, out_dir):

@@ -40,6 +40,14 @@ def plan_nodes():
 
 
 @pytest.fixture(scope="session")
+def plan_text():
+    """df -> its rendered executed plan, for expression-level facts only
+    (aggregate functions, partitioning arguments, join types); node types
+    are checked with the ``plan_nodes`` walker."""
+    return lambda df: df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("OCRSPARK_MASTER", "local[4]")
     s = get_spark(app="ocrspark-tests", master=os.environ["OCRSPARK_MASTER"],

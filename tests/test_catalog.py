@@ -74,7 +74,7 @@ def test_to_json_catalog_parses(spark):
                     "media_refs"} <= set(exam["tasks"][0])
 
 
-def test_catalog_caps_fail_loud(spark):
+def test_catalog_caps_fail_loud(spark, monkeypatch):
     """The collect_list contract at adversarial key skew is explicit: a
     hot (subject, exam_version) exceeding the task cap, or a subject
     exceeding the exam-version cap, raises in-plan with the key named —
@@ -82,11 +82,15 @@ def test_catalog_caps_fail_loud(spark):
     leave the exam domain untouched."""
     import pytest
 
+    from ocrspark import catalog
+
     docs = generate_docs(spark, 40, seed=8)
     ext = extract(docs)
     assert exams_catalog(ext).count() > 0          # defaults: unchanged
-    with pytest.raises(Exception, match="tasks > cap"):
-        exams_catalog(ext, max_tasks_per_exam=2).collect()
     per_exam = exams_catalog(ext)
-    with pytest.raises(Exception, match="exam versions > cap"):
-        subjects_catalog(per_exam, max_exams_per_subject=0).collect()
+    monkeypatch.setattr(catalog, "CATALOG_MAX_TASKS_PER_EXAM", 2)
+    with pytest.raises(Exception, match="tasks > cap 2"):
+        exams_catalog(ext).collect()
+    monkeypatch.setattr(catalog, "CATALOG_MAX_EXAMS_PER_SUBJECT", 0)
+    with pytest.raises(Exception, match="exam versions > cap 0"):
+        subjects_catalog(per_exam).collect()

@@ -83,7 +83,7 @@ def test_redact_pii_planted(spark):
     assert out[5].redacted_text == "<EMAIL> and <IP> and <PHONE>"
 
 
-def test_mixture_weights_differential(spark):
+def test_mixture_weights_differential(spark, monkeypatch):
     """The emitted shares/epochs must equal the pure-python evaluation of
     the documented formula (int64-rounded weight mass), and a low epoch
     cap must clamp the small source and flag it."""
@@ -106,10 +106,10 @@ def test_mixture_weights_differential(spark):
         return exp
 
     for cap in (400, 200):
+        monkeypatch.setattr(sampling, "MIX_EPOCH_CAP_E2", cap)
         got = {r.source: (r.total_tokens, r.natural_share_e9,
                           r.temp_share_e9, r.epochs_e2, r.capped)
-               for r in sampling.mixture_weights(
-                   docs, epoch_cap_e2=cap).collect()}
+               for r in sampling.mixture_weights(docs).collect()}
         assert got == expected(50, cap), (cap, got)
     # sqrt-temperature sanity: B's 10% flattens toward 25%
     b_share = expected(50, 400)["B"][2] / 1e9
@@ -141,13 +141,7 @@ def test_mixture_weights_zero_tokens_fails_in_both_engines(spark):
         con.close()
 
 
-def _plan(df) -> str:
-    """Rendered executed plan, for partial-aggregate facts only (node types
-    are checked with the ``plan_nodes`` walker)."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_curation_ops_plan_shapes(spark, plan_nodes):
+def test_curation_ops_plan_shapes(spark, plan_nodes, plan_text):
     """Scale-shape lint for the three ops: redaction is one shuffle-free
     codegen project; the line-dedup keeper is a partial-aggregated
     groupBy (hot lines collapse map-side), NEVER a window over the raw
@@ -162,11 +156,11 @@ def test_curation_ops_plan_shapes(spark, plan_nodes):
     # text below: partial_min/count/sum are aggregate functions, not nodes
     lines = dedup.line_dedup_keep_first(docs)
     assert "Window" not in plan_nodes(lines), plan_nodes(lines)
-    assert "partial_min" in _plan(lines), _plan(lines)
+    assert "partial_min" in plan_text(lines), plan_text(lines)
 
     mix = sampling.mixture_weights(docs)
     assert "Window" not in plan_nodes(mix), plan_nodes(mix)
-    p_mix = _plan(mix)
+    p_mix = plan_text(mix)
     assert "partial_count" in p_mix or "partial_sum" in p_mix, p_mix
 
     n_c4 = plan_nodes(textstats.c4_line_filters(docs))

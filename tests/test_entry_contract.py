@@ -49,3 +49,35 @@ def test_every_query_runs_small(spark):
     for name, fn in E.queries().items():
         df = fn(spark, SF_DIR)
         assert df.limit(1).count() >= 0, name
+
+
+# Settable options: public parameters with a default (functions whose name
+# does not start with "_", in ocrspark/, __spark_entry__.py and bench.py)
+# plus the distinct environment variables those files read.  Every option
+# needs a non-test caller, a deployment/lineage role or a named reference
+# feature; a change that adds or removes one updates these numbers.
+OPTION_PARAMS = 45
+OPTION_ENV_VARS = 9
+
+
+def settable_options(root: Path) -> tuple[int, int]:
+    import ast
+    import re
+
+    params, env = 0, set()
+    for p in [*root.glob("ocrspark/**/*.py"), root / "__spark_entry__.py",
+              root / "bench.py"]:
+        src = p.read_text()
+        params += sum(
+            len(f.args.defaults) + sum(d is not None for d in f.args.kw_defaults)
+            for f in ast.walk(ast.parse(src))
+            if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not f.name.startswith("_"))
+        env |= set(re.findall(
+            r"""(?:environ\.get\(|getenv\(|environ\[)\s*["']([A-Z0-9_]+)""", src))
+    return params, len(env)
+
+
+def test_settable_option_budget():
+    root = Path(__file__).resolve().parents[1]
+    assert settable_options(root) == (OPTION_PARAMS, OPTION_ENV_VARS)

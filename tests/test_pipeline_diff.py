@@ -49,3 +49,38 @@ def test_arrow_native_stage1_agree(spark):
     b = _canon(extract(docs, arrow=False))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+# A task body ending in U+0085 (NEL).  Stage-1 recovery keeps NEL: it is in
+# neither UNICODE_WS_RE nor CONTROL_CHARS_RE, and Java's \s (Spark) leaves
+# it alone, while pyref's Python \s / strip() squeeze it away.
+NEL_SPANS = [
+    ("text", "Emnekode TFY4115 — Eksamen vår 2023.", "", 0),
+    ("text", "1 Regn ut farten til ballen etter to sekunder. "
+             "Oppgi svaret med to desimaler.\x85", "", 1),
+    ("text", "Maks poeng: 2", "", 2),
+    ("text", "2 Finn akselerasjonen til vogna når kraften og massen "
+             "er oppgitt i figuren over.", "", 3),
+    ("text", "Maks poeng: 4", "", 4),
+]
+
+
+@pytest.mark.xfail(strict=True, reason="U+0085 is whitespace to pyref only; "
+                   "the fix adds it to UNICODE_WS_RE (ROADMAP direction 2)")
+def test_nel_matches_pyref(spark):
+    """Native and Arrow stage 1 must both match pyref on a NEL span."""
+    from ocrspark import pyref
+    from ocrspark.schema import DOCS_SCHEMA
+
+    docs = spark.createDataFrame(
+        [{"doc_id": "nel", "spans": [
+            {"kind": k, "text": t, "media_ref": m, "offset": o}
+            for k, t, m, o in NEL_SPANS]}],
+        schema=DOCS_SCHEMA,
+    )
+    exp = sorted((t.task_number, t.task_text, [s.text for s in t.spans])
+                 for t in pyref.extract_doc("nel", NEL_SPANS).tasks)
+    got = {arrow: sorted((r.task_number, r.task_text, [s.text for s in r.spans])
+                         for r in extract(docs, arrow=arrow).collect())
+           for arrow in (False, True)}
+    assert got == {False: exp, True: exp}

@@ -15,25 +15,18 @@ from ocrspark.corpus import generate_docs
 from ocrspark.pipeline import extract
 
 
-def _plan(df) -> str:
-    """Rendered executed plan, for expression-level facts only (partial
-    aggregate functions, partitioning arguments, Python UDF expressions,
-    codegen ids); node types are checked with the ``plan_nodes`` walker."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_single_exchange_native(spark, plan_nodes):
+def test_single_exchange_native(spark, plan_nodes, plan_text):
     docs = generate_docs(spark, 10, seed=1)
     df = extract(docs, arrow=False)
     # one data exchange; AQE may add nothing else
     assert plan_nodes(df).count("Exchange") == 1, plan_nodes(df)
     # text: the partitioning key is an argument of the node, not a node
-    plan = _plan(df)
+    plan = plan_text(df)
     exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
     assert len(exchanges) == 1 and "doc_id" in exchanges[0], plan
 
 
-def test_no_python_in_native_plan(spark, plan_nodes):
+def test_no_python_in_native_plan(spark, plan_nodes, plan_text):
     docs = generate_docs(spark, 10, seed=1)
     df = extract(docs, arrow=False)
     nodes = plan_nodes(df)
@@ -41,7 +34,7 @@ def test_no_python_in_native_plan(spark, plan_nodes):
     assert nodes.count("MapInPandas") <= 1, nodes
     assert "BatchEvalPython" not in nodes, nodes
     # text: a PythonUDF is an expression inside a node, not a node
-    assert "PythonUDF" not in _plan(df)
+    assert "PythonUDF" not in plan_text(df)
 
 
 def test_no_cartesian_or_nested_loop(spark, plan_nodes):
@@ -54,8 +47,9 @@ def test_no_cartesian_or_nested_loop(spark, plan_nodes):
 def test_scaled_similarity_paths_are_equi_joins(spark, plan_nodes):
     """The dedup/ANN scale paths must never plan a cartesian/nested-loop
     join: banded-LSH near-dups, bucketed ANN search, and the capped MinHash
-    candidate join are all equi-joins.  (cosine_topk and the exact=True
-    recall baseline are the documented broadcast exceptions.)"""
+    candidate join are all equi-joins.  (cosine_topk and the
+    _exact_near_dups recall baseline are the documented broadcast
+    exceptions.)"""
     from ocrspark.ops import dedup, similarity
 
     emb = spark.range(64).select(
@@ -81,17 +75,17 @@ def test_scaled_similarity_paths_are_equi_joins(spark, plan_nodes):
         assert "CartesianProduct" not in nodes, nodes
         assert "BroadcastNestedLoopJoin" not in nodes, nodes
     # IVF: the ONLY nested-loop join allowed is the centroid scoring pass,
-    # whose broadcast side is the n_centroids-row table (bounded by
+    # whose broadcast side is the N_CENTROIDS-row table (bounded by
     # construction).  Catalyst inlines the shared `asg` subplan into both
     # its consumers (inverted lists + query probes), so that one bounded
     # join appears twice; the list/probe joins themselves are equi-joins
     # (SortMergeJoin/BroadcastHashJoin), asserted by the cap below.
-    nodes = plan_nodes(similarity.ivf_topk(emb, n_centroids=4))
+    nodes = plan_nodes(similarity.ivf_topk(emb))
     assert "CartesianProduct" not in nodes, nodes
     assert nodes.count("BroadcastNestedLoopJoin") <= 2, nodes
 
 
-def test_ngram_jaccard_matches_uncapped_ground_truth(spark):
+def test_ngram_jaccard_matches_uncapped_ground_truth(spark, monkeypatch):
     """The df cap only drops pairs whose EVERY shared shingle is
     corpus-hot; on the fixture corpus the capped result equals the
     exhaustive shared-shingle ground truth, and candidate generation is
@@ -101,9 +95,9 @@ def test_ngram_jaccard_matches_uncapped_ground_truth(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     capped = {(r.doc1, r.doc2, r.jaccard_bp)
               for r in dedup.ngram_jaccard_dedup(docs, threshold=0.2).collect()}
+    monkeypatch.setattr(dedup, "MAX_DF", 1 << 30)
     exhaustive = {(r.doc1, r.doc2, r.jaccard_bp)
-                  for r in dedup.ngram_jaccard_dedup(
-                      docs, threshold=0.2, max_df=1 << 30).collect()}
+                  for r in dedup.ngram_jaccard_dedup(docs, threshold=0.2).collect()}
     assert capped == exhaustive
     minhash = {(r.doc1, r.doc2, r.jaccard_bp)
                for r in dedup.minhash_dedup(docs, threshold=0.2).collect()}
@@ -111,7 +105,7 @@ def test_ngram_jaccard_matches_uncapped_ground_truth(spark):
     assert len(exhaustive) > 0
 
 
-def test_round4_ops_plan_shapes(spark, plan_nodes):
+def test_round4_ops_plan_shapes(spark, plan_nodes, plan_text):
     """Plan contracts for the round-4 curation ops: stratified_sample is
     a pure row function (ZERO Exchange — broadcast rate lookup only);
     substring_dup_spans and the others never plan a cartesian/nested-loop
@@ -132,7 +126,7 @@ def test_round4_ops_plan_shapes(spark, plan_nodes):
     for df in [
         dedup.substring_dup_spans(docs),
         textstats.gopher_quality(docs),
-        textstats.top_ngrams(docs, k=5),
+        textstats.top_ngrams(docs),
         sampling.source_rollup(docs),
     ]:
         nodes = plan_nodes(df)
@@ -140,10 +134,10 @@ def test_round4_ops_plan_shapes(spark, plan_nodes):
         assert "BroadcastNestedLoopJoin" not in nodes, nodes
     # gopher's 2-gram mass pass is partial-aggregated (map-side combine);
     # text: partial_count is an aggregate function, not a node
-    assert "partial_count" in _plan(textstats.gopher_quality(docs))
+    assert "partial_count" in plan_text(textstats.gopher_quality(docs))
 
 
-def test_hotkey_caps_use_partial_agg_not_window(spark, plan_nodes):
+def test_hotkey_caps_use_partial_agg_not_window(spark, plan_nodes, plan_text):
     """The df/bucket caps must be skew-safe IN THEMSELVES: sizes computed
     by groupBy (HashAggregate with partial_count before the exchange, so a
     hot key collapses map-side) and joined back — never by a count window
@@ -165,7 +159,7 @@ def test_hotkey_caps_use_partial_agg_not_window(spark, plan_nodes):
     ]:
         assert "Window" not in plan_nodes(df), plan_nodes(df)
         # text: partial_count is an aggregate function, not a node
-        assert "partial_count" in _plan(df), _plan(df)
+        assert "partial_count" in plan_text(df), plan_text(df)
 
 
 def test_cap_by_key_equals_window_form(spark):
@@ -192,10 +186,10 @@ def test_cap_by_key_equals_window_form(spark):
         assert got == want, (min_n, max_n)
 
 
-def test_cosine_topk_query_side_is_bounded(spark):
-    """Contract: cosine_topk's broadcast side is runtime-capped in-plan —
-    a corpus-sized query set raises instead of OOMing the broadcast — and
-    an explicit bounded `queries` DataFrame is the shipped API."""
+def test_cosine_topk_query_side_is_bounded(spark, monkeypatch):
+    """Contract: cosine_topk serves the vec_id % QUERY_MOD cohort, and its
+    broadcast side is runtime-capped in-plan — a query set over
+    MAX_QUERIES raises instead of OOMing the broadcast."""
     import pytest
 
     from ocrspark.ops import similarity
@@ -207,15 +201,15 @@ def test_cosine_topk_query_side_is_bounded(spark):
             lambda i: F.sin(i * (F.col("id") + 1)).cast("float"),
         ).alias("embedding"),
     )
-    # explicit query DataFrame: results cover exactly those query ids
-    q = emb.filter(F.col("vec_id").isin(3, 7))
-    rows = similarity.cosine_topk(emb, k=2, queries=q).collect()
-    assert {r.query_id for r in rows} == {3, 7}
-    assert len(rows) == 4
+    rows = similarity.cosine_topk(emb).collect()
+    cohort = set(range(0, 120, similarity.QUERY_MOD))
+    assert {r.query_id for r in rows} == cohort
+    assert len(rows) == len(cohort) * similarity.TOP_K
     # over-cap query set fails loudly at runtime (the guard survives
     # Catalyst optimization — it must not be folded away)
+    monkeypatch.setattr(similarity, "MAX_QUERIES", len(cohort) - 1)
     with pytest.raises(Exception, match="max_queries"):
-        similarity.cosine_topk(emb, k=2, query_mod=1, max_queries=16).collect()
+        similarity.cosine_topk(emb).collect()
 
 
 def test_embedding_near_dups_recall(spark):
@@ -225,7 +219,7 @@ def test_embedding_near_dups_recall(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     exact = {(r.id1, r.id2) for r in
-             similarity.embedding_near_dups(emb, 0.4, exact=True).collect()}
+             similarity._exact_near_dups(emb, 0.4).collect()}
     banded = {(r.id1, r.id2) for r in
               similarity.embedding_near_dups(emb, 0.4).collect()}
     assert banded <= exact
@@ -233,37 +227,7 @@ def test_embedding_near_dups_recall(spark):
     assert len(banded) / len(exact) >= 0.5  # OR-of-ANDs recall at cos>=0.4
 
 
-def test_bucketed_join_is_exchange_free(spark, plan_nodes):
-    """Co-located join contract: two tables bucketed by the join key with
-    equal bucket counts sort-merge-join with NO Exchange on either side —
-    the write-once/join-free-forever path for repeated pipeline runs."""
-    from ocrspark.partitioning import write_bucketed
-
-    a = spark.range(500).select(
-        F.col("id").cast("int").alias("doc_id"),
-        (F.col("id") * 3).alias("x"),
-    )
-    b = spark.range(500).select(
-        F.col("id").cast("int").alias("doc_id"),
-        (F.col("id") * 7).alias("y"),
-    )
-    write_bucketed(a, "bkt_a", buckets=8)
-    write_bucketed(b, "bkt_b", buckets=8)
-    try:
-        joined = (
-            spark.table("bkt_a").hint("merge")
-            .join(spark.table("bkt_b").hint("merge"), "doc_id")
-        )
-        nodes = plan_nodes(joined)
-        assert "SortMergeJoin" in nodes, nodes
-        assert not any("Exchange" in n for n in nodes), nodes
-        assert joined.count() == 500
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
-def test_components_label_propagation(spark):
+def test_components_label_propagation(spark, monkeypatch):
     """Min-label propagation finds connected components on a graph needing
     multiple rounds (path of 6) plus a disjoint pair, labeling each node
     with the component-min id and the component size."""
@@ -280,8 +244,9 @@ def test_components_label_propagation(spark):
     # non-convergence is an error, never silently-partial labels
     import pytest
 
+    monkeypatch.setattr(dedup, "COMPONENTS_MAX_ITER", 2)
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        dedup.components(pairs, max_iter=2)
+        dedup.components(pairs)
 
 
 def test_boilerplate_cluster_routes_to_exact_dedup(spark):
@@ -360,8 +325,8 @@ def test_ivf_topk_recall_vs_exact(spark):
     from ocrspark.ops import similarity
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = similarity.cosine_topk(emb, k=10).collect()
-    ivf = similarity.ivf_topk(emb, k=10).collect()
+    exact = similarity.cosine_topk(emb).collect()
+    ivf = similarity.ivf_topk(emb).collect()
     exact_pairs = {(r.query_id, r.neighbor_id) for r in exact}
     ivf_pairs = {(r.query_id, r.neighbor_id) for r in ivf}
     # same query cohort, contiguous ranks per query
@@ -379,26 +344,7 @@ def test_ivf_topk_recall_vs_exact(spark):
     assert recall >= 0.2, f"IVF recall@10 collapsed: {recall:.3f}"
 
 
-def test_ivf_kmeans_quantizer_slots_in(spark):
-    """The Spark-ML KMeans quantizer drops into ivf_topk unchanged and
-    retains usable recall vs the exact baseline (the lowest-id stand-in
-    is the oracle-matched fixture; KMeans is the production quantizer)."""
-    from ocrspark.ops import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact_rows = similarity.cosine_topk(emb, k=10).collect()
-    exact = {(r.query_id, r.neighbor_id) for r in exact_rows}
-    cents = similarity.ivf_kmeans_centroids(emb, n_centroids=8, seed=42)
-    km = similarity.ivf_topk(emb, k=10, n_probe=2, cents=cents).collect()
-    km_pairs = {(r.query_id, r.neighbor_id) for r in km}
-    assert {r.query_id for r in km} == {r.query_id for r in exact_rows}
-    recall = len(km_pairs & exact) / len(exact)
-    # 2/8 cells probed; k-means cells concentrate true neighbors far above
-    # the 25% random floor, but keep the bound host-stable
-    assert recall >= 0.25, f"kmeans-IVF recall collapsed: {recall:.3f}"
-
-
-def test_ivf_two_level_assignment(spark):
+def test_ivf_two_level_assignment(spark, monkeypatch):
     """The hierarchical coarse assign must (a) score ~g + p*k/g cells per
     vector instead of all k — at 256 centroids the flat build pass scores
     8x more pairs — (b) compute EXACT sims for every cell it scans (flat
@@ -411,8 +357,11 @@ def test_ivf_two_level_assignment(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     n = emb.count()
     k = 256
-    flat = similarity.ivf_assignments(emb, k)
-    two = similarity.ivf_assignments_two_level(emb, k, probe_groups=4)
+    monkeypatch.setattr(similarity, "N_CENTROIDS", k)
+    monkeypatch.setattr(similarity, "PROBE_GROUPS", 4)
+    monkeypatch.setattr(similarity, "N_PROBE", 8)
+    flat = similarity.ivf_assignments(emb)
+    two = similarity.ivf_assignments_two_level(emb)
     # (a) cost: scored pairs shrink by ~k / (g + p*k/g) = ~3.2x at k=256
     n_flat, n_two = flat.count(), two.count()
     assert n_flat == n * k
@@ -429,9 +378,8 @@ def test_ivf_two_level_assignment(spark):
     agree = sum(1 for v in f1 if t1.get(v) == f1[v]) / len(f1)
     assert agree >= 0.6, f"two-level crank-1 agreement collapsed: {agree:.3f}"
     exact = {(r.query_id, r.neighbor_id)
-             for r in similarity.cosine_topk(emb, k=10).collect()}
-    tl = similarity.ivf_topk(emb, k=10, n_centroids=k, n_probe=8,
-                             two_level=True, probe_groups=4).collect()
+             for r in similarity.cosine_topk(emb).collect()}
+    tl = similarity.ivf_topk(emb, two_level=True).collect()
     by_q = {}
     for r in tl:
         by_q.setdefault(r.query_id, []).append(r.rank)
@@ -446,11 +394,11 @@ def test_multiprobe_recall_dominates_single_probe(spark):
     from ocrspark.ops import similarity
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    k = 5
     exact = {(r.query_id, r.neighbor_id)
-             for r in similarity.cosine_topk(emb, k=k).collect()}
-    single = similarity.lsh_search(emb, k=k).collect()
-    multi = similarity.lsh_search_multiprobe(emb, k=k).collect()
+             for r in similarity.cosine_topk(emb).collect()
+             if r.rank <= similarity.LSH_TOP_K}
+    single = similarity.lsh_search(emb).collect()
+    multi = similarity.lsh_search_multiprobe(emb).collect()
     # every single-probe candidate set is a subset of multi-probe's, so at
     # equal k the multi-probe rank list can only improve (sim desc order)
     r_single = len({(r.query_id, r.neighbor_id) for r in single} & exact) / len(exact)
@@ -524,12 +472,12 @@ def test_plan_nodes_sees_every_asserted_node(spark, plan_nodes):
         spark.catalog.dropTempView("plan_nodes_b")
 
 
-def test_whole_stage_codegen_present(spark):
+def test_whole_stage_codegen_present(spark, plan_text):
     docs = generate_docs(spark, 10, seed=1)
     df = extract(docs, arrow=False)
     df.collect()  # finalize AQE so codegen ids ("*(n)") appear
     # text: the "*(n)" codegen id is a rendering marker, not a node
-    plan = _plan(df)
+    plan = plan_text(df)
     assert plan.count("*(") > 0
 
 
@@ -617,8 +565,8 @@ def test_pq_adc_properties(spark, plan_nodes):
     """PQ/ADC contracts: (a) codebook-source vectors self-code exactly
     (distance 0 at their own entry); (b) ADC recall@10 vs brute-force L2
     clears 5x the random floor even with the un-learned lowest-id
-    codebook (a k-means codebook slots in via books=); (c) ranks are
-    contiguous per query and the plan stays equi-join only."""
+    codebook; (c) ranks are contiguous per query and the plan stays
+    equi-join only."""
     import numpy as np
 
     from ocrspark.ops import similarity
@@ -636,7 +584,7 @@ def test_pq_adc_properties(spark, plan_nodes):
     exact = {q: {c for _, c in sorted(
         ((float(np.sum((V[q] - V[c]) ** 2)), c) for c in ids if c != q)
     )[:10]} for q in qs}
-    pq = similarity.pq_topk(emb, k=10)
+    pq = similarity.pq_topk(emb)
     assert "CartesianProduct" not in plan_nodes(pq), plan_nodes(pq)
     got_rows = pq.collect()
     got = {}
@@ -652,16 +600,19 @@ def test_pq_adc_properties(spark, plan_nodes):
 
 def test_ivfpq_candidates_subset_of_ivf(spark):
     """IVF-PQ must score exactly the IVF-probed candidate universe (same
-    cells, same lists) — its results are a subset of the uncompressed
-    ivf_topk's candidate set at exhaustive k, with contiguous ranks."""
+    cells, same lists): every result pairs a query with a vector whose
+    cell is one of the query's N_PROBE closest, and ranks are
+    contiguous."""
     from ocrspark.ops import similarity
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    n = emb.count()
-    ivf_all = {(r.query_id, r.neighbor_id)
-               for r in similarity.ivf_topk(emb, k=n).collect()}
-    pq = similarity.ivfpq_topk(emb, k=10).collect()
-    assert {(r.query_id, r.neighbor_id) for r in pq} <= ivf_all
+    asg = similarity.ivf_assignments(emb).collect()
+    cell = {r.vec_id: r.cell_id for r in asg if r.crank == 1}
+    probed = {(r.vec_id, r.cell_id) for r in asg
+              if r.crank <= similarity.N_PROBE}
+    pq = similarity.ivfpq_topk(emb).collect()
+    assert all((r.query_id, cell[r.neighbor_id]) in probed
+               and r.query_id % similarity.QUERY_MOD == 0 for r in pq)
     ranks = {}
     for r in pq:
         ranks.setdefault(r.query_id, []).append(r.rank)
@@ -704,9 +655,10 @@ def test_substring_dedup_keep_cleans_corpus(spark):
     assert dedup.substring_dup_spans(cleaned).count() == 0
 
 
-def test_ppl_model_bounded_on_wide_charset(spark, plan_nodes):
+def test_ppl_model_bounded_on_wide_charset(spark, plan_nodes, plan_text,
+                                          monkeypatch):
     """The broadcast LM must be top-V by construction, not by charset
-    luck: a wide-charset (CJK-like) corpus keeps the model <= max_vocab
+    luck: a wide-charset (CJK-like) corpus keeps the model <= PPL_MAX_VOCAB
     rows, and scoring still works with dropped grams at the smoothed
     floor."""
     from ocrspark.ops import textstats
@@ -718,24 +670,25 @@ def test_ppl_model_bounded_on_wide_charset(spark, plan_nodes):
          for i, librate in ((i, 97) for i in range(50))],
         "doc_id string, text string",
     )
-    model = textstats.ppl_trigram_model(docs, max_vocab=100)
+    monkeypatch.setattr(textstats, "PPL_MAX_VOCAB", 100)
+    model = textstats.ppl_trigram_model(docs)
     assert model.count() <= 100
     # the top-V cap is a TakeOrdered whose single final merge sees at
     # most PPL_MERGE_PARTS x V rows by construction: the aggregated
     # counts are re-hashed into exactly that many partitions first
     assert "TakeOrderedAndProject" in plan_nodes(model), plan_nodes(model)
     # text: the partition key and count are arguments of the Exchange node
-    p = _plan(model)
+    p = plan_text(model)
     assert f"hashpartitioning(g#" in p and f", {textstats.PPL_MERGE_PARTS})" in p, p
-    # far more distinct grams exist than the cap admits
-    uncapped = textstats.ppl_trigram_model(docs, max_vocab=1 << 20)
-    assert uncapped.count() > 100
-    out = textstats.ppl_proxy(docs, max_vocab=100).collect()
+    out = textstats.ppl_proxy(docs).collect()
     assert len(out) == 50
     assert all(r.avg_nll_e9 > 0 for r in out)
+    # far more distinct grams exist than the cap admits
+    monkeypatch.setattr(textstats, "PPL_MAX_VOCAB", 1 << 20)
+    assert textstats.ppl_trigram_model(docs).count() > 100
 
 
-def test_strip_boilerplate_lines(spark):
+def test_strip_boilerplate_lines(spark, monkeypatch):
     """The top_ngrams strip list consumer: lines containing a corpus-hot
     3-gram are removed, unique lines survive in order."""
     from ocrspark.ops import textstats
@@ -749,82 +702,18 @@ def test_strip_boilerplate_lines(spark):
         + [("clean", "totally distinct words only here")],
         "doc_id string, text string",
     )
+    # the 3 boilerplate grams are the only ones hotter than 1 occurrence
+    monkeypatch.setattr(textstats, "TOP_NGRAMS_K", 3)
     out = {r.doc_id: r for r in
-           textstats.strip_boilerplate_lines(docs, k=3).collect()}
+           textstats.strip_boilerplate_lines(docs).collect()}
     assert out["d0"].n_lines == 3 and out["d0"].n_lines_kept == 2
     assert "newsletter" not in out["d0"].kept_text
     assert out["d0"].kept_text == (
         "unique0 alpha0 beta0 gamma0\nomega0 delta0 eps0 zeta0")
     assert out["clean"].n_lines == 1 and out["clean"].n_lines_kept == 1
-    # an explicit (reviewed) strip list overrides the mined one
-    hot = spark.createDataFrame([("omega0 delta0 eps0",)], "gram string")
-    got = {r.doc_id: r for r in
-           textstats.strip_boilerplate_lines(docs, hot=hot).collect()}
-    assert got["d0"].n_lines_kept == 2 and "omega0" not in got["d0"].kept_text
-    assert got["d1"].n_lines_kept == 3
 
 
-def test_ivfpq_two_level_wiring(spark):
-    """IVF-PQ must accept the hierarchical coarse assign (the build-pass
-    scale path) — two_level=None auto-picks it at corpus-scale
-    n_centroids — and stay ADC-exact: every (query, neighbor) pair both
-    paths score gets the identical integer ADC distance, and the
-    two-level top-k remains a usable approximation of the flat one at
-    the k=256 regime where flat assignment visibly dominates build cost
-    (see test_ivf_two_level_assignment's 3x+ scored-pair reduction)."""
-    from ocrspark.ops import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    flat = similarity.ivfpq_topk(emb, k=10, n_centroids=256,
-                                 two_level=False).collect()
-    two = similarity.ivfpq_topk(emb, k=10, n_centroids=256,
-                                two_level=True, probe_groups=4).collect()
-    fd = {(r.query_id, r.neighbor_id): r.adist_e9 for r in flat}
-    td = {(r.query_id, r.neighbor_id): r.adist_e9 for r in two}
-    shared = fd.keys() & td.keys()
-    assert len(shared) > 0
-    assert all(fd[p] == td[p] for p in shared)
-    overlap = len(shared) / len(fd)
-    assert overlap >= 0.3, f"two-level IVF-PQ overlap collapsed: {overlap:.3f}"
-    ranks = {}
-    for r in two:
-        ranks.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in ranks.values())
-    # the auto rule: centroid counts at/above the threshold go hierarchical
-    assert similarity.TWO_LEVEL_AUTO_CENTROIDS > 16  # oracle default stays flat
-
-
-def test_ann_explicit_query_cohort(spark):
-    """Every ANN entry point must take an explicit bounded `queries`
-    DataFrame (the production cohort) instead of only the fixture's
-    vec_id % query_mod coupling — and with the same cohort passed
-    explicitly, results are IDENTICAL to the default path."""
-    from ocrspark.ops import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 25 == 0)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    pairs = [
-        (similarity.lsh_search(emb), similarity.lsh_search(emb, queries=qs)),
-        (similarity.lsh_search_multiprobe(emb),
-         similarity.lsh_search_multiprobe(emb, queries=qs)),
-        (similarity.ivf_topk(emb), similarity.ivf_topk(emb, queries=qs)),
-        (similarity.pq_topk(emb), similarity.pq_topk(emb, queries=qs)),
-        (similarity.ivfpq_topk(emb), similarity.ivfpq_topk(emb, queries=qs)),
-    ]
-    for default_df, explicit_df in pairs:
-        assert rows(default_df) == rows(explicit_df)
-    # a different cohort actually changes the query set served
-    qs2 = emb.filter(F.col("vec_id") % 25 == 7)
-    out = similarity.ivf_topk(emb, queries=qs2).collect()
-    assert len(out) > 0
-    assert {r.query_id for r in out} <= {r.vec_id for r in qs2.collect()}
-
-
-def test_round5_ops_plan_shapes(spark, plan_nodes):
+def test_round5_ops_plan_shapes(spark, plan_nodes, plan_text):
     """Plan contracts for the round-5 cleaning ops: substring keep stays
     a capped equi-join chain (partial-agg cap, no cartesian); the
     boilerplate strip's only corpus-side join is the bounded 1-row
@@ -840,7 +729,7 @@ def test_round5_ops_plan_shapes(spark, plan_nodes):
     keep = dedup.substring_dedup_keep(docs)
     assert "CartesianProduct" not in plan_nodes(keep), plan_nodes(keep)
     # text: partial_count is an aggregate function, not a node
-    assert "partial_count" in _plan(keep), _plan(keep)
+    assert "partial_count" in plan_text(keep), plan_text(keep)
     nodes = plan_nodes(textstats.strip_boilerplate_lines(docs))
     assert "CartesianProduct" not in nodes, nodes
     # the 1-row folded strip list is the ONLY nested-loop join (bounded
@@ -958,9 +847,9 @@ def test_substring_keep_edge_spans_original_text(spark):
     assert rows["c"].kept_text == ", then Extra kept words follow here"
 
 
-def test_substring_keep_hot_span_cap_exemption(spark):
-    """The documented max_df CAP EXEMPTION: a span occurring at more
-    positions corpus-wide than max_df never forms runs, so ExactSubstr
+def test_substring_keep_hot_span_cap_exemption(spark, monkeypatch):
+    """The documented MAX_DF CAP EXEMPTION: a span occurring at more
+    positions corpus-wide than MAX_DF never forms runs, so ExactSubstr
     leaves it uncleaned by design (corpus-hot boilerplate is
     strip_boilerplate_lines' job; curate_clean_corpus chains the two)."""
     from ocrspark.ops import dedup
@@ -971,69 +860,15 @@ def test_substring_keep_hot_span_cap_exemption(spark):
          for i in range(9)],
         "doc_id string, text string",
     )
-    # max_df=4: the hot grams occur 9 times > 4 -> capped out, no drops
-    capped = dedup.substring_dedup_keep(docs, max_df=4).collect()
+    # MAX_DF=4: the hot grams occur 9 times > 4 -> capped out, no drops
+    monkeypatch.setattr(dedup, "MAX_DF", 4)
+    capped = dedup.substring_dedup_keep(docs).collect()
     assert all(r.n_spans_dropped == 0 for r in capped)
     assert all("h0" in r.kept_text for r in capped)
     # raising the cap above the occurrence count restores cleaning
+    monkeypatch.setattr(dedup, "MAX_DF", 64)
     uncapped = {r.doc_id: r for r in
-                dedup.substring_dedup_keep(docs, max_df=64).collect()}
+                dedup.substring_dedup_keep(docs).collect()}
     assert uncapped["d00"].n_spans_dropped == 0
     assert all(uncapped[f"d{i:02d}"].n_spans_dropped == 1
                for i in range(1, 9))
-
-
-def test_pq_kmeans_codebooks(spark, plan_nodes):
-    """The KMeans codebooks slot into the PQ family via books= with the
-    same contract as the deterministic stand-in, and trained codebooks
-    must not degrade ADC quality vs the stand-in (they should improve
-    it — real sub-centroids vs arbitrary first-ksub subvectors)."""
-    from ocrspark.ops import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    books = similarity.pq_kmeans_codebooks(emb)
-    assert books.count() == similarity.PQ_M * similarity.PQ_KSUB
-    # the m fits read the CACHED train slice, not the corpus: the
-    # per-subspace filtered scan must be an InMemoryTableScan (corpus
-    # parquet scanned once, at materialization)
-    subs = similarity._pq_train_subvectors(
-        emb, similarity.PQ_M, similarity.PQ_KSUB * 1000)
-    try:
-        subs.count()
-        nodes = plan_nodes(subs.filter(F.col("sub_id") == 0))
-        assert "InMemoryTableScan" in nodes, nodes
-    finally:
-        subs.unpersist()
-    # degenerate data (fewer distinct subvectors than codes) fails loud
-    # instead of emitting a short codebook
-    flat = emb.limit(30).select(
-        "vec_id", F.expr(f"array_repeat(CAST(1.0 AS FLOAT), "
-                         f"{similarity.DIM})").alias("embedding"))
-    import pytest as _pytest
-    with _pytest.raises(Exception, match="centers|need"):
-        similarity.pq_kmeans_codebooks(flat)
-    codes = similarity.pq_codes(emb, books).collect()
-    n = emb.count()
-    assert len(codes) == n * similarity.PQ_M
-    assert all(0 <= r.code < similarity.PQ_KSUB for r in codes)
-
-    def sqd(a, b):
-        return sum((float(x) - float(y)) ** 2 for x, y in zip(a, b))
-
-    vecs = {r.vec_id: r.embedding for r in emb.collect()}
-    qids = [v for v in vecs if v % 25 == 0]
-    exact = {}
-    for q in qids:
-        d = sorted((sqd(vecs[q], vecs[c]), c) for c in vecs if c != q)
-        exact[q] = {c for _, c in d[:10]}
-
-    def recall(books_df):
-        got = {}
-        for r in similarity.pq_topk(emb, k=10, books=books_df).collect():
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        hits = sum(len(got.get(q, set()) & exact[q]) for q in qids)
-        return hits / sum(len(exact[q]) for q in qids)
-
-    r_km, r_standin = recall(books), recall(None)
-    assert r_km >= r_standin - 0.05, (r_km, r_standin)
-    assert r_km >= 0.2, r_km

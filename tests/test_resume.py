@@ -71,6 +71,49 @@ def test_checkpoint_lineage_and_metrics(spark, tmp_path):
     assert sum(r.doc_count for r in rows) == ext.select("doc_id").distinct().count()
 
 
+def test_resume_with_other_bucket_count_fails_loudly(spark, tmp_path):
+    """A bucket id names a doc set only under the count that wrote it: a
+    resume with another bucket count must fail instead of skipping undone
+    work and landing duplicate rows.  The same count still resumes to the
+    one-shot result, and bucket/batch counts below 1 are rejected."""
+    import pytest
+
+    docs = generate_docs(spark, 40, seed=5)
+    store = ParquetStore(str(tmp_path / "store"))
+    run_resumable(spark, docs, store, buckets=4, batches=2, max_batches=1)
+    with pytest.raises(ValueError, match="checkpointed with buckets=\\[4\\]"):
+        run_resumable(spark, docs, store, buckets=8, batches=1)
+    run_resumable(spark, docs, store, buckets=4, batches=2)
+    ext = store.read_extractions(spark)
+    assert ext.count() == ext.select("doc_id", "task_number").distinct().count()
+    assert ext.count() == extract(docs).count()
+    assert {r.n_buckets for r in store.read_checkpoints(spark).collect()} == {4}
+    for buckets, batches in ((0, 1), (4, 0)):
+        with pytest.raises(ValueError, match=">= 1"):
+            run_resumable(spark, docs, ParquetStore(str(tmp_path / "fresh")),
+                          buckets=buckets, batches=batches)
+
+
+def test_checkpoints_without_bucket_count_are_accepted(spark, tmp_path):
+    """Checkpoint rows of a release that did not record ``n_buckets`` are
+    taken as written under the requested count: the resume skips them."""
+    docs = generate_docs(spark, 20, seed=6)
+    store = ParquetStore(str(tmp_path / "store"))
+    run_resumable(spark, docs, store, buckets=4, batches=2, max_batches=1)
+    cps_dir = str(tmp_path / "store" / "checkpoints")
+    old = spark.read.parquet(cps_dir).drop("n_buckets").collect()
+    schema = spark.read.parquet(cps_dir).drop("n_buckets").schema
+    spark.createDataFrame(old, schema).write.mode("overwrite").parquet(cps_dir)
+    done = {r.bucket for r in old}
+    assert 0 < len(done) < 4
+    r = run_resumable(spark, docs, store, buckets=4, batches=2)
+    assert set(r["buckets_done"]) == set(range(4))
+    rows = store.read_checkpoints(spark).collect()
+    assert {row.bucket for row in rows if row.n_buckets is None} == done
+    assert {row.bucket for row in rows if row.n_buckets == 4} \
+        == set(range(4)) - done
+
+
 def test_corrupt_checkpoint_fails_loudly(spark, tmp_path):
     """An unreadable checkpoint part is a fault, not "no checkpoints":
     resuming must raise instead of silently re-running landed batches.

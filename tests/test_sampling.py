@@ -43,13 +43,16 @@ def test_decontaminate_finds_planted_leak(spark):
 
 def test_pack_shards_concat_and_chunk(spark):
     """Offsets/shards must equal laying the per-bucket token stream end to
-    end and cutting every `budget` tokens (docs may span boundaries)."""
-    docs = spark.range(50).select(
+    end and cutting every PACK_BUDGET tokens (docs may span boundaries)."""
+    nb, budget = sampling.PACK_BUCKETS, sampling.PACK_BUDGET
+    # ~30 docs of 1k-7k tokens per bucket: each stream spans many shards
+    docs = spark.range(2000).select(
         F.col("id").cast("int").alias("doc_id"),
-        (F.col("id") % 7 + 1).cast("int").alias("n_tokens"),
+        ((F.col("id") % 7 + 1) * 1000 + F.col("id") % 13).cast("int")
+        .alias("n_tokens"),
     )
-    out = sampling.pack_shards(docs, n_buckets=4, budget=10).collect()
-    toks = {r.doc_id: (r.doc_id % 7 + 1) for r in docs.collect()}
+    out = sampling.pack_shards(docs).collect()
+    toks = {r.doc_id: r.n_tokens for r in docs.collect()}
     # reconstruct each bucket's stream in the op's deterministic order
     import hashlib
 
@@ -58,15 +61,17 @@ def test_pack_shards_concat_and_chunk(spark):
 
     by_bucket = {}
     for r in out:
-        assert r.pack_bucket == h(r.doc_id) % 4
+        assert r.pack_bucket == h(r.doc_id) % nb
         by_bucket.setdefault(r.pack_bucket, []).append(r)
+    assert len(out) == 2000 and len(by_bucket) == nb
     for bucket, rows in by_bucket.items():
         rows.sort(key=lambda r: (h(r.doc_id), r.doc_id))
         cum = 0
         for r in rows:
-            assert r.shard_seq == cum // 10, r
-            assert r.offset_tokens == cum % 10, r
+            assert r.shard_seq == cum // budget, r
+            assert r.offset_tokens == cum % budget, r
             cum += toks[r.doc_id]
+        assert cum > budget  # the stream really crossed shard boundaries
 
 
 def test_gopher_quality_thresholds(spark):
@@ -96,7 +101,7 @@ def test_gopher_quality_thresholds(spark):
 def test_stratified_sample_rates(spark):
     """Kept fraction per stratum tracks its rate_bp (hash-uniformity), the
     assignment is a pure row function (no dependence on other rows), and
-    unlisted strata fall back to default_bp."""
+    unlisted strata keep every doc."""
     docs = spark.createDataFrame(
         [(i, "s0" if i % 2 == 0 else "s1") for i in range(2000)],
         "doc_id int, source string",
@@ -155,7 +160,7 @@ def test_substring_dup_spans_runs(spark):
 
 
 def test_stratified_sample_empty_rates(spark):
-    """rates={} keeps everything at default_bp — including a stratum
+    """rates={} keeps everything (rate 10000) — including a stratum
     literally named the empty string (no placeholder-row collision)."""
     docs = spark.createDataFrame(
         [(1, ""), (2, "s")], "doc_id int, source string")
@@ -240,15 +245,14 @@ def test_dsir_importance_moves_toward_target(spark):
     beta = [(i + 10, "beta words " + " ".join(["beta"] * 5)) for i in range(10)]
     docs = spark.createDataFrame(alpha + beta, "doc_id long, text string")
     target = docs.filter(F.col("doc_id") < 10)
-    out = sampling.dsir_importance(docs, target, n_buckets=64)
+    out = sampling.dsir_importance(docs, target)
     rows = {r["doc_id"]: r for r in out.collect()}
     a_score = sum(rows[i]["dsir_score_e9"] for i in range(10)) / 10
     b_score = sum(rows[i + 10]["dsir_score_e9"] for i in range(10)) / 10
     assert a_score > b_score
     # deterministic: same input, same scores + same gumbel keys
     rows2 = {r["doc_id"]: r
-             for r in sampling.dsir_importance(docs, target,
-                                               n_buckets=64).collect()}
+             for r in sampling.dsir_importance(docs, target).collect()}
     assert all(rows[k]["dsir_score_e9"] == rows2[k]["dsir_score_e9"]
                and rows[k]["gumbel_e9"] == rows2[k]["gumbel_e9"]
                for k in rows)

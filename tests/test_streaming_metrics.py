@@ -69,14 +69,17 @@ def test_dedup_stream_first_seen_wins(spark, tmp_path):
     assert dedup_stream(batch).count() == 4
 
 
-def test_dedup_ingest_full_history(spark, tmp_path):
+def test_dedup_ingest_full_history(spark, tmp_path, monkeypatch):
     """Full-history ingestion dedup: duplicates are dropped against ALL
     landed batches (not a watermark horizon), and a re-drain with no new
     input appends nothing (replay-safe by construction)."""
     import os
 
+    from ocrspark import streaming
     from ocrspark.streaming import dedup_ingest
 
+    # one input file per micro-batch: duplicates meet the landed history
+    monkeypatch.setattr(streaming, "MAX_FILES_PER_TRIGGER", 1)
     batches = [
         [(1, "alpha text"), (2, "beta text")],
         [(3, "ALPHA  text"), (4, "gamma text")],   # 3 dups 1
@@ -94,14 +97,12 @@ def test_dedup_ingest_full_history(spark, tmp_path):
         src.rename(dst)
         os.utime(dst, (3_000_000 + i * 1000, 3_000_000 + i * 1000))
 
-    q = dedup_ingest(spark, str(in_dir), out_dir, cp, schema,
-                     max_files_per_trigger=1)
+    q = dedup_ingest(spark, str(in_dir), out_dir, cp, schema)
     q.awaitTermination(120)
     got = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
     assert got == {1, 2, 4, 6}
 
-    q2 = dedup_ingest(spark, str(in_dir), out_dir, cp, schema,
-                      max_files_per_trigger=1)
+    q2 = dedup_ingest(spark, str(in_dir), out_dir, cp, schema)
     q2.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == 4
 
@@ -151,8 +152,7 @@ def test_dedup_ingest_corrupt_landed_fails_loudly(spark, tmp_path):
                    [[(3, "ALPHA  text"), (4, "gamma text")]], schema)
     # fresh checkpoint so the corrupted corpus is consulted again
     q2 = dedup_ingest(spark, str(in_dir), out_dir,
-                      str(tmp_path / "cor_cp2"), schema,
-                      max_files_per_trigger=2)
+                      str(tmp_path / "cor_cp2"), schema)
     with pytest.raises(Exception):
         q2.awaitTermination(120)
         if q2.exception() is not None:
@@ -163,15 +163,18 @@ def test_dedup_ingest_corrupt_landed_fails_loudly(spark, tmp_path):
     assert files_after == files_before
 
 
-def test_dedup_ingest_bucketed_landed(spark, tmp_path, plan_nodes):
+def test_dedup_ingest_bucketed_landed(spark, tmp_path, plan_nodes, plan_text,
+                                      monkeypatch):
     """The scale path: landed corpus as an fp-bucketed table.  Same
     first-seen-wins semantics as the parquet path, replay-safe, and the
     per-batch anti-join plan shuffles ONLY the batch side (the bucketed
     landed scan has no Exchange above it) — per-batch cost O(batch), not
     O(history)."""
+    from ocrspark import streaming
     from ocrspark.ops.dedup import canonical_fp
     from ocrspark.streaming import dedup_ingest, landed_anti_join
 
+    monkeypatch.setattr(streaming, "MAX_FILES_PER_TRIGGER", 1)
     schema = "doc_id int, text string"
     in_dir = tmp_path / "bkt_in"
     _stage_batches(spark, tmp_path, in_dir, [
@@ -184,13 +187,13 @@ def test_dedup_ingest_bucketed_landed(spark, tmp_path, plan_nodes):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
         q = dedup_ingest(spark, str(in_dir), None, cp, schema,
-                         max_files_per_trigger=1, landed_table=table)
+                         landed_table=table)
         q.awaitTermination(120)
         assert {r.doc_id for r in spark.table(table).collect()} == {1, 2, 4, 6}
 
         # replay with the same checkpoint: nothing new lands
         q2 = dedup_ingest(spark, str(in_dir), None, cp, schema,
-                          max_files_per_trigger=1, landed_table=table)
+                          landed_table=table)
         q2.awaitTermination(120)
         assert spark.table(table).count() == 4
 
@@ -203,8 +206,7 @@ def test_dedup_ingest_bucketed_landed(spark, tmp_path, plan_nodes):
         assert "SortMergeJoin" in nodes, nodes
         assert nodes.count("Exchange") == 1, nodes
         # text: the join type is an argument of the join node
-        plan = anti._jdf.queryExecution().executedPlan().toString()
-        assert "LeftAnti" in plan, plan
+        assert "LeftAnti" in plan_text(anti), plan_text(anti)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
