@@ -86,6 +86,24 @@ def _on(table: str, op, **kw) -> Callable[[SparkSession, str], DataFrame]:
     return q
 
 
+# Query-level values, each named once and read by a Spark query and its
+# DuckDB twin.  Near-dup thresholds below the op defaults (Jaccard 0.5,
+# cosine 0.95): at Jaccard 0.2 the sf0.001-sf0.1 fixtures give the same
+# pairs as at 0.5, all at jaccard >= 0.8; at cosine 0.95 no fixture
+# embedding pair is found.
+NEAR_DUP_JACCARD = 0.2
+NEAR_DUP_COSINE = 0.4
+# ExactSubstr n-gram width and minimum run below the op defaults (8/8): on
+# the fixture corpus the self spans are nonzero and both halves fire.
+FIXTURE_SUBSTR_N = 3
+FIXTURE_SUBSTR_MIN_RUN = 3
+QG_MIN_QUALITY_BP = 5000  # quality_score floor of the curation composites
+SESSION_GAP_MS = 1_800_000  # W2: a gap over 30 minutes starts a session
+EXPECTED_TASKS = 30  # J6: the caller expects task numbers 1..30
+EVENT_WINDOW = "1 hour"  # W1: tumbling window of the event counts
+TOPK_PER_GROUP = 2  # W5: priciest lines kept per order
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction on the small fixture (smoke: rows > 0)."""
     return extract(_docs(spark, "entry")).select(
@@ -199,7 +217,7 @@ def _q_expected(spark, sf_dir):
     expected = docs.select(
         "doc_id",
         F.transform(
-            F.sequence(F.lit(1), F.lit(30)),
+            F.sequence(F.lit(1), F.lit(EXPECTED_TASKS)),
             lambda i: F.concat(F.lit("T"), i.cast("string")),
         ).alias("expected_tasks"),
     )
@@ -277,15 +295,17 @@ def _q_curate_pack(spark, sf_dir):
 
 def _q_dedup_components(spark, sf_dir):
     """Near-dup pairs -> connected components -> canonical keeper per doc."""
-    pairs = dedup.ngram_jaccard_dedup(_tbl(spark, sf_dir, "documents"),
-                                      threshold=0.2).select("doc1", "doc2")
+    pairs = dedup.ngram_jaccard_dedup(
+        _tbl(spark, sf_dir, "documents"), threshold=NEAR_DUP_JACCARD,
+    ).select("doc1", "doc2")
     return dedup.components(pairs)
 
 
 def _q_dedup_components_star(spark, sf_dir):
     """Same clusters via the O(log^2 n)-round large-star/small-star path."""
-    pairs = dedup.ngram_jaccard_dedup(_tbl(spark, sf_dir, "documents"),
-                                      threshold=0.2).select("doc1", "doc2")
+    pairs = dedup.ngram_jaccard_dedup(
+        _tbl(spark, sf_dir, "documents"), threshold=NEAR_DUP_JACCARD,
+    ).select("doc1", "doc2")
     return dedup.components_star(pairs)
 
 
@@ -369,7 +389,7 @@ def _q_curate_corpus(spark, sf_dir):
     docs = _tbl(spark, sf_dir, "documents")
     quality = (
         textstats.quality_score(docs)
-        .filter(F.col("quality_bp") >= 5000).select("doc_id")
+        .filter(F.col("quality_bp") >= QG_MIN_QUALITY_BP).select("doc_id")
     )
     keep_exact = (
         textstats.fingerprint(docs)
@@ -377,7 +397,8 @@ def _q_curate_corpus(spark, sf_dir):
         .filter(F.col("doc_id") == F.col("keep_doc_id"))
         .select("doc_id")
     )
-    pairs = dedup.ngram_jaccard_dedup(docs, threshold=0.2).select("doc1", "doc2")
+    pairs = dedup.ngram_jaccard_dedup(docs, threshold=NEAR_DUP_JACCARD).select(
+        "doc1", "doc2")
     dropped = (
         dedup.components(pairs)
         .filter(F.col("doc_id") != F.col("rep_id"))
@@ -421,7 +442,7 @@ def _q_sessionize_events(spark, sf_dir):
     )
     w = Window.partitionBy("user_id").orderBy("ms", "event_id")
     new_s = F.when(
-        (F.col("ms") - F.lag("ms").over(w) > 1_800_000)
+        (F.col("ms") - F.lag("ms").over(w) > SESSION_GAP_MS)
         | F.lag("ms").over(w).isNull(),
         1,
     ).otherwise(0)
@@ -442,7 +463,7 @@ def _q_windowed_counts(spark, sf_dir):
     so the DuckDB oracle matches; NTZ-formatted window start avoids
     timezone coupling)."""
     e = _tbl(spark, sf_dir, "events")
-    win = F.window(F.col("ts"), "1 hour")
+    win = F.window(F.col("ts"), EVENT_WINDOW)
     return e.groupBy(win.alias("win"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
@@ -483,7 +504,7 @@ def _q_topk_per_group(spark, sf_dir):
     )
     return (
         li.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 2)
+        .filter(F.col("rank") <= TOPK_PER_GROUP)
         .select(
             "l_orderkey",
             "rank",
@@ -597,15 +618,12 @@ def _q_repetition_lines(spark, sf_dir):
     return textstats.repetition_stats(lined)
 
 
-QG_MIN_QUALITY_BP = 5000  # quality_score floor for the composite gate
-
-
 def _q_quality_gate(spark, sf_dir):
     """Quality-gate composite: every doc with its Gopher shape stats,
     n-gram repetition battery, and heuristic quality score joined into
     one diagnostic row, plus the combined ``keep`` flag (gopher_pass AND
-    rep_ngram_pass AND quality_bp >= 5000) — the standard pretraining
-    quality-filter conjunction as ONE oracled plan.  All three inputs
+    rep_ngram_pass AND quality_bp >= QG_MIN_QUALITY_BP) — the standard
+    pretraining quality-filter conjunction as ONE oracled plan.  All three inputs
     are themselves oracle-green ops; three doc-keyed equi-joins."""
     docs = _tbl(spark, sf_dir, "documents")
     gq = textstats.gopher_quality(docs).select(
@@ -637,9 +655,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # harness checks the first 50 entries against oracle_sql(), and
     # tests/test_oracle_tail.py checks every entry after the 50th the same
     # way on each pytest run.
-    # n=3, min_run_tokens=3 (op defaults 8/8): on the fixture corpus the
-    # self spans are nonzero and both ExactSubstr halves fire.
-    exact_substr = {"n": 3, "min_run_tokens": 3}
+    exact_substr = {"n": FIXTURE_SUBSTR_N,
+                    "min_run_tokens": FIXTURE_SUBSTR_MIN_RUN}
     return {
         "text_repetition_lines": _q_repetition_lines,
         "text_repetition_ngrams": _on("documents", textstats.repetition_ngram_stats),
@@ -677,8 +694,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             include_self=True),
         "text_strip_boilerplate": _on("documents", textstats.strip_boilerplate_lines),
         "curate_clean_corpus": _on("documents", _curate_clean),
-        # 0.4: the 0.95 default finds no pair among the fixture embeddings
-        "dedup_semantic": _on("embeddings", similarity.semantic_dedup, threshold=0.4),
+        "dedup_semantic": _on("embeddings", similarity.semantic_dedup,
+                              threshold=NEAR_DUP_COSINE),
         "s7_catalog_json": _q_catalog_json,
         "w2_sessionize_events": _q_sessionize_events,
         "w1_windowed_event_counts": _q_windowed_counts,
@@ -697,9 +714,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "j2_alias_resolution": _q_alias,
         "j6_expected_alignment": _q_expected,
         "dedup_exact_groups": _on("documents", dedup.exact_groups),
-        # 0.2 (op default 0.5): the fixtures at sf0.001-sf0.1 give the same
-        # pairs either way, all at jaccard >= 0.8
-        "dedup_minhash_pairs": _on("documents", dedup.minhash_dedup, threshold=0.2),
+        "dedup_minhash_pairs": _on("documents", dedup.minhash_dedup,
+                                   threshold=NEAR_DUP_JACCARD),
         "dedup_simhash_pairs": _on("documents", dedup.simhash_near_dups),
         "text_tfidf_topterms": _on("documents", textstats.tfidf_topterms),
         "text_gopher_quality": _on("documents", textstats.gopher_quality),
@@ -719,12 +735,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "j3_topic_enum_subject": _q_topic_enum_subject,
         "ann_cosine_topk": _on("embeddings", similarity.cosine_topk),
         "ann_lsh_search": _on("embeddings", similarity.lsh_search),
-        # 0.4: as dedup_semantic
         "dedup_embedding_cosine": _on(
-            "embeddings", similarity.embedding_near_dups, threshold=0.4),
-        # 0.2: as dedup_minhash_pairs
-        "dedup_ngram_jaccard": _on(
-            "documents", dedup.ngram_jaccard_dedup, threshold=0.2),
+            "embeddings", similarity.embedding_near_dups,
+            threshold=NEAR_DUP_COSINE),
+        "dedup_ngram_jaccard": _on("documents", dedup.ngram_jaccard_dedup,
+                                   threshold=NEAR_DUP_JACCARD),
         "dedup_components": _q_dedup_components,
         "ann_ivf_topk": _on("embeddings", similarity.ivf_topk),
         # the O(n*sqrt(k)) hierarchical coarse assignment, the build-pass
@@ -825,7 +840,7 @@ def _sql_grams(n: int) -> str:
 _SHINGLE_CTES = f"""
 WITH {_sql_ws()},
 sh AS (
-  SELECT doc_id, unnest(list_distinct({_sql_grams(3)})) AS shingle
+  SELECT doc_id, unnest(list_distinct({_sql_grams(dedup.SHINGLE_N)})) AS shingle
   FROM w
 ),
 shh AS (
@@ -887,13 +902,13 @@ pairs AS (
 SELECT doc1, doc2,
   CAST({_SQL_JACCARD_BP} AS BIGINT) AS jaccard_bp
 FROM inter JOIN counts c1 ON c1.doc_id = doc1 JOIN counts c2 ON c2.doc_id = doc2
-WHERE {_SQL_JACCARD_BP} >= 2000"""
+WHERE {_SQL_JACCARD_BP} >= {dedup._jaccard_bp(NEAR_DUP_JACCARD)}"""
 
 
-def _pair_ctes(threshold_bp: int = 2000) -> str:
+def _pair_ctes() -> str:
     """Shared CTE chain appended to _SHINGLE_CTES: rare-shingle candidates
-    (df in [2, MAX_DF]) -> exact-Jaccard-verified `pairs` — the single
-    source for _sql_ngram_jaccard, _sql_dedup_components and
+    (df in [2, MAX_DF]) -> `pairs` verified at NEAR_DUP_JACCARD — the one
+    chain of _sql_ngram_jaccard, _sql_dedup_components and
     _sql_curate_corpus."""
     return f""",
 rare AS (
@@ -910,12 +925,12 @@ pairs AS (
   SELECT doc1, doc2,
     CAST({_SQL_JACCARD_BP} AS BIGINT) AS jaccard_bp
   FROM inter JOIN counts c1 ON c1.doc_id = doc1 JOIN counts c2 ON c2.doc_id = doc2
-  WHERE {_SQL_JACCARD_BP} >= {threshold_bp}
+  WHERE {_SQL_JACCARD_BP} >= {dedup._jaccard_bp(NEAR_DUP_JACCARD)}
 )"""
 
 
 def _sql_ngram_jaccard() -> str:
-    """Twin of dedup.ngram_jaccard_dedup at threshold 0.2."""
+    """Twin of dedup.ngram_jaccard_dedup at NEAR_DUP_JACCARD."""
     return (_SHINGLE_CTES + _pair_ctes()
             + "\nSELECT doc1, doc2, jaccard_bp FROM pairs")
 
@@ -968,7 +983,7 @@ keep_exact AS (
 ),
 qual AS (
   SELECT doc_id FROM ({_sql_quality().strip()})
-  WHERE quality_bp >= 5000
+  WHERE quality_bp >= {QG_MIN_QUALITY_BP}
 ),
 dropped AS (SELECT node AS doc_id FROM labels WHERE node <> lab),
 {_SQL_SPLIT_CTE}
@@ -1006,7 +1021,8 @@ def _sql_simhash_pairs() -> str:
     """Byte-block candidate join + hamming verify (twin of
     dedup.simhash_near_dups)."""
     blocks = ", ".join(
-        f"[{b}, (simhash >> {8 * b}) & 255]" for b in range(dedup.SIMHASH_BLOCKS)
+        f"[{b}, (simhash >> {dedup.SIMHASH_BLOCK_BITS * b}) & {dedup.SIMHASH_BLOCK_MASK}]"
+        for b in range(dedup.SIMHASH_BLOCKS)
     )
     return f"""
 WITH sh AS ({_sql_simhash().strip()}),
@@ -1048,6 +1064,7 @@ FROM documents"""
 
 
 def _sql_quality() -> str:
+    t = textstats
     return f"""
 WITH b AS (
   SELECT doc_id,
@@ -1059,9 +1076,9 @@ WITH b AS (
 )
 SELECT doc_id, n_chars, n_words, n_punct,
   CAST(round((
-    CASE WHEN n_chars BETWEEN 100 AND 20000 THEN 0.4 ELSE 0.0 END
-    + CASE WHEN n_punct::DOUBLE / greatest(n_chars, 1) < 0.2 THEN 0.3 ELSE 0.0 END
-    + least(n_stop::DOUBLE / greatest(n_words, 1) * 3.0, 0.3)
+    CASE WHEN n_chars BETWEEN {t.QUALITY_MIN_CHARS} AND {t.QUALITY_MAX_CHARS} THEN {t.QUALITY_LEN_W} ELSE 0.0 END
+    + CASE WHEN n_punct::DOUBLE / greatest(n_chars, 1) < {t.QUALITY_MAX_PUNCT_RATIO} THEN {t.QUALITY_PUNCT_W} ELSE 0.0 END
+    + least(n_stop::DOUBLE / greatest(n_words, 1) * {t.QUALITY_STOP_SCALE}, {t.QUALITY_STOP_W})
   ) * 10000) AS BIGINT) AS quality_bp
 FROM b"""
 
@@ -1080,8 +1097,8 @@ def _sql_fingerprint() -> str:
 
 
 def _split_case_sql(bp_expr: str = "bp") -> str:
-    """CASE expression derived from sampling.SPLITS — the Spark constant is
-    the single source of truth for the split edges."""
+    """CASE expression of the split edges, read from sampling.SPLITS (the
+    one home of the split widths, which both engines read)."""
     acc, whens = 0, []
     for name, width in sampling.SPLITS[:-1]:
         acc += width
@@ -1108,8 +1125,9 @@ SELECT doc_id, {_split_case_sql()} AS split
 FROM h"""
 
 
-def _sql_curate_pack(n_buckets: int = 64, budget: int = 8192) -> str:
+def _sql_curate_pack() -> str:
     """Twin of sampling.pack_shards (concat-and-chunk over hash order)."""
+    n_buckets, budget = sampling.PACK_BUCKETS, sampling.PACK_BUDGET
     return f"""
 WITH base AS (
   SELECT doc_id,
@@ -1131,8 +1149,10 @@ SELECT doc_id, pack_bucket,
 FROM cum"""
 
 
-def _sql_decontaminate(n: int = 8, max_df: int = 64) -> str:
-    """Twin of sampling.decontaminate (8-gram cross-split collisions)."""
+def _sql_decontaminate() -> str:
+    """Twin of sampling.decontaminate (DECON_NGRAM-gram cross-split
+    collisions)."""
+    n, max_df = sampling.DECON_NGRAM, sampling.DECON_MAX_DF
     return f"""
 WITH {_sql_ws()},
 sh8 AS (
@@ -1213,8 +1233,10 @@ SELECT t.doc_id, CAST(t.n_lines AS BIGINT) AS n_lines,
 FROM tot t LEFT JOIN re r ON t.doc_id = r.doc_id"""
 
 
-def _sql_mixture_weights(alpha: str = "0.50", cap: int = 400) -> str:
+def _sql_mixture_weights() -> str:
     """Twin of sampling.mixture_weights (int64-rounded weight mass)."""
+    alpha = f"{sampling.MIX_ALPHA_E2 / 100:.2f}"
+    cap = sampling.MIX_EPOCH_CAP_E2
     return f"""
 WITH per AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1319,8 +1341,7 @@ SELECT doc_id, CAST(len(lines) AS BIGINT) AS n_lines,
 FROM f"""
 
 
-def _sql_substring_runs_ctes(n: int = 8, max_df: int = 64,
-                             rel: str = "documents") -> str:
+def _sql_substring_runs_ctes(n: int, rel: str = "documents") -> str:
     """Shared CTE chain ending in ``runs`` — twin of dedup._substring_runs
     (diagonal gap-and-island runs, verbatim-verified collisions: the join
     is on the 48-bit hash but candidate rows must also match on the
@@ -1342,7 +1363,7 @@ occ AS (
   FROM gl, LATERAL UNNEST(gl.gs) AS u(g)
 ),
 capped AS (
-  SELECT * FROM occ QUALIFY count(*) OVER (PARTITION BY h) <= {max_df}
+  SELECT * FROM occ QUALIFY count(*) OVER (PARTITION BY h) <= {dedup.MAX_DF}
 ),
 coll AS (
   -- no DISTINCT: one gram hash per (doc, position) makes collision rows
@@ -1366,11 +1387,11 @@ runs AS (
 )"""
 
 
-def _sql_substring_spans(n: int = 8, max_df: int = 64,
-                         min_run: int = 8) -> str:
+def _sql_substring_spans() -> str:
     """Twin of dedup.substring_dup_spans."""
+    n, min_run = dedup.SUBSTR_N, dedup.SUBSTR_MIN_RUN_TOKENS
     return f"""
-WITH {_sql_substring_runs_ctes(n, max_df)}
+WITH {_sql_substring_runs_ctes(n)}
 SELECT doc1, doc2, count(*) AS n_runs, max(run_tokens) AS max_run_tokens
 FROM runs WHERE run_tokens >= {min_run}
 GROUP BY 1, 2"""
@@ -1397,20 +1418,20 @@ sruns AS (
 )"""
 
 
-def _sql_substring_self(n: int = 3, max_df: int = 64,
-                        min_run: int = 3) -> str:
-    """Twin of dedup.substring_self_spans (within-doc repeats; the
-    cross-doc CTEs in the shared chain go unreferenced and unplanned)."""
+def _sql_substring_self() -> str:
+    """Twin of dedup.substring_self_spans at the fixture n/min_run
+    (within-doc repeats; the cross-doc CTEs in the shared chain go
+    unreferenced and unplanned)."""
+    n, min_run = FIXTURE_SUBSTR_N, FIXTURE_SUBSTR_MIN_RUN
     return f"""
-WITH {_sql_substring_runs_ctes(n, max_df)},
+WITH {_sql_substring_runs_ctes(n)},
 {_sql_self_ctes(n)}
 SELECT doc_id, count(*) AS n_self_runs, max(run_tokens) AS max_run_tokens
 FROM sruns WHERE run_tokens >= {min_run}
 GROUP BY 1"""
 
 
-def _substring_keep_ctes(n: int = 8, max_df: int = 64,
-                         min_run: int = 8, rel: str = "documents",
+def _substring_keep_ctes(n: int, min_run: int, rel: str = "documents",
                          include_self: bool = False) -> str:
     """CTE chain for the cleaned-corpus twin, ending in ``per_doc``
     (drop-interval stats) and ``kept`` (rebuilt text) — the caller writes
@@ -1423,7 +1444,7 @@ def _substring_keep_ctes(n: int = 8, max_df: int = 64,
   UNION ALL
   SELECT doc_id, min_i + diag AS s, max_i + diag + {n} - 1 AS e
   FROM sruns WHERE run_tokens >= {min_run}""" if include_self else "")
-    return f"""{_sql_substring_runs_ctes(n, max_df, rel)},
+    return f"""{_sql_substring_runs_ctes(n, rel)},
 {self_ctes}drops AS (
   -- DISTINCT is load-bearing (twin of the Spark comment): duplicate
   -- intervals break the total order the island windows need
@@ -1479,7 +1500,7 @@ _SQL_KEEP_STATS = """CAST(len(w.ws) AS BIGINT) AS n_tokens,
        CAST(coalesce(p.n_tokens_dropped, 0) AS BIGINT) AS n_tokens_dropped,"""
 
 
-def _sql_substring_keep(n: int = 8, max_df: int = 64, min_run: int = 8,
+def _sql_substring_keep(n: int, min_run: int,
                         include_self: bool = False) -> str:
     """Twin of dedup.substring_dedup_keep: drop the higher doc's word
     range for every >=min_run shared span (keep-first), merge
@@ -1489,7 +1510,7 @@ def _sql_substring_keep(n: int = 8, max_df: int = 64, min_run: int = 8,
     also drops within-doc later copies: both ExactSubstr halves, merged
     and removed in one pass."""
     return f"""
-WITH {_substring_keep_ctes(n, max_df, min_run, include_self=include_self)}
+WITH {_substring_keep_ctes(n, min_run, include_self=include_self)}
 SELECT w.doc_id,
        {_SQL_KEEP_STATS}
        coalesce(k.kept_text, '') AS kept_text
@@ -1497,8 +1518,7 @@ FROM w LEFT JOIN per_doc p USING (doc_id)
 LEFT JOIN kept k ON k.doc_id = w.doc_id"""
 
 
-def _substring_keep_text_ctes(n: int = 8, max_df: int = 64,
-                              min_run: int = 8, rel: str = "documents",
+def _substring_keep_text_ctes(n: int, min_run: int, rel: str = "documents",
                               include_self: bool = False) -> str:
     """CTE chain for the ORIGINAL-TEXT-domain cleaned-corpus twin
     (dedup.substring_dedup_keep(original_text=True)): the word-interval
@@ -1509,15 +1529,15 @@ def _substring_keep_text_ctes(n: int = 8, max_df: int = 64,
     segment iff one merged interval covers it — the unified predicate
     ``m.s <= t - (1 - is_tok) AND t <= m.e`` (twin of the Spark
     ``_remove_spans_original`` comment).  Ends in ``keptt``."""
-    return f"""{_substring_keep_ctes(n, max_df, min_run, rel, include_self)},
+    return f"""{_substring_keep_ctes(n, min_run, rel, include_self)},
 segs AS (
   SELECT doc_id,
-         regexp_extract_all(text, '[a-zA-Z0-9]+|[^a-zA-Z0-9]+') AS sg
+         regexp_extract_all(text, '{dedup.SEG_PATTERN}') AS sg
   FROM {rel} WHERE doc_id IN (SELECT doc_id FROM per_doc)
 ),
 segx AS (
   SELECT s.doc_id, u.i - 1 AS p, s.sg[u.i] AS seg,
-         CASE WHEN regexp_matches(s.sg[u.i], '^[a-zA-Z0-9]')
+         CASE WHEN regexp_matches(s.sg[u.i], '{dedup.SEG_TOKEN_RE}')
               THEN 1 ELSE 0 END AS is_tok
   FROM segs s, LATERAL UNNEST(generate_series(1, len(s.sg))) AS u(i)
 ),
@@ -1539,15 +1559,15 @@ keptt AS (
 )"""
 
 
-def _sql_substring_keep_text(n: int = 3, max_df: int = 64,
-                             min_run: int = 3) -> str:
+def _sql_substring_keep_text() -> str:
     """Twin of dedup.substring_dedup_keep(original_text=True,
     include_self=True): cleaned corpus with dropped spans' CHARACTER
     ranges cut from the raw text, byte-identical outside drops.
     Untouched docs pass their raw text through; touched docs take the
     reassembled segments (empty string when every segment dropped)."""
     return f"""
-WITH {_substring_keep_text_ctes(n, max_df, min_run, include_self=True)}
+WITH {_substring_keep_text_ctes(FIXTURE_SUBSTR_N, FIXTURE_SUBSTR_MIN_RUN,
+                                include_self=True)}
 SELECT d.doc_id,
        {_SQL_KEEP_STATS}
        CASE WHEN p.doc_id IS NULL THEN d.text
@@ -1558,15 +1578,15 @@ LEFT JOIN per_doc p ON p.doc_id = d.doc_id
 LEFT JOIN keptt k ON k.doc_id = d.doc_id"""
 
 
-def _strip_parts(n: int = 3, k: int = 50,
-                 rel: str = "documents") -> tuple[str, str]:
+def _strip_parts() -> tuple[str, str]:
     """(cte_chain, final_select) for the boilerplate-strip twin: top-k
     hot n-grams (n_occurrences DESC, gram ASC — same ranking as
-    _sql_top_ngrams) mined from ``rel``, then every line whose padded
-    canonical word sequence contains a hot gram is dropped; kept lines
-    reassemble in order.  Structural pieces so composites can chain the
-    stripped corpus into downstream CTEs."""
-    ctes = f"""{_sql_ws("tw", rel)},
+    _sql_top_ngrams) mined from the documents, then every line whose
+    padded canonical word sequence contains a hot gram is dropped; kept
+    lines reassemble in order.  Structural pieces so composites can chain
+    the stripped corpus into downstream CTEs."""
+    n, k = textstats.TOP_NGRAMS_N, textstats.TOP_NGRAMS_K
+    ctes = f"""{_sql_ws("tw")},
 tg AS (
   SELECT doc_id, unnest(
     {_sql_grams(n)}) AS gram
@@ -1578,7 +1598,7 @@ hot AS (
   QUALIFY row_number() OVER (ORDER BY n_occ DESC, gram ASC) <= {k}
 ),
 l AS (
-  SELECT doc_id, string_split(text, chr(10)) AS lines FROM {rel}
+  SELECT doc_id, string_split(text, chr(10)) AS lines FROM documents
 ),
 ln AS (
   SELECT doc_id, u.i AS i, l.lines[u.i] AS line
@@ -1602,15 +1622,13 @@ FROM m GROUP BY 1"""
     return ctes, final
 
 
-def _sql_strip_boilerplate(n: int = 3, k: int = 50) -> str:
+def _sql_strip_boilerplate() -> str:
     """Twin of textstats.strip_boilerplate_lines (see _strip_parts)."""
-    ctes, final = _strip_parts(n, k)
+    ctes, final = _strip_parts()
     return f"\nWITH {ctes}\n{final}"
 
 
-def _sql_curate_clean(n_gram: int = 3, k_hot: int = 50, n: int = 8,
-                      max_df: int = 64, min_run: int = 8,
-                      original_text: bool = False) -> str:
+def _sql_curate_clean(original_text: bool = False) -> str:
     """Twin of the curate_clean composites: boilerplate line strip, then
     exact-substring keep-first dedup over the STRIPPED corpus — the
     text-cleaning half of a curation pipeline as one statement.  Kept
@@ -1618,15 +1636,16 @@ def _sql_curate_clean(n_gram: int = 3, k_hot: int = 50, n: int = 8,
     ``original_text`` cut from the stripped text by character range (the
     training-ready artifact: line structure, casing, punctuation
     preserved outside drops)."""
-    sctes, sfinal = _strip_parts(n_gram, k_hot)
+    sctes, sfinal = _strip_parts()
     rel = "(SELECT doc_id, kept_text AS text FROM stripped)"
+    n, min_run = dedup.SUBSTR_N, dedup.SUBSTR_MIN_RUN_TOKENS
     if original_text:
-        keep_ctes = _substring_keep_text_ctes(n, max_df, min_run, rel=rel)
+        keep_ctes = _substring_keep_text_ctes(n, min_run, rel=rel)
         kept_text = ("CASE WHEN p.doc_id IS NULL THEN st.kept_text\n"
                      "            ELSE coalesce(kp.kept_text, '') END")
         kept = "keptt"
     else:
-        keep_ctes = _substring_keep_ctes(n, max_df, min_run, rel=rel)
+        keep_ctes = _substring_keep_ctes(n, min_run, rel=rel)
         kept_text, kept = "coalesce(kp.kept_text, '')", "kept"
     return f"""
 WITH {sctes},
@@ -1643,8 +1662,9 @@ LEFT JOIN per_doc p ON p.doc_id = st.doc_id
 LEFT JOIN {kept} kp ON kp.doc_id = st.doc_id"""
 
 
-def _sql_top_ngrams(n: int = 3, k: int = 50) -> str:
+def _sql_top_ngrams() -> str:
     """Twin of textstats.top_ngrams (global top-k, gram-ASC ties)."""
+    n, k = textstats.TOP_NGRAMS_N, textstats.TOP_NGRAMS_K
     return f"""
 WITH {_sql_ws()},
 g AS (
@@ -1664,9 +1684,9 @@ r AS (
 SELECT * FROM r WHERE rank <= {k}"""
 
 
-def _sql_ppl_proxy(max_vocab: int = textstats.PPL_MAX_VOCAB) -> str:
+def _sql_ppl_proxy() -> str:
     """Twin of textstats.ppl_proxy (char-trigram LM capped to the top
-    ``max_vocab`` grams by train count, add-one smoothing, int64 NLLs
+    ``PPL_MAX_VOCAB`` grams by train count, add-one smoothing, int64 NLLs
     summed then floor-divided)."""
     return f"""
 WITH d AS (
@@ -1691,7 +1711,7 @@ model0 AS (
 ),
 model AS (
   SELECT g, c FROM model0
-  QUALIFY row_number() OVER (ORDER BY c DESC, g ASC) <= {max_vocab}
+  QUALIFY row_number() OVER (ORDER BY c DESC, g ASC) <= {textstats.PPL_MAX_VOCAB}
 ),
 st AS (SELECT sum(c) AS n_total, count(*) AS v FROM model),
 scored AS (
@@ -1708,7 +1728,8 @@ FROM scored GROUP BY 1"""
 
 def _sql_gopher_quality() -> str:
     """Twin of textstats.gopher_quality (integer-scaled Gopher filters)."""
-    return rf"""
+    t = textstats
+    return f"""
 WITH w AS (
   SELECT doc_id, text,
          {_sql_words()} AS ws
@@ -1721,7 +1742,7 @@ base AS (
                * 100.0 / greatest(len(ws), 1)) AS BIGINT) AS mean_word_len_e2,
     CAST(floor((len(ws) - len(list_distinct(ws))) * 10000.0
                / greatest(len(ws), 1)) AS BIGINT) AS dup_word_bp,
-    CAST(floor(len(regexp_extract_all(text, '#|\.\.\.')) * 10000.0
+    CAST(floor(len(regexp_extract_all(text, '{t.GOPHER_SYMBOL_RE}')) * 10000.0
                / greatest(len(ws), 1)) AS BIGINT) AS symbol_word_bp,
     {_sql_grams(2)} AS grams
   FROM w
@@ -1740,11 +1761,11 @@ j AS (
   FROM base b LEFT JOIN gm ON gm.doc_id = b.doc_id
 )
 SELECT *,
-  CAST(n_words BETWEEN 50 AND 100000
-       AND mean_word_len_e2 BETWEEN 300 AND 1000
-       AND dup_2gram_bp <= 2000
-       AND symbol_word_bp <= 1000
-       AND dup_word_bp <= 5000 AS INT) AS gopher_pass
+  CAST(n_words BETWEEN {t.GOPHER_MIN_WORDS} AND {t.GOPHER_MAX_WORDS}
+       AND mean_word_len_e2 BETWEEN {t.GOPHER_MIN_MEAN_WORD_LEN_E2} AND {t.GOPHER_MAX_MEAN_WORD_LEN_E2}
+       AND dup_2gram_bp <= {t.GOPHER_MAX_DUP_2GRAM_BP}
+       AND symbol_word_bp <= {t.GOPHER_MAX_SYMBOL_WORD_BP}
+       AND dup_word_bp <= {t.GOPHER_MAX_DUP_WORD_BP} AS INT) AS gopher_pass
 FROM j"""
 
 
@@ -1789,7 +1810,7 @@ FROM k JOIN s USING (fp) JOIN q USING (doc_id)
 GROUP BY 1, 2"""
 
 
-def _sql_tfidf_topterms(k: int = 5) -> str:
+def _sql_tfidf_topterms() -> str:
     """Twin of textstats.tfidf_topterms (ln idf, 9-dp rounding)."""
     return f"""
 WITH words AS (
@@ -1811,14 +1832,14 @@ r AS (
 )
 SELECT doc_id, CAST(rank AS INT) AS rank, term,
        CAST(round(s9 * 1e9) AS BIGINT) AS score_e9
-FROM r WHERE rank <= {k}"""
+FROM r WHERE rank <= {textstats.TFIDF_K}"""
 
 
 def _sql_dot(a: str, b: str) -> str:
-    """Dot product of 64-dim list columns ``a``/``b`` (twin of
+    """Dot product of DIM-dim list columns ``a``/``b`` (twin of
     similarity._dot).  Built by interpolation, NOT str.replace on a
     template: column refs like "c.cent" contain the substring "ce"."""
-    return (f"list_sum(list_transform(generate_series(1, 64), "
+    return (f"list_sum(list_transform(generate_series(1, {similarity.DIM}), "
             f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))")
 
 
@@ -1844,7 +1865,7 @@ SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
 FROM r WHERE rank <= {k}"""
 
 
-def _sql_adc_topk(k: int) -> str:
+def _sql_adc_topk() -> str:
     """Per-query top-k tail over ADC ``pairs`` (query_id, neighbor_id, ad)
     — twin of similarity._topk on adist_e9."""
     return f"""r AS (
@@ -1854,44 +1875,53 @@ def _sql_adc_topk(k: int) -> str:
   FROM pairs
 )
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, adist_e9
-FROM r WHERE rank <= {k}"""
+FROM r WHERE rank <= {similarity.TOP_K}"""
 
 
-def _sql_cents(n_centroids: int) -> str:
+def _sql_cents() -> str:
     """The lowest-vec_id centroid CTE (twin of similarity._default_cents)."""
     return f"""cents AS (
   SELECT vec_id AS cell_id, embedding AS cent FROM embeddings
-  ORDER BY vec_id LIMIT {n_centroids}
+  ORDER BY vec_id LIMIT {similarity.N_CENTROIDS}
 )"""
+
+
+def _sql_in_cohort(vec_id: str) -> str:
+    """The fixture query cohort predicate on ``vec_id`` (twin of
+    similarity._query_cohort)."""
+    return f"{vec_id} % {similarity.QUERY_MOD} = 0"
 
 
 def _sql_cosine_topk() -> str:
     return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id % 25 = 0),
+WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_sql_in_cohort('vec_id')}),
 c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
 p AS (
   SELECT query_id, neighbor_id, {_sql_cos9('qe', 'ce')} AS sim9
   FROM q, c WHERE query_id <> neighbor_id
 ),
-{_sql_sim_topk(10)}"""
+{_sql_sim_topk(similarity.TOP_K)}"""
 
 
 def _sql_sign_key(planes) -> str:
     """Hyperplane sign key over ``embedding``: bit j = 2^j when the j-th of
-    ``planes`` has a rounded dot >= 0 (twin of similarity._sign_keys)."""
+    ``planes`` has a rounded dot >= 0 (twin of similarity._sign_keys and
+    _plane_weight)."""
+    s = similarity
     return " + ".join(
-        f"CASE WHEN round(list_sum(list_transform(generate_series(1, 64), "
-        f"i -> embedding[i]::DOUBLE * ((((i-1) * 2654435761 + {p * 40503 + 7919}) % 2001 - 1000)::DOUBLE))), 6) >= 0 "
+        f"CASE WHEN round(list_sum(list_transform(generate_series(1, {s.DIM}), "
+        f"i -> embedding[i]::DOUBLE * ((((i-1) * {s.PLANE_HASH_MUL} + {s._plane_offset(p)}) "
+        f"% {s.PLANE_WEIGHT_MOD} - {s.PLANE_WEIGHT_MAX})::DOUBLE))), {s.SIGN_ROUND_DP}) >= 0 "
         f"THEN CAST({2**j} AS BIGINT) ELSE 0 END"
         for j, p in enumerate(planes)
     )
 
 
-def _near_dups_parts(threshold_e9: int) -> tuple[str, str]:
-    """(cte_chain, final_select) for the embedding near-dup twin —
-    exposed as separate pieces so composers (``_sql_semantic_dedup``)
-    splice structurally instead of by string surgery on the rendered
-    SQL (ADVICE r4)."""
+def _near_dups_parts() -> tuple[str, str]:
+    """(cte_chain, final_select) for the embedding near-dup twin at
+    NEAR_DUP_COSINE — exposed as separate pieces so composers
+    (``_sql_semantic_dedup``) splice structurally instead of by string
+    surgery on the rendered SQL (ADVICE r4)."""
     # band keys as plain columns first: DuckDB 1.0 cannot bind a correlated
     # column inside a lambda under LATERAL UNNEST
     r = similarity.PLANES_PER_BAND
@@ -1914,14 +1944,14 @@ p AS (
   WHERE a.vec_id < b.vec_id
 )"""
     final = (f"SELECT DISTINCT id1, id2, sim_e9 FROM p "
-             f"WHERE sim_e9 >= {threshold_e9}")
+             f"WHERE sim_e9 >= {similarity._cos_e9(NEAR_DUP_COSINE)}")
     return ctes, final
 
 
-def _sql_embedding_near_dups(threshold_e9: int) -> str:
+def _sql_embedding_near_dups() -> str:
     """Banded-LSH candidates -> exact cosine verify (twin of
     similarity.embedding_near_dups default path)."""
-    ctes, final = _near_dups_parts(threshold_e9)
+    ctes, final = _near_dups_parts()
     return f"\nWITH {ctes}\n{final}"
 
 
@@ -1929,10 +1959,11 @@ def _sql_lsh_buckets() -> str:
     return f"SELECT vec_id, {_sql_sign_key(range(similarity.N_PLANES))} AS bucket FROM embeddings"
 
 
-def _sql_lsh_search(k: int = 5, n_planes: int = 8) -> str:
+def _sql_lsh_search() -> str:
+    k, n_planes = similarity.LSH_TOP_K, similarity.LSH_SEARCH_PLANES
     return f"""
 WITH b AS (SELECT vec_id, embedding, {_sql_sign_key(range(n_planes))} AS bucket FROM embeddings),
-q AS (SELECT vec_id AS query_id, embedding AS qe, bucket FROM b WHERE vec_id % 25 = 0),
+q AS (SELECT vec_id AS query_id, embedding AS qe, bucket FROM b WHERE {_sql_in_cohort('vec_id')}),
 c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bucket FROM b),
 p AS (
   SELECT query_id, neighbor_id, {_sql_cos9('qe', 'ce')} AS sim9
@@ -1941,9 +1972,9 @@ p AS (
 {_sql_sim_topk(k)}"""
 
 
-def _sql_ivf_rerank(asg: str, a: str, n_probe: int, k: int) -> str:
+def _sql_ivf_rerank(asg: str, a: str) -> str:
     """IVF tail from the cell-assignment CTE ``asg`` (aliased ``a``, crank
-    per vector): nearest-cell inverted lists, n_probe probes per fixture
+    per vector): nearest-cell inverted lists, N_PROBE probes per fixture
     query, exact cosine rerank, sim top-k."""
     return f"""lists AS (
   SELECT {a}.vec_id AS neighbor_id, {a}.cell_id, e.embedding AS ce
@@ -1953,42 +1984,40 @@ def _sql_ivf_rerank(asg: str, a: str, n_probe: int, k: int) -> str:
 probes AS (
   SELECT {a}.vec_id AS query_id, {a}.cell_id, e.embedding AS qe
   FROM {asg} {a} JOIN embeddings e ON e.vec_id = {a}.vec_id
-  WHERE {a}.crank <= {n_probe} AND {a}.vec_id % 25 = 0
+  WHERE {a}.crank <= {similarity.N_PROBE} AND {_sql_in_cohort(f'{a}.vec_id')}
 ),
 p AS (
   SELECT query_id, neighbor_id, {_sql_cos9('qe', 'ce')} AS sim9
   FROM probes JOIN lists USING (cell_id)
   WHERE query_id <> neighbor_id
 ),
-{_sql_sim_topk(k)}"""
+{_sql_sim_topk(similarity.TOP_K)}"""
 
 
-def _sql_ivf_topk(k: int = 10, n_centroids: int = 16, n_probe: int = 2) -> str:
+def _sql_ivf_topk() -> str:
     """Twin of similarity.ivf_topk: lowest-vec_id centroids, nearest-cell
-    inverted lists, n_probe cell scan, exact cosine rerank."""
+    inverted lists, N_PROBE cell scan, exact cosine rerank."""
     return f"""
-WITH {_sql_cents(n_centroids)},
+WITH {_sql_cents()},
 ranked AS (
   SELECT e.vec_id, c.cell_id,
          row_number() OVER (PARTITION BY e.vec_id
            ORDER BY {_sql_cos9('e.embedding', 'c.cent')} DESC, c.cell_id ASC) AS crank
   FROM embeddings e CROSS JOIN cents c
 ),
-{_sql_ivf_rerank("ranked", "r", n_probe, k)}"""
+{_sql_ivf_rerank("ranked", "r")}"""
 
 
-def _sql_ivf_topk_two_level(k: int = 10, n_centroids: int = 16,
-                            n_probe: int = 2, n_groups: int = 4,
-                            probe_groups: int = 2) -> str:
+def _sql_ivf_topk_two_level() -> str:
     """Twin of similarity.ivf_topk(two_level=True): lowest-id centroids,
-    lowest-id group leaders (isqrt(n_centroids)), centroid->group by
-    nearest leader, vector scans its probe_groups closest groups' cells,
+    lowest-id group leaders (similarity._n_groups), centroid->group by
+    nearest leader, vector scans its PROBE_GROUPS closest groups' cells,
     crank within the scanned subset, then the usual list/probe rerank."""
     return f"""
-WITH {_sql_cents(n_centroids)},
+WITH {_sql_cents()},
 leaders AS (
   SELECT cell_id AS group_id, cent AS gcent FROM cents
-  ORDER BY cell_id LIMIT {n_groups}
+  ORDER BY cell_id LIMIT {similarity._n_groups()}
 ),
 cgrank AS (
   SELECT c.cell_id, c.cent, l.group_id,
@@ -2008,7 +2037,7 @@ vgrank AS (
 ),
 vec_groups AS (
   SELECT vec_id, embedding, group_id FROM vgrank
-  WHERE vgrank <= {probe_groups}
+  WHERE vgrank <= {similarity.PROBE_GROUPS}
 ),
 scored AS (
   SELECT v.vec_id, c.cell_id,
@@ -2020,18 +2049,23 @@ asg AS (
             ORDER BY csim DESC, cell_id ASC) AS crank
   FROM scored
 ),
-{_sql_ivf_rerank("asg", "a", n_probe, k)}"""
+{_sql_ivf_rerank("asg", "a")}"""
 
 
-def _pq_ctes(m: int = 8, ksub: int = 16, query_mod: int = 25) -> str:
+def _sql_l2_e9(a: str, b: str) -> str:
+    """Squared L2 of PQ_DSUB-dim subvector columns ``a``/``b`` in int64 e9
+    (twin of similarity._l2_e9); interpolated, as ``_sql_dot``."""
+    d = f"({a}[i]::DOUBLE - {b}[i]::DOUBLE)"
+    return ("CAST(round(round(list_sum(list_transform(generate_series(1, "
+            f"{similarity.PQ_DSUB}), i -> {d} * {d})), 9) * 1e9) AS BIGINT)")
+
+
+def _pq_ctes() -> str:
     """Shared PQ CTE chain: codebooks (lowest-id stand-in), subvector
     distance in int64 e9 (sum-safe — twin of similarity._l2_e9), code
     assignment, and the query ADC distance table."""
-    d_sub = 64 // m
-    subids = ", ".join(str(s) for s in range(m))
-    dist = ("CAST(round(round(list_sum(list_transform(generate_series(1, "
-            f"{d_sub}), i -> (a[i]::DOUBLE - b[i]::DOUBLE) * "
-            "(a[i]::DOUBLE - b[i]::DOUBLE))), 9) * 1e9) AS BIGINT)")
+    ksub, d_sub = similarity.PQ_KSUB, similarity.PQ_DSUB
+    subids = ", ".join(str(s) for s in range(similarity.PQ_M))
     return f"""
 WITH base AS (
   SELECT embedding,
@@ -2052,7 +2086,7 @@ vsubs AS (
 ),
 scored AS (
   SELECT v.vec_id, v.sub_id, b.code,
-         {dist.replace('a[i]', 'v.subvec[i]').replace('b[i]', 'b.subcent[i]')} AS d
+         {_sql_l2_e9('v.subvec', 'b.subcent')} AS d
   FROM vsubs v JOIN books b USING (sub_id)
 ),
 codes AS (
@@ -2062,7 +2096,7 @@ codes AS (
 ),
 qdist AS (
   SELECT vec_id AS query_id, sub_id, code, d FROM scored
-  WHERE vec_id % {query_mod} = 0
+  WHERE {_sql_in_cohort('vec_id')}
 )"""
 
 
@@ -2071,7 +2105,7 @@ def _sql_pq_codes() -> str:
     return _pq_ctes() + "\nSELECT vec_id, sub_id, code FROM codes"
 
 
-def _sql_pq_topk(k: int = 10) -> str:
+def _sql_pq_topk() -> str:
     """Twin of similarity.pq_topk (ADC: codes join the query distance
     table on (sub_id, code), integer sum across subspaces)."""
     return f"""{_pq_ctes()},
@@ -2081,15 +2115,14 @@ pairs AS (
   WHERE q.query_id <> c.vec_id
   GROUP BY 1, 2
 ),
-{_sql_adc_topk(k)}"""
+{_sql_adc_topk()}"""
 
 
-def _sql_ivfpq_topk(k: int = 10, n_centroids: int = 16,
-                    n_probe: int = 2) -> str:
+def _sql_ivfpq_topk() -> str:
     """Twin of similarity.ivfpq_topk: cosine-IVF cell pruning + ADC over
     PQ codes within the probed lists."""
     return f"""{_pq_ctes()},
-{_sql_cents(n_centroids)},
+{_sql_cents()},
 cranked AS (
   SELECT e.vec_id, c.cell_id,
          row_number() OVER (PARTITION BY e.vec_id
@@ -2100,7 +2133,7 @@ cranked AS (
 lists AS (SELECT vec_id AS neighbor_id, cell_id FROM cranked WHERE crank = 1),
 probes AS (
   SELECT vec_id AS query_id, cell_id FROM cranked
-  WHERE crank <= {n_probe} AND vec_id % 25 = 0
+  WHERE crank <= {similarity.N_PROBE} AND {_sql_in_cohort('vec_id')}
 ),
 cand AS (
   SELECT query_id, neighbor_id FROM probes JOIN lists USING (cell_id)
@@ -2114,18 +2147,19 @@ pairs AS (
               AND q.sub_id = c.sub_id AND q.code = c.code
   GROUP BY 1, 2
 ),
-{_sql_adc_topk(k)}"""
+{_sql_adc_topk()}"""
 
 
-def _sql_lsh_search_multiprobe(k: int = 5, n_planes: int = 8) -> str:
+def _sql_lsh_search_multiprobe() -> str:
     """Twin of similarity.lsh_search_multiprobe (self + hamming-1 probes)."""
+    k, n_planes = similarity.LSH_TOP_K, similarity.LSH_SEARCH_PLANES
     probes = ", ".join(["bucket"] + [f"xor(bucket, {2**p})" for p in range(n_planes)])
     return f"""
 WITH b AS (SELECT vec_id, embedding, {_sql_sign_key(range(n_planes))} AS bucket FROM embeddings),
 q AS (
   SELECT vec_id AS query_id, embedding AS qe, u.pb AS bucket
   FROM b, LATERAL UNNEST([{probes}]) AS u(pb)
-  WHERE vec_id % 25 = 0
+  WHERE {_sql_in_cohort('vec_id')}
 ),
 c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bucket FROM b),
 p AS (
@@ -2135,11 +2169,11 @@ p AS (
 {_sql_sim_topk(k)}"""
 
 
-def _sql_semantic_dedup(threshold_e9: int = 400_000_000) -> str:
+def _sql_semantic_dedup() -> str:
     """Twin of similarity.semantic_dedup: the embedding near-dup pair SQL
     feeding the recursive-reachability components twin — composed from
     ``_near_dups_parts``' structural pieces, not string surgery."""
-    ctes, final = _near_dups_parts(threshold_e9)
+    ctes, final = _near_dups_parts()
     cctes, cfinal = _components_parts("spairs", "id1", "id2", "vec_id")
     return O._recursive(f"""WITH {ctes},
 spairs AS (
@@ -2163,11 +2197,11 @@ def _sql_topic_enum() -> str:
 
 
 def _sql_sessionize_events() -> str:
-    return """
+    return f"""
 WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
 g AS (
   SELECT *, CASE WHEN lag(ms) OVER w IS NULL
-                   OR ms - lag(ms) OVER w > 1800000 THEN 1 ELSE 0 END AS new_s
+                   OR ms - lag(ms) OVER w > {SESSION_GAP_MS} THEN 1 ELSE 0 END AS new_s
   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)
 ),
 s AS (
@@ -2202,6 +2236,7 @@ def _sql_media_features() -> str:
     """DuckDB twin of the payload-fed fake decode: dims/feature from
     sha256(media_ref) bytes, n_bytes = 16 * k (payload = k md5 repeats)."""
     byte = "CAST(('0x' || substr({h}, {p}, 2)) AS INT)"
+    steps, px = media.FAKE_SIDE_STEPS, media.FAKE_SIDE_PX
     return f"""
 WITH refs AS (
   SELECT DISTINCT u.s.media_ref AS media_ref
@@ -2214,8 +2249,8 @@ h AS (
   FROM refs
 )
 SELECT media_ref,
-  ({byte.format(h="hx", p=1)} % 64 + 1) * 32 AS width,
-  ({byte.format(h="hx", p=3)} % 64 + 1) * 32 AS height,
+  ({byte.format(h="hx", p=1)} % {steps} + 1) * {px} AS width,
+  ({byte.format(h="hx", p=3)} % {steps} + 1) * {px} AS height,
   CAST(16 * k AS BIGINT) AS n_bytes,
   {byte.format(h="hx", p=5)} AS f0
 FROM h"""
@@ -2245,8 +2280,10 @@ def _sql_repetition_lines() -> str:
   FROM {alias}c GROUP BY 1
 )"""
 
-    line_ctes = unit_ctes("line", r"\n")
-    para_ctes = unit_ctes("para", r"\n{2,}")
+    line_ctes = unit_ctes("line", textstats.REP_LINE_RE)
+    para_ctes = unit_ctes("para", textstats.REP_PARA_RE)
+    max_bp = textstats.REP_MAX_DUP_UNIT_BP
+    max_char_bp = textstats.REP_MAX_DUP_UNIT_CHAR_BP
     return f"""
 WITH {_sql_ws()},
 lined AS (
@@ -2267,10 +2304,10 @@ SELECT d.doc_id,
   coalesce(n_para, 0) AS n_paras,
   coalesce(dup_para_bp, 0) AS dup_para_bp,
   coalesce(dup_para_char_bp, 0) AS dup_para_char_bp,
-  CASE WHEN coalesce(dup_line_bp, 0) <= 3000
-        AND coalesce(dup_para_bp, 0) <= 3000
-        AND coalesce(dup_line_char_bp, 0) <= 2000
-        AND coalesce(dup_para_char_bp, 0) <= 2000
+  CASE WHEN coalesce(dup_line_bp, 0) <= {max_bp}
+        AND coalesce(dup_para_bp, 0) <= {max_bp}
+        AND coalesce(dup_line_char_bp, 0) <= {max_char_bp}
+        AND coalesce(dup_para_char_bp, 0) <= {max_char_bp}
        THEN 1 ELSE 0 END AS repetition_pass
 FROM documents d
 LEFT JOIN lines USING (doc_id) LEFT JOIN paras USING (doc_id)"""
@@ -2278,8 +2315,8 @@ LEFT JOIN lines USING (doc_id) LEFT JOIN paras USING (doc_id)"""
 
 def _sql_repetition_ngrams() -> str:
     """Twin of textstats.repetition_ngram_stats (Gopher top-2/3/4 +
-    dup-5..10 n-gram char mass, thresholds pulled from the Spark
-    constants — single source of truth)."""
+    dup-5..10 n-gram char mass, thresholds read from textstats' constants,
+    which both engines read)."""
     ns = list(textstats.REP_TOP_NS) + list(textstats.REP_DUP_NS)
     branches = "\n  UNION ALL".join(
         f"""
@@ -2356,9 +2393,10 @@ JOIN ({_sql_repetition_ngrams()}) r ON g.doc_id = r.doc_id
 JOIN ({_sql_quality()}) q ON g.doc_id = q.doc_id"""
 
 
-def _sql_dsir_importance(n_buckets: int = sampling.DSIR_BUCKETS) -> str:
+def _sql_dsir_importance() -> str:
     """Twin of sampling.dsir_importance with target = lang='en' docs
     (int64-scaled per-bucket log-ratios summed per doc, hash-Gumbel)."""
+    n_buckets, res = sampling.DSIR_BUCKETS, sampling.DSIR_GUMBEL_RES
     grams = f"list_concat(ws, {_sql_grams(2)})"
     bucket = f"{_sql_h48('g')} % {n_buckets}"
     return f"""
@@ -2382,8 +2420,8 @@ model AS (
 SELECT rb.doc_id, count(*) AS n_grams,
   CAST(sum(m.llr_e9) AS BIGINT) AS dsir_score_e9,
   CAST(round(round(-ln(round(-ln(
-    (({_sql_h48("rb.doc_id::VARCHAR || ':gumbel'")} % 1000000) + 0.5)
-    / 1000000.0), 9)), 9) * 1e9)
+    (({_sql_h48(f"rb.doc_id::VARCHAR || '{sampling.DSIR_GUMBEL_SALT}'")} % {res}) + 0.5)
+    / {float(res)}), 9)), 9) * 1e9)
     AS BIGINT) AS gumbel_e9
 FROM rb JOIN model m USING (b)
 GROUP BY 1"""
@@ -2409,7 +2447,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "j6_expected_alignment": (
             f"{O.sql_pipeline_ctes(_fixture_rel())}\n"
-            "SELECT doc_id, CASE WHEN CAST(task_number AS INT) <= 30 "
+            f"SELECT doc_id, CASE WHEN CAST(task_number AS INT) <= {EXPECTED_TASKS} "
             "THEN 'T' || task_number ELSE task_number END AS task_number, "
             "points FROM surviving"
         ),
@@ -2435,14 +2473,15 @@ def oracle_sql() -> dict[str, str]:
         "text_strip_boilerplate": _sql_strip_boilerplate(),
         "text_ppl_proxy": _sql_ppl_proxy(),
         "dedup_substring_spans": _sql_substring_spans(),
-        "dedup_substring_keep": _sql_substring_keep(),
+        "dedup_substring_keep": _sql_substring_keep(
+            dedup.SUBSTR_N, dedup.SUBSTR_MIN_RUN_TOKENS),
         "dedup_lines_global": _sql_lines_global(),
         "curate_mixture_weights": _sql_mixture_weights(),
         "text_redact_pii": _sql_redact_pii(),
         "text_c4_line_filter": _sql_c4_line_filter(),
         "dedup_substring_self": _sql_substring_self(),
         "dedup_substring_keep_self": _sql_substring_keep(
-            3, min_run=3, include_self=True),
+            FIXTURE_SUBSTR_N, FIXTURE_SUBSTR_MIN_RUN, include_self=True),
         "dedup_substring_keep_text": _sql_substring_keep_text(),
         "curate_clean_corpus_text": _sql_curate_clean(original_text=True),
         "text_repetition_lines": _sql_repetition_lines(),
@@ -2467,7 +2506,7 @@ def oracle_sql() -> dict[str, str]:
         "ann_lsh_buckets": _sql_lsh_buckets(),
         "ann_lsh_search": _sql_lsh_search(),
         "ann_lsh_search_multiprobe": _sql_lsh_search_multiprobe(),
-        "dedup_embedding_cosine": _sql_embedding_near_dups(400_000_000),
+        "dedup_embedding_cosine": _sql_embedding_near_dups(),
         "dedup_ngram_jaccard": _sql_ngram_jaccard(),
         "dedup_components": _sql_dedup_components(),
         "dedup_components_star": _sql_dedup_components(),
@@ -2479,7 +2518,7 @@ def oracle_sql() -> dict[str, str]:
         "dedup_semantic": _sql_semantic_dedup(),
         "w2_sessionize_events": _sql_sessionize_events(),
         "w1_windowed_event_counts": (
-            "SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H')"
+            f"SELECT strftime(time_bucket(INTERVAL '{EVENT_WINDOW}', ts), '%Y-%m-%d %H')"
             " AS win_start, event_type, count(*) AS n_events,"
             " count(DISTINCT user_id) AS n_users"
             " FROM events GROUP BY 1, 2"
@@ -2500,7 +2539,7 @@ def oracle_sql() -> dict[str, str]:
             "CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents FROM ("
             "SELECT *, row_number() OVER (PARTITION BY l_orderkey "
             "ORDER BY l_extendedprice DESC, l_linenumber ASC) AS rank "
-            "FROM lineitem) WHERE rank <= 2"
+            f"FROM lineitem) WHERE rank <= {TOPK_PER_GROUP}"
         ),
         "s7_catalog_shape": O.sql_catalog_shape(_fixture_rel()),
         "s7_catalog_json": O.sql_catalog_json(_fixture_rel()),

@@ -1,8 +1,11 @@
 """Shared constants: the deterministic rule pack parameters.
 
-Single source of truth for every regex / phrase list / threshold used by the
-Spark pipeline (``rules.py`` / ``segment.py``), the pure-Python test oracle
-(``pyref.py``) and the DuckDB oracle SQL (``__spark_entry__.py``).
+The one home of every regex / phrase list / threshold that the Spark
+pipeline (``rules.py`` / ``segment.py``), the pure-Python test oracle
+(``pyref.py``) and the DuckDB oracle SQL (``duckdb_oracle.py``,
+``__spark_entry__.py``) share: each engine reads these constants instead of
+spelling its own value (the curation ops keep theirs in ``ocrspark/ops/``,
+under the same rule).
 
 All regexes are written in the portable subset shared by Java regex (Spark),
 RE2 (DuckDB) and Python ``re``: no lookbehind, no backreferences in patterns
@@ -68,11 +71,11 @@ MIN_TASK_TEXT_CHARS = 50
 # this.  Replaces the LLM yes/no in scripts/task_boundaries.py:129-202.
 MIN_STRIPPED_TASK_CHARS = 50
 
-# Reference checks at most the first/last 5 ranges (CHECKED_TASKS=5,
-# scripts/task_boundaries.py:21).  The deterministic rule generalizes to
-# "keep the contiguous [first-valid .. last-valid] window" which coincides
-# with the reference whenever <=5 leading/trailing ranges are admin.
-CHECKED_TASKS = 5
+# The reference checks at most the first/last 5 ranges (CHECKED_TASKS=5,
+# scripts/task_boundaries.py:21).  The deterministic rule needs no such
+# budget: it keeps the contiguous [first-valid .. last-valid] window, which
+# coincides with the reference whenever <=5 leading/trailing ranges are
+# admin.
 
 # --------------------------------------------------------------------------
 # P12: exam-administration phrase stripping.

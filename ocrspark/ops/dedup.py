@@ -13,7 +13,9 @@ whitespace class ``WHITESPACE`` (Java's ``\\s`` written out, see
 ``_n_tokens``) and the one case fold ``_fold``.  Each has one DuckDB twin in
 ``__spark_entry__`` (``_sql_h48``, ``_sql_words``, ``_sql_grams``,
 ``_CANON``, ``_sql_n_tokens``, ``_sql_fold``), and
-``tests/test_primitives.py`` checks that each pair agrees.
+``tests/test_primitives.py`` checks that each pair agrees.  The module
+constants are also the DuckDB twins' constants: the ``_sql_*`` builders read
+them (and ``_jaccard_bp``) instead of spelling their own values.
 
 MinHash constants: 8 permutations (a_j * h + b_j) mod p over 48-bit shingle
 hashes; p = 2^31-1 keeps products < 2^63 (no bigint overflow under ANSI).
@@ -132,7 +134,10 @@ def exact_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+SHINGLE_N = 3  # word n-gram width of the near-dup shingles
+
+
+def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """Distinct word n-gram shingles with a 48-bit md5-prefix integer hash."""
     grams = _word_grams(_words(F.col("text")), n)
     out = docs.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
@@ -185,6 +190,11 @@ def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_bp(threshold: float) -> int:
+    """A Jaccard threshold as the integer ``jaccard_bp`` floor."""
+    return int(threshold * 10000)
+
+
 def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard on candidate pairs via shingle-set joins.
 
@@ -210,7 +220,7 @@ def jaccard_verify(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFra
             ).cast("long"),
         )
     )
-    return j.filter(F.col("jaccard_bp") >= int(threshold * 10000)).select(
+    return j.filter(F.col("jaccard_bp") >= _jaccard_bp(threshold)).select(
         "doc1", "doc2", "jaccard_bp"
     )
 
@@ -524,6 +534,7 @@ def substring_dedup_keep(docs: DataFrame, n: int = SUBSTR_N,
 
 
 SEG_PATTERN = r"[a-zA-Z0-9]+|[^a-zA-Z0-9]+"
+SEG_TOKEN_RE = "^[a-zA-Z0-9]"  # a SEG_PATTERN segment that is a token
 
 
 def _remove_spans_original(docs: DataFrame, per_doc: DataFrame) -> DataFrame:
@@ -572,7 +583,7 @@ def _remove_spans_original(docs: DataFrame, per_doc: DataFrame) -> DataFrame:
         F.posexplode(
             F.regexp_extract_all(F.col("_text"), F.lit(SEG_PATTERN), 0)
         ).alias("p", "seg"),
-    ).withColumn("is_tok", F.col("seg").rlike("^[a-zA-Z0-9]").cast("int"))
+    ).withColumn("is_tok", F.col("seg").rlike(SEG_TOKEN_RE).cast("int"))
     w = Window.partitionBy("doc_id").orderBy("p")
     seg = seg.withColumn(
         "t",
@@ -916,6 +927,8 @@ def components_star(pairs: DataFrame) -> DataFrame:
 
 
 SIMHASH_BLOCKS = 4  # 4 x 8-bit blocks over the 32-bit simhash
+SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BLOCKS
+SIMHASH_BLOCK_MASK = (1 << SIMHASH_BLOCK_BITS) - 1
 SIMHASH_MAX_HAMMING = 3  # pigeonhole: <=3 flipped bits leave >=1 block intact
 
 
@@ -938,8 +951,8 @@ def simhash_near_dups(docs: DataFrame) -> DataFrame:
             F.array(*[
                 F.struct(
                     F.lit(b).alias("block_id"),
-                    F.shiftright(F.col("simhash"), 8 * b)
-                    .bitwiseAND(F.lit(255)).alias("block_val"),
+                    F.shiftright(F.col("simhash"), SIMHASH_BLOCK_BITS * b)
+                    .bitwiseAND(F.lit(SIMHASH_BLOCK_MASK)).alias("block_val"),
                 )
                 for b in range(SIMHASH_BLOCKS)
             ])

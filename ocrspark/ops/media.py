@@ -8,7 +8,8 @@ their own table keyed by media_ref.
 The decode step is STUBBED (this container ships no image/audio codecs): the
 Spark-side plumbing — schema, Arrow batching, partitioning — is real and
 tested with a deterministic fake decoder; swap ``fake_decode`` for a real
-codec on a cluster by passing ``decoder=``.
+codec on a cluster by passing ``decoder=``.  The fake decoder's constants
+are also those of its DuckDB twin in ``__spark_entry__``.
 """
 
 from __future__ import annotations
@@ -31,6 +32,11 @@ MEDIA_FEATURES_SCHEMA = T.StructType([
 ])
 
 
+# fake_decode's sides in pixels: (digest byte % FAKE_SIDE_STEPS + 1) * FAKE_SIDE_PX
+FAKE_SIDE_STEPS = 64
+FAKE_SIDE_PX = 32
+
+
 def fake_decode(refs: pd.Series, payloads: pd.Series) -> pd.DataFrame:
     """Deterministic stand-in for an image decode + feature extraction.
 
@@ -39,8 +45,8 @@ def fake_decode(refs: pd.Series, payloads: pd.Series) -> pd.DataFrame:
     """
     digests = refs.fillna("").map(lambda r: hashlib.sha256(r.encode()).digest())
     arr = np.frombuffer(b"".join(digests), dtype=np.uint8).reshape(len(refs), 32)
-    widths = (arr[:, 0].astype(np.int32) % 64 + 1) * 32
-    heights = (arr[:, 1].astype(np.int32) % 64 + 1) * 32
+    widths = (arr[:, 0].astype(np.int32) % FAKE_SIDE_STEPS + 1) * FAKE_SIDE_PX
+    heights = (arr[:, 1].astype(np.int32) % FAKE_SIDE_STEPS + 1) * FAKE_SIDE_PX
     nbytes = payloads.map(lambda b: len(b) if b is not None else 0).astype("int64")
     feats = (arr[:, 2:10].astype(np.float32) / 255.0)
     return pd.DataFrame({

@@ -4,6 +4,10 @@ Reproducibility is the contract: every assignment derives from md5 of the
 row's own key, so the same doc lands in the same split/shard on any
 engine, any cluster size, any run — no RNG state, no partition-order
 dependence.  All ops are single-scan (split) or one-shuffle (packing).
+
+The module constants are also the DuckDB twins' constants: the ``_sql_*``
+builders in ``__spark_entry__`` read them instead of spelling their own
+values.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ def deterministic_split(docs: DataFrame) -> DataFrame:
     Unlike ``df.sample``/``randomSplit`` (partition-order- and
     seed-plumbing-dependent), the assignment is a pure function of the
     key: stable under repartitioning, resumable, and auditable.  Split
-    sizes are ``SPLITS`` basis points, which the DuckDB twin reads too.
+    sizes are ``SPLITS`` basis points.
     """
     assert sum(bp for _, bp in SPLITS) == 10000
     bp = _hash_bp(F.col("doc_id"))
@@ -185,6 +189,9 @@ def decontaminate(docs: DataFrame) -> DataFrame:
 
 
 DSIR_BUCKETS = 8192
+# hash-Gumbel: u = (h48(doc_id || SALT) % RES + 0.5) / RES, uniform in (0, 1)
+DSIR_GUMBEL_SALT = ":gumbel"
+DSIR_GUMBEL_RES = 1_000_000
 
 
 def _uni_bigrams(text_expr):
@@ -247,9 +254,9 @@ def dsir_importance(docs: DataFrame, target: DataFrame) -> DataFrame:
         .select("b", F.round(llr * 1e9).cast("long").alias("llr_e9"))
     )
 
-    h6 = _h48(F.concat(F.col("doc_id").cast("string"), F.lit(":gumbel"))) \
-        % 1_000_000
-    u = (h6.cast("double") + F.lit(0.5)) / F.lit(1_000_000.0)
+    h6 = _h48(F.concat(F.col("doc_id").cast("string"),
+                       F.lit(DSIR_GUMBEL_SALT))) % DSIR_GUMBEL_RES
+    u = (h6.cast("double") + F.lit(0.5)) / F.lit(float(DSIR_GUMBEL_RES))
     gumbel_e9 = F.round(F.round(-F.log(F.round(-F.log(u), 9)), 9) * 1e9) \
         .cast("long")
 

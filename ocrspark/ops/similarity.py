@@ -28,9 +28,15 @@ sign keys), ``_default_cents`` (IVF centroids), ``_l2_e9`` and
 ``_adc_table`` (integer ADC distances).  Ranking keys are rounded (1e-9) with
 id tiebreaks so Spark and the DuckDB oracle rank identically despite float
 summation differences.
+
+The module constants are also the DuckDB twins' constants: the ``_sql_*``
+builders in ``__spark_entry__`` read them (and ``_n_groups``, ``_cos_e9``,
+``_plane_offset``) instead of spelling their own values.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -253,13 +259,18 @@ def lsh_band_buckets(emb: DataFrame) -> DataFrame:
              F.col("b.band_key").alias("band_key"))
 
 
+def _cos_e9(threshold: float) -> int:
+    """A cosine threshold as the integer ``sim_e9`` floor."""
+    return int(threshold * 1e9)
+
+
 def _sim_e9_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
     """(id1, id2, sim_e9) of (id1, id2, qe, qn, ce, cn) pairs whose
     integer (1e9-scaled) cosine reaches ``threshold``."""
     sim = _cos9("qe", "ce", "qn", "cn")
     return (
         pairs.select("id1", "id2", F.round(sim * 1e9).cast("long").alias("sim_e9"))
-        .filter(F.col("sim_e9") >= int(threshold * 1e9))
+        .filter(F.col("sim_e9") >= _cos_e9(threshold))
     )
 
 
@@ -325,6 +336,11 @@ N_PROBE = 2
 PROBE_GROUPS = 2  # leader groups a vector descends into (two-level assign)
 
 
+def _n_groups() -> int:
+    """Leader groups of the two-level assignment: isqrt(N_CENTROIDS)."""
+    return max(1, math.isqrt(N_CENTROIDS))
+
+
 def _default_cents(emb: DataFrame) -> DataFrame:
     """The IVF quantizer: (cell_id, cent) of the ``N_CENTROIDS``
     lowest-vec_id vectors — a deterministic k-means stand-in chosen so the
@@ -383,9 +399,7 @@ def ivf_assignments_two_level(emb: DataFrame) -> DataFrame:
     vector->centroid pass is an equi-join on group_id (AQE-splittable),
     never n x k.
     """
-    import math
-
-    n_groups = max(1, math.isqrt(N_CENTROIDS))
+    n_groups = _n_groups()
     # per-vector/centroid/leader norms hoisted out of all three scoring
     # passes (r7; float-exact — the hoisted expression is unchanged)
     cents = _default_cents(emb).withColumn("cn", _norm(F.col("cent")))
@@ -646,9 +660,25 @@ def ivfpq_topk(emb: DataFrame) -> DataFrame:
     return _topk(pairs, TOP_K, F.col("adist_e9").asc(), "adist_e9")
 
 
+# hyperplane weight hash: w(p, i) = (i * MUL + p * STRIDE + OFFSET)
+# mod (2 * MAX + 1) - MAX, an integer in [-PLANE_WEIGHT_MAX, PLANE_WEIGHT_MAX]
+PLANE_HASH_MUL = 2654435761
+PLANE_HASH_STRIDE = 40503
+PLANE_HASH_OFFSET = 7919
+PLANE_WEIGHT_MAX = 1000
+PLANE_WEIGHT_MOD = 2 * PLANE_WEIGHT_MAX + 1
+SIGN_ROUND_DP = 6  # dot_p is rounded before its sign is read
+
+
+def _plane_offset(plane: int) -> int:
+    """The per-plane constant term of the weight hash."""
+    return plane * PLANE_HASH_STRIDE + PLANE_HASH_OFFSET
+
+
 def _plane_weight(plane: int, dim_idx):
-    """Deterministic integer hyperplane weight in [-1000, 1000]."""
-    return (dim_idx * 2654435761 + F.lit(plane * 40503 + 7919)) % 2001 - 1000
+    """Deterministic integer hyperplane weight (see PLANE_HASH_MUL)."""
+    return ((dim_idx * PLANE_HASH_MUL + F.lit(_plane_offset(plane)))
+            % PLANE_WEIGHT_MOD - PLANE_WEIGHT_MAX)
 
 
 def _sign_keys(plane_groups) -> list:
@@ -674,7 +704,7 @@ def _sign_keys(plane_groups) -> list:
                 F.lit(0.0),
                 lambda acc, s: acc + s["x"] * _plane_weight(p, s["i"]).cast("double"),
             )
-            bit = F.when(F.round(dot_p, 6) >= 0, F.lit(2 ** j).cast("long")).otherwise(
+            bit = F.when(F.round(dot_p, SIGN_ROUND_DP) >= 0, F.lit(2 ** j).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
             key = bit if key is None else (key + bit)

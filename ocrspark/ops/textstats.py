@@ -9,6 +9,10 @@ Counting scans use ``regexp_count`` (a codegen'd counter) rather than
 a string array per row, which at 100 TB is pure allocation/GC pressure for
 a value that is immediately reduced to a length.  ``token_stats`` keeps the
 one genuine array (the subword estimate folds over the actual words).
+
+The module constants are also the DuckDB twins' constants: the ``_sql_*``
+builders in ``__spark_entry__`` read them instead of spelling their own
+values.
 """
 
 from __future__ import annotations
@@ -25,6 +29,16 @@ from .dedup import (
 EN_STOPWORDS = r"\b(the|and|of|to|in|is|for|with|on|that|this|a)\b"
 NO_STOPWORDS = r"\b(og|i|det|som|en|er|på|av|til|for|med|den)\b"
 PUNCT_RE = f"[^A-Za-z0-9{WHITESPACE}]"
+
+# quality_score: a length band in chars, a punctuation-ratio ceiling, the
+# stopword-ratio scale, and the weights of the three terms (sum 1.0)
+QUALITY_MIN_CHARS = 100
+QUALITY_MAX_CHARS = 20000
+QUALITY_MAX_PUNCT_RATIO = 0.2
+QUALITY_STOP_SCALE = 3.0
+QUALITY_LEN_W = 0.4
+QUALITY_PUNCT_W = 0.3
+QUALITY_STOP_W = 0.3
 
 
 def lang_id(docs: DataFrame) -> DataFrame:
@@ -52,13 +66,14 @@ def quality_score(docs: DataFrame) -> DataFrame:
     n_words = _n_tokens(t)
     n_punct = F.regexp_count(t, F.lit(PUNCT_RE))
     n_stop = F.regexp_count(_fold(t), F.lit(EN_STOPWORDS))
-    len_ok = (n_chars >= 100) & (n_chars <= 20000)
+    len_ok = (n_chars >= QUALITY_MIN_CHARS) & (n_chars <= QUALITY_MAX_CHARS)
     punct_ratio = n_punct.cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
     stop_ratio = n_stop.cast("double") / F.greatest(n_words, F.lit(1)).cast("double")
     score = (
-        F.when(len_ok, F.lit(0.4)).otherwise(F.lit(0.0))
-        + F.when(punct_ratio < 0.2, F.lit(0.3)).otherwise(F.lit(0.0))
-        + F.least(stop_ratio * 3.0, F.lit(0.3))
+        F.when(len_ok, F.lit(QUALITY_LEN_W)).otherwise(F.lit(0.0))
+        + F.when(punct_ratio < QUALITY_MAX_PUNCT_RATIO,
+                 F.lit(QUALITY_PUNCT_W)).otherwise(F.lit(0.0))
+        + F.least(stop_ratio * QUALITY_STOP_SCALE, F.lit(QUALITY_STOP_W))
     )
     return docs.select(
         "doc_id",
@@ -295,6 +310,17 @@ def lang_id_eval(docs: DataFrame) -> DataFrame:
     )
 
 
+# gopher_quality thresholds (integer-scaled) and its symbol pattern
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN_E2 = 300
+GOPHER_MAX_MEAN_WORD_LEN_E2 = 1000
+GOPHER_MAX_DUP_2GRAM_BP = 2000
+GOPHER_MAX_SYMBOL_WORD_BP = 1000
+GOPHER_MAX_DUP_WORD_BP = 5000
+GOPHER_SYMBOL_RE = r"#|\.\.\."
+
+
 def gopher_quality(docs: DataFrame) -> DataFrame:
     """Gopher/C4-style repetition + shape filters (Rae et al. 2021 §A1.1),
     integer-scaled for cross-engine hashing.
@@ -318,7 +344,7 @@ def gopher_quality(docs: DataFrame) -> DataFrame:
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
     n_distinct = F.size(F.array_distinct(words))
-    sym_hits = F.regexp_count(F.col("text"), F.lit(r"#|\.\.\."))
+    sym_hits = F.regexp_count(F.col("text"), F.lit(GOPHER_SYMBOL_RE))
     base = docs.select(
         "doc_id",
         n_words.cast("long").alias("n_words"),
@@ -348,11 +374,13 @@ def gopher_quality(docs: DataFrame) -> DataFrame:
         ).cast("long").alias("dup_2gram_bp"),
     )
     passed = (
-        (F.col("n_words") >= 50) & (F.col("n_words") <= 100_000)
-        & (F.col("mean_word_len_e2") >= 300) & (F.col("mean_word_len_e2") <= 1000)
-        & (F.col("dup_2gram_bp") <= 2000)
-        & (F.col("symbol_word_bp") <= 1000)
-        & (F.col("dup_word_bp") <= 5000)
+        (F.col("n_words") >= GOPHER_MIN_WORDS)
+        & (F.col("n_words") <= GOPHER_MAX_WORDS)
+        & (F.col("mean_word_len_e2") >= GOPHER_MIN_MEAN_WORD_LEN_E2)
+        & (F.col("mean_word_len_e2") <= GOPHER_MAX_MEAN_WORD_LEN_E2)
+        & (F.col("dup_2gram_bp") <= GOPHER_MAX_DUP_2GRAM_BP)
+        & (F.col("symbol_word_bp") <= GOPHER_MAX_SYMBOL_WORD_BP)
+        & (F.col("dup_word_bp") <= GOPHER_MAX_DUP_WORD_BP)
     )
     return out.withColumn("gopher_pass", passed.cast("int"))
 
@@ -397,6 +425,14 @@ def tfidf_topterms(docs: DataFrame) -> DataFrame:
     )
 
 
+# repetition_stats: the line / paragraph split patterns and Gopher's
+# duplicate-unit ceilings (bp), by occurrence count and by character mass
+REP_LINE_RE = r"\n"
+REP_PARA_RE = r"\n{2,}"
+REP_MAX_DUP_UNIT_BP = 3000
+REP_MAX_DUP_UNIT_CHAR_BP = 2000
+
+
 def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher line/paragraph repetition filters (Rae et al. 2021 §A1.1) —
     the four repetition signals ``gopher_quality``'s word/2-gram stats do
@@ -435,8 +471,8 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
             .cast("long").alias(f"dup_{prefix}_char_bp"),
         )
 
-    lines = unit_stats(r"\n", "line")
-    paras = unit_stats(r"\n{2,}", "para")
+    lines = unit_stats(REP_LINE_RE, "line")
+    paras = unit_stats(REP_PARA_RE, "para")
     base = docs.select("doc_id")
     out = base.join(lines, "doc_id", "left").join(paras, "doc_id", "left")
     filled = out.select(
@@ -446,9 +482,10 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
                     "n_paras", "dup_para_bp", "dup_para_char_bp"]],
     )
     passed = (
-        (F.col("dup_line_bp") <= 3000) & (F.col("dup_para_bp") <= 3000)
-        & (F.col("dup_line_char_bp") <= 2000)
-        & (F.col("dup_para_char_bp") <= 2000)
+        (F.col("dup_line_bp") <= REP_MAX_DUP_UNIT_BP)
+        & (F.col("dup_para_bp") <= REP_MAX_DUP_UNIT_BP)
+        & (F.col("dup_line_char_bp") <= REP_MAX_DUP_UNIT_CHAR_BP)
+        & (F.col("dup_para_char_bp") <= REP_MAX_DUP_UNIT_CHAR_BP)
     )
     return filled.withColumn("repetition_pass", passed.cast("int"))
 

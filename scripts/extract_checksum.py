@@ -2,7 +2,12 @@
 """Order-independent checksum of extract()'s full output on the bench corpus.
 
 Used to prove optimization steps output-identical at sf scale (the oracle
-checks sf0.001/sf0.01; this covers the 60k-doc bench corpus too).
+checks sf0.001/sf0.01; this covers the 60k-doc bench corpus too).  The
+corpus is ``scaling_job.cached_corpus``'s, built on first use.
+
+Environment: ``OCRSPARK_CHECK_N`` docs (default 60000),
+``OCRSPARK_CHECK_ARROW`` unset or ``0`` for the native stage 1, ``1`` for
+the Arrow stage 1; ``SPARK_GRAFT_CPUS`` local threads (default 32).
 """
 
 from __future__ import annotations
@@ -18,18 +23,26 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from ocrspark.pipeline import extract  # noqa: E402
 from ocrspark.session import get_spark  # noqa: E402
+from scaling_job import cached_corpus  # noqa: E402
+
+
+def _arrow_switch() -> bool:
+    """``OCRSPARK_CHECK_ARROW``: unset or "0" -> native, "1" -> Arrow."""
+    v = os.environ.get("OCRSPARK_CHECK_ARROW", "0")
+    if v not in ("0", "1"):
+        raise ValueError(f"OCRSPARK_CHECK_ARROW must be 0 or 1, got {v!r}")
+    return v == "1"
 
 
 def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n = int(os.environ.get("OCRSPARK_CHECK_N", "60000"))
-    arrow = bool(os.environ.get("OCRSPARK_CHECK_ARROW"))
+    arrow = _arrow_switch()
     os.environ.setdefault("OCRSPARK_DRIVER_MEM", "48g")
     spark = get_spark(app="extract-checksum", master=f"local[{cpus}]",
                       shuffle_partitions=cpus * 2)
     spark.sparkContext.setLogLevel("ERROR")
-    cache = REPO / ".bench_cache" / f"docs_n{n}_s42_v2"
-    docs = spark.read.parquet(str(cache))
+    docs = cached_corpus(spark, n)
     out = extract(docs, arrow=arrow)
     row = out.select(
         F.xxhash64(*[F.col(c) for c in out.columns]).alias("h"),

@@ -50,6 +50,17 @@ def _jvm_cpu_sec(spark) -> float:
     return (int(parts[13]) + int(parts[14])) / hz
 
 
+def cached_corpus(spark, n_docs: int):
+    """The deterministic bench corpus of ``n_docs`` docs (seed 42,
+    fat_doc_rate 0.001), written to ``.bench_cache/`` on first use."""
+    # v2: corpus grammar gained G7 glued-boundary and duplicate-figure cases
+    cache = REPO / ".bench_cache" / f"docs_n{n_docs}_s42_v2"
+    if not (cache / "_SUCCESS").exists():
+        generate_docs(spark, n_docs, seed=42, fat_doc_rate=0.001,
+                      partitions=128).write.mode("overwrite").parquet(str(cache))
+    return spark.read.parquet(str(cache))
+
+
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     shard, n_shards = (int(a) for a in sys.argv[2:4]) if len(sys.argv) > 3 else (0, 1)
@@ -58,12 +69,7 @@ def main() -> None:
     cores = spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(cores * 2))
 
-    # v2: corpus grammar gained G7 glued-boundary and duplicate-figure cases
-    cache = REPO / ".bench_cache" / f"docs_n{n_docs}_s42_v2"
-    if not (cache / "_SUCCESS").exists():
-        generate_docs(spark, n_docs, seed=42, fat_doc_rate=0.001,
-                      partitions=128).write.mode("overwrite").parquet(str(cache))
-    docs = spark.read.parquet(str(cache))
+    docs = cached_corpus(spark, n_docs)
     if n_shards > 1:
         docs = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)) == shard)
         n_docs = docs.count()

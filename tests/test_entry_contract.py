@@ -81,3 +81,51 @@ def settable_options(root: Path) -> tuple[int, int]:
 def test_settable_option_budget():
     root = Path(__file__).resolve().parents[1]
     assert settable_options(root) == (OPTION_PARAMS, OPTION_ENV_VARS)
+
+
+# A value that a Spark op and its DuckDB twin share has one home, a named
+# constant both engines read: the private SQL builders take no defaulted
+# numeric parameter (a default would re-type the op's constant).  Allowed
+# defaults are bools, None and non-numeric strings (relation / column names).
+def builder_numeric_defaults(path: Path) -> list[str]:
+    import ast
+
+    def allowed(d) -> bool:
+        if not isinstance(d, ast.Constant):
+            return False  # a name or attribute: a constant read at def time
+        v = d.value
+        if v is None or isinstance(v, bool):
+            return True
+        if isinstance(v, str):
+            try:
+                float(v)
+            except ValueError:
+                return True
+        return False
+
+    found = []
+    for f in ast.walk(ast.parse(path.read_text())):
+        if not (isinstance(f, ast.FunctionDef) and f.name.startswith("_")):
+            continue
+        pos = f.args.posonlyargs + f.args.args
+        pairs = [*zip(pos[len(pos) - len(f.args.defaults):], f.args.defaults),
+                 *((a, d) for a, d in zip(f.args.kwonlyargs, f.args.kw_defaults)
+                   if d is not None)]
+        found += [f"{f.name}({a.arg}={ast.unparse(d)})"
+                  for a, d in pairs if not allowed(d)]
+    return found
+
+
+def test_sql_builders_have_no_numeric_defaults():
+    entry = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+    assert builder_numeric_defaults(entry) == []
+
+
+def test_twin_sql_follows_the_op_constants(monkeypatch):
+    from ocrspark.ops import similarity
+
+    monkeypatch.setattr(similarity, "TOP_K", 7)
+    monkeypatch.setattr(similarity, "QUERY_MOD", 31)
+    for sql in (E._sql_cosine_topk(), E._sql_ivf_topk()):
+        assert "rank <= 7" in sql and "rank <= 10" not in sql
+        assert "vec_id % 31 = 0" in sql and "% 25" not in sql
