@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from . import config as C
 from . import rules
+from .session import per_jvm
 
 
 def output_spans(sp: Column) -> Column:
@@ -57,13 +58,10 @@ def assemble(segmented: DataFrame) -> DataFrame:
     chain (P8 identity -> P12 strip -> T1-T5 normalize -> P11 topic -> P13
     HTML); the span array stays the span-level truth (north-rule invariant).
     """
+    per_task, per_output = _assemble_columns()
     exploded = segmented.select(
         "doc_id", "subject", "exam_version", "source_subject_code",
         F.explode("tasks").alias("t")
-    )
-    task_text = rules.normalize_math(
-        rules.strip_admin(rules.strip_label(F.col("t.task_text_raw"))),
-        pre_squeezed=True,
     )
     # NB: the two-select split is load-bearing for performance: task_text
     # and spans are referenced twice downstream (output + topic/html), so
@@ -71,7 +69,17 @@ def assemble(segmented: DataFrame) -> DataFrame:
     # a single fused select would inline the task_text chain into every
     # score slot of classify_topic's argmax CASE (measured: a ~660-node
     # regex expression tree per task row).
-    out = exploded.select(
+    return exploded.select(*per_task).select(*per_output)
+
+
+@per_jvm
+def _assemble_columns() -> tuple[tuple, tuple]:
+    """assemble's two selects: the per-task columns, then the output."""
+    task_text = rules.normalize_math(
+        rules.strip_admin(rules.strip_label(F.col("t.task_text_raw"))),
+        pre_squeezed=True,
+    )
+    per_task = (
         "doc_id",
         "subject",
         "exam_version",
@@ -86,7 +94,7 @@ def assemble(segmented: DataFrame) -> DataFrame:
         F.filter(F.col("spans"), lambda s: s["kind"] == C.TEXT_KIND),
         lambda s: s["text"],
     )
-    return out.select(
+    per_output = (
         "doc_id",
         "subject",
         "exam_version",
@@ -99,3 +107,4 @@ def assemble(segmented: DataFrame) -> DataFrame:
         "was_merged",
         "spans",
     )
+    return per_task, per_output

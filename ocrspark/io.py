@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .schema import EXTRACTIONS_SCHEMA
 
@@ -107,7 +108,6 @@ class ParquetStore:
         data file yet (a batch without output rows)."""
         if not _dir_has_files(spark, self._path(EXTRACTIONS)):
             return None
-        from pyspark.sql import functions as F
         df = self.read_extractions(spark)
         return (
             df.filter(F.col("bucket").isin(list(buckets)))

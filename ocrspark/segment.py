@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from . import config as C
 from . import rules
+from .session import per_jvm
 
 
 def sessionize(flat: DataFrame) -> DataFrame:
@@ -56,56 +57,60 @@ def sessionize(flat: DataFrame) -> DataFrame:
     from pyref's stable sort (ROADMAP direction 2).  Equivalence to the
     original per-task window form is pinned by
     test_in_solution_single_sort_equals_per_task_window."""
-    w_doc = Window.partitionBy("doc_id").orderBy("offset")
-    prior = w_doc.rowsBetween(Window.unboundedPreceding, -1)
-    cand = rules.marker_candidate_number(F.col("kind"), F.col("text"))
-    sol = rules.is_solution_start(F.col("kind"), F.col("text"))
+    args1, pass1, is_marker, args2, pass2, fixups = _sessionize_columns()
     # Window arguments are precomputed as plain attribute columns and both
     # functions of a pass sit in ONE projection: Spark otherwise hoists
     # each non-trivial window argument into its own child Project, and the
     # interposed Project stops CollapseWindow from merging same-spec
     # Window nodes (observed: 4 single-function passes instead of 2).
-    df = flat.withColumn("cand_n", cand).withColumn(
-        "sol", sol
-    ).withColumn("sol_off", F.when(sol, F.col("offset")))
+    df = flat.withColumns(args1).select("*", *pass1)
+    df = df.withColumn("is_marker", is_marker).withColumns(args2)
+    df = df.select("*", *pass2).withColumns(fixups)
+    return df.drop("cand_n", "sol", "sol_off", "run_max_prior", "sol_prior",
+                   "marker_int", "marker_off", "task_prior", "marker_prior")
+
+
+@per_jvm
+def _sessionize_columns():
+    """sessionize's columns, step by step: window-1 arguments, window-1
+    functions, is_marker, window-2 arguments, window-2 functions, then the
+    row-local fixups (task_seq, in_solution)."""
+    w_doc = Window.partitionBy("doc_id").orderBy("offset")
+    prior = w_doc.rowsBetween(Window.unboundedPreceding, -1)
+    cand = rules.marker_candidate_number(F.col("kind"), F.col("text"))
+    sol = rules.is_solution_start(F.col("kind"), F.col("text"))
+    args1 = {"cand_n": cand, "sol": sol,
+             "sol_off": F.when(sol, F.col("offset"))}
     # Window pass 1: prior-candidate running max + prior solution-start
     # offset (one node — shared partition, order AND frame).
-    df = df.select(
-        "*",
+    pass1 = (
         F.max("cand_n").over(prior).alias("run_max_prior"),
         F.max("sol_off").over(prior).alias("sol_prior"),
     )
-    df = df.withColumn(
-        "is_marker",
-        F.col("cand_n").isNotNull()
-        & (F.col("cand_n") == F.coalesce(F.col("run_max_prior"), F.lit(0)) + 1),
-    ).withColumn(
-        "marker_int", F.col("is_marker").cast("int")
-    ).withColumn("marker_off", F.when(F.col("is_marker"), F.col("offset")))
+    is_marker = F.col("cand_n").isNotNull() & (
+        F.col("cand_n") == F.coalesce(F.col("run_max_prior"), F.lit(0)) + 1)
+    args2 = {
+        "marker_int": F.col("is_marker").cast("int"),
+        "marker_off": F.when(F.col("is_marker"), F.col("offset")),
+    }
     # Window pass 2 (same shared frame): prior marker count + prior marker
     # offset; the at-or-before-current values are row-local fixups below.
-    df = df.select(
-        "*",
+    pass2 = (
         F.sum("marker_int").over(prior).alias("task_prior"),
         F.max("marker_off").over(prior).alias("marker_prior"),
-    )
-    df = df.withColumn(
-        "task_seq",
-        F.coalesce(F.col("task_prior"), F.lit(0).cast("long"))
-        + F.col("marker_int"),
     )
     last_sol = F.when(F.col("sol"), F.col("offset")).otherwise(F.col("sol_prior"))
     last_marker = F.when(F.col("is_marker"), F.col("offset")).otherwise(
         F.col("marker_prior")
     )
-    df = df.withColumn(
-        "in_solution",
-        F.when(last_sol.isNull(), F.lit(False))
+    fixups = {
+        "task_seq": F.coalesce(F.col("task_prior"), F.lit(0).cast("long"))
+        + F.col("marker_int"),
+        "in_solution": F.when(last_sol.isNull(), F.lit(False))
         .when(last_marker.isNull(), F.lit(True))
         .otherwise(last_sol > last_marker),
-    )
-    return df.drop("cand_n", "sol", "sol_off", "run_max_prior", "sol_prior",
-                   "marker_int", "marker_off", "task_prior", "marker_prior")
+    }
+    return args1, pass1, is_marker, args2, pass2, fixups
 
 
 def aggregate_tasks(sessionized: DataFrame) -> DataFrame:
@@ -126,7 +131,16 @@ def aggregate_tasks(sessionized: DataFrame) -> DataFrame:
     ``is_marker`` is consumed by the chain here and no longer needed
     downstream, so the struct swaps it for ``out_text``.
     """
-    kept = sessionized.filter(~F.col("in_solution"))
+    keep, out_text, aggs, task_text, per_task = _aggregate_columns()
+    kept = sessionized.filter(keep).withColumn("out_text", out_text)
+    tasks = kept.groupBy("doc_id", "task_seq").agg(*aggs)
+    return tasks.withColumn("task_text", task_text).withColumns(per_task)
+
+
+@per_jvm
+def _aggregate_columns():
+    """aggregate_tasks' columns: the kept-span filter, out_text, the
+    per-task aggregates, task_text, then the task_text-derived scalars."""
     out_text = rules.normalize_math(
         rules.strip_admin(
             F.when(F.col("is_marker"), rules.strip_label(F.col("text")))
@@ -134,8 +148,7 @@ def aggregate_tasks(sessionized: DataFrame) -> DataFrame:
         ),
         pre_squeezed=True,
     )
-    kept = kept.withColumn("out_text", out_text)
-    tasks = kept.groupBy("doc_id", "task_seq").agg(
+    aggs = (
         F.array_sort(
             F.collect_list(F.struct("offset", "kind", "text", "media_ref", "out_text"))
         ).alias("sp"),
@@ -147,17 +160,18 @@ def aggregate_tasks(sessionized: DataFrame) -> DataFrame:
         ),
         " ",
     )
-    tasks = tasks.withColumn("task_text", task_text)
-    tasks = tasks.withColumn(
-        "stripped_len",
-        F.length(rules.strip_admin(rules.strip_label(F.col("task_text")))),
-    )
-    # G7 heading position as a per-task SCALAR here (codegen'd, one regex per
-    # task row).  Computing it later over the nested task array would run
-    # inside interpreted lambdas, where optimizer inlining re-evaluates the
-    # regex once per consumer site (measured ~2x on the whole pipeline).
-    tasks = tasks.withColumn("mpos", rules.g7_match_pos(F.col("task_text")))
-    return tasks.withColumn("points", rules.extract_points(F.col("task_text")))
+    per_task = {
+        "stripped_len": F.length(
+            rules.strip_admin(rules.strip_label(F.col("task_text")))),
+        # G7 heading position as a per-task SCALAR here (codegen'd, one
+        # regex per task row).  Computing it later over the nested task
+        # array would run inside interpreted lambdas, where optimizer
+        # inlining re-evaluates the regex once per consumer site (measured
+        # ~2x on the whole pipeline).
+        "mpos": rules.g7_match_pos(F.col("task_text")),
+        "points": rules.extract_points(F.col("task_text")),
+    }
+    return ~F.col("in_solution"), out_text, aggs, task_text, per_task
 
 
 def nest_per_doc(tasks: DataFrame,
@@ -178,6 +192,31 @@ def nest_per_doc(tasks: DataFrame,
     reads the whole document) — identical to the global span-text concat
     since both skip empties and join on single spaces.
     """
+    valid_seq, bounds, widx, aggs, codes, subject, per_doc = _nest_columns(
+        expected is None)
+    # argument precomputed + both functions in one projection so they share
+    # ONE Window node (see sessionize's CollapseWindow note)
+    df = tasks.withColumn("valid_seq", valid_seq).select("*", *bounds)
+    df = df.drop("valid_seq").withColumn("widx", widx)
+    if expected is not None:
+        df = df.join(
+            F.broadcast(expected.select("doc_id", "expected_tasks")),
+            "doc_id", "left",
+        )
+    nested = df.groupBy("doc_id").agg(*aggs).withColumn("codes", codes)
+    # subject keeps its own projection: in one with the other two, the
+    # optimizer moves exam_version down into the codes projection instead
+    # (same rows, another plan)
+    nested = nested.withColumn("subject", subject)
+    return nested.withColumns(per_doc).drop("codes")
+
+
+@per_jvm
+def _nest_columns(unaligned: bool):
+    """nest_per_doc's columns: the window argument, the window bounds,
+    widx, the per-doc aggregates, the subject-code list, the subject, then
+    the version and source code.  ``unaligned``: no ``expected`` join, so
+    task numbers are the 1-based positions."""
     # PERF (r7): the whole-partition min/max windows take the SAME
     # (doc_id, task_seq) sort order as the running widx window (their frame
     # is explicitly unbounded, so ordering cannot change their values);
@@ -192,31 +231,19 @@ def nest_per_doc(tasks: DataFrame,
         & (F.col("stripped_len") >= C.MIN_STRIPPED_TASK_CHARS),
         F.col("task_seq"),
     )
-    # argument precomputed + both functions in one projection so they share
-    # ONE Window node (see sessionize's CollapseWindow note)
-    df = tasks.withColumn("valid_seq", valid_seq).select(
-        "*",
+    bounds = (
         F.min("valid_seq").over(w_doc).alias("first_valid"),
         F.max("valid_seq").over(w_doc).alias("last_valid"),
-    ).drop("valid_seq")
+    )
     in_window = (F.col("task_seq") >= F.col("first_valid")) & (
         F.col("task_seq") <= F.col("last_valid")
     )
     # position among in-window tasks (0-based); junk value outside the window
-    df = df.withColumn(
-        "widx",
-        F.sum(in_window.cast("int")).over(
-            w_ord.rowsBetween(Window.unboundedPreceding, 0)
-        ) - 1,
-    )
-    if expected is not None:
-        df = df.join(
-            F.broadcast(expected.select("doc_id", "expected_tasks")),
-            "doc_id", "left",
-        )
-        exp_arr = F.col("expected_tasks")
-    else:
-        exp_arr = F.lit(None).cast("array<string>")
+    widx = F.sum(in_window.cast("int")).over(
+        w_ord.rowsBetween(Window.unboundedPreceding, 0)
+    ) - 1
+    exp_arr = (F.lit(None).cast("array<string>") if unaligned
+               else F.col("expected_tasks"))
     task_number = F.coalesce(
         F.get(exp_arr, F.col("widx")), (F.col("widx") + 1).cast("string")
     )
@@ -236,7 +263,7 @@ def nest_per_doc(tasks: DataFrame,
         F.col("task_text") != "",
         F.struct(F.col("task_seq").alias("k"), F.col("task_text").alias("t")),
     )
-    nested = df.groupBy("doc_id").agg(
+    aggs = (
         F.array_sort(F.collect_list(task_struct)).alias("tasks0"),
         F.array_join(
             F.transform(
@@ -253,16 +280,14 @@ def nest_per_doc(tasks: DataFrame,
     # source_subject_code == codes[0] exactly: the pattern's group 1 is
     # non-empty on any match, so first-match extract and element 0 of
     # extract_all coincide, and both map no-match to UNKNOWN.
-    nested = nested.withColumn("codes", rules.subject_codes(F.col("doc_text")))
-    return (
-        nested.withColumn("subject", rules.merge_subject_codes(F.col("codes")))
-        .withColumn("exam_version", rules.extract_version(F.col("doc_text")))
-        .withColumn(
-            "source_subject_code",
-            F.coalesce(F.get(F.col("codes"), 0), F.lit("UNKNOWN")),
-        )
-        .drop("codes")
-    )
+    codes = rules.subject_codes(F.col("doc_text"))
+    subject = rules.merge_subject_codes(F.col("codes"))
+    per_doc = {
+        "exam_version": rules.extract_version(F.col("doc_text")),
+        "source_subject_code": F.coalesce(
+            F.get(F.col("codes"), 0), F.lit("UNKNOWN")),
+    }
+    return valid_seq, bounds, widx, aggs, codes, subject, per_doc
 
 
 def _empty_int_array() -> Column:
@@ -337,6 +362,14 @@ def select_tasks(nested: DataFrame, merge: bool = True) -> DataFrame:
     stay cheap even when the optimizer inlines them into every consumer site
     (ints/string refs only — the heavy array build happened once in the
     aggregation; mpos was a codegen'd scalar per task row)."""
+    return nested.select(
+        "doc_id", "subject", "exam_version", "source_subject_code",
+        _tasks_column(merge),
+    )
+
+
+@per_jvm
+def _tasks_column(merge: bool) -> Column:
     orig = F.transform(F.col("tasks0"), lambda x: x["task_text"])
     if merge:
         mpos = F.transform(F.col("tasks0"), lambda x: x["mpos"])
@@ -344,7 +377,7 @@ def select_tasks(nested: DataFrame, merge: bool = True) -> DataFrame:
         flags = g7_merged_flags(orig, mpos)
     else:
         merged, flags = orig, F.transform(orig, lambda _: F.lit(False))
-    tasks = F.zip_with(
+    return F.zip_with(
         F.col("tasks0"),
         F.arrays_zip(merged.alias("mt"), flags.alias("fl")),
         lambda x, m: F.struct(
@@ -354,10 +387,7 @@ def select_tasks(nested: DataFrame, merge: bool = True) -> DataFrame:
             m["fl"].alias("was_merged"),
             x["sp"].alias("sp"),
         ),
-    )
-    return nested.withColumn("tasks", tasks).select(
-        "doc_id", "subject", "exam_version", "source_subject_code", "tasks"
-    )
+    ).alias("tasks")
 
 
 def segment(flat: DataFrame, merge: bool = True,

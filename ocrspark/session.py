@@ -8,9 +8,15 @@ Tuned for the 100TB design point, scaled to local[*] testing:
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app: str = "ocrspark", master: str | None = None,
@@ -50,3 +56,23 @@ def get_spark(app: str = "ocrspark", master: str | None = None,
                 os.environ.get("OCRSPARK_WAREHOUSE", "/tmp/ocrspark_warehouse"))
     )
     return b.getOrCreate()
+
+
+def per_jvm(build: Callable[..., T]) -> Callable[..., T]:
+    """Memoize a Column-tree builder per live gateway JVM.
+
+    Every ``pyspark.sql.functions`` call is a py4j round trip, so building
+    extract's expression trees costs thousands of them per DataFrame while
+    the executors idle.  The trees hold only unresolved names, so one build
+    serves every DataFrame of the JVM; the builder's arguments are part of
+    the key (each variant gets its own trees) and so is
+    ``SparkContext._jvm``, so a restarted gateway rebuilds instead of
+    handing out references into a dead JVM.  Every caller gets the same
+    result objects, so callers only read them."""
+    cached = functools.cache(lambda jvm, *args: build(*args))
+
+    @functools.wraps(build)
+    def memoized(*args):
+        return cached(SparkContext._jvm, *args)
+
+    return memoized

@@ -25,12 +25,13 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import config as C
 from . import rules
 from .schema import SPANS_FLAT_SCHEMA
+from .session import per_jvm
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -44,10 +45,16 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
+@per_jvm
+def _recover_columns() -> dict[str, Column]:
+    return {
+        "text": rules.recover_text(F.col("text")),
+        "media_ref": F.coalesce("media_ref", F.lit("")),
+    }
+
+
 def recover_native(flat: DataFrame) -> DataFrame:
-    return flat.withColumn("text", rules.recover_text(F.col("text"))).withColumn(
-        "media_ref", F.coalesce("media_ref", F.lit(""))
-    )
+    return flat.withColumns(_recover_columns())
 
 
 def recover_arrow(flat: DataFrame) -> DataFrame:

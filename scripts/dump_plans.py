@@ -1,6 +1,9 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") for the bench queries into plans/<tag>/.
 
+The extract plans are of ``scaling_job.cached_corpus``'s 2,000-doc bench
+corpus, built on first use.
+
 Usage: python scripts/dump_plans.py <tag> [suffix]   (e.g. r07 before)
 """
 
@@ -20,6 +23,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from ocrspark.ops import dedup, similarity, textstats  # noqa: E402
 from ocrspark.pipeline import extract  # noqa: E402
 from ocrspark.session import get_spark  # noqa: E402
+from scaling_job import cached_corpus  # noqa: E402
 
 
 def main() -> None:
@@ -31,13 +35,7 @@ def main() -> None:
     spark = get_spark(app="dump-plans", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    n = 2000
-    cache = REPO / ".bench_cache" / f"docs_n{n}_s42_v2"
-    if (cache / "_SUCCESS").exists():
-        docs = spark.read.parquet(str(cache))
-    else:
-        from ocrspark.corpus import generate_docs
-        docs = generate_docs(spark, 200, seed=42)
+    docs = cached_corpus(spark, 2000)
 
     def tbl(name):
         return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -6,11 +6,16 @@ solution sections, stray 'Maks poeng' containers, stutter, unicode math,
 variant subject codes — so this covers all drop/strip/renumber paths.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from ocrspark.assemble import assemble
 from ocrspark.corpus import expected_extractions, generate_docs
 from ocrspark.pipeline import extract
+from ocrspark.segment import segment
+from ocrspark.stage1 import stage1
 
 N_DOCS = 80
 
@@ -49,6 +54,56 @@ def test_arrow_native_stage1_agree(spark):
     b = _canon(extract(docs, arrow=False))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def _plan_shape(df):
+    """Optimized plan text with exprIds, lambda variables and common
+    expressions renumbered by first appearance: structure only."""
+    ids = {}
+    return re.sub(r"#\d+|\b[a-z_]+_\d+\b",
+                  lambda m: ids.setdefault(m.group(), f"@{len(ids)}"),
+                  df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_memoized_builders_stay_right(spark, plan_nodes, monkeypatch):
+    """extract's expression trees are built once per JVM.  A second build
+    plans the same as the first and costs few py4j round trips (building
+    the trees from scratch takes ~6,400), and the variants built after a
+    default call keep their own trees: the Arrow stage, merge=False and
+    the expected join."""
+    docs = generate_docs(spark, 40, seed=42)
+    first = extract(docs)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    second = extract(docs)
+    monkeypatch.undo()
+    assert len(calls) < 1500, len(calls)
+    assert _plan_shape(second) == _plan_shape(first)
+
+    generator = plan_nodes(first).count("MapInPandas")
+    arrow = extract(docs, arrow=True)
+    assert plan_nodes(arrow).count("MapInPandas") == generator + 1
+
+    merged = [r.was_merged for r in first.select("was_merged").collect()]
+    assert any(merged)
+    unmerged = assemble(segment(stage1(docs), merge=False))
+    assert [r.was_merged for r in unmerged.select("was_merged").collect()] \
+        == [False] * len(merged)
+
+    expected = docs.select("doc_id", F.transform(
+        F.sequence(F.lit(1), F.lit(200)),
+        lambda i: F.concat(F.lit("E"), i.cast("string"))).alias("expected_tasks"))
+    aligned = extract(docs, expected=expected)
+    assert "BroadcastHashJoin" in plan_nodes(aligned)
+    numbers = [r.task_number for r in aligned.select("task_number").collect()]
+    assert len(numbers) == len(merged)
+    assert all(n.startswith("E") for n in numbers), numbers
 
 
 # A task body ending in U+0085 (NEL).  Stage-1 recovery keeps NEL: it is in

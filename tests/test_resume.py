@@ -71,6 +71,30 @@ def test_checkpoint_lineage_and_metrics(spark, tmp_path):
     assert sum(r.doc_count for r in rows) == ext.select("doc_id").distinct().count()
 
 
+def test_checkpoint_rows_need_no_python_worker(spark, tmp_path, plan_nodes):
+    """The checkpoint rows are built in the JVM: the plan a batch appends
+    has no ``Scan ExistingRDD`` (a local Python list, unpickled by Python
+    workers) and no other Python-evaluating node.  The docs are read from
+    parquet, so the corpus generator's mapInPandas is not in the plan;
+    test_checkpoint_lineage_and_metrics checks the values."""
+    generate_docs(spark, 20, seed=6).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    plans = []
+
+    class CapturingStore(ParquetStore):
+        def append_checkpoints(self, df):
+            plans.append(plan_nodes(df))
+            super().append_checkpoints(df)
+
+    run_resumable(spark, docs, CapturingStore(str(tmp_path / "store")),
+                  buckets=4, batches=2)
+    assert len(plans) == 2
+    for nodes in plans:
+        python = [n for n in nodes if n.startswith("Scan ExistingRDD")
+                  or any(w in n for w in ("Python", "Pandas", "Arrow"))]
+        assert not python, nodes
+
+
 def test_resume_with_other_bucket_count_fails_loudly(spark, tmp_path):
     """A bucket id names a doc set only under the count that wrote it: a
     resume with another bucket count must fail instead of skipping undone
