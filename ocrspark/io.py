@@ -124,6 +124,15 @@ class IcebergStore:
       USING iceberg PARTITIONED BY (bucket(N, doc_id))
     Upsert: MERGE INTO ... ON doc_id/task_number WHEN MATCHED UPDATE
     WHEN NOT MATCHED INSERT (keep-latest, object_handling.py:221-246 parity).
+
+    Unverified: ``run_resumable`` reads a batch's checkpoint counts from
+    observers on the DataFrame it hands ``write_extractions``, and this
+    store writes that DataFrame through a temp view and a MERGE.  Whether
+    the MERGE plan keeps the observed nodes is untested, because no
+    Iceberg runtime runs here (its test skips).  If it drops them,
+    ``run_resumable`` raises, naming this store, after its bounded wait.
+    The snapshot and bucket-count checks of a resume hold as for
+    ``ParquetStore``.
     """
 
     def __init__(self, spark: SparkSession, namespace: str = "ocr.db",

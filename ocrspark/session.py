@@ -3,7 +3,13 @@
 Tuned for the 100TB design point, scaled to local[*] testing:
   * AQE on (runtime coalescing + skew-join splitting),
   * Arrow batches capped so a fat doc's spans never blow an executor,
-  * shuffle partitions sized to cores locally (cluster: 2-3x total cores).
+  * shuffle partitions sized to cores locally (any other master: 200),
+  * post-shuffle partitions sized by CPU, not bytes: the extract spends
+    ~4.4 CPU-s per shuffled MB (``extract_typical``'s 4.4 MB doc_id exchange
+    feeds ~19 CPU-s), so AQE's 1 MB minimum would fold a 75-doc batch's
+    ~0.28 MB shuffle into one task on one core.  At 64 KB a partition is
+    at least ~0.3 CPU-s of work, and a batch of that size keeps every
+    local core busy.
 """
 
 from __future__ import annotations
@@ -17,6 +23,9 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 T = TypeVar("T")
+
+# smallest post-shuffle partition AQE coalesces to (see the module docstring)
+MIN_PARTITION_SIZE = "64k"
 
 
 def get_spark(app: str = "ocrspark", master: str | None = None,
@@ -38,6 +47,8 @@ def get_spark(app: str = "ocrspark", master: str | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                MIN_PARTITION_SIZE)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

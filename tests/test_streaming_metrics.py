@@ -1,30 +1,16 @@
-"""Streaming ingestion dedup (availableNow drain) + observe-metrics tests.
+"""Streaming ingestion dedup (availableNow drain) tests.
 
 Covers both ingestion dedup shapes of ``ocrspark.streaming``: the
 watermark-bounded ``dedup_stream`` (first-seen wins across micro-batches)
 and the full-history ``dedup_ingest`` (replay-safe, fail-loud on a corrupt
-landed corpus, and an O(batch) anti-join plan on the bucketed table),
-plus the ``metrics.observed`` end-of-pipeline counters.
+landed corpus, and an O(batch) anti-join plan on the bucketed table).
+The observed counters that ride a job are tested with the checkpoint
+that records them, in ``test_resume.py``.
 """
 
 import os
 
 from pyspark.sql import functions as F
-
-from ocrspark.corpus import generate_docs
-from ocrspark.metrics import observed
-from ocrspark.pipeline import extract
-
-
-def test_observed_metrics(spark):
-    docs = generate_docs(spark, 15, seed=3)
-    obs, df = observed(extract(docs))
-    n = df.count()
-    m = obs.get
-    assert m["tasks"] == n > 0
-    assert m["docs"] <= 15 and m["docs"] > 0
-    assert m["spans"] > m["tasks"]
-    assert m["points_total"] > 0
 
 
 def test_dedup_stream_first_seen_wins(spark, tmp_path):
