@@ -14,13 +14,15 @@ buckets.  Each batch is filter -> extract -> idempotent per-bucket overwrite
 ``Observation``s on the written plan count, per bucket, the docs that yield
 a task (on segment's per-doc rows, before the explode) and the tasks and
 spans handed to the store.  No copy of the batch is cached and no second
-pass counts it.  The landed task counts come from a partition-pruned
-read-back of what the write left in the store, the durable evidence.  The
-checkpoint rows are JVM literals, so no Python worker starts.  On
-perfbench's ``resume_store`` (a ParquetStore, 16 buckets, 4 cores) a batch
-is 6 Spark jobs: partitioned write 2, the landed read-back's schema 1,
-checkpoint append 3 (its join aggregates the read-back).  A resumed run
-adds 3 for the checkpoint read.
+pass counts it.  The landed task counts are collected from a
+partition-pruned read-back of what the write left in the store, the
+durable evidence; a landed count is NULL only where the store cannot
+verify it (``IcebergStore``).  Every count is then a driver int, and the
+checkpoint rows are one literal row set planned in the JVM, so no Python
+worker starts.  On perfbench's ``resume_store`` (a ParquetStore, 16
+buckets, 4 cores) a batch is 5 Spark jobs: partitioned write 2, landed
+read-back 2, checkpoint append 1.  A resumed run adds 2 for the
+checkpoint read.
 
 On restart, the buckets the checkpoints record are skipped and only
 pending buckets run.  A bucket id names a doc set only under the count
@@ -78,7 +80,7 @@ def completed_buckets(spark: SparkSession, store, buckets: int,
     for name, kind in (("n_buckets", "int"), ("input_snapshot_id", "string")):
         if name not in cps.columns:
             cps = cps.withColumn(name, F.lit(None).cast(kind))
-    rows = cps.select("bucket", "n_buckets", "input_snapshot_id").distinct().collect()
+    rows = cps.select("bucket", "n_buckets", "input_snapshot_id").collect()
     other = sorted({r.n_buckets for r in rows} - {None, buckets})
     if other:
         raise ValueError(
@@ -169,23 +171,24 @@ def run_resumable(
         for i, group in enumerate(groups):
             step = f"ocrspark run {run_id} batch {i + 1}/{n_groups} buckets {group}"
             sc.setJobDescription(f"{step}: extract+write")
-            cp = _write_batch(spark, docs_b, store, buckets, group)
+            counts = _write_batch(spark, docs_b, store, buckets, group)
             # landed_task_count = what is durably IN the store for these
             # buckets (partition-pruned read-back), vs task_count = what was
             # computed.  NULL = store can't verify cheaply (IcebergStore:
             # transactional MERGE; snapshot metrics are the evidence there).
             sc.setJobDescription(f"{step}: landed read-back")
             landed = store.landed_per_bucket(spark, group)
-            if landed is not None:
-                cp = cp.join(landed, "bucket", "left").fillna(
-                    0, ["landed_task_count"])
-            else:
-                cp = cp.withColumn("landed_task_count", F.lit(None).cast("long"))
             sc.setJobDescription(f"{step}: checkpoint append")
-            store.append_checkpoints(cp.select(
+            # the counts are ints, so the rows are SQL literals planned in
+            # the JVM; the caller's two strings stay Column literals
+            rows = ", ".join(
+                f"named_struct('bucket', {b}, 'doc_count', {d}L, 'task_count', "
+                f"{t}L, 'span_count', {n}L, 'landed_task_count', CAST("
+                f"{'NULL' if landed is None else landed.get(b, 0)} AS BIGINT))"
+                for b, d, t, n in counts)
+            store.append_checkpoints(spark.range(1).select(
                 F.lit(run_id).alias("run_id"),
-                "bucket", "doc_count", "task_count", "span_count",
-                F.col("landed_task_count").cast("long"),
+                F.expr(f"inline(array({rows}))"),
                 F.lit(input_snapshot_id).alias("input_snapshot_id"),
                 F.current_timestamp().alias("completed_at"),
                 F.lit(buckets).alias("n_buckets"),
@@ -201,9 +204,9 @@ def run_resumable(
 
 
 def _write_batch(spark: SparkSession, docs_b: DataFrame, store, buckets: int,
-                 group: list[int]) -> DataFrame:
-    """Extract the batch's buckets into the store; returns their counts as
-    rows (bucket, doc_count, task_count, span_count).
+                 group: list[int]) -> list[tuple[int, int, int, int]]:
+    """Extract the batch's buckets into the store; returns their counts,
+    (bucket, docs, tasks, spans) per bucket of ``group``, zeros included.
 
     The plan is ``extract()``'s with an observer where it already breaks
     (an observer splits whole-stage codegen and stops filter pushdown):
@@ -225,10 +228,4 @@ def _write_batch(spark: SparkSession, docs_b: DataFrame, store, buckets: int,
     store.write_extractions(out)
     n_docs = _observed(spark, docs_obs, store)["docs"]
     n_rows = _observed(spark, rows_obs, store)
-    # buckets that held zero docs still get a checkpoint row; the counts are
-    # ints, so the literal rows are plain SQL and plan in the JVM
-    rows = ", ".join(
-        f"named_struct('bucket', {b}, 'doc_count', {d}L, 'task_count', {t}L, "
-        f"'span_count', {s}L)"
-        for b, d, t, s in zip(group, n_docs, n_rows["tasks"], n_rows["spans"]))
-    return spark.range(1).selectExpr(f"inline(array({rows}))")
+    return list(zip(group, n_docs, n_rows["tasks"], n_rows["spans"]))

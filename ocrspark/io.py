@@ -25,6 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .schema import EXTRACTIONS_SCHEMA
 
@@ -37,6 +38,12 @@ CHECKPOINTS = "checkpoints"
 EXTRACTIONS_COLUMNS: list[tuple[str, str]] = [
     (f.name, f.dataType.simpleString()) for f in EXTRACTIONS_SCHEMA.fields
 ]
+
+# What ParquetStore's extractions table holds: the extract columns plus the
+# ``bucket`` partition column.  Reading with it spares the schema-inference
+# job a read of the directory would run.
+STORED_EXTRACTIONS_SCHEMA = T.StructType(
+    [*EXTRACTIONS_SCHEMA.fields, T.StructField("bucket", T.IntegerType())])
 
 
 def _dir_has_files(spark: SparkSession, path: str) -> bool:
@@ -83,7 +90,8 @@ class ParquetStore:
         )
 
     def read_extractions(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._path(EXTRACTIONS))
+        return spark.read.schema(STORED_EXTRACTIONS_SCHEMA).parquet(
+            self._path(EXTRACTIONS))
 
     def append_checkpoints(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self._path(CHECKPOINTS))
@@ -98,22 +106,21 @@ class ParquetStore:
         # footer's schema.  Reading every footer fails on a corrupt part.
         return spark.read.option("mergeSchema", "true").parquet(path)
 
-    def landed_per_bucket(self, spark: SparkSession, buckets) -> DataFrame | None:
-        """Durable row count per bucket for the just-written buckets.
+    def landed_per_bucket(self, spark: SparkSession, buckets) -> dict[int, int]:
+        """Durable row count per bucket for the just-written buckets,
+        collected to the driver; a bucket without rows is absent.
 
         `bucket` is a physical partition column here, so the scan is
         partition-pruned to exactly the buckets written by this batch —
         O(batch output), not a table scan.  Lets the checkpoint record what
-        LANDED, not just what was computed.  None when the table holds no
-        data file yet (a batch without output rows)."""
-        if not _dir_has_files(spark, self._path(EXTRACTIONS)):
-            return None
-        df = self.read_extractions(spark)
-        return (
-            df.filter(F.col("bucket").isin(list(buckets)))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("landed_task_count"))
+        LANDED, not just what was computed.  A batch without output rows
+        still leaves the table directory, so the read always finds it."""
+        rows = (
+            self.read_extractions(spark)
+            .filter(F.col("bucket").isin(list(buckets)))
+            .groupBy("bucket").count().collect()
         )
+        return {r.bucket: r["count"] for r in rows}
 
 
 class IcebergStore:
@@ -151,7 +158,7 @@ class IcebergStore:
             f"""CREATE TABLE IF NOT EXISTS {full} ({ddl_cols})
                 USING iceberg PARTITIONED BY (bucket({self.buckets}, doc_id))"""
         )
-        self._reconcile_columns(full)
+        self._add_missing_columns(full, EXTRACTIONS_COLUMNS)
         self.spark.sql(
             f"""MERGE INTO {full} t USING _ocr_batch s
                 ON t.doc_id = s.doc_id AND t.task_number = s.task_number
@@ -159,28 +166,30 @@ class IcebergStore:
                 WHEN NOT MATCHED THEN INSERT *"""
         )
 
-    def _reconcile_columns(self, full: str) -> None:
-        """Widen a pre-existing (older-release) table to the current schema.
+    def _add_missing_columns(self, full: str, cols: list[tuple[str, str]]) -> None:
+        """Widen a pre-existing (older-release) table to ``cols``, given as
+        (name, type) pairs.
 
         CREATE TABLE IF NOT EXISTS never migrates an existing table, so a
         resume against a store created before new columns were added would
-        fail on the first MERGE.  Iceberg ADD COLUMNS is a metadata-only
+        fail on the first write.  Iceberg ADD COLUMNS is a metadata-only
         commit (existing rows read the new columns as NULL)."""
         existing = {f.name for f in self.spark.table(full).schema.fields}
-        missing = [(n, t) for n, t in EXTRACTIONS_COLUMNS if n not in existing]
+        missing = [(n, t) for n, t in cols if n not in existing]
         if missing:
-            cols = ", ".join(f"{n} {t}" for n, t in missing)
-            self.spark.sql(f"ALTER TABLE {full} ADD COLUMNS ({cols})")
+            ddl = ", ".join(f"{n} {t}" for n, t in missing)
+            self.spark.sql(f"ALTER TABLE {full} ADD COLUMNS ({ddl})")
 
     def read_extractions(self, spark: SparkSession) -> DataFrame:
         return spark.table(f"{self.ns}.{EXTRACTIONS}")
 
-    def landed_per_bucket(self, spark: SparkSession, buckets) -> DataFrame | None:
+    def landed_per_bucket(self, spark: SparkSession, buckets) -> None:
         """Unavailable here without a table scan: the Iceberg bucket is a
         hidden partition transform (no physical bucket column to prune on),
         and the MERGE is transactional anyway — the commit snapshot's
         added-records metrics are the landed evidence on a real catalog.
-        Returning None records NULL landed_task_count = 'not verified'."""
+        Returning None records a NULL landed_task_count, which means only
+        'this store cannot verify'."""
         return None
 
     def append_checkpoints(self, df: DataFrame) -> None:
@@ -189,13 +198,8 @@ class IcebergStore:
             # same migration contract as extractions: widen an older-release
             # checkpoints table before appending a wider batch (otherwise
             # the checkpoint write fails AFTER extractions already landed)
-            existing = {f.name for f in self.spark.table(full).schema.fields}
-            missing = [f for f in df.schema.fields if f.name not in existing]
-            if missing:
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in missing
-                )
-                self.spark.sql(f"ALTER TABLE {full} ADD COLUMNS ({cols})")
+            self._add_missing_columns(full, [
+                (f.name, f.dataType.simpleString()) for f in df.schema.fields])
             df.writeTo(full).append()
         else:
             df.writeTo(full).create()

@@ -1,8 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
 Tuned for the 100TB design point, scaled to local[*] testing:
-  * AQE on (runtime coalescing + skew-join splitting),
-  * Arrow batches capped so a fat doc's spans never blow an executor,
+  * AQE on (runtime coalescing + skew-join splitting), 128 MB input splits
+    and Arrow batches capped at 10,000 records so a fat doc's spans never
+    blow an executor: all Spark 4.1 defaults, so they are not set here
+    (``tests/test_plan.py::test_relied_on_spark_defaults`` pins them),
   * shuffle partitions sized to cores locally (any other master: 200),
   * post-shuffle partitions sized by CPU, not bytes: the extract spends
     ~4.4 CPU-s per shuffled MB (``extract_typical``'s 4.4 MB doc_id exchange
@@ -45,14 +47,9 @@ def get_spark(app: str = "ocrspark", master: str | None = None,
         # Oracle parity for timestamp_ltz casts must not depend on the host
         # timezone (events sessionize/window queries interpret NTZ parquet ts).
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 MIN_PARTITION_SIZE)
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("OCRSPARK_DRIVER_MEM", "8g"))
         # This pipeline is allocation-heavy (regex chains over short strings);
         # G1's GCLocker contention throttles 32-thread local mode — ParallelGC

@@ -472,6 +472,19 @@ def test_plan_nodes_sees_every_asserted_node(spark, plan_nodes):
         spark.catalog.dropTempView("plan_nodes_b")
 
 
+def test_relied_on_spark_defaults(spark):
+    """``get_spark`` leaves AQE with partition coalescing and skew-join
+    splitting, 10,000-record Arrow batches and 128 MB input splits to
+    Spark's defaults; an upgrade that moves one fails here."""
+    conf = spark.conf.get
+    assert [conf(f"spark.sql.adaptive.{k}") for k in (
+        "enabled", "coalescePartitions.enabled", "skewJoin.enabled")] \
+        == ["true"] * 3
+    assert conf("spark.sql.execution.arrow.maxRecordsPerBatch") == "10000"
+    assert spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        conf("spark.sql.files.maxPartitionBytes")) == 128 * 2**20
+
+
 def test_whole_stage_codegen_present(spark, plan_text):
     docs = generate_docs(spark, 10, seed=1)
     df = extract(docs, arrow=False)

@@ -165,8 +165,8 @@ def test_corrupt_checkpoint_fails_loudly(spark, tmp_path):
 
 
 def test_batch_without_output_still_checkpoints(spark, tmp_path):
-    """A first batch that lands no row leaves no data file to read back:
-    its buckets are checkpointed with an unverified (NULL) landed count."""
+    """A first batch that lands no row still leaves the table directory:
+    its buckets are checkpointed with a verified landed count of 0."""
     docs = generate_docs(spark, 4, seed=8).withColumn(
         "spans", F.slice("spans", 1, 0))
     store = ParquetStore(str(tmp_path / "store"))
@@ -174,7 +174,7 @@ def test_batch_without_output_still_checkpoints(spark, tmp_path):
     assert r["batches_run"] == 1
     rows = store.read_checkpoints(spark).collect()
     assert {row.bucket for row in rows} == {0, 1}
-    assert all(row.task_count == 0 and row.landed_task_count is None
+    assert all(row.task_count == 0 and row.landed_task_count == 0
                for row in rows)
 
 
@@ -261,6 +261,37 @@ def test_resume_after_store_fault_equals_one_shot(spark, tmp_path, method):
             sum(r.span_count for r in rows)) == tuple(want)
 
 
+def test_stale_partition_shows_in_the_landed_count(spark, tmp_path):
+    """A batch whose rows landed without a checkpoint is recomputed on
+    resume.  When its buckets now yield no row, the dynamic-partition
+    overwrite writes no partition and their old rows stay (ROADMAP
+    direction 6).  The checkpoint audit shows them: such a bucket records
+    ``task_count`` 0 and, as ``landed_task_count``, the stale rows still
+    in the store."""
+    docs = generate_docs(spark, 40, seed=5)
+    store = _FailsOnce(str(tmp_path / "store"), "append_checkpoints", call=1)
+    first = [0, 1]  # the first batch of 4 buckets in 2 batches
+    with pytest.raises(RuntimeError, match="injected fault"):
+        run_resumable(spark, docs, store, buckets=4, batches=2,
+                      input_snapshot_id="snap")
+    stale = {r.bucket: r["count"] for r in
+             store.read_extractions(spark).groupBy("bucket").count().collect()}
+    assert store.read_checkpoints(spark) is None
+    assert set(stale) == set(first)
+
+    emptied = with_bucket(docs, 4).withColumn("spans", F.when(
+        F.col("bucket").isin(first), F.slice("spans", 1, 0)).otherwise(
+        F.col("spans"))).drop("bucket")
+    run_resumable(spark, emptied, store, buckets=4, batches=2,
+                  input_snapshot_id="snap")
+    rows = {r.bucket: r for r in store.read_checkpoints(spark).collect()}
+    assert sorted(rows) == list(range(4))
+    for b in first:
+        assert (rows[b].task_count, rows[b].landed_task_count) == (0, stale[b])
+    for b in set(rows) - set(first):
+        assert rows[b].landed_task_count == rows[b].task_count > 0
+
+
 def test_checkpoint_counts_ride_the_write(spark, tmp_path):
     """Per bucket, the checkpoint's counts equal the one-shot ``extract``'s
     distinct docs, tasks and spans.  A doc counts only when it yields a
@@ -312,11 +343,12 @@ def _under_group(spark, description, fn):
 
 def test_batch_runs_no_counting_job(spark, tmp_path, plan_nodes):
     """A batch counts its checkpoint rows on the jobs it runs anyway.  On
-    150 docs in 16 buckets a first run's batch is 6 jobs (write 2, the
-    landed read-back's schema 1, checkpoint append 3) and a resume's
-    batch 9 (its checkpoint read 3).  Caching the batch and aggregating
-    the cache took 9 and 12.  No plan the store is handed holds a cached
-    relation."""
+    150 docs in 16 buckets a first run's batch is 5 jobs (write 2, the
+    landed read-back's aggregation 2, checkpoint append 1) and a resume's
+    batch 7 (its checkpoint read 2: the merged schema and the collect).
+    Caching the batch and aggregating the cache took 9 and 12; joining
+    the literal rows to a lazy read-back took 6 and 9.  No plan the store
+    is handed holds a cached relation."""
     generate_docs(spark, 150, seed=3).write.parquet(str(tmp_path / "docs"))
     docs = spark.read.parquet(str(tmp_path / "docs"))
     plans = []
@@ -335,7 +367,7 @@ def test_batch_runs_no_counting_job(spark, tmp_path, plan_nodes):
         spark, docs, store, buckets=16, batches=2, max_batches=1))
     resume = _under_group(spark, "resume", lambda: run_resumable(
         spark, docs, store, buckets=16, batches=1))
-    assert (len(first), len(resume)) == (6, 9)
+    assert (len(first), len(resume)) == (5, 7)
     assert len(plans) == 4
     for nodes in plans:
         assert not {"InMemoryRelation", "InMemoryTableScan"} & set(nodes), nodes
